@@ -223,6 +223,45 @@ object Dedup {
       xxhash64(concat_ws(",", slice(sig, b * rows + 1, rows)))): _*)
   }
 
+  /** xxhash64 MinHash signature frame `(id, sh, sig)`: token hashes →
+    * numeric shingle hashes → k-permutation signature, persisted (the
+    * caller owns the cache and releases it via [[finishPairs]]).
+    */
+  private def minhashSigFrame(df: DataFrame, idCol: String, textCol: String,
+                              k: Int, shingleN: Int): DataFrame =
+    graft.core.Par.spreadForCpu(df)
+      .select(col(idCol).as("id"), tokenHashes(col(textCol)).as("th"))
+      .select(col("id"), shingleHashesFromTokenHashes(col("th"), shingleN).as("sh"))
+      .select(col("id"), col("sh"), minhashSignature(col("sh"), k).as("sig"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** Candidate pairs (id_a < id_b) sharing any (band, `key`) bucket of a
+    * banded `(id, band, key)` frame; deduplicated across bands.
+    */
+  private def bucketPairs(banded: DataFrame, key: String): DataFrame = {
+    val a = banded.select(col("band"), col(key), col("id").as("id_a"))
+    val b = banded.select(col("band"), col(key), col("id").as("id_b"))
+    a.join(b, Seq("band", key))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+  }
+
+  /** Verify `(id_a, id_b)` pairs by true Jaccard over the signature
+    * frame's shingle sets: the pairs with jaccard >= threshold, as
+    * (id_a, id_b, jaccard rounded to 4 places).
+    */
+  private def jaccardVerified(pairs: DataFrame, withSig: DataFrame,
+                              threshold: Double): DataFrame = {
+    val sa = withSig.select(col("id").as("id_a"), col("sh").as("sh_a"))
+    val sb = withSig.select(col("id").as("id_b"), col("sh").as("sh_b"))
+    pairs.join(sa, "id_a").join(sb, "id_b")
+      .withColumn("jaccard",
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+  }
+
   /** Full MinHash-LSH near-duplicate pipeline:
     * shingle → minhash → band → bucket self-join → true-Jaccard verify.
     * Returns (id_a, id_b, jaccard) for pairs with jaccard >= threshold.
@@ -238,30 +277,11 @@ object Dedup {
     // eagerly via finishPairs and the signature cache released before
     // returning, so repeated pipeline calls in one session never
     // accumulate corpus-sized cached frames.
-    val withSig = graft.core.Par.spreadForCpu(df)
-      .select(col(idCol).as("id"), tokenHashes(col(textCol)).as("th"))
-      .select(col("id"), shingleHashesFromTokenHashes(col("th"), shingleN).as("sh"))
-      .select(col("id"), col("sh"), minhashSignature(col("sh"), k).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val withSig = minhashSigFrame(df, idCol, textCol, k, shingleN)
     val banded = withSig.select(col("id"),
       posexplode(sigBands(col("sig"), k, bands)).as(Seq("band", "band_hash")))
     // candidate pairs: same (band, band_hash) bucket; dedup across bands
-    val a = banded.select(col("band"), col("band_hash"), col("id").as("id_a"))
-    val b = banded.select(col("band"), col("band_hash"), col("id").as("id_b"))
-    val candidates = a.join(b, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    // verify with true Jaccard over the shingle sets
-    val sa = withSig.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val sb = withSig.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    finishPairs(
-      candidates.join(sa, "id_a").join(sb, "id_b")
-        .withColumn("jaccard",
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard")),
-      withSig)
+    finishPairs(jaccardVerified(bucketPairs(banded, "band_hash"), withSig, threshold), withSig)
   }
 
   /** MinHash-LSH candidate edges in STAR form — the skew-safe path for
@@ -283,11 +303,7 @@ object Dedup {
   def minhashClusterEdges(df: DataFrame, idCol: String, textCol: String,
                           k: Int = 16, bands: Int = 4, shingleN: Int = 3,
                           verifyThreshold: Option[Double] = None): DataFrame = {
-    val withSig = graft.core.Par.spreadForCpu(df)
-      .select(col(idCol).as("id"), tokenHashes(col(textCol)).as("th"))
-      .select(col("id"), shingleHashesFromTokenHashes(col("th"), shingleN).as("sh"))
-      .select(col("id"), col("sh"), minhashSignature(col("sh"), k).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val withSig = minhashSigFrame(df, idCol, textCol, k, shingleN)
     val banded = withSig.select(col("id"),
       posexplode(sigBands(col("sig"), k, bands)).as(Seq("band", "band_hash")))
     // bucket representative via hash aggregation (map-side combinable min,
@@ -299,15 +315,7 @@ object Dedup {
       .select(col("id_a"), col("id").as("id_b")).distinct()
     val out = verifyThreshold match {
       case None => edges
-      case Some(t) =>
-        val sa = withSig.select(col("id").as("id_a"), col("sh").as("sh_a"))
-        val sb = withSig.select(col("id").as("id_b"), col("sh").as("sh_b"))
-        edges.join(sa, "id_a").join(sb, "id_b")
-          .withColumn("jaccard",
-            size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-              size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-          .filter(col("jaccard") >= t)
-          .select("id_a", "id_b")
+      case Some(t) => jaccardVerified(edges, withSig, t).select("id_a", "id_b")
     }
     finishPairs(out, withSig)
   }
@@ -338,21 +346,7 @@ object Dedup {
       posexplode(array((0 until bands).map(b =>
         concat_ws(",", slice(col("sig"), b * rows + 1, rows))): _*))
         .as(Seq("band", "key")))
-    val a = banded.select(col("band"), col("key"), col("id").as("id_a"))
-    val b = banded.select(col("band"), col("key"), col("id").as("id_b"))
-    val candidates = a.join(b, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val sa = withSig.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val sb = withSig.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    finishPairs(
-      candidates.join(sa, "id_a").join(sb, "id_b")
-        .withColumn("jaccard",
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard")),
-      withSig)
+    finishPairs(jaccardVerified(bucketPairs(banded, "key"), withSig, threshold), withSig)
   }
 
   /** The DuckDB replica of `minhashPairsPortable` over a corpus CTE named
@@ -397,299 +391,136 @@ object Dedup {
        |WHERE j >= $threshold ORDER BY id_a, id_b""".stripMargin
   }
 
-  /** 64-bit SimHash over word tokens: per bit, sum +1/-1 weighted by token
-    * hash bit, take the sign.
+  // ----- SimHash: one kernel over four signature families ----------------
+
+  /** A simhash signature family: W ∈ {1, 2} signature words of
+    * `wordBits` bits each, the band-width ladder the adaptive plan climbs,
+    * and how a token's word hashes are built. `md5Words` families take
+    * 60-bit slices of one md5 digest, which DuckDB can replay (the
+    * `*PortableOracleSql` replicas); the others hash with xxhash64, which
+    * it cannot.
+    */
+  private[graft] sealed abstract class SimhashFamily(val words: Int, val wordBits: Int,
+                                                     val widths: Seq[Int], val md5Words: Boolean) {
+    def plan(nDocs: Long): (Int, Int) = bandPlan(widths, words, wordBits, nDocs, 16L)
+  }
+  private[graft] object SimhashFamily {
+    case object Fast64 extends SimhashFamily(1, 64, 16 to 32, md5Words = false)
+    case object Portable60 extends SimhashFamily(1, 60, 15 to 30, md5Words = true)
+    case object Fast128 extends SimhashFamily(2, 64, Seq(16, 32, 64), md5Words = false)
+    case object Portable120 extends SimhashFamily(2, 60, Seq(15, 30, 60), md5Words = true)
+  }
+  import SimhashFamily._
+
+  /** SimHash signature frame `(id, sim0[, sim1])`: per signature bit, sum
+    * +1/-1 weighted by the token hash bit, take the sign.
     *
-    * Shaped as explode → hash-aggregate (64 narrow sums) → reassemble:
-    * one shuffle on the doc id, fully vectorized. The naive per-row
-    * expression form (64 nested `aggregate` folds) blows past the
+    * Shaped as explode → ONE hash-aggregate of W·wordBits narrow sums →
+    * reassemble: one shuffle on the doc id, fully vectorized. The naive
+    * per-row expression form (64 nested `aggregate` folds) blows past the
     * whole-stage-codegen method-size limit and falls back to interpreted
     * eval — measured ~20× slower.
+    *
+    * Word hashes: the xxhash64 families hash the token (word 0) and, for
+    * W=2, hash it again salt FIRST, `xxhash64(1L, tok)` (r18 ADVICE): the
+    * salt-last form `xxhash64(tok, 1L)` folds sequentially = hash(1L,
+    * seed=h0), a pure function of h0, so the second word would carry zero
+    * extra token entropy; salt-first re-hashes the token bytes under an
+    * independent seed. The md5 families take hex chars 1–15 and 17–31 —
+    * disjoint 60-bit halves of the same digest.
+    *
+    * Only the md5 families spread the input (`Par.spreadForCpu`). xxhash64
+    * per token is the CHEAP hash — split-only map work in front of a plain
+    * aggregate, where the added exchange was measured pure cost (r18
+    * verdict regressions d06 0.39×, d34 0.62×; the same empirical rule as
+    * tfidf/bigram/b05); md5 is where spreading pays.
     */
-  def simhashDf(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // NO spreadForCpu here (r18 verdict regression d06 0.39×): xxhash64
-    // per token is the CHEAP hash — split-only map work in front of a
-    // plain aggregate, where the added exchange was measured pure cost
-    // (same empirical rule as tfidf/bigram/b05; the md5-based portable
-    // twin below is where spreading pays).
-    val tokenHashes = df
+  private[graft] def simhashSignature(fam: SimhashFamily, df: DataFrame, idCol: String,
+                                      textCol: String): DataFrame = {
+    val tok = (if (fam.md5Words) graft.core.Par.spreadForCpu(df) else df)
       .select(col(idCol).as("id"), explode(split(trim(col(textCol)), "\\s+")).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    val votes = (0 until 64).map { bit =>
-      sum(when(shiftright(col("h"), bit).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as(s"v$bit")
+    val hashed =
+      if (fam.md5Words) tok.withColumn("m", md5(col("tok"))).select(col("id") +:
+        (0 until fam.words).map(w =>
+          conv(substring(col("m"), 1 + 16 * w, 15), 16, 10).cast("long").as(s"h$w")): _*)
+      else tok.select(col("id") +: Seq(xxhash64(col("tok")), xxhash64(lit(1L), col("tok")))
+        .take(fam.words).zipWithIndex.map { case (h, w) => h.as(s"h$w") }: _*)
+    val wb = fam.wordBits
+    val votes = (0 until fam.words * wb).map { bit =>
+      sum(when(shiftright(col(s"h${bit / wb}"), bit % wb).bitwiseAND(1) === 1, 1L)
+        .otherwise(-1L)).as(s"v$bit")
     }
-    tokenHashes.groupBy("id").agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until 64).map(bit =>
-          when(col(s"v$bit") > 0, lit(1L << bit)).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("simhash"))
+    hashed.groupBy("id").agg(votes.head, votes.tail: _*)
+      .select(col("id") +: (0 until fam.words).map(w =>
+        (0 until wb).map(b => when(col(s"v${w * wb + b}") > 0, lit(1L << b)).otherwise(lit(0L)))
+          .reduce((a, b) => a.bitwiseOR(b)).as(s"sim$w")): _*)
   }
 
-  /** Cardinality-adaptive simhash band plan: (bands, bandWidth).
+  /** Cardinality-adaptive band plan: (bands, bandWidth).
     *
     * Sizing rule (exact integer arithmetic so the generated DuckDB oracle
     * reproduces it bit-for-bit): the band key space must hold the corpus
-    * with slack — pick the SMALLEST width `bw` in [minWidth, maxWidth]
-    * with `2^bw >= loadFactor * nDocs` (else maxWidth), then tile the
-    * signature with `bands = totalBits / bw` non-overlapping bands.
+    * with slack — pick the SMALLEST width `bw` in the ladder with
+    * `2^bw >= loadFactor * nDocs` and `bw <= 62` (else the widest), then
+    * tile each signature word with `wordBits / bw` non-overlapping bands.
+    * The comparison is `2^bw / loadFactor >= nDocs`, the same predicate
+    * without the overflow of `loadFactor * nDocs` at n ≥ 2^59; `bw <= 62`
+    * keeps 2^bw a positive Long, so the 2×64 rung is only ever the
+    * fallback.
     *
     * Why: with fixed-width bands the expected background collisions per
     * band grow as n² / 2^bw — the round-8 sf1.0 tier measured 17.8×
     * candidate growth for 10× data at the legacy fixed 4×15-bit layout
     * (SCALING.md). Scaling bw with log2(n) keeps the per-bucket load
     * ≤ 1/loadFactor, so background candidates stay ~linear in n. The
-    * trade (standard for simhash at scale, cf. Manku et al. WWW'07
-    * block-permutation sizing): fewer, wider bands guarantee recall only
-    * for hamming ≤ bands-1; beyond that recall is probabilistic. At
-    * 100 TB you want that trade — the alternative is a candidate set
-    * that grows quadratically with the corpus.
+    * two-word ladders are the word's divisors, so no band straddles a
+    * word boundary and banding stays shift+mask on one Long.
+    */
+  private def bandPlan(widths: Seq[Int], words: Int, wordBits: Int, nDocs: Long,
+                       loadFactor: Long): (Int, Int) = {
+    val bw = widths.find(w => w <= 62 && (1L << w) / loadFactor >= nDocs).getOrElse(widths.last)
+    (words * (wordBits / bw), bw)
+  }
+
+  /** The adaptive plan over one `totalBits` word, widths
+    * [minWidth, maxWidth] — see [[simhashCandidates]] for the ladders.
     */
   def simhashBandPlan(nDocs: Long, totalBits: Int, minWidth: Int, maxWidth: Int,
-                      loadFactor: Long = 16L): (Int, Int) = {
-    val bw = (minWidth to maxWidth).find(b => (1L << b) >= loadFactor * nDocs)
-      .getOrElse(maxWidth)
-    (totalBits / bw, bw)
-  }
+                      loadFactor: Long = 16L): (Int, Int) =
+    bandPlan(minWidth to maxWidth, 1, totalBits, nDocs, loadFactor)
 
-  /** Band a signature frame on an adaptive plan and (optionally) drop
-    * buckets hotter than `maxBucketDf` — the same frequent-key cutoff as
-    * `substringSpans`' `maxGramDf`: a bucket with more members than the
-    * cap is background saturation (or a duplicate mega-cluster better
-    * served by exact dedup) and would contribute O(df²) candidate pairs.
-    * The df window shares the band/key shuffle key with the self-join
-    * that follows, so the guard adds no extra exchange.
-    */
-  private def bandPairs(withSim: DataFrame, bands: Int, bw: Int,
-                        maxBucketDf: Option[Int]): DataFrame = {
-    val mask = (1L << bw) - 1
-    val banded0 = withSim.select(col("id"), col("simhash"),
-      posexplode(array((0 until bands).map(b =>
-        shiftright(col("simhash"), b * bw).bitwiseAND(mask)): _*))
-        .as(Seq("band", "band_bits")))
-    val banded = maxBucketDf match {
-      case Some(cap) =>
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "band_bits")
-        banded0.withColumn("bucket_df", count(lit(1)).over(w))
-          .filter(col("bucket_df") <= cap).drop("bucket_df")
-      case None => banded0
-    }
-    val a = banded.select(col("band"), col("band_bits"), col("id").as("id_a"), col("simhash").as("sim_a"))
-    val b2 = banded.select(col("band"), col("band_bits"), col("id").as("id_b"), col("simhash").as("sim_b"))
-    a.join(b2, Seq("band", "band_bits"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        // hamming distance between the two simhashes
-        bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).cast("long").as("hamming"))
-      .distinct()
-  }
-
-  /** SimHash near-dup candidates: docs agreeing on any band of the 64-bit
-    * simhash. The band plan is cardinality-adaptive (`simhashBandPlan`
-    * over 64 bits, width 16–32): small corpora get the legacy 4×16-bit
-    * quarters, large corpora get fewer, wider bands so background
-    * collisions stay ~linear in n. Width 32 (2×32 — every signature bit
-    * banded) covers n ≈ 2^32/16 ≈ 268M docs before the plan saturates;
-    * past that the 64-bit signature itself is the bound (the portable
-    * 60-bit variant tops out at 2×30 ≈ 67M for the same reason). The
-    * earlier ceilings — 21 (saturated at ~131k docs) and 30 (67M) — let
-    * per-bucket load, and with it the `maxBucketDf` recall loss, grow
-    * linearly on any real corpus.
-    *
-    * RECALL CONTRACT (read before relying on this across corpus sizes):
-    * by pigeonhole, a pair is GUARANTEED to surface only when its hamming
-    * distance ≤ bands−1 — hamming ≤ 3 under the small-corpus 4-band
-    * plan, ≤ 2 once the plan drops to 3 bands (n > ~2^16/16), and ≤ 1
-    * once it reaches 2 wide bands (n > ~2^21/16 ≈ 131k docs) — the Manku et al.
-    * (WWW'07) block-permutation trade: table count × block width is
-    * fixed by the signature, so halving the tables doubles the reach of
-    * each but narrows the guarantee. Pairs beyond the bound surface only
-    * probabilistically, so the SAME pair can legitimately disappear as
-    * the corpus grows and callers filtering at e.g. `hamming <= 6` are
-    * sampling, not enumerating, at every corpus size. Pass `bandPlan` to
-    * pin a fixed layout (fixed recall, quadratic background risk), or
-    * `maxBucketDf` to additionally cap per-bucket membership. The chosen
-    * plan is logged per run (slf4j INFO) so runs are auditable.
-    */
-  def simhashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        bandPlan: Option[(Int, Int)] = None,
-                        maxBucketDf: Option[Int] = None): DataFrame = {
-    // persist: both sides of the band self-join read the signature frame,
-    // and without materialization each side re-runs the whole tokenize →
-    // 64-vote aggregation (the dominant stage) — same reasoning as the
-    // `withSig` persist in minhashPairs; released via finishPairs below
-    val withSim = simhashDf(df, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // adaptive plan sizes off the SIGNATURE frame (one row per doc) so
-    // the count materializes the persist instead of re-reading the source
-    val (bands, bw) = bandPlan.getOrElse(
-      simhashBandPlan(withSim.count(), totalBits = 64, minWidth = 16, maxWidth = 32))
-    logBandPlan("simhashCandidates", bands, bw)
-    finishPairs(bandPairs(withSim, bands, bw, maxBucketDf), withSim)
-  }
-
-  /** Audit line for the (possibly corpus-size-derived) band layout —
-    * guaranteed-recall bound is hamming ≤ bands−1 (see entry-point docs).
-    */
-  private def logBandPlan(site: String, bands: Int, bw: Int): Unit =
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
-      s"$site: band plan ${bands}x${bw}-bit (guaranteed recall hamming <= ${bands - 1})")
-
-  /** Portable SimHash candidates: same explode → per-bit vote → band
-    * pipeline as `simhashCandidates`, but token hashes are 60-bit md5
-    * prefixes so the run is reproducible in DuckDB (`simhashPortableOracleSql`
-    * generates the replica from the same bit layout and the SAME
-    * cardinality-adaptive sizing rule — `simhashBandPlan` over 60 bits,
-    * width 15–30: 4×15 for small corpora, then 3 and finally 2 wider
-    * bands as n grows, covering n ≈ 2^30/16 ≈ 67M docs unsaturated).
-    *
-    * Same RECALL CONTRACT as `simhashCandidates`: guaranteed only for
-    * hamming ≤ bands−1 (3 under 4×15, 2 at 3 bands, 1 once the plan
-    * reaches 2 wide bands at n > ~2^20/16 docs), probabilistic beyond —
-    * candidate output is corpus-size-dependent unless `bandPlan` pins a
-    * layout. Chosen plan is logged per run.
-    */
-  def simhashCandidatesPortable(df: DataFrame, idCol: String, textCol: String,
-                                bandPlan: Option[(Int, Int)] = None,
-                                maxBucketDf: Option[Int] = None): DataFrame = {
-    val bits = 60
-    val tok = graft.core.Par.spreadForCpu(df)
-      .select(col(idCol).as("id"), explode(split(trim(col(textCol)), "\\s+")).as("tok"))
-      .withColumn("h", conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long"))
-    val votes = (0 until bits).map { bit =>
-      sum(when(shiftright(col("h"), bit).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as(s"v$bit")
-    }
-    val withSim = tok.groupBy("id").agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until bits).map(bit =>
-          when(col(s"v$bit") > 0, lit(1L << bit)).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("simhash"))
-      // persisted for the same both-sides-of-the-self-join reason as the
-      // fast path above; released via finishPairs below
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // sizing off the signature frame: one row per doc, count reads the
-    // cache it just materialized (mirrors the SQL replica's count of `sim`)
-    val (bands, bw) = bandPlan.getOrElse(
-      simhashBandPlan(withSim.count(), totalBits = bits, minWidth = 15, maxWidth = 30))
-    logBandPlan("simhashCandidatesPortable", bands, bw)
-    finishPairs(bandPairs(withSim, bands, bw, maxBucketDf), withSim)
-  }
-
-  /** DuckDB replica of `simhashCandidatesPortable` (+ hamming cutoff) over
-    * a `corpus(doc_id, text)` CTE body — generated from the same 60-bit
-    * layout and replaying the same integer-exact adaptive sizing rule
-    * (`simhashBandPlan`: smallest bw in [15,30] with 2^bw >= 16·n, bands
-    * = 60/bw) inside SQL, so the oracle picks the identical plan at every
-    * scale factor without knowing n in advance.
-    */
-  def simhashPortableOracleSql(corpusSql: String, maxHamming: Int,
-                               maxBucketDf: Option[Int] = None): String = {
-    val bits = 60
-    val voteExprs = (0 until bits).map(b =>
-      s"SUM(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS v$b").mkString(",\n  ")
-    val simExpr = (0 until bits).map(b =>
-      s"(CASE WHEN v$b > 0 THEN (1::BIGINT << $b) ELSE 0::BIGINT END)").mkString(" | ")
-    val dfGuard = maxBucketDf
-      .map(cap => s"\n  QUALIFY count(*) OVER (PARTITION BY band, key) <= $cap")
-      .getOrElse("")
-    s"""WITH corpus AS ($corpusSql),
-       |tok AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok FROM corpus),
-       |h AS (SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h FROM tok),
-       |votes AS (SELECT doc_id,
-       |  $voteExprs
-       |  FROM h GROUP BY doc_id),
-       |sim AS (SELECT doc_id, $simExpr AS s FROM votes),
-       |params AS (SELECT CAST(COALESCE(
-       |    MIN(CASE WHEN (1::BIGINT << bw) >= 16 * n THEN bw END), 30) AS INT) AS bw
-       |  FROM (SELECT unnest(range(15, 31)) AS bw), (SELECT count(*) AS n FROM sim)),
-       |bands AS (
-       |  SELECT doc_id, s, bd.band AS band,
-       |    (s >> (bd.band * p.bw)) & ((1::BIGINT << p.bw) - 1) AS key
-       |  FROM sim, params p, (SELECT CAST(unnest(range(0, 4)) AS INT) AS band) bd
-       |  WHERE bd.band < ($bits // p.bw)$dfGuard),
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    bit_count(xor(a.s, b.s))::BIGINT AS hamming
-       |  FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-       |  WHERE a.doc_id < b.doc_id)
-       |SELECT id_a, id_b, hamming FROM cand
-       |WHERE hamming <= $maxHamming ORDER BY id_a, id_b""".stripMargin
-  }
-
-  // ----- 128-bit simhash tier: the signature-bound lift ------------------
-  //
-  // The 64-bit plans above saturate when the band key space runs out of
-  // signature: 2 bands × 32 bits tops out at 2^32/16 ≈ 268M docs (fast
-  // path; the 60-bit portable at 67M). This tier doubles the signature to
-  // TWO words, and restricts band widths to divisors of the word so no
-  // band ever straddles a word boundary — banding stays shift+mask on one
-  // Long, and at the widest plan each WORD is a band (2×64: saturation
-  // ~2^64/16 ≈ 10^18 docs). Wider signature also means more bands at the
-  // same width (8×16 vs 4×16), so small-corpus guaranteed recall IMPROVES
-  // (hamming ≤ bands−1 = 7 vs 3) while the scale ceiling moves out by ten
-  // decades. Same Manku et al. trade at the wide end.
-
-  /** Adaptive plan for a two-word signature: smallest width in the word's
-    * divisor ladder with `2^bw >= loadFactor·n`, else the word itself.
-    * wordBits = 64 (fast, xxhash64 words) or 60 (portable, md5 words —
-    * the ladder the generated DuckDB oracle replays verbatim).
+  /** The adaptive plan over two words of `wordBits` = 64 (xxhash64 words,
+    * ladder {16,32,64}) or 60 (md5 words, {15,30,60}).
     */
   def simhash128BandPlan(nDocs: Long, wordBits: Int = 64,
                          loadFactor: Long = 16L): (Int, Int) = {
-    val widths = wordBits match {
-      case 64 => Seq(16, 32, 64)
-      case 60 => Seq(15, 30, 60)
-      case w  => throw new IllegalArgumentException(s"unsupported word width $w")
-    }
-    val bw = widths.find(w => w <= 62 && (1L << w) >= loadFactor * nDocs)
-      .getOrElse(widths.last)
-    (2 * wordBits / bw, bw)
+    require(wordBits == 64 || wordBits == 60, s"unsupported word width $wordBits")
+    val fam = if (wordBits == 64) Fast128 else Portable120
+    bandPlan(fam.widths, fam.words, fam.wordBits, nDocs, loadFactor)
   }
 
-  /** 128-bit SimHash signature: two independent 64-bit word hashes per
-    * token (xxhash64 with and without a salt column), 128 per-bit votes
-    * in ONE hash aggregate — the same explode → narrow-sums → reassemble
-    * shape as [[simhashDf]] (the per-row fold form breaks codegen).
+  /** Band a signature frame and self-join the buckets: band b reads word
+    * `b / perWord` at bit offset `(b % perWord)·bw`; hamming = popcount
+    * over all words.
+    *
+    * `maxBucketDf` (optional) drops buckets hotter than the cap — the same
+    * frequent-key cutoff as `substringSpans`' `maxGramDf`: a bucket with
+    * more members than the cap is background saturation (or a duplicate
+    * mega-cluster better served by exact dedup) and would contribute
+    * O(df²) candidate pairs. The df window shares the band/key shuffle key
+    * with the self-join that follows, so the guard adds no extra exchange.
     */
-  def simhash128Df(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // NO spreadForCpu (r18 verdict regression d34 0.62×): two xxhash64
-    // per token is still the cheap-hash case — see simhashDf above.
-    val tokenHashes = df
-      .select(col(idCol).as("id"), explode(split(trim(col(textCol)), "\\s+")).as("tok"))
-      .withColumn("h0", xxhash64(col("tok")))
-      // salt FIRST (r18 ADVICE): the salt-last form xxhash64(tok, 1L)
-      // folds sequentially = hash(1L, seed=h0), a pure function of h0 —
-      // the second 64 vote words would carry zero extra token entropy.
-      // xxhash64(1L, tok) re-hashes the token bytes under an independent
-      // seed, so sim1 really is a second independent signature word.
-      .withColumn("h1", xxhash64(lit(1L), col("tok")))
-    val votes = (0 until 128).map { bit =>
-      val w = if (bit < 64) col("h0") else col("h1")
-      sum(when(shiftright(w, bit % 64).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as(s"v$bit")
-    }
-    tokenHashes.groupBy("id").agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until 64).map(b =>
-          when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("sim0"),
-        (64 until 128).map(b =>
-          when(col(s"v$b") > 0, lit(1L << (b - 64))).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("sim1"))
-  }
-
-  /** Band a two-word signature frame; same bucket-df guard and one
-    * band-key shuffle as [[bandPairs]]. Hamming = popcount over both
-    * words.
-    */
-  private def bandPairs128(withSim: DataFrame, bands: Int, bw: Int, wordBits: Int,
-                           maxBucketDf: Option[Int]): DataFrame = {
-    require(wordBits % bw == 0, s"band width $bw must divide the word ($wordBits)")
-    val perWord = wordBits / bw
-    val mask = if (bw == 64) lit(-1L) else lit((1L << bw) - 1)
-    val bandCols = (0 until bands).map { b =>
-      val w = if (b < perWord) col("sim0") else col("sim1")
-      shiftright(w, (b % perWord) * bw).bitwiseAND(mask)
-    }
-    val banded0 = withSim.select(col("id"), col("sim0"), col("sim1"),
-      posexplode(array(bandCols: _*)).as(Seq("band", "band_bits")))
+  private def bandPairs(fam: SimhashFamily, withSim: DataFrame, bands: Int, bw: Int,
+                        maxBucketDf: Option[Int]): DataFrame = {
+    val perWord = fam.wordBits / bw
+    require(bands <= fam.words * perWord && (fam.words == 1 || fam.wordBits % bw == 0),
+      s"band plan ${bands}x$bw does not tile $fam's ${fam.wordBits}-bit words")
+    val mask = if (bw == 64) -1L else (1L << bw) - 1
+    val sims = (0 until fam.words).map(w => s"sim$w")
+    val banded0 = withSim.select((col("id") +: sims.map(col)) :+
+      posexplode(array((0 until bands).map(b =>
+        shiftright(col(sims(b / perWord)), (b % perWord) * bw).bitwiseAND(mask)): _*))
+        .as(Seq("band", "band_bits")): _*)
     val banded = maxBucketDf match {
       case Some(cap) =>
         val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "band_bits")
@@ -697,111 +528,157 @@ object Dedup {
           .filter(col("bucket_df") <= cap).drop("bucket_df")
       case None => banded0
     }
-    val a = banded.select(col("band"), col("band_bits"), col("id").as("id_a"),
-      col("sim0").as("sa0"), col("sim1").as("sa1"))
-    val b2 = banded.select(col("band"), col("band_bits"), col("id").as("id_b"),
-      col("sim0").as("sb0"), col("sim1").as("sb1"))
-    a.join(b2, Seq("band", "band_bits"))
+    def side(s: String) = banded.select(col("band") +: col("band_bits") +:
+      col("id").as(s"id_$s") +: sims.map(w => col(w).as(s"${w}_$s")): _*)
+    side("a").join(side("b"), Seq("band", "band_bits"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        (bit_count(col("sa0").bitwiseXOR(col("sb0"))) +
-          bit_count(col("sa1").bitwiseXOR(col("sb1")))).cast("long").as("hamming"))
+        sims.map(w => bit_count(col(s"${w}_a").bitwiseXOR(col(s"${w}_b"))))
+          .reduce(_ + _).cast("long").as("hamming"))
       .distinct()
   }
 
-  /** 128-bit fast-path candidates (xxhash64 words). Guaranteed recall
-    * hamming ≤ bands−1 (7 at 8×16, 3 at 4×32, 1 at 2×64); saturation
-    * ~10^18 docs at the widest plan. Same persist/finishPairs lifecycle
-    * as [[simhashCandidates]].
+  /** SimHash near-dup candidates `(id_a, id_b, hamming)`: docs agreeing
+    * on any band of the family's signature, on a cardinality-adaptive
+    * band plan. Small corpora get the narrowest rung (most bands), large
+    * corpora fewer, wider bands so background collisions stay ~linear in
+    * n; the plan saturates at the widest rung (n ≈ 2^bw/16), after which
+    * per-bucket load, and with it the `maxBucketDf` recall loss, grows
+    * linearly. The earlier 64-bit ceilings — 21 (saturated at ~131k docs)
+    * and 30 (67M) — did exactly that on any real corpus, and the two-word
+    * families exist to move the bound past the 64-bit signature itself:
+    * more bands at the same width, so small-corpus guaranteed recall
+    * doubles, while the ceiling moves out by ten decades.
+    *
+    * | family      | ladder       | small-n plan | guaranteed hamming radius                    | saturation n      |
+    * |-------------|--------------|--------------|----------------------------------------------|-------------------|
+    * | Fast64      | 16 to 32     | 4×16         | 3; 2 at n > 2^16/16; 1 at n > 2^21/16 ≈ 131k | 2^32/16 ≈ 268M    |
+    * | Portable60  | 15 to 30     | 4×15         | 3; 2 at n > 2^15/16; 1 at n > 2^20/16 ≈ 65k  | 2^30/16 ≈ 67M     |
+    * | Fast128     | {16, 32, 64} | 8×16         | 7; 3 at n > 2^16/16; 1 at n > 2^32/16 ≈ 268M | 2^64/16 ≈ 10^18   |
+    * | Portable120 | {15, 30, 60} | 8×15         | 7; 3 at n > 2^15/16; 1 at n > 2^30/16 ≈ 67M  | 2^60/16 ≈ 7·10^16 |
+    *
+    * RECALL CONTRACT (read before relying on this across corpus sizes):
+    * by pigeonhole, a pair is GUARANTEED to surface only when its hamming
+    * distance ≤ bands−1 — the Manku et al. (WWW'07) block-permutation
+    * trade: table count × block width is fixed by the signature, so
+    * halving the tables doubles the reach of each but narrows the
+    * guarantee. At 100 TB you want that trade — the alternative is a
+    * candidate set that grows quadratically with the corpus. Pairs beyond
+    * the bound surface only probabilistically, so the SAME pair can
+    * legitimately disappear as the corpus grows and callers filtering at
+    * e.g. `hamming <= 6` are sampling, not enumerating, at every corpus
+    * size. Pass `bandPlan` to pin a fixed layout (fixed recall, quadratic
+    * background risk), or `maxBucketDf` to additionally cap per-bucket
+    * membership. The chosen plan is logged per run (slf4j INFO) so runs
+    * are auditable.
+    */
+  private def simhashKernel(fam: SimhashFamily, df: DataFrame, idCol: String, textCol: String,
+                            bandPlan: Option[(Int, Int)], maxBucketDf: Option[Int]): DataFrame = {
+    // persist: both sides of the band self-join read the signature frame,
+    // and without materialization each side re-runs the whole tokenize →
+    // vote aggregation (the dominant stage) — same reasoning as the
+    // `withSig` persist in minhashPairs; released via finishPairs below
+    val withSim = simhashSignature(fam, df, idCol, textCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // adaptive plan sizes off the SIGNATURE frame (one row per doc) so the
+    // count materializes the persist instead of re-reading the source
+    // (mirrors the SQL replica's count of `sim`)
+    val (bands, bw) = bandPlan.getOrElse(fam.plan(withSim.count()))
+    org.slf4j.LoggerFactory.getLogger(getClass).info(
+      s"simhash $fam: band plan ${bands}x$bw-bit (guaranteed recall hamming <= ${bands - 1})")
+    finishPairs(bandPairs(fam, withSim, bands, bw, maxBucketDf), withSim)
+  }
+
+  /** 64-bit xxhash64 simhash candidates ([[simhashKernel]], `Fast64`). */
+  def simhashCandidates(df: DataFrame, idCol: String, textCol: String,
+                        bandPlan: Option[(Int, Int)] = None,
+                        maxBucketDf: Option[Int] = None): DataFrame =
+    simhashKernel(Fast64, df, idCol, textCol, bandPlan, maxBucketDf)
+
+  /** 60-bit md5 simhash candidates, replayed by [[simhashPortableOracleSql]]
+    * ([[simhashKernel]], `Portable60`).
+    */
+  def simhashCandidatesPortable(df: DataFrame, idCol: String, textCol: String,
+                                bandPlan: Option[(Int, Int)] = None,
+                                maxBucketDf: Option[Int] = None): DataFrame =
+    simhashKernel(Portable60, df, idCol, textCol, bandPlan, maxBucketDf)
+
+  /** 128-bit (two xxhash64 words) simhash candidates ([[simhashKernel]],
+    * `Fast128`).
     */
   def simhash128Candidates(df: DataFrame, idCol: String, textCol: String,
                            bandPlan: Option[(Int, Int)] = None,
-                           maxBucketDf: Option[Int] = None): DataFrame = {
-    val withSim = simhash128Df(df, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (bands, bw) = bandPlan.getOrElse(simhash128BandPlan(withSim.count(), wordBits = 64))
-    logBandPlan("simhash128Candidates", bands, bw)
-    finishPairs(bandPairs128(withSim, bands, bw, 64, maxBucketDf), withSim)
-  }
+                           maxBucketDf: Option[Int] = None): DataFrame =
+    simhashKernel(Fast128, df, idCol, textCol, bandPlan, maxBucketDf)
 
-  /** Portable 120-bit variant: two 60-bit md5-prefix words per token
-    * (hex chars 1–15 and 17–31 — disjoint halves of the same digest), so
-    * the whole pipeline — votes, signature, the {15,30,60} divisor
-    * ladder, banding, hamming — replays in DuckDB
-    * ([[simhash128PortableOracleSql]]). Saturation at the 2×60 plan:
-    * 2^60/16 ≈ 7·10^16 docs.
+  /** 120-bit (two md5 words) simhash candidates, replayed by
+    * [[simhash128PortableOracleSql]] ([[simhashKernel]], `Portable120`).
     */
   def simhash128CandidatesPortable(df: DataFrame, idCol: String, textCol: String,
                                    bandPlan: Option[(Int, Int)] = None,
-                                   maxBucketDf: Option[Int] = None): DataFrame = {
-    val wb = 60
-    val tok = graft.core.Par.spreadForCpu(df)
-      .select(col(idCol).as("id"), explode(split(trim(col(textCol)), "\\s+")).as("tok"))
-      .withColumn("m", md5(col("tok")))
-      .withColumn("h0", conv(substring(col("m"), 1, 15), 16, 10).cast("long"))
-      .withColumn("h1", conv(substring(col("m"), 17, 15), 16, 10).cast("long"))
-    val votes = (0 until 2 * wb).map { bit =>
-      val w = if (bit < wb) col("h0") else col("h1")
-      sum(when(shiftright(w, bit % wb).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as(s"v$bit")
-    }
-    val withSim = tok.groupBy("id").agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until wb).map(b =>
-          when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("sim0"),
-        (wb until 2 * wb).map(b =>
-          when(col(s"v$b") > 0, lit(1L << (b - wb))).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("sim1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (bands, bw) = bandPlan.getOrElse(simhash128BandPlan(withSim.count(), wordBits = wb))
-    logBandPlan("simhash128CandidatesPortable", bands, bw)
-    finishPairs(bandPairs128(withSim, bands, bw, wb, maxBucketDf), withSim)
-  }
+                                   maxBucketDf: Option[Int] = None): DataFrame =
+    simhashKernel(Portable120, df, idCol, textCol, bandPlan, maxBucketDf)
 
-  /** DuckDB replica of [[simhash128CandidatesPortable]] (+ hamming
-    * cutoff): two 60-bit md5 words, 120 votes, the same integer-exact
-    * {15,30,60} divisor ladder sized from the corpus inside SQL, banding
-    * by word + offset, two-word popcount hamming.
+  /** DuckDB replica of an md5 family's candidates (+ hamming cutoff) over
+    * a `corpus(doc_id, text)` CTE body — generated from the same word
+    * layout and replaying the same integer-exact adaptive sizing rule
+    * (smallest ladder width with 2^bw >= 16·n, W·(wordBits/bw) bands)
+    * inside SQL, so the oracle picks the identical plan at every scale
+    * factor without knowing n in advance. Banding by word + offset,
+    * all-words popcount hamming.
     */
-  def simhash128PortableOracleSql(corpusSql: String, maxHamming: Int,
-                                  maxBucketDf: Option[Int] = None): String = {
-    val wb = 60
-    val voteExprs = (0 until 2 * wb).map { bit =>
-      val w = if (bit < wb) "h0" else "h1"
-      s"SUM(CASE WHEN ($w >> ${bit % wb}) & 1 = 1 THEN 1 ELSE -1 END) AS v$bit"
-    }.mkString(",\n  ")
-    val sim0 = (0 until wb).map(b =>
-      s"(CASE WHEN v$b > 0 THEN (1::BIGINT << $b) ELSE 0::BIGINT END)").mkString(" | ")
-    val sim1 = (wb until 2 * wb).map(b =>
-      s"(CASE WHEN v$b > 0 THEN (1::BIGINT << ${b - wb}) ELSE 0::BIGINT END)").mkString(" | ")
+  private def simhashOracleSql(fam: SimhashFamily, corpusSql: String, maxHamming: Int,
+                               maxBucketDf: Option[Int]): String = {
+    require(fam.md5Words, s"$fam has no DuckDB replica (xxhash64 words)")
+    val (wb, ws) = (fam.wordBits, 0 until fam.words)
+    val hashes = ws.map(w =>
+      s"CAST(('0x' || substr(md5(tok), ${1 + 16 * w}, 15)) AS BIGINT) AS h$w").mkString(",\n  ")
+    val voteExprs = (0 until fam.words * wb).map(bit =>
+      s"SUM(CASE WHEN (h${bit / wb} >> ${bit % wb}) & 1 = 1 THEN 1 ELSE -1 END) AS v$bit")
+      .mkString(",\n  ")
+    val sims = ws.map(w => (0 until wb).map(b =>
+      s"(CASE WHEN v${w * wb + b} > 0 THEN (1::BIGINT << $b) ELSE 0::BIGINT END)")
+      .mkString(" | ") + s" AS s$w").mkString(",\n  ")
+    val word = ws.map(w => s"WHEN $w THEN s$w").mkString(s"CASE bd.band // ($wb // p.bw) ", " ", " END")
+    val hamming = ws.map(w => s"bit_count(xor(a.s$w, b.s$w))").mkString(" + ")
     val dfGuard = maxBucketDf
       .map(cap => s"\n  QUALIFY count(*) OVER (PARTITION BY band, key) <= $cap")
       .getOrElse("")
     s"""WITH corpus AS ($corpusSql),
        |tok AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok FROM corpus),
        |h AS (SELECT doc_id,
-       |  CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h0,
-       |  CAST(('0x' || substr(md5(tok), 17, 15)) AS BIGINT) AS h1 FROM tok),
+       |  $hashes FROM tok),
        |votes AS (SELECT doc_id,
        |  $voteExprs
        |  FROM h GROUP BY doc_id),
-       |sim AS (SELECT doc_id, $sim0 AS s0, $sim1 AS s1 FROM votes),
+       |sim AS (SELECT doc_id,
+       |  $sims FROM votes),
        |params AS (SELECT CAST(COALESCE(
-       |    MIN(CASE WHEN (1::BIGINT << bw) >= 16 * n THEN bw END), 60) AS INT) AS bw
-       |  FROM (SELECT unnest([15, 30, 60]) AS bw), (SELECT count(*) AS n FROM sim)),
+       |    MIN(CASE WHEN (1::BIGINT << bw) >= 16 * n THEN bw END), ${fam.widths.last}) AS INT) AS bw
+       |  FROM (SELECT unnest([${fam.widths.mkString(", ")}]) AS bw), (SELECT count(*) AS n FROM sim)),
        |bands AS (
-       |  SELECT doc_id, s0, s1, bd.band AS band,
-       |    ((CASE WHEN bd.band < ($wb // p.bw) THEN s0 ELSE s1 END)
-       |      >> ((bd.band % ($wb // p.bw)) * p.bw)) & ((1::BIGINT << p.bw) - 1) AS key
-       |  FROM sim, params p, (SELECT CAST(unnest(range(0, 8)) AS INT) AS band) bd
-       |  WHERE bd.band < (${2 * wb} // p.bw)$dfGuard),
+       |  SELECT sim.*, bd.band AS band,
+       |    (($word) >> ((bd.band % ($wb // p.bw)) * p.bw)) & ((1::BIGINT << p.bw) - 1) AS key
+       |  FROM sim, params p,
+       |    (SELECT CAST(unnest(range(0, ${fam.words * (wb / fam.widths.head)})) AS INT) AS band) bd
+       |  WHERE bd.band < (${fam.words} * ($wb // p.bw))$dfGuard),
        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    (bit_count(xor(a.s0, b.s0)) + bit_count(xor(a.s1, b.s1)))::BIGINT AS hamming
+       |    ($hamming)::BIGINT AS hamming
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
        |  WHERE a.doc_id < b.doc_id)
        |SELECT id_a, id_b, hamming FROM cand
        |WHERE hamming <= $maxHamming ORDER BY id_a, id_b""".stripMargin
   }
+
+  /** [[simhashOracleSql]] for [[simhashCandidatesPortable]]. */
+  def simhashPortableOracleSql(corpusSql: String, maxHamming: Int,
+                               maxBucketDf: Option[Int] = None): String =
+    simhashOracleSql(Portable60, corpusSql, maxHamming, maxBucketDf)
+
+  /** [[simhashOracleSql]] for [[simhash128CandidatesPortable]]. */
+  def simhash128PortableOracleSql(corpusSql: String, maxHamming: Int,
+                                  maxBucketDf: Option[Int] = None): String =
+    simhashOracleSql(Portable120, corpusSql, maxHamming, maxBucketDf)
 
   /** Embedding-cosine near-duplicate pairs: all (a, b) with cosine ≥
     * threshold. Exact all-pairs form (the oracle-checkable baseline);

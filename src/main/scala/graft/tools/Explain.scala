@@ -19,21 +19,20 @@ object Explain {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // the four simhash drills explain their SIGNATURE frame through the one
+    // signature builder — the persist/self-join machinery behind the
+    // candidates is checkpoint-fenced and explains as Scan ExistingRDD
+    import graft.ext.Dedup.SimhashFamily._
+    val simhashDrills = Map("d06_simhash" -> Fast64, "d10_simhash_portable" -> Portable60,
+      "d28_simhash128_portable" -> Portable120, "d34_simhash128" -> Fast128)
     names.foreach { n =>
       println(s"===== $n =====")
-      // bench-only drills (not in SparkEntry.queries): explain the
-      // SIGNATURE kernel frame — the persist/self-join machinery behind
-      // it is checkpoint-fenced and explains as Scan ExistingRDD
-      n match {
-        case "d06_simhash" =>
-          graft.ext.Dedup.simhashDf(
+      simhashDrills.get(n) match {
+        case Some(fam) =>
+          graft.ext.Dedup.simhashSignature(fam,
             graft.queries.TextQueries.corpusWithNearDups(spark, sfDir), "doc_id", "text")
             .explain("formatted")
-        case "d34_simhash128" =>
-          graft.ext.Dedup.simhash128Df(
-            graft.queries.TextQueries.corpusWithNearDups(spark, sfDir), "doc_id", "text")
-            .explain("formatted")
-        case _ =>
+        case None =>
           graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
       }
     }

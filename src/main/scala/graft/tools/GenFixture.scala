@@ -3,8 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Regenerate the d06/d34 golden-snapshot fixtures (sf0.001) after any
-  * INTENDED simhash change: candidate pairs at the family's hamming
+/** Regenerate the four simhash golden-snapshot fixtures (sf0.001) after
+  * any INTENDED simhash change — d06/d34 (xxhash64 families) and d10/d28
+  * (portable md5 families): candidate pairs at the family's hamming
   * cutoff plus planted/background composition stats printed for the
   * contract assertions.
   */
@@ -35,6 +36,12 @@ object GenFixture {
     snapshot("d06_simhash_sf0001",
       graft.ext.Dedup.simhashCandidates(corpus, "doc_id", "text")
         .filter(col("hamming") <= 6))
+    snapshot("d10_simhash_portable_sf0001",
+      graft.ext.Dedup.simhashCandidatesPortable(corpus, "doc_id", "text")
+        .filter(col("hamming") <= 6))
+    snapshot("d28_simhash128_portable_sf0001",
+      graft.ext.Dedup.simhash128CandidatesPortable(corpus, "doc_id", "text")
+        .filter(col("hamming") <= 12))
     snapshot("d34_simhash128_sf0001",
       graft.ext.Dedup.simhash128Candidates(corpus, "doc_id", "text")
         .filter(col("hamming") <= 12))

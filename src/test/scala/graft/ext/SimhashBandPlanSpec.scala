@@ -95,11 +95,15 @@ class SimhashBandPlanSpec extends AnyFunSuite {
   }
 
   test("plan invariants: bands*width <= totalBits, width monotone in n") {
-    val widths = (1L to 30L).map(e => Dedup.simhashBandPlan(1L << e, 60, 15, 30))
-    widths.foreach { case (bands, bw) =>
-      assert(bands * bw <= 60 && bands >= 2, s"bad plan ($bands, $bw)")
+    import Dedup.SimhashFamily._
+    Seq(Fast64, Portable60, Fast128, Portable120).foreach { fam =>
+      val widths = (0L to 62L).map(e => fam.plan(1L << e)) :+ fam.plan(Long.MaxValue)
+      widths.foreach { case (bands, bw) =>
+        assert(bands * bw <= fam.words * fam.wordBits && bands >= 2, s"bad $fam plan ($bands, $bw)")
+        if (fam.words == 2) assert(fam.wordBits % bw === 0, s"$fam plan ($bands, $bw) straddles a word")
+      }
+      assert(widths.map(_._2) === widths.map(_._2).sorted, s"$fam width must be monotone in n")
     }
-    assert(widths.map(_._2) === widths.map(_._2).sorted, "width must be monotone in n")
   }
 
   test("maxBucketDf drops saturated buckets: no bucket can explode") {
