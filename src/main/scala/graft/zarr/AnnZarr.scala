@@ -58,13 +58,13 @@ object AnnZarr {
     * with no job; larger frames route through the DSv2 row-range frame
     * scan ([[graft.zarr.datasource.ZarrFrame]]) so no axis byte crosses
     * the driver and tasks never carry a LocalRelation payload (a 571k-row
-    * obs frame rode task binaries at ~21 MB before this routing — the
-    * read-side twin of the writer's `appendRows` routing).
+    * obs frame rode task binaries at ~21 MB before this routing). The
+    * writer has no such split: every frame writes executor-side.
     */
   private[graft] var driverFrameRowLimit: Long = 1L << 16
 
-  /** Rows decoded through the driver path — spec probe, same contract as
-    * [[AnnZarrWriter.driverAxisRowsProbe]].
+  /** Rows decoded through the driver path — a spec probe pinning that
+    * frames above [[driverFrameRowLimit]] never decode on the driver.
     */
   private[graft] val driverFrameRowsProbe = new java.util.concurrent.atomic.AtomicLong
 
@@ -150,7 +150,8 @@ object AnnZarr {
     val bounds = (0 to par).map(p => nRows.toLong * p / par).distinct
     val ranges = bounds.zip(bounds.tail)
     val ptrB = spark.sparkContext.broadcast(indptr)
-    val rdd = spark.sparkContext.parallelize(ranges, ranges.size)
+    // a 0-row node has no ranges, and parallelize needs one slice
+    val rdd = spark.sparkContext.parallelize(ranges, math.max(1, ranges.size))
       .flatMap { case (r0, r1) =>
         val ptr = ptrB.value
         val e0 = ptr(r0.toInt); val e1 = ptr(r1.toInt)

@@ -5,10 +5,11 @@ import java.util.zip.Deflater
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.artifact.{AnnDataset, UnsValue}
 
@@ -33,10 +34,14 @@ import graft.artifact.{AnnDataset, UnsValue}
   * There is no single-writer bottleneck like the HDF5 container's
   * one-file append ([[graft.h5.AnnH5Writer]] streams through the driver
   * by necessity — inherent to the format, not to the engine). Axis
-  * frames and indptr also write EXECUTOR-SIDE once they span more than
-  * one chunk ([[writeFrameDistributed]] / [[writeCsrDistributed]] — the
-  * driver holds chunk-level offsets only); single-chunk frames and uns
-  * keep the simple driver path (bounded by one chunk).
+  * frames and indptr write EXECUTOR-SIDE too, at every size; the driver
+  * holds metadata, chunk-level offsets, category dictionaries and uns.
+  *
+  * Each node kind has ONE executor-side extend that grows the node from
+  * a committed prefix — [[writeFrameChunks]], [[extendCsr]] (with
+  * [[writeElementObjects]]) and [[extendDense]]. [[write]] calls it with
+  * an empty prefix, [[appendRows]] with the store's, so appends and
+  * one-shot writes run the same code at every size.
   */
 object AnnZarrWriter {
 
@@ -167,26 +172,6 @@ object AnnZarrWriter {
 
   private def chunkKey1d(c: Long, v3: Boolean): String = if (v3) s"c/$c" else s"$c"
 
-  /** Pack one chunk's values to raw bytes (C order, full chunk padded). */
-  private def packNum(dtype: String, vals: Array[Double]): Array[Byte] = {
-    val b = dtype match {
-      case "<f8" =>
-        val bb = ByteBuffer.allocate(vals.length * 8).order(ByteOrder.LITTLE_ENDIAN)
-        vals.foreach(bb.putDouble); bb
-      case "<i8" =>
-        val bb = ByteBuffer.allocate(vals.length * 8).order(ByteOrder.LITTLE_ENDIAN)
-        vals.foreach(v => bb.putLong(v.toLong)); bb
-      case "<i4" =>
-        val bb = ByteBuffer.allocate(vals.length * 4).order(ByteOrder.LITTLE_ENDIAN)
-        vals.foreach(v => bb.putInt(v.toInt)); bb
-      case "|i1" | "|b1" =>
-        val bb = ByteBuffer.allocate(vals.length)
-        vals.foreach(v => bb.put(v.toByte)); bb
-      case other => throw new UnsupportedOperationException(s"pack dtype $other")
-    }
-    b.array()
-  }
-
   private def packVlen(strings: Array[String]): Array[Byte] = {
     val payloads = strings.map(s =>
       (if (s == null) "" else s).getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -236,22 +221,69 @@ object AnnZarrWriter {
     b.array()
   }
 
-  /** Driver-side 1-D array write (axis frames, indptr, categories, uns). */
-  private def array1d(root: String, rel: String, dtype: String,
-                      n: Long, chunkLen: Int, attrs: String,
-                      chunkVals: Int => Array[Any], v3: Boolean): Unit = {
-    val vlen = dtype == "|O"
-    arrayMeta(root, rel, Seq(n), Seq(chunkLen), dtype, vlen, attrs, v3)
-    // an empty array has ZERO chunk objects (the zarr grid contract);
-    // no max(1) — a chunk written for shape [0] would be orphan garbage
-    val nChunks = ((n + chunkLen - 1) / chunkLen).toInt
-    (0 until nChunks).foreach { c =>
-      val vals = chunkVals(c)
+  /** Chunk writes of a 1-D array — driver-side for categories and uns,
+    * in-task for frame columns and indptr: `vals` land at positions
+    * [n0, n0 + vals.length), the boundary chunk keeps its committed
+    * `prefix` (positions [n0 - prefix.length, n0)), edge chunks pad with
+    * the fill value. Writes boundary + new chunks only — an empty array
+    * has ZERO chunk objects (the zarr grid contract; a chunk written for
+    * shape [0] would be orphan garbage).
+    */
+  private def writeChunks1d(root: String, rel: String, dtype: String, chunkLen: Int,
+                            n0: Long, prefix: Array[Any], vals: IndexedSeq[Any],
+                            v3: Boolean): Unit = {
+    val n1 = n0 + vals.length
+    val base = n0 - prefix.length
+    val pad: Any = if (dtype == "|O") null else 0L
+    var c = n0 / chunkLen
+    while (c * chunkLen < n1) {
+      val lo = c * chunkLen
+      val chunk = Array.tabulate[Any](chunkLen) { k =>
+        val g = lo + k
+        if (g < n0) prefix((g - base).toInt) else if (g < n1) vals((g - n0).toInt) else pad
+      }
       val raw =
-        if (vlen) packVlen(vals.map(_.asInstanceOf[String]))
-        else packNumAny(dtype, vals, rel)
+        if (dtype == "|O") packVlen(chunk.map(v => if (v == null) null else String.valueOf(v)))
+        else packNumAny(dtype, chunk, rel) // no Double detour: int64 keeps 64-bit precision
       writeBytes(root, s"$rel/${chunkKey1d(c, v3)}", encodeChunk(raw, v3))
+      c += 1
     }
+  }
+
+  /** A new driver-written 1-D array (category dictionaries, uns). */
+  private def array1d(root: String, rel: String, dtype: String, chunkLen: Int,
+                      attrs: String, vals: IndexedSeq[Any], v3: Boolean): Unit = {
+    arrayMeta(root, rel, Seq(vals.length.toLong), Seq(chunkLen), dtype, dtype == "|O", attrs, v3)
+    writeChunks1d(root, rel, dtype, chunkLen, 0L, Array.empty, vals, v3)
+  }
+
+  /** Committed values [e0, e1) of a 1-D array, boxed like the packers take them. */
+  private def readValues(za: ZArray, e0: Long, e1: Long): Array[Any] =
+    if (za.kind == 'O') za.readStrings(e0, e1).map(v => v: Any)
+    else if (za.kind == 'f') za.readDoubles(e0, e1).map(v => v: Any)
+    else za.readLongs(e0, e1).map(v => v: Any)
+
+  /** Driver-side extend of an existing dictionary-sized 1-D array (the
+    * categories of a categorical column): the boundary chunk is rewritten
+    * with its committed prefix read back, later chunks are new. Returns
+    * the consolidated-metadata key of the patched node.
+    */
+  private def extend1d(root: String, rel: String, add: IndexedSeq[Any], v3: Boolean): String = {
+    val za = unsharded1d(root, rel)
+    val n0 = za.shape.head
+    val cl = za.chunks.head
+    val prefix = readValues(za, (n0 / cl) * cl, n0)
+    val key = ZarrStore.patchShape(root, rel, Seq(n0 + add.length))
+    writeChunks1d(root, rel, za.dtype, cl, n0, prefix, add, v3)
+    key
+  }
+
+  /** A writer-shaped 1-D array of a store: vlen-utf8 or numeric, unsharded. */
+  private def unsharded1d(root: String, rel: String): ZArray = {
+    val za = ZarrStore.openArray(root, rel)
+    require(za.kind != 'O' || za.vlenUtf8, s"$rel: unsupported encoding")
+    require(za.shard.isEmpty, s"$rel: 1-D axis arrays are written unsharded")
+    za
   }
 
   /** 0-d scalar array (uns scalars). */
@@ -302,606 +334,483 @@ object AnnZarrWriter {
 
   // ------------------------------------------------------------ dataframe
 
-  /** Test probe: axis rows collected driver-side by the small-frame
-    * paths (writeFrame / writeCsr indptr). The distributed paths never
-    * touch it — specs assert it stays 0 for multi-chunk frames.
+  /** One axis-frame column as the writer lays it out. `kind`: 'S'
+    * string, 'C' categorical codes, 'F' f8, 'L' integer or boolean
+    * (packed as `dtype`, 64-bit exact — no Double detour).
     */
-  private[zarr] val driverAxisRowsProbe = new java.util.concurrent.atomic.AtomicLong
-
-  /** An axis DataFrame as an anndata `dataframe` group (same column
-    * contract as [[graft.h5.AnnH5Writer]]: `rowIdName` is the axis
-    * position, `idName` becomes `_index`; a missing name column
-    * synthesizes positional labels).
-    *
-    * A frame that spans more than one chunk is written EXECUTOR-SIDE
-    * ([[writeFrameDistributed]]): one shuffle groups rows by their
-    * chunk-aligned object, each task packs + writes that chunk's object
-    * for every column — the driver writes metadata and the (dictionary-
-    * sized) category arrays only. Single-chunk frames keep the simple
-    * driver path: the collect is bounded by one chunk (≤ `chunkLen`
-    * rows), so the 10⁸-row obs frame of a large store never routes
-    * through the driver.
-    */
-  private def writeFrame(root: String, rel: String, df: DataFrame,
-                         rowIdName: String, idName: String, v3: Boolean,
-                         chunkLen: Int = 65536,
-                         catCols: Set[String] = Set.empty): Long = {
-    // one-pass routing: materialize the (possibly derived) frame ONCE
-    // and route on the cached count. The earlier limit-probe + count
-    // pair executed an expensive upstream plan (a join, an aggregate)
-    // twice before writing a byte, and the distributed path's
-    // per-categorical `distinct` re-ran it once more per column — the
-    // persist makes every later pass (collect / dictionaries / the
-    // chunk shuffle) a cache read, spec-pinned to exactly one upstream
-    // execution.
-    // a caller-cached frame is left alone: persisting again at a
-    // different level throws, and unpersisting here would silently drop
-    // the CALLER's shared cache entry — route on its existing cache
-    val callerCached =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val mat =
-      if (callerCached) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = mat.count()
-      if (n > chunkLen)
-        writeFrameDistributed(root, rel, mat, rowIdName, idName, v3,
-          chunkLen, catCols, n)
-      else
-        writeFrameDriver(root, rel, mat, rowIdName, idName, v3, chunkLen, catCols)
-    } finally { if (!callerCached) { mat.unpersist(blocking = false); () } }
+  private final case class FrameCol(name: String, kind: Char, dtype: String) {
+    def rel(frame: String): String =
+      if (kind == 'C') s"$frame/$name/codes" else s"$frame/$name"
   }
 
-  /** Single-chunk driver path: the collect is bounded by one chunk
-    * (≤ `chunkLen` rows). Null handling matches the distributed path
-    * exactly — null numerics/booleans write 0, null strings (and a null
-    * `idName` label) write the vlen null encoding — so store bytes do
-    * not depend on which path the row count selected.
+  /** Run `f` over `df` materialized ONCE, so every pass it makes (the
+    * stats job, the chunk shuffle) is a cache read and an expensive
+    * upstream plan (a join, an aggregate) executes exactly once —
+    * spec-pinned. A caller-cached frame is left alone: persisting again
+    * at a different level throws, and unpersisting here would silently
+    * drop the CALLER's shared cache entry.
     */
-  private def writeFrameDriver(root: String, rel: String, df: DataFrame,
-                               rowIdName: String, idName: String, v3: Boolean,
-                               chunkLen: Int, catCols: Set[String]): Long = {
-    val cols = df.columns.filter(c => c != rowIdName && c != idName)
-    val rows = df.orderBy(rowIdName).collect()
-    val n = rows.length.toLong
-    driverAxisRowsProbe.addAndGet(n)
-    // same contract as the distributed path, enforced at every size: the
-    // row-id column IS the axis position (a frame that silently compacts
-    // small but fails large would make behavior depend on row count)
-    rows.zipWithIndex.foreach { case (r, i) =>
-      val raw = r.getAs[Number](rowIdName)
-      require(raw != null && raw.longValue() == i,
-        s"$rel: axis positions must be contiguous 0..n-1 " +
-          s"(sorted row $i has $rowIdName=${if (raw == null) "null" else raw})")
-    }
-    // chunk length is a CONSTANT, never derived from the current row
-    // count: a store bootstrapped empty (the streaming-sink pattern)
-    // must not inherit degenerate 1-element chunks for the rest of its
-    // life — that bug made every later append O(rows) store objects
-    zgroup(root, rel,
-      Some(s"""{"_index":"_index","column-order":[${cols.map(jstr).mkString(",")}],""" +
-        s""""encoding-type":"dataframe","encoding-version":"0.2.0"}"""), v3)
-    val hasName = df.columns.contains(idName)
-    def chunkOf(get: Int => Any)(c: Int): Array[Any] = {
-      val lo = c * chunkLen
-      val hi = math.min(n.toInt, lo + chunkLen)
-      // zarr pads edge chunks to full chunk shape with the fill value
-      Array.tabulate(chunkLen)(k => if (lo + k < hi) get(lo + k) else null)
-    }
-    array1d(root, s"$rel/_index", "|O", n, chunkLen,
-      enc("string-array", "0.2.0"),
-      chunkOf(i => if (hasName) rows(i).getAs[Any](idName) match {
-        case null => null // matches the distributed path's null label
-        case s: String => s
-        case other => String.valueOf(other)
-      } else i.toString), v3)
-    cols.foreach { cn =>
-      if (catCols.contains(cn)) {
-        // `categorical` group (codes + categories) — the encoding the
-        // reference writes for pandas category columns through anndata
-        // (`_anndata_accessor.py:516-700` registry); writing them as
-        // plain string arrays would silently change the store encoding
-        val sVals = Array.tabulate(n.toInt)(i => rows(i).getAs[Any](cn) match {
-          case null => null
-          case s: String => s
-          case other => String.valueOf(other)
-        })
-        val cats = sVals.filter(_ != null).distinct.sorted
-        val idx = cats.zipWithIndex.toMap
-        zgroup(root, s"$rel/$cn", Some("""{"encoding-type":"categorical",""" +
-          """"encoding-version":"0.2.0","ordered":false}"""), v3)
-        array1d(root, s"$rel/$cn/categories", "|O", cats.length.toLong, chunkLen,
-          enc("string-array", "0.2.0"), { c =>
-            val lo = c * chunkLen
-            Array.tabulate(chunkLen)(k =>
-              if (lo + k < cats.length) cats(lo + k) else null)
-          }, v3)
-        array1d(root, s"$rel/$cn/codes", "<i8", n, chunkLen,
-          enc("array", "0.2.0"), { c =>
-            val lo = c * chunkLen
-            Array.tabulate(chunkLen)(k =>
-              if (lo + k < n) {
-                val v = sVals(lo + k)
-                (if (v == null) -1L else idx(v).toLong): Any
-              } else 0L)
-          }, v3)
-      } else {
-      val dt = df.schema(cn).dataType
-      val fi = df.schema.fieldIndex(cn)
-      val (dtype, get): (String, Int => Any) = dt match {
-        case StringType => ("|O", i => rows(i).getAs[String](cn))
-        case DoubleType | FloatType =>
-          ("<f8", i => { val v = rows(i).getAs[Number](cn); if (v == null) 0.0 else v.doubleValue() })
-        case BooleanType => // null boolean writes 0, like the distributed path
-          ("|b1", i => if (rows(i).isNullAt(fi)) 0L else rows(i).getBoolean(fi))
-        case _ =>
-          ("<i8", i => { val v = rows(i).getAs[Number](cn); if (v == null) 0L else v.longValue() })
-      }
-      def pad(c: Int): Array[Any] = {
-        val lo = c * chunkLen
-        val hi = math.min(n.toInt, lo + chunkLen)
-        Array.tabulate(chunkLen)(k =>
-          if (lo + k < hi) get(lo + k)
-          else if (dtype == "|O") null else 0L)
-      }
-      // plain string columns are `string-array` (the anndata registry's
-      // encoding and what the distributed path and the h5 twin write);
-      // emitting `array` here made store metadata depend on row count
-      array1d(root, s"$rel/$cn", dtype, n, chunkLen,
-        enc(if (dtype == "|O") "string-array" else "array", "0.2.0"), pad, v3)
-      }
-    }
-    n
+  private def materialized[T](df: DataFrame)(f: DataFrame => T): T = {
+    val callerCached = df.storageLevel != StorageLevel.NONE
+    val mat = if (callerCached) df else df.persist(StorageLevel.MEMORY_AND_DISK)
+    try f(mat) finally { if (!callerCached) { mat.unpersist(blocking = false); () } }
   }
 
-  /** Executor-parallel axis-frame write: same store layout as the
-    * driver path, but every chunk object is packed and written by the
-    * task that owns it. Driver work is metadata-only plus the
-    * category dictionaries (distinct-value-sized by the categorical
-    * contract, like the ML loader's broadcast dictionaries).
+  /** ONE job over a materialized axis frame: its row count and, per
+    * column of `cats`, every distinct non-null value with the smallest
+    * row id carrying it — dictionary-sized, like the ML loader's
+    * broadcast dictionaries.
     */
-  private def writeFrameDistributed(root: String, rel: String, df: DataFrame,
-                                    rowIdName: String, idName: String,
-                                    v3: Boolean, chunkLen: Int,
-                                    catCols: Set[String], n: Long): Long = {
-    val cols = df.columns.filter(c => c != rowIdName && c != idName)
-    val hasName = df.columns.contains(idName)
-    zgroup(root, rel,
-      Some(s"""{"_index":"_index","column-order":[${cols.map(jstr).mkString(",")}],""" +
-        s""""encoding-type":"dataframe","encoding-version":"0.2.0"}"""), v3)
-    // per-column plan: normalized select position, dtype, kind
-    // kinds: 'S' string, 'C' categorical (codes), 'F' f8, 'B' bool, 'L' i8
-    val specs: Seq[(String, Char, String)] = cols.map { cn =>
-      if (catCols.contains(cn)) (cn, 'C', "<i8")
-      else df.schema(cn).dataType match {
-        case StringType => (cn, 'S', "|O")
-        case DoubleType | FloatType => (cn, 'F', "<f8")
-        case BooleanType => (cn, 'B', "|b1")
-        case _ => (cn, 'L', "<i8")
-      }
-    }
-    // category dictionaries + metadata, driver-side (dictionary-sized);
-    // each distinct reads the frame writeFrame just persisted, so a
-    // derived frame's upstream plan is NOT re-executed per column
-    val catDicts: Map[String, Array[String]] = specs.collect {
-      case (cn, 'C', _) =>
-        cn -> df.select(col(cn).cast("string")).filter(col(cn).isNotNull)
-          .distinct().collect().map(_.getString(0)).sorted
-    }.toMap
-    arrayMeta(root, s"$rel/_index", Seq(n), Seq(chunkLen), "|O",
-      vlen = true, enc("string-array", "0.2.0"), v3)
-    specs.foreach { case (cn, kind, dtype) =>
-      if (kind == 'C') {
-        val cats = catDicts(cn)
-        zgroup(root, s"$rel/$cn", Some("""{"encoding-type":"categorical",""" +
-          """"encoding-version":"0.2.0","ordered":false}"""), v3)
-        array1d(root, s"$rel/$cn/categories", "|O", cats.length.toLong, chunkLen,
-          enc("string-array", "0.2.0"), { c =>
-            val lo = c * chunkLen
-            Array.tabulate(chunkLen)(k =>
-              if (lo + k < cats.length) cats(lo + k) else null)
-          }, v3)
-        arrayMeta(root, s"$rel/$cn/codes", Seq(n), Seq(chunkLen), "<i8",
-          vlen = false, enc("array", "0.2.0"), v3)
-      } else
-        arrayMeta(root, s"$rel/$cn", Seq(n), Seq(chunkLen), dtype,
-          vlen = kind == 'S',
-          enc(if (kind == 'S') "string-array" else "array", "0.2.0"), v3)
-    }
-    // normalized row: _rid, _index, then one slot per column
-    val sel: Seq[org.apache.spark.sql.Column] =
-      col(rowIdName).cast("long").as("_rid") +:
-        (if (hasName) col(idName).cast("string") else col(rowIdName).cast("string")).as("_ix") +:
-        specs.map { case (cn, kind, _) =>
-          kind match {
-            case 'C' | 'S' => col(cn).cast("string").as(cn)
-            case 'F' => col(cn).cast("double").as(cn)
-            case 'B' => col(cn).cast("boolean").as(cn)
-            case _ => col(cn).cast("long").as(cn)
+  private def frameStats(df: DataFrame, rowIdName: String,
+                         cats: Seq[String]): (Long, Map[String, Map[String, Long]]) = {
+    val k = cats.length
+    val parts = df.select(col(rowIdName).cast("long") +: cats.map(c => col(c).cast("string")): _*)
+      .rdd
+      .mapPartitions { it =>
+        var n = 0L
+        val first = Array.fill(k)(scala.collection.mutable.HashMap.empty[String, Long])
+        it.foreach { r =>
+          n += 1
+          val id = if (r.isNullAt(0)) Long.MaxValue else r.getLong(0)
+          var j = 0
+          while (j < k) {
+            if (!r.isNullAt(j + 1)) {
+              val v = r.getString(j + 1)
+              if (first(j).get(v).forall(_ > id)) first(j)(v) = id
+            }
+            j += 1
           }
         }
-    val spark = df.sparkSession
-    val dictsB = spark.sparkContext.broadcast(
-      catDicts.map { case (k, v) => k -> v.zipWithIndex.map { case (s, i) => s -> i.toLong }.toMap })
-    val rootC = root; val relC = rel; val v3C = v3; val nC = n
-    val chunkLenC = chunkLen; val specsC = specs
-    val nChunks = ((n + chunkLen - 1) / chunkLen).toInt
+        Iterator((n, first.map(_.toMap)))
+      }
+      .collect()
+    val firstRows = cats.indices.map { j =>
+      cats(j) -> parts.flatMap(_._2(j)).groupMapReduce(_._1)(_._2)(math.min)
+    }.toMap
+    (parts.map(_._1).sum, firstRows)
+  }
+
+  /** Executor-side axis-frame extend — the ONE frame writer behind
+    * [[write]] (a new frame, `n0 = 0`) and [[appendRows]]: frame row
+    * `r` lands at axis position `n0 + r`, rows group on their chunk (one
+    * shuffle) and each task packs and writes that chunk's object for
+    * `_index` and every column. The chunk straddling `n0` merges the
+    * committed values in `prefixes` (keyed "_index" / column name; read
+    * driver-side, bounded by one chunk per column). Category codes index
+    * the caller's `dicts`, whose order is part of the store bytes. Null
+    * numerics and booleans write 0, null strings (labels included) the
+    * vlen null. The driver never holds a row.
+    */
+  private def writeFrameChunks(root: String, rel: String, df: DataFrame,
+                               rowIdName: String, label: Column, cols: Seq[FrameCol],
+                               dicts: Map[String, Array[String]],
+                               prefixes: Map[String, Array[Any]],
+                               n0: Long, nAdd: Long, chunkLen: Int, v3: Boolean): Unit = {
+    if (nAdd == 0) return
+    val n1 = n0 + nAdd
+    val sel: Seq[Column] = col(rowIdName).cast("long") +: label.as("_ix") +:
+      cols.map { c =>
+        c.kind match {
+          case 'C' | 'S' => col(c.name).cast("string")
+          case 'F' => col(c.name).cast("double")
+          case _ => col(c.name).cast("long") // bool -> 0/1; 64-bit exact
+        }
+      }
+    val sc = df.sparkSession.sparkContext
+    val dictsB = sc.broadcast(dicts.map { case (cn, cats) =>
+      cn -> cats.zipWithIndex.map { case (s, i) => s -> i.toLong }.toMap })
+    val prefB = sc.broadcast(prefixes)
+    val nChunks = ((n1 - 1) / chunkLen - n0 / chunkLen + 1).toInt
     df.select(sel: _*)
       .rdd
-      .map(row => (row.getLong(0) / chunkLenC, row))
-      .groupByKey(math.min(nChunks, math.max(1, spark.sparkContext.defaultParallelism)))
+      .map { row =>
+        val r = if (row.isNullAt(0)) -1L else row.getLong(0)
+        require(r >= 0 && r < nAdd, s"$rel: axis positions must be contiguous 0..${nAdd - 1} " +
+          s"(row id ${if (row.isNullAt(0)) "null" else r} out of range)")
+        ((n0 + r) / chunkLen, row)
+      }
+      .groupByKey(math.min(nChunks, math.max(1, sc.defaultParallelism)))
       .foreach { case (c, it) =>
-        val lo = c * chunkLenC
-        val live = math.min(chunkLenC.toLong, nC - lo).toInt
+        val lo = c * chunkLen
+        val newLo = math.max(lo, n0)
+        val preLen = (newLo - lo).toInt // committed rows in this chunk
+        val live = (math.min(lo + chunkLen, n1) - newLo).toInt
         val rows = new Array[Row](live)
         var seen = 0
         it.foreach { r =>
-          val k = (r.getLong(0) - lo).toInt
+          val k = (n0 + r.getLong(0) - newLo).toInt
           // a duplicate row id and a missing one can cancel inside the
           // same chunk, so a bare seen==live check would let a null slot
-          // through to an opaque packer NPE — reject the duplicate (and
-          // an out-of-range id) at fill time with the contiguity message
-          require(k >= 0 && k < live && rows(k) == null,
-            s"$relC chunk $c: axis positions must be contiguous 0..n-1 " +
-              s"(row id ${r.getLong(0)} is duplicated or out of range)")
+          // through to an opaque packer NPE — reject the duplicate at
+          // fill time with the contiguity message
+          require(rows(k) == null, s"$rel chunk $c: axis positions must be contiguous " +
+            s"0..n-1 (row id ${r.getLong(0)} is duplicated)")
           rows(k) = r; seen += 1
         }
-        require(seen == live, s"$relC chunk $c: $seen of $live rows " +
+        require(seen == live, s"$rel chunk $c: $seen of $live rows " +
           "(axis positions must be contiguous 0..n-1)")
-        val key = chunkKey1d(c, v3C)
-        // _index object
-        writeBytes(rootC, s"$relC/_index/$key", encodeChunk(
-          packVlen(Array.tabulate(chunkLenC)(k =>
-            if (k < live) rows(k).getString(1) else null)), v3C))
-        specsC.zipWithIndex.foreach { case ((cn, kind, dtype), j) =>
-          val f = j + 2 // field offset past _rid, _ix
-          val raw = kind match {
-            case 'S' => packVlen(Array.tabulate(chunkLenC)(k =>
-              if (k < live) rows(k).getString(f) else null))
-            case 'C' =>
-              val dict = dictsB.value(cn)
-              packNumAny("<i8", Array.tabulate[Any](chunkLenC)(k =>
-                if (k < live) {
-                  val s = rows(k).getString(f)
-                  if (s == null) -1L else dict(s)
-                } else 0L), cn)
-            case _ => packNumAny(dtype, Array.tabulate[Any](chunkLenC)(k =>
-              if (k < live && !rows(k).isNullAt(f)) (kind match {
-                case 'F' => rows(k).getDouble(f): Any
-                case 'B' => rows(k).getBoolean(f): Any
-                case _ => rows(k).getLong(f): Any // full 64-bit, no Double detour
-              }) else 0L), cn)
-          }
-          val target = if (kind == 'C') s"$relC/$cn/codes/$key" else s"$relC/$cn/$key"
-          writeBytes(rootC, target, encodeChunk(raw, v3C))
+        def column(key: String, target: String, dtype: String, value: Row => Any): Unit = {
+          val pre = if (preLen > 0) prefB.value(key) else Array.empty[Any]
+          writeChunks1d(root, target, dtype, chunkLen, newLo, pre, rows.toIndexedSeq.map(value), v3)
+        }
+        column("_index", s"$rel/_index", "|O", _.getString(1))
+        cols.zipWithIndex.foreach { case (fc, j) =>
+          val f = j + 2 // field offset past the row id and the label
+          column(fc.name, fc.rel(rel), fc.dtype, fc.kind match {
+            case 'S' => _.getString(f)
+            case 'C' => r => if (r.isNullAt(f)) -1L else dictsB.value(fc.name)(r.getString(f))
+            case 'F' => r => if (r.isNullAt(f)) 0.0 else r.getDouble(f)
+            case _ => r => if (r.isNullAt(f)) 0L else r.getLong(f)
+          })
         }
       }
-    dictsB.unpersist()
+    dictsB.unpersist(); prefB.unpersist()
+  }
+
+  /** An axis DataFrame as a NEW anndata `dataframe` group (same column
+    * contract as [[graft.h5.AnnH5Writer]]: `rowIdName` is the axis
+    * position, `idName` becomes `_index`; a missing name column
+    * synthesizes positional labels). One stats job (row count + category
+    * dictionaries, sorted distinct values) and one executor chunk job;
+    * the driver writes metadata and the dictionary-sized category arrays.
+    *
+    * Chunk length is a CONSTANT, never derived from the current row
+    * count: a store bootstrapped empty (the streaming-sink pattern) must
+    * not inherit degenerate 1-element chunks for the rest of its life —
+    * that bug made every later append O(rows) store objects.
+    */
+  private def writeFrame(root: String, rel: String, df: DataFrame,
+                         rowIdName: String, idName: String, v3: Boolean,
+                         chunkLen: Int, catCols: Set[String]): Long = materialized(df) { mat =>
+    val cols = mat.columns.toSeq.filter(c => c != rowIdName && c != idName).map { cn =>
+      // categorical columns become `categorical` groups (codes +
+      // categories) — the encoding the reference writes for pandas
+      // category columns through anndata (`_anndata_accessor.py:516-700`
+      // registry); plain string columns are `string-array`
+      if (catCols.contains(cn)) FrameCol(cn, 'C', "<i8")
+      else mat.schema(cn).dataType match {
+        case StringType => FrameCol(cn, 'S', "|O")
+        case DoubleType | FloatType => FrameCol(cn, 'F', "<f8")
+        case BooleanType => FrameCol(cn, 'L', "|b1")
+        case _ => FrameCol(cn, 'L', "<i8")
+      }
+    }
+    val (n, firstRows) = frameStats(mat, rowIdName, cols.filter(_.kind == 'C').map(_.name))
+    val dicts = firstRows.map { case (cn, m) => cn -> m.keys.toArray.sorted }
+    zgroup(root, rel,
+      Some(s"""{"_index":"_index","column-order":[${cols.map(c => jstr(c.name)).mkString(",")}],""" +
+        s""""encoding-type":"dataframe","encoding-version":"0.2.0"}"""), v3)
+    arrayMeta(root, s"$rel/_index", Seq(n), Seq(chunkLen), "|O",
+      vlen = true, enc("string-array", "0.2.0"), v3)
+    cols.foreach { c =>
+      if (c.kind == 'C') {
+        zgroup(root, s"$rel/${c.name}", Some("""{"encoding-type":"categorical",""" +
+          """"encoding-version":"0.2.0","ordered":false}"""), v3)
+        array1d(root, s"$rel/${c.name}/categories", "|O", chunkLen,
+          enc("string-array", "0.2.0"), dicts(c.name).toIndexedSeq, v3)
+      }
+      arrayMeta(root, c.rel(rel), Seq(n), Seq(chunkLen), c.dtype, vlen = c.kind == 'S',
+        enc(if (c.kind == 'S') "string-array" else "array", "0.2.0"), v3)
+    }
+    val label =
+      if (mat.columns.contains(idName)) col(idName).cast("string")
+      else col(rowIdName).cast("string")
+    writeFrameChunks(root, rel, mat, rowIdName, label, cols, dicts, Map.empty, 0L, n, chunkLen, v3)
     n
   }
 
   // ---------------------------------------------------------------- dense
 
-  /** A COO frame as a dense 2-D `array` node, written EXECUTOR-SIDE:
-    * elements group on their target chunk object (one shuffle), each
-    * task zero-fills its chunk buffer and writes the object — the write
-    * twin of [[AnnZarr.denseCoo]]. The reference preserves a dense
-    * in-memory matrix as a dense store encoding (anndata's write
-    * registry, `core/storage/_anndata_accessor.py:516-700`); forcing
-    * every slot through csr would silently change encodings on a
-    * round-trip. Chunks with no elements are simply absent (zarr reads
-    * them as fill_value 0 — exactly the dense semantics of missing COO
-    * entries).
+  /** The writer's dense grid — f8, row-banded shards when sharded — is
+    * what the executor-side extend and the rollback scrub re-encode;
+    * any other compressor, element size or column-spanning shard grid
+    * would be corrupted by a rewrite, so fail fast instead.
+    */
+  private def requireWriterDense(path: String, rel: String, za: ZArray, v3: Boolean): Unit = {
+    require(za.rank == 2 && za.dtype == "<f8" &&
+      (if (za.shard.isDefined) za.codecs.contains(ZCodec.GzipC)
+       else za.compressor == (if (v3) "gzip" else "zlib")),
+      s"$path/$rel: dense extend and rollback serve the writer's f8 chunk grid")
+    require(za.shard.forall(_.shardShape(1) == za.chunks(1)),
+      s"$path/$rel: dense shards must be row-banded (writer layout)")
+  }
+
+  /** Executor-side dense extend — the ONE dense writer behind [[write]]
+    * (`n0 = 0`) and [[appendRows]]: COO element `(r, c)` lands at grid
+    * row `n0 + r`; elements group on their store object (one shuffle)
+    * and each task fills and writes it — the write twin of
+    * [[AnnZarr.denseCoo]]. A v2 object is one chunk; a v3 row-sharded
+    * object is `sf` chunk-row bands. Only objects straddling `n0` read
+    * their committed bands back, and only rows < `n0` of them survive
+    * the merge: rows >= `n0` in an old object are leftovers of a
+    * truncateTo-rolled-back append and must not resurrect.
+    * Pre-boundary objects are never touched, and objects or bands
+    * without elements stay absent (zarr reads them as fill_value 0 —
+    * exactly the dense semantics of missing COO entries).
+    */
+  private def extendDense(path: String, rel: String, za: ZArray, coo: DataFrame,
+                          rowCol: String, colCol: String, n0: Long, nAdd: Long,
+                          v3: Boolean): Unit = {
+    val Seq(cr, cc) = za.chunks.map(identity)
+    val sf = za.shard.map(_.shardShape.head / cr).getOrElse(1)
+    val nCols = za.shape(1)
+    if (nAdd == 0 || nCols == 0) return
+    val gridCols = ((nCols + cc - 1) / cc).toInt
+    val objRows = cr.toLong * sf
+    val sc = coo.sparkSession.sparkContext
+    coo.select(col(rowCol).cast("long"), col(colCol).cast("long"), col("value").cast("double"))
+      .rdd
+      .map { row =>
+        val r = if (row.isNullAt(0)) -1L else row.getLong(0)
+        require(r >= 0 && r < nAdd, s"$path/$rel: row id $r outside 0..${nAdd - 1}")
+        val c = row.getLong(1)
+        (((n0 + r) / objRows * gridCols + c / cc).toInt, (n0 + r, c, row.getDouble(2)))
+      }
+      .groupByKey(math.max(1, sc.defaultParallelism))
+      .foreach { case (obj, it) =>
+        val gr = obj / gridCols; val gc = obj % gridCols
+        val baseRow = gr.toLong * objRows
+        val bands = new Array[Array[Double]](sf)
+        var b = 0
+        while (b < sf) {
+          val bandRow = baseRow + b.toLong * cr
+          if (bandRow < n0) // committed band — may hold data
+            za.readChunk(Seq(gr * sf + b, gc)).foreach { old =>
+              val bb = ByteBuffer.wrap(old).order(ByteOrder.LITTLE_ENDIAN)
+              val buf = new Array[Double](cr * cc)
+              val keepRows = math.min(cr.toLong, n0 - bandRow).toInt
+              var k = 0
+              while (k < keepRows * cc) { buf(k) = bb.getDouble(k * 8); k += 1 }
+              bands(b) = buf
+            }
+          b += 1
+        }
+        it.foreach { case (r, c, v) =>
+          val band = ((r - baseRow) / cr).toInt
+          if (bands(band) == null) bands(band) = new Array[Double](cr * cc) // zero = fill
+          bands(band)(((r - baseRow - band.toLong * cr) * cc + (c - gc.toLong * cc)).toInt) = v
+        }
+        if (sf == 1)
+          writeBytes(path, s"$rel/${if (v3) s"c/$gr/$gc" else s"$gr.$gc"}",
+            encodeChunk(packBands(bands).head, v3))
+        else // one SHARD: gzip'd row bands + the crc32c'd index
+          writeBytes(path, s"$rel/c/$gr/$gc", denseShardObject(packBands(bands)))
+      }
+  }
+
+  /** A COO frame as a NEW dense 2-D `array` node. The reference
+    * preserves a dense in-memory matrix as a dense store encoding
+    * (anndata's write registry, `core/storage/_anndata_accessor.py:516-700`);
+    * forcing every slot through csr would silently change encodings on
+    * a round-trip. Chunk rows are a CONSTANT (see [[writeFrame]]); v3
+    * shards along the ROW axis: one store object = `shardFactor`
+    * chunk-row bands, so a 10^8-row embedding matrix keeps ranged-GET
+    * selectivity per band while cutting object count shardFactor×.
     */
   private def writeDense(root: String, rel: String, coo: DataFrame,
                          rowCol: String, colCol: String,
                          nRows: Long, nCols: Long, chunkElems: Int,
-                         v3: Boolean, shardFactor: Int = 1): Unit = {
-    val spark = coo.sparkSession
+                         v3: Boolean, shardFactor: Int): Unit = {
     val cc = math.max(1L, math.min(nCols, 4096L)).toInt
-    // chunk rows are a CONSTANT, never derived from the current row
-    // count: an empty-store bootstrap (the streaming-sink pattern) must
-    // not pin 1-row bands forever — zarr pads/clips edge chunks anyway
     val cr = math.max(1, chunkElems / cc)
-    // v3 shards along the ROW axis: one store object = `shardFactor`
-    // chunk-row bands — a 10^8-row embedding matrix keeps ranged-GET
-    // selectivity per band while cutting object count shardFactor×
     val sharded = v3 && shardFactor > 1
     require(!sharded || cr.toLong * shardFactor <= Int.MaxValue,
       s"$rel: dense shard rows overflow")
-    if (sharded)
-      arrayMeta(root, rel, Seq(nRows, nCols), Seq(cr * shardFactor, cc), "<f8",
-        vlen = false, attrs = enc("array", "0.2.0"), v3 = true,
-        inner = Some(Seq(cr, cc)))
-    else
-      arrayMeta(root, rel, Seq(nRows, nCols), Seq(cr, cc), "<f8",
-        vlen = false, attrs = enc("array", "0.2.0"), v3 = v3)
-    if (nRows == 0 || nCols == 0) return
-    val gridCols = ((nCols + cc - 1) / cc).toInt
-    val rootC = root; val relC = rel; val v3C = v3
-    val objRows = if (sharded) cr * shardFactor else cr
-    val shardedC = sharded; val sfC = shardFactor
-    coo.select(col(rowCol).cast("long").as("r"), col(colCol).cast("long").as("c"),
-        col("value").cast("double").as("v"))
-      .rdd
-      .map { row =>
-        val r = row.getLong(0); val c = row.getLong(1)
-        (((r / objRows) * gridCols + c / cc).toInt, (r, c, row.getDouble(2)))
-      }
-      .groupByKey(math.max(1, spark.sparkContext.defaultParallelism))
-      .foreach { case (obj, it) =>
-        val gr = obj / gridCols; val gc = obj % gridCols
-        if (!shardedC) {
-          val buf = new Array[Double](cr * cc) // zero-filled = fill_value
-          it.foreach { case (r, c, v) =>
-            buf(((r - gr.toLong * cr) * cc + (c - gc.toLong * cc)).toInt) = v
-          }
-          val bb = ByteBuffer.allocate(cr * cc * 8).order(ByteOrder.LITTLE_ENDIAN)
-          buf.foreach(bb.putDouble)
-          val key = if (v3C) s"c/$gr/$gc" else s"$gr.$gc"
-          writeBytes(rootC, s"$relC/$key", encodeChunk(bb.array(), v3C))
-        } else {
-          // one SHARD object: row bands as gzip'd inner chunks (bands
-          // with no element stay ABSENT — fill-zero on read), then the
-          // crc32c'd index in C order over the (shardFactor x 1) grid
-          val baseRow = gr.toLong * cr * sfC
-          val bands = new Array[Array[Double]](sfC)
-          it.foreach { case (r, c, v) =>
-            val band = ((r - baseRow) / cr).toInt
-            if (bands(band) == null) bands(band) = new Array[Double](cr * cc)
-            bands(band)(((r - baseRow - band.toLong * cr) * cc +
-              (c - gc.toLong * cc)).toInt) = v
-          }
-          writeBytes(rootC, s"$relC/c/$gr/$gc", denseShardObject(packBands(bands)))
-        }
-      }
+    arrayMeta(root, rel, Seq(nRows, nCols), Seq(if (sharded) cr * shardFactor else cr, cc),
+      "<f8", vlen = false, attrs = enc("array", "0.2.0"), v3 = v3,
+      inner = if (sharded) Some(Seq(cr, cc)) else None)
+    extendDense(root, rel, ZarrStore.openArray(root, rel), coo, rowCol, colCol, 0L, nRows, v3)
   }
 
   // ------------------------------------------------------------------ csr
 
-  /** A COO frame as a `csr_matrix` group, data/indices written
-    * EXECUTOR-SIDE: per-row counts give indptr (axis-sized, driver);
-    * each element gets its global CSR position (row offset + rank
-    * within its row — one shuffle on the row key), elements then group
-    * on their target store-object id (second shuffle, object-sized
-    * state), and every task writes its own `data` + `indices` objects.
-    *
-    * v2: one object per chunk of `chunkElems`. v3: one SHARD object per
-    * `shardFactor` inner chunks — the task gzip-encodes each inner
-    * chunk, concatenates, and appends the crc32c'd u64 index the
-    * sharding_indexed codec specifies.
+  /** Committed prefix of a csr node: `n0` rows, `nnz0` elements, `ptr0`
+    * the first indptr entry still to write (`n0 + 1` on a store; 0 on a
+    * new node, whose entry 0 is written too), and the committed values
+    * sharing a store object with new ones — indptr entries from `ptr0`'s
+    * chunk start up to `ptr0`, elements from `nnz0`'s object start up to
+    * `nnz0`.
     */
-  private def writeCsr(root: String, rel: String, coo: DataFrame,
-                       rowCol: String, colCol: String,
-                       nRows: Long, nCols: Long, chunkElems: Int,
-                       v3: Boolean, shardFactor: Int,
-                       ptrChunkLen: Int = 65536): Unit = {
-    val spark = coo.sparkSession
-    if (nRows > ptrChunkLen)
-      return writeCsrDistributed(root, rel, coo, rowCol, colCol, nRows, nCols,
-        chunkElems, v3, shardFactor, ptrChunkLen)
-    // single-indptr-chunk store: the simple driver path — the collect is
-    // bounded by one chunk (≤ `ptrChunkLen` rows)
-    val perRow = coo.groupBy(col(rowCol)).agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getAs[Number](0).longValue(), r.getLong(1))).toMap
-    driverAxisRowsProbe.addAndGet(nRows)
-    val indptr = new Array[Long](nRows.toInt + 1)
-    (0 until nRows.toInt).foreach(i => indptr(i + 1) = indptr(i) + perRow.getOrElse(i.toLong, 0L))
-    val nnz = indptr.last
+  private final case class CsrPrefix(n0: Long, nnz0: Long, ptr0: Long, ptr: Array[Long],
+                                     data: Array[Double], ind: Array[Long])
 
-    zgroup(root, rel, Some(
-      s"""{"encoding-type":"csr_matrix","encoding-version":"0.1.0","shape":[$nRows,$nCols]}"""), v3)
-    val ptrChunk = ptrChunkLen // constant — see the writeFrame note
-    array1d(root, s"$rel/indptr", "<i8", nRows + 1, ptrChunk,
-      enc("array", "0.2.0"), { c =>
-        val lo = c * ptrChunk
-        Array.tabulate(ptrChunk)(k =>
-          if (lo + k <= nRows) indptr(lo + k) else 0L)
-      }, v3)
+  private val newCsr = CsrPrefix(0L, 0L, 0L, Array.empty, Array.empty, Array.empty)
 
-    // store-object granularity: chunks (v2) or shards (v3)
-    val objElems = if (v3) chunkElems.toLong * shardFactor else chunkElems.toLong
-    require(objElems <= Int.MaxValue,
-      s"$rel: chunkElems * shardFactor = $objElems exceeds Int.MaxValue")
-    val shardShape = objElems.toInt
-    if (v3) {
-      arrayMeta(root, s"$rel/data", Seq(nnz), Seq(shardShape), "<f8",
-        vlen = false, enc("array", "0.2.0"), v3 = true, inner = Some(Seq(chunkElems)))
-      arrayMeta(root, s"$rel/indices", Seq(nnz), Seq(shardShape), "<i8",
-        vlen = false, enc("array", "0.2.0"), v3 = true, inner = Some(Seq(chunkElems)))
-    } else {
-      arrayMeta(root, s"$rel/data", Seq(nnz), Seq(chunkElems), "<f8",
-        vlen = false, enc("array", "0.2.0"), v3 = false)
-      arrayMeta(root, s"$rel/indices", Seq(nnz), Seq(chunkElems), "<i8",
-        vlen = false, enc("array", "0.2.0"), v3 = false)
-    }
-    if (nnz == 0) return
-
-    val nObjects = math.max(1L, (nnz + objElems - 1) / objElems).toInt
-    val ptrB = spark.sparkContext.broadcast(indptr)
-    val elems = coo
-      .select(col(rowCol).cast("long").as("r"), col(colCol).cast("long").as("c"),
-        col("value").cast("double").as("v"))
-      .withColumn("rk",
-        row_number().over(Window.partitionBy("r").orderBy("c")).cast("long") - 1)
-    val rootC = root; val relC = rel; val chunkC = chunkElems; val nnzC = nnz
-    val objElemsC = objElems; val v3C = v3
-    elems.toDF().rdd
-      .map { row =>
-        val e = ptrB.value(row.getLong(0).toInt) + row.getLong(3)
-        ((e / objElemsC).toInt, (e, row.getLong(1), row.getDouble(2)))
+  /** Executor-side csr extend — the ONE csr writer behind [[write]]
+    * (`newCsr`) and [[appendRows]]: COO rows `0..nAdd-1` become csr rows
+    * `n0..n0+nAdd-1`, and `meta(nnz1)` writes or patches the node
+    * metadata once the new extent is known. The driver holds CHUNK-LEVEL
+    * prefix sums only (one long per `ptrChunkLen` rows — ~15k entries at
+    * 10⁹ rows), never a row-sized array. Two jobs:
+    *
+    *  1. per-row counts (one shuffle on the row key), summed per indptr
+    *     chunk of the row's END entry `n0 + r + 1`, plus the row-id range
+    *     check; the driver prefix-sums the totals into chunk bases.
+    *  2. indptr chunks cogrouped with their rows: each task walks its
+    *     ≤`ptrChunkLen` entries carrying the cumulative count (rows
+    *     without elements inherit it, and chunks no row touches are still
+    *     written — an indptr value is cumulative, never fill), writes its
+    *     object and emits each row's start. Elements join their row's
+    *     start on the row key (per-row state), take position start +
+    *     rank-by-column, and go to [[writeElementObjects]].
+    */
+  private def extendCsr(root: String, rel: String, coo: DataFrame,
+                        rowCol: String, colCol: String, nAdd: Long, pre: CsrPrefix,
+                        ptrChunkLen: Int, chunkElems: Int, objElems: Int, v3: Boolean)
+                       (meta: Long => Unit): Unit = {
+    val sc = coo.sparkSession.sparkContext
+    val par = math.max(1, sc.defaultParallelism)
+    val n0 = pre.n0; val L = ptrChunkLen
+    val rowCounts = coo.select(col(rowCol).cast("long")).rdd
+      .map(row => (if (row.isNullAt(0)) -1L else row.getLong(0), 1L))
+      .reduceByKey(_ + _, par)
+    val stats = rowCounts
+      .mapPartitions { it =>
+        val totals = scala.collection.mutable.HashMap.empty[Long, Long]
+        var lo = Long.MaxValue; var hi = Long.MinValue
+        it.foreach { case (r, cnt) =>
+          lo = math.min(lo, r); hi = math.max(hi, r)
+          totals((n0 + r + 1) / L) = totals.getOrElse((n0 + r + 1) / L, 0L) + cnt
+        }
+        Iterator((totals.toMap, lo, hi))
       }
-      .groupByKey(math.min(nObjects, math.max(1, spark.sparkContext.defaultParallelism)))
+      .collect()
+    val lo = stats.map(_._2).foldLeft(Long.MaxValue)(math.min)
+    val hi = stats.map(_._3).foldLeft(Long.MinValue)(math.max)
+    require(lo == Long.MaxValue || (lo >= 0 && hi < nAdd),
+      s"$root/$rel: row id ${if (lo < 0) lo else hi} outside 0..${nAdd - 1}")
+    val totals = stats.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _)
+    val cFirst = pre.ptr0 / L
+    val cLast = (n0 + nAdd) / L
+    val nCh = (cLast - cFirst + 1).toInt
+    // element base of each indptr chunk: the elements of every row whose
+    // end entry lies in an earlier chunk
+    val bases = (0 until nCh).scanLeft(pre.nnz0)((b, i) => b + totals.getOrElse(cFirst + i, 0L)).toArray
+    val nnz1 = bases(nCh)
+    meta(nnz1)
+    if (pre.ptr0 > n0 + nAdd) return // an empty append: nothing to write
+
+    val basesB = sc.broadcast(bases)
+    val ptrB = sc.broadcast(pre.ptr)
+    val ptr0 = pre.ptr0; val nEnd = n0 + nAdd
+    val starts = sc.range(cFirst, cLast + 1, 1, math.min(nCh, par)).map(c => (c, ()))
+      .cogroup(rowCounts.map { case (r, cnt) => ((n0 + r + 1) / L, (r, cnt)) },
+        math.min(nCh, par))
+      .flatMap { case (c, (_, rows)) =>
+        val sorted = rows.toArray.sortBy(_._1)
+        val from = math.max(c * L, ptr0)
+        val vals = new Array[Long]((math.min(c * L + L, nEnd + 1) - from).toInt) // entries [from, hi)
+        val out = new Array[(Long, Long)](sorted.length) // (row, start)
+        var cur = basesB.value((c - cFirst).toInt)
+        var si = 0
+        var k = 0
+        while (k < vals.length) {
+          while (si < sorted.length && n0 + sorted(si)._1 + 1 <= from + k) {
+            out(si) = (sorted(si)._1, cur); cur += sorted(si)._2; si += 1
+          }
+          vals(k) = cur
+          k += 1
+        }
+        val pre = if (from > c * L) ptrB.value.map(v => v: Any) else Array.empty[Any]
+        writeChunks1d(root, s"$rel/indptr", "<i8", L, from, pre, vals.toIndexedSeq, v3)
+        out.iterator
+      }
+    if (nnz1 == pre.nnz0) starts.foreach(_ => ()) // indptr chunks only
+    else {
+      val byRank = Ordering.Tuple2(Ordering.Long, Ordering.Double.TotalOrdering)
+      val elems = coo
+        .select(col(rowCol).cast("long"), col(colCol).cast("long"), col("value").cast("double"))
+        .rdd
+        .map(row => (row.getLong(0), (row.getLong(1), row.getDouble(2))))
+        .cogroup(starts, par)
+        .flatMap { case (_, (cvs, start)) =>
+          val s = start.head
+          cvs.toArray.sorted(byRank).iterator.zipWithIndex.map { case ((c, v), k) =>
+            val e = s + k
+            ((e / objElems).toInt, (e, c, v))
+          }
+        }
+      writeElementObjects(root, rel, elems, pre, nnz1, chunkElems, objElems, v3)
+    }
+    basesB.unpersist(); ptrB.unpersist()
+  }
+
+  /** The ONE csr element-object writer: elements carrying their GLOBAL
+    * csr position `e` group on their store object (one shuffle,
+    * object-sized state) and each task writes its `data` + `indices`
+    * objects — v2: one zero-padded chunk of `chunkElems`; v3: one SHARD
+    * of `objElems` (gzip'd inner chunks + the crc32c'd index the
+    * sharding_indexed codec specifies). The object straddling `nnz0`
+    * keeps its committed prefix, so a boundary shard is re-encoded whole
+    * and pre-boundary objects are never touched.
+    */
+  private def writeElementObjects(root: String, rel: String,
+                                  elems: RDD[(Int, (Long, Long, Double))], pre: CsrPrefix,
+                                  nnz1: Long, chunkElems: Int, objElems: Int,
+                                  v3: Boolean): Unit = {
+    val nnz0 = pre.nnz0
+    val cb = (nnz0 / objElems).toInt // boundary object id
+    val nObjects = ((nnz1 - 1) / objElems).toInt - cb + 1
+    val sc = elems.sparkContext
+    val preB = sc.broadcast((pre.data, pre.ind))
+    elems
+      .groupByKey(math.min(nObjects, math.max(1, sc.defaultParallelism)))
       .foreach { case (obj, it) =>
-        val base = obj.toLong * objElemsC
-        val m = math.min(objElemsC, nnzC - base).toInt
+        val base = obj.toLong * objElems
+        val m = math.min(objElems.toLong, nnz1 - base).toInt // slots live after the write
         val dataV = new Array[Double](m)
         val indV = new Array[Long](m)
+        if (obj == cb) {
+          val (bd, bi) = preB.value
+          System.arraycopy(bd, 0, dataV, 0, bd.length)
+          System.arraycopy(bi, 0, indV, 0, bi.length)
+        }
         var seen = 0
         it.foreach { case (e, j, v) =>
           val k = (e - base).toInt
           dataV(k) = v; indV(k) = j; seen += 1
         }
-        require(seen == m, s"$relC object $obj: $seen of $m elements")
-        if (!v3C) {
-          // one zero-padded chunk object per array
-          val db = ByteBuffer.allocate(chunkC * 8).order(ByteOrder.LITTLE_ENDIAN)
-          dataV.foreach(db.putDouble) // allocate() zero-fills the edge padding
-          val ib = ByteBuffer.allocate(chunkC * 8).order(ByteOrder.LITTLE_ENDIAN)
+        val expect = math.min(base + objElems, nnz1) - math.max(base, nnz0)
+        require(seen == expect, s"$rel object $obj: $seen of $expect new elements")
+        if (!v3) {
+          // allocate() zero-fills the edge padding
+          val db = ByteBuffer.allocate(chunkElems * 8).order(ByteOrder.LITTLE_ENDIAN)
+          dataV.foreach(db.putDouble)
+          val ib = ByteBuffer.allocate(chunkElems * 8).order(ByteOrder.LITTLE_ENDIAN)
           indV.foreach(ib.putLong)
-          writeBytes(rootC, s"$relC/data/$obj", zlibEncode(db.array()))
-          writeBytes(rootC, s"$relC/indices/$obj", zlibEncode(ib.array()))
+          writeBytes(root, s"$rel/data/$obj", zlibEncode(db.array()))
+          writeBytes(root, s"$rel/indices/$obj", zlibEncode(ib.array()))
         } else {
-          // one SHARD per array: gzip'd inner chunks + crc32c'd index
-          writeBytes(rootC, s"$relC/data/c/$obj",
-            shardBytes(objElemsC.toInt, chunkC, m, packDoubles(dataV, chunkC)))
-          writeBytes(rootC, s"$relC/indices/c/$obj",
-            shardBytes(objElemsC.toInt, chunkC, m, packLongs(indV, chunkC)))
+          writeBytes(root, s"$rel/data/c/$obj",
+            shardBytes(objElems, chunkElems, m, packDoubles(dataV, chunkElems)))
+          writeBytes(root, s"$rel/indices/c/$obj",
+            shardBytes(objElems, chunkElems, m, packLongs(indV, chunkElems)))
         }
       }
-    ptrB.unpersist()
+    preB.unpersist()
   }
 
-  /** Executor-parallel csr write for frames whose indptr spans more
-    * than one chunk: the driver holds only CHUNK-LEVEL totals (one long
-    * per `ptrChunkLen` rows — ~15k entries at 10⁹ rows), never a
-    * row-sized array.
-    *
-    *  1. per-row counts (one shuffle on the row key), aggregated to
-    *     per-indptr-chunk totals; the driver prefix-sums those into
-    *     chunk base offsets (and nnz) and broadcasts the small array.
-    *  2. indptr chunk objects: chunk ids cogrouped with their rows —
-    *     each task walks its ≤`ptrChunkLen` indices, filling gaps for
-    *     element-less rows, and writes its own object (all-zero-count
-    *     chunks included: an indptr value is cumulative, never fill).
-    *  3. element positions: row start = chunk base + a within-chunk
-    *     prefix sum (a window PARTITIONED by chunk — bounded state),
-    *     joined back to the elements on the row key they are already
-    *     shuffled on; then the usual group-by-store-object write.
+  /** A COO frame as a NEW `csr_matrix` group. v2: one object per chunk
+    * of `chunkElems`. v3: one SHARD object per `shardFactor` inner chunks.
     */
-  private def writeCsrDistributed(root: String, rel: String, coo: DataFrame,
-                                  rowCol: String, colCol: String,
-                                  nRows: Long, nCols: Long, chunkElems: Int,
-                                  v3: Boolean, shardFactor: Int,
-                                  ptrChunkLen: Int): Unit = {
-    val spark = coo.sparkSession
-    val L = ptrChunkLen
-    val nRowChunks = ((nRows + L - 1) / L).toInt
-    val nPtrChunks = ((nRows + 1 + L - 1) / L).toInt
-    val rowCounts = coo
-      .groupBy(col(rowCol).cast("long").as("r")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // chunk totals -> driver prefix sum (chunk-count-sized)
-    val totals = rowCounts
-      .groupBy((col("r") / L).cast("int").as("pc")).agg(sum("cnt").as("t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val base = new Array[Long](nRowChunks + 1)
-    (0 until nRowChunks).foreach(c => base(c + 1) = base(c) + totals.getOrElse(c, 0L))
-    val nnz = base(nRowChunks)
-
-    zgroup(root, rel, Some(
-      s"""{"encoding-type":"csr_matrix","encoding-version":"0.1.0","shape":[$nRows,$nCols]}"""), v3)
-    arrayMeta(root, s"$rel/indptr", Seq(nRows + 1), Seq(L), "<i8",
-      vlen = false, enc("array", "0.2.0"), v3)
-    val rootC = root; val relC = rel; val v3C = v3
-    val nRowsC = nRows; val nnzC = nnz; val LC = L
-    val baseB = spark.sparkContext.broadcast(base)
-    val sc = spark.sparkContext
-    // (2) indptr objects — cogroup so all-zero chunks still get written
-    sc.range(0, nPtrChunks).map(c => (c, ()))
-      .cogroup(rowCounts.rdd.map(r => (r.getLong(0) / LC, (r.getLong(0), r.getLong(1)))),
-        math.min(nPtrChunks, math.max(1, sc.defaultParallelism)))
-      .foreach { case (c, (marker, rows)) =>
-        if (marker.nonEmpty) {
-          val lo = c * LC
-          val hi = math.min(lo + LC, nRowsC + 1)
-          val sorted = rows.toArray.sortBy(_._1)
-          val vals = new Array[Long](LC) // edge padded with 0
-          var cur = baseB.value(math.min(c, baseB.value.length - 1).toInt)
-          var si = 0
-          var idx = lo
-          while (idx < hi) {
-            while (si < sorted.length && sorted(si)._1 < idx) {
-              cur += sorted(si)._2; si += 1
-            }
-            vals((idx - lo).toInt) = if (idx == nRowsC) nnzC else cur
-            idx += 1
-          }
-          val bb = ByteBuffer.allocate(LC * 8).order(ByteOrder.LITTLE_ENDIAN)
-          vals.foreach(bb.putLong)
-          writeBytes(rootC, s"$relC/indptr/${chunkKey1d(c, v3C)}",
-            encodeChunk(bb.array(), v3C))
-        }
-      }
-
-    // data/indices metadata + objects (same layout as the driver path)
+  private def writeCsr(root: String, rel: String, coo: DataFrame,
+                       rowCol: String, colCol: String,
+                       nRows: Long, nCols: Long, chunkElems: Int,
+                       v3: Boolean, shardFactor: Int, ptrChunkLen: Int): Unit = {
     val objElems = if (v3) chunkElems.toLong * shardFactor else chunkElems.toLong
     require(objElems <= Int.MaxValue,
       s"$rel: chunkElems * shardFactor = $objElems exceeds Int.MaxValue")
-    if (v3) {
-      arrayMeta(root, s"$rel/data", Seq(nnz), Seq(objElems.toInt), "<f8",
-        vlen = false, enc("array", "0.2.0"), v3 = true, inner = Some(Seq(chunkElems)))
-      arrayMeta(root, s"$rel/indices", Seq(nnz), Seq(objElems.toInt), "<i8",
-        vlen = false, enc("array", "0.2.0"), v3 = true, inner = Some(Seq(chunkElems)))
-    } else {
-      arrayMeta(root, s"$rel/data", Seq(nnz), Seq(chunkElems), "<f8",
-        vlen = false, enc("array", "0.2.0"), v3 = false)
-      arrayMeta(root, s"$rel/indices", Seq(nnz), Seq(chunkElems), "<i8",
-        vlen = false, enc("array", "0.2.0"), v3 = false)
+    extendCsr(root, rel, coo, rowCol, colCol, nRows, newCsr, ptrChunkLen,
+      chunkElems, objElems.toInt, v3) { nnz =>
+      zgroup(root, rel, Some(
+        s"""{"encoding-type":"csr_matrix","encoding-version":"0.1.0","shape":[$nRows,$nCols]}"""), v3)
+      arrayMeta(root, s"$rel/indptr", Seq(nRows + 1), Seq(ptrChunkLen), "<i8",
+        vlen = false, enc("array", "0.2.0"), v3)
+      Seq("data" -> "<f8", "indices" -> "<i8").foreach { case (a, dt) =>
+        arrayMeta(root, s"$rel/$a", Seq(nnz), Seq(objElems.toInt), dt, vlen = false,
+          enc("array", "0.2.0"), v3, inner = if (v3) Some(Seq(chunkElems)) else None)
+      }
     }
-    if (nnz == 0) { rowCounts.unpersist(blocking = false); baseB.unpersist(); return }
-
-    // (3) row starts: chunk base + within-chunk prefix (bounded window)
-    val baseDf = spark.createDataFrame(
-      (0 until nRowChunks).map(c => (c, base(c)))).toDF("pc", "pcbase")
-    val w = Window.partitionBy("pc").orderBy("r")
-    val rowStarts = rowCounts
-      .withColumn("pc", (col("r") / L).cast("int"))
-      .withColumn("local", sum(col("cnt")).over(w) - col("cnt"))
-      .join(broadcast(baseDf), "pc")
-      .select(col("r"), (col("pcbase") + col("local")).as("start"))
-    val nObjects = math.max(1L, (nnz + objElems - 1) / objElems).toInt
-    val elems = coo
-      .select(col(rowCol).cast("long").as("r"), col(colCol).cast("long").as("c"),
-        col("value").cast("double").as("v"))
-      .withColumn("rk",
-        row_number().over(Window.partitionBy("r").orderBy("c")).cast("long") - 1)
-      .join(rowStarts, "r")
-      .select((col("start") + col("rk")).as("e"), col("c"), col("v"))
-    val chunkC = chunkElems; val objElemsC = objElems
-    elems.rdd
-      .map { row =>
-        val e = row.getLong(0)
-        ((e / objElemsC).toInt, (e, row.getLong(1), row.getDouble(2)))
-      }
-      .groupByKey(math.min(nObjects, math.max(1, sc.defaultParallelism)))
-      .foreach { case (obj, it) =>
-        val bse = obj.toLong * objElemsC
-        val m = math.min(objElemsC, nnzC - bse).toInt
-        val dataV = new Array[Double](m)
-        val indV = new Array[Long](m)
-        var seen = 0
-        it.foreach { case (e, j, v) =>
-          val k = (e - bse).toInt
-          dataV(k) = v; indV(k) = j; seen += 1
-        }
-        require(seen == m, s"$relC object $obj: $seen of $m elements")
-        if (!v3C) {
-          val db = ByteBuffer.allocate(chunkC * 8).order(ByteOrder.LITTLE_ENDIAN)
-          dataV.foreach(db.putDouble)
-          val ib = ByteBuffer.allocate(chunkC * 8).order(ByteOrder.LITTLE_ENDIAN)
-          indV.foreach(ib.putLong)
-          writeBytes(rootC, s"$relC/data/$obj", zlibEncode(db.array()))
-          writeBytes(rootC, s"$relC/indices/$obj", zlibEncode(ib.array()))
-        } else {
-          writeBytes(rootC, s"$relC/data/c/$obj",
-            shardBytes(objElemsC.toInt, chunkC, m, packDoubles(dataV, chunkC)))
-          writeBytes(rootC, s"$relC/indices/c/$obj",
-            shardBytes(objElemsC.toInt, chunkC, m, packLongs(indV, chunkC)))
-        }
-      }
-    rowCounts.unpersist(blocking = false)
-    baseB.unpersist()
   }
 
   /** One `sharding_indexed` shard object: the committed prefix (`m` of
@@ -969,8 +878,6 @@ object AnnZarrWriter {
       case Scalar(other) => throw new UnsupportedOperationException(
         s"uns scalar of ${if (other == null) "null" else other.getClass.getName}")
       case Arr(vals) =>
-        val n = vals.length.toLong
-        val chunkLen = 65536
         val dtype =
           if (vals.isEmpty) "<f8"
           else if (vals.forall(_.isInstanceOf[String])) "|O"
@@ -978,12 +885,7 @@ object AnnZarrWriter {
           else if (vals.forall(v => v.isInstanceOf[Double] || v.isInstanceOf[Float])) "<f8"
           else "<i8"
         val atts = if (dtype == "|O") enc("string-array", "0.2.0") else enc("array", "0.2.0")
-        array1d(root, rel, dtype, n, chunkLen, atts, { c =>
-          val lo = c * chunkLen
-          Array.tabulate(chunkLen)(k =>
-            if (lo + k < n) vals(lo + k)
-            else if (dtype == "|O") null else 0L)
-        }, v3)
+        array1d(root, rel, dtype, 65536, atts, vals.toIndexedSeq, v3)
       case Mapping(items) =>
         zgroup(root, rel, Some(enc("dict", "0.1.0")), v3)
         items.foreach { case (k, cv) => writeUns(root, s"$rel/$k", cv, v3) }
@@ -994,8 +896,8 @@ object AnnZarrWriter {
 
   /** Write `ds` as an AnnData-on-zarr store at `path` (a directory /
     * object-store prefix). Matrix slots (X, layers, obsm, varm, obsp,
-    * raw.X) are csr groups written executor-parallel; axis frames and
-    * uns are driver-written. Readable back by [[AnnZarr.open]].
+    * raw.X) and axis frames are written executor-side; uns and category
+    * dictionaries are driver-written. Readable back by [[AnnZarr.open]].
     *
     * `v3 = true` emits a zarr v3 store with `sharding_indexed` csr
     * slots: `shardFactor` inner chunks of `chunkElems` elements per
@@ -1183,6 +1085,15 @@ object AnnZarrWriter {
     * and `raw` remain append-incompatible. The HDF5 container cannot
     * offer this shape at all — an h5ad append rewrites the file.
     *
+    * Every node grows through the same executor-side extend [[write]]
+    * uses, pointed at the store's committed prefix: obs columns through
+    * the chunk-grouped frame writer, csr slots through the indptr/element
+    * extend, dense slots through the row-band extend. The driver reads
+    * one boundary chunk per array and holds chunk-level prefix sums —
+    * never O(batch) rows. This is the capability analog of the
+    * reference's append-with-reindex (`core/storage/_tiledbsoma.py:166-351`),
+    * shaped for chunked object stores instead of a native array DB.
+    *
     * Crash behavior: shapes are only ever EXTENDED and boundary-chunk
     * (or boundary-shard) rewrites preserve the committed prefix, so a
     * half-applied append is fully undone by [[truncateTo]] (the
@@ -1206,232 +1117,18 @@ object AnnZarrWriter {
     require(slotNames("obsm") == newObsm.keySet,
       s"$path: obsm batch ${newObsm.keySet} != store ${slotNames("obsm")}")
     val n0 = ZarrStore.openArray(path, "obs/_index").shape.head
-    // node set computed up front — the cached consolidated metadata
-    // stays authoritative (pre-append) until the final patch
-    val obsCols = ZarrStore.children(path, "obs").filterNot(_ == "_index")
+    // the cached consolidated metadata stays authoritative (pre-append)
+    // until the final patch, so every node below reads its committed extent
     val changedMeta = scala.collection.mutable.ArrayBuffer[String]()
+    val nAdd = appendObs(path, newObs, n0, v3, changedMeta)
 
-    val spark = newX.sparkSession
-    // one-pass routing, like writeFrame: materialize the batch frame
-    // once and route on the cached count — a bulk append of 10⁷+ rows
-    // goes EXECUTOR-side (boundary chunks merged in-task, new chunks
-    // owned by the task's shuffle partition), a microbatch keeps the
-    // bounded driver path
-    val matObs = newObs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val nAdd = matObs.count()
-
-    /** Chunk-aligned 1-D extend: reads the boundary chunk's committed
-      * prefix, writes boundary + new chunks ONLY — O(add), not O(n).
-      */
-    def append1d(rel: String, add: IndexedSeq[Any]): Unit = {
-      val za = ZarrStore.openArray(path, rel)
-      require(za.kind != 'O' || za.vlenUtf8, s"$rel: unsupported encoding")
-      require(za.shard.isEmpty, s"$rel: 1-D axis arrays are written unsharded")
-      val cl = za.chunks.head
-      val aN0 = za.shape.head
-      val aN1 = aN0 + add.length
-      changedMeta += ZarrStore.patchShape(path, rel, Seq(aN1))
-      if (add.isEmpty) return
-      val cb = (aN0 / cl).toInt // boundary chunk id
-      val base = cb.toLong * cl
-      val prefix: IndexedSeq[Any] =
-        if (aN0 == base) IndexedSeq.empty
-        else if (za.kind == 'O') za.readStrings(base, aN0).toIndexedSeq
-        else if (za.kind == 'f') za.readDoubles(base, aN0).toIndexedSeq
-        else za.readLongs(base, aN0).toIndexedSeq
-      val lastChunk = ((aN1 - 1) / cl).toInt
-      var c = cb
-      while (c <= lastChunk) {
-        val lo = c.toLong * cl
-        val vals: Array[Any] = Array.tabulate(cl) { k =>
-          val g = lo + k
-          if (g < aN0) prefix((g - base).toInt)
-          else if (g < aN1) add((g - aN0).toInt)
-          else if (za.kind == 'O') null else 0L // edge-chunk padding
-        }
-        val raw =
-          if (za.kind == 'O')
-            packVlen(vals.map(v => if (v == null) null else String.valueOf(v)))
-          else packNumAny(za.dtype, vals, rel) // no Double detour: int64
-                                              // appends keep 64-bit precision
-        writeBytes(path, s"$rel/${chunkKey1d(c, v3)}", encodeChunk(raw, v3))
-        c += 1
-      }
-    }
-
-    // ---- obs frame: boundary + new chunks per column, routed on batch
-    // size exactly like writeFrame: a batch spanning more than one chunk
-    // of the index array writes its new chunk objects EXECUTOR-side
-    val hasName = newObs.columns.contains("obs_name")
-    val clIdx = ZarrStore.openArray(path, "obs/_index").chunks.head
-    obsCols.foreach(cn => require(newObs.columns.contains(cn),
-      s"append obs frame missing column '$cn'"))
-    if (nAdd > clIdx)
-      appendObsFrameDistributed(path, matObs, obsCols, hasName, n0, nAdd,
-        clIdx, v3, changedMeta, append1d)
-    else {
-    val rows = matObs.orderBy("obs_id").collect()
-    driverAxisRowsProbe.addAndGet(rows.length.toLong)
-    // same contiguity contract the distributed path enforces per chunk
-    rows.zipWithIndex.foreach { case (r, i) =>
-      val raw = r.getAs[Number]("obs_id")
-      require(raw != null && raw.longValue() == i,
-        s"append batch: obs_id must be contiguous 0..n-1 " +
-          s"(sorted row $i has obs_id=${if (raw == null) "null" else raw})")
-    }
-    append1d("obs/_index", rows.zipWithIndex.map { case (r, i) =>
-      (if (hasName) r.getAs[Any]("obs_name") match {
-        case null => null // vlen null label, like the distributed path
-        case s: String => s
-        case other => String.valueOf(other)
-      } else (n0 + i).toString): Any
-    }.toIndexedSeq)
-    obsCols.foreach { cn =>
-      if (ZarrStore.isArray(path, s"obs/$cn")) {
-        val kind = ZarrStore.openArray(path, s"obs/$cn").kind
-        // null normalization matches the distributed path: null string
-        // -> vlen null, null numeric/boolean -> 0
-        val add: IndexedSeq[Any] = kind match {
-          case 'O' => rows.map(r => (r.getAs[Any](cn) match {
-            case null => null
-            case s: String => s
-            case other => String.valueOf(other)
-          }): Any).toIndexedSeq
-          case 'f' => rows.map { r =>
-            val v = r.getAs[Number](cn)
-            (if (v == null) 0.0 else v.doubleValue()): Any
-          }.toIndexedSeq
-          case _ => rows.map { r =>
-            (r.getAs[Any](cn) match {
-              case null => 0L
-              case b: Boolean => if (b) 1L else 0L
-              case x: Number => x.longValue()
-              case other => sys.error(s"obs/$cn: element $other")
-            }): Any
-          }.toIndexedSeq
-        }
-        append1d(s"obs/$cn", add)
-      } else {
-        // categorical group: unseen values append to `categories`
-        // (category-cardinality-sized), codes extend chunk-aligned
-        require(ZarrStore.attrString(path, s"obs/$cn", "encoding-type")
-          .contains("categorical"), s"obs/$cn: unsupported column node")
-        val cats0 = ZarrStore.openArray(path, s"obs/$cn/categories").readFlat()
-          .map(_.asInstanceOf[String])
-        val newVals = rows.map(r =>
-          Option(r.getAs[Any](cn)).map(String.valueOf(_)).orNull)
-        val seen = cats0.toSet
-        val extra = newVals.filter(v => v != null && !seen(v)).distinct.toIndexedSeq
-        if (extra.nonEmpty) append1d(s"obs/$cn/categories", extra.map(x => x: Any))
-        val idx = (cats0 ++ extra).zipWithIndex.toMap
-        append1d(s"obs/$cn/codes",
-          newVals.map(v => (if (v == null) -1L else idx(v).toLong): Any).toIndexedSeq)
-      }
-    }
-    }
-
-    /** Dense row-band extend of slot `rel`: new rows land in the
-      * boundary chunk-row band plus new bands; a task whose object
-      * already exists (the boundary only) merges the OLD content with
-      * its new elements — pre-boundary objects are never touched, and
-      * absent objects/bands keep fill-zero semantics. On a v3 ROW-
-      * SHARDED grid the store object is a whole shard: the boundary
-      * shard's committed inner bands are re-read, merged, and the
-      * shard is re-encoded with a fresh index; later shards are new.
-      */
     def appendDenseSlot(rel: String, coo: DataFrame, colCol: String): Unit = {
       val za = ZarrStore.openArray(path, rel)
-      require(za.rank == 2 && za.kind == 'f' &&
-        (if (za.shard.isDefined) za.codecs.contains(ZCodec.GzipC)
-         else za.compressor == (if (v3) "gzip" else "zlib")),
-        s"$path/$rel: dense append serves the writer's float chunk grid")
-      require(za.shard.forall(_.shardShape(1) == za.chunks(1)),
-        s"$path/$rel: dense shards must be row-banded (writer layout)")
-      val Seq(cr, cc) = za.chunks.map(identity)
-      val sf = za.shard.map(_.shardShape.head / cr).getOrElse(1)
-      val nCols = za.shape(1)
-      val gridCols = ((nCols + cc - 1) / cc).toInt
-      changedMeta += ZarrStore.patchShape(path, rel, Seq(n0 + nAdd, nCols))
-      if (nAdd == 0) return
-      val rootC = path; val v3C = v3; val zaC = za; val relC = rel
-      val n0C = n0; val crC = cr; val ccC = cc; val gridColsC = gridCols
-      val sfC = sf; val objRows = cr * sf
-      coo
-        .select(col("obs_id").cast("long").as("r"),
-          col(colCol).cast("long").as("c"),
-          col("value").cast("double").as("v"))
-        .rdd
-        .map { row =>
-          val r = n0C + row.getLong(0); val c = row.getLong(1)
-          require(row.getLong(0) >= 0, s"dense append obs_id ${row.getLong(0)}")
-          (((r / objRows) * gridColsC + c / ccC).toInt, (r, c, row.getDouble(2)))
-        }
-        .groupByKey(math.max(1, spark.sparkContext.defaultParallelism))
-        .foreach { case (obj, it) =>
-          val gr = obj / gridColsC; val gc = obj % gridColsC
-          val objRowsT = crC * sfC
-          require(gr.toLong * objRowsT + objRowsT > n0C,
-            s"dense append wrote into committed row object $gr")
-          if (sfC == 1) {
-            val buf = new Array[Double](crC * ccC) // zero-filled = fill_value
-            // boundary band: merge the committed rows already in store
-            zaC.readChunk(Seq(gr, gc)).foreach { old =>
-              val bb = ByteBuffer.wrap(old).order(ByteOrder.LITTLE_ENDIAN)
-              // only the COMMITTED prefix (rows < n0) survives the merge:
-              // rows >= n0 in the old object are leftovers of a
-              // truncateTo-rolled-back append and must not resurrect.
-              val keepRows = math.min(crC.toLong, math.max(0L, n0C - gr.toLong * crC)).toInt
-              var k = 0
-              while (k < keepRows * ccC) { buf(k) = bb.getDouble(k * 8); k += 1 }
-            }
-            it.foreach { case (r, c, v) =>
-              buf(((r - gr.toLong * crC) * ccC + (c - gc.toLong * ccC)).toInt) = v
-            }
-            val bb = ByteBuffer.allocate(crC * ccC * 8).order(ByteOrder.LITTLE_ENDIAN)
-            buf.foreach(bb.putDouble)
-            val key = if (v3C) s"c/$gr/$gc" else s"$gr.$gc"
-            writeBytes(rootC, s"$relC/$key", encodeChunk(bb.array(), v3C))
-          } else {
-            // boundary/new SHARD: committed inner bands re-read
-            // through the shard index (pre-rewrite), merged in place
-            val baseRow = gr.toLong * objRowsT
-            val bands = new Array[Array[Double]](sfC)
-            var b = 0
-            while (b < sfC) {
-              val bandRow = baseRow + b.toLong * crC
-              if (bandRow < n0C) // committed band — may hold data
-                zaC.readChunk(Seq(gr * sfC + b, gc)).foreach { old =>
-                  val bb = ByteBuffer.wrap(old).order(ByteOrder.LITTLE_ENDIAN)
-                  val buf = new Array[Double](crC * ccC)
-                  // committed prefix only — a band straddling n0 may hold
-                  // rolled-back rows >= n0 that must not resurrect
-                  val keepRows = math.min(crC.toLong, n0C - bandRow).toInt
-                  var k = 0
-                  while (k < keepRows * ccC) { buf(k) = bb.getDouble(k * 8); k += 1 }
-                  bands(b) = buf
-                }
-              b += 1
-            }
-            it.foreach { case (r, c, v) =>
-              val band = ((r - baseRow) / crC).toInt
-              if (bands(band) == null) bands(band) = new Array[Double](crC * ccC)
-              bands(band)(((r - baseRow - band.toLong * crC) * ccC +
-                (c - gc.toLong * ccC)).toInt) = v
-            }
-            writeBytes(rootC, s"$relC/c/$gr/$gc", denseShardObject(packBands(bands)))
-          }
-        }
+      requireWriterDense(path, rel, za, v3)
+      changedMeta += ZarrStore.patchShape(path, rel, Seq(n0 + nAdd, za.shape(1)))
+      extendDense(path, rel, za, coo, "obs_id", colCol, n0, nAdd, v3)
     }
 
-    /** csr element-extend of slot `rel`: indptr/data/indices grow by
-      * boundary + new objects only. Routed on batch size like the obs
-      * frame: a batch spanning more than one indptr chunk computes row
-      * starts and writes the indptr tail EXECUTOR-side (the
-      * writeCsrDistributed machinery pointed at the committed offsets
-      * nnz0 / n0), so the driver holds chunk-level prefix sums and the
-      * boundary prefixes only — never a row-sized array.
-      */
     def appendCsrSlot(rel: String, coo: DataFrame, colCol: String): Unit = {
       val dataZ = ZarrStore.openArray(path, s"$rel/data")
       val indZ = ZarrStore.openArray(path, s"$rel/indices")
@@ -1447,213 +1144,21 @@ object AnnZarrWriter {
       // store-object granularity: chunk objects (v2) / shard objects (v3)
       val objElems = dataZ.shard.map(_.shardShape.head).getOrElse(chunkElems)
       val nnz0 = dataZ.shape.head
-      val nCols = {
-        val a = ZarrStore.attrs(path, rel).get.get("shape")
-        a.get(1).asLong
-      }
-
-      /** Shared tail of both branches: elements carrying their GLOBAL
-        * csr position `e` group on the target store object; boundary +
-        * new objects write, v2 chunk / v3 shard encodings alike.
-        */
-      def extendElementObjects(elems: DataFrame, nnz1: Long): Unit = {
-        val cb = (nnz0 / objElems).toInt // boundary OBJECT (chunk / shard) id
-        val boundaryOff = (nnz0 % objElems).toInt
-        // committed prefix of the boundary object — for v3 decoded through
-        // the shard index's ranged inner-chunk reads, for v2 one chunk GET
-        val (bndData, bndInd) =
-          if (boundaryOff == 0) (Array.empty[Double], Array.empty[Long])
-          else {
-            val base = cb.toLong * objElems
-            (dataZ.readDoubles(base, nnz0), indZ.readLongs(base, nnz0))
-          }
-        val bndB = spark.sparkContext.broadcast((bndData, bndInd))
-        val rootC = path; val chunkC = chunkElems; val objC = objElems
-        val nnz0C = nnz0; val nnz1C = nnz1; val cbC = cb; val v3C = v3
-        val relC = rel
-        elems.rdd
-          .map { row =>
-            val e = row.getLong(0)
-            ((e / objC).toInt, (e, row.getLong(1), row.getDouble(2)))
-          }
-          .groupByKey(math.max(1, spark.sparkContext.defaultParallelism))
-          .foreach { case (obj, it) =>
-            val base = obj.toLong * objC
-            val m1 = math.min(objC.toLong, nnz1C - base).toInt // slots live after append
-            val dataV = new Array[Double](m1)
-            val indV = new Array[Long](m1)
-            // the boundary object keeps its existing prefix
-            if (obj == cbC) {
-              val (bd, bi) = bndB.value
-              var k = 0
-              while (k < bd.length) { dataV(k) = bd(k); indV(k) = bi(k); k += 1 }
-            }
-            var seen = 0
-            it.foreach { case (e, j, v) =>
-              val k = (e - base).toInt
-              dataV(k) = v; indV(k) = j; seen += 1
-            }
-            val lo = math.max(base, nnz0C)
-            val hi = math.min(base + objC, nnz1C)
-            require(seen == (hi - lo).toInt,
-              s"$relC append object $obj: $seen of ${hi - lo} new elements")
-            if (!v3C) {
-              val db = ByteBuffer.allocate(chunkC * 8).order(ByteOrder.LITTLE_ENDIAN)
-              dataV.foreach(db.putDouble) // allocate() zero-fills the edge padding
-              val ib = ByteBuffer.allocate(chunkC * 8).order(ByteOrder.LITTLE_ENDIAN)
-              indV.foreach(ib.putLong)
-              writeBytes(rootC, s"$relC/data/$obj", zlibEncode(db.array()))
-              writeBytes(rootC, s"$relC/indices/$obj", zlibEncode(ib.array()))
-            } else {
-              // boundary shard re-encoded whole (prefix + new inner
-              // chunks + fresh index); later shards are brand new
-              writeBytes(rootC, s"$relC/data/c/$obj",
-                shardBytes(objC, chunkC, m1, packDoubles(dataV, chunkC)))
-              writeBytes(rootC, s"$relC/indices/c/$obj",
-                shardBytes(objC, chunkC, m1, packLongs(indV, chunkC)))
-            }
-          }
-        bndB.unpersist()
-      }
-
-      /** (e, c, v) with e = nnz0 + row start + rank-within-row; the
-        * join and the rank window share the row key's partitioning.
-        */
-      def cooWithPositions(starts: DataFrame): DataFrame = coo
-        .select(col("obs_id").cast("long").as("r"), col(colCol).cast("long").as("c"),
-          col("value").cast("double").as("v"))
-        .withColumn("rk",
-          row_number().over(Window.partitionBy("r").orderBy("c")).cast("long") - 1)
-        .join(starts, "r")
-        .select((col("start") + col("rk") + lit(nnz0)).as("e"), col("c"), col("v"))
-
+      val nCols = ZarrStore.attrs(path, rel).get.get("shape").get(1).asLong
       val L = ptrZ.chunks.head
-      if (nAdd > L) {
-        // ---- BULK branch: the batch spans >1 indptr chunk — row starts
-        // and the indptr tail are computed and written executor-side
-        val rowCounts = coo.groupBy(col("obs_id").cast("long").as("r"))
-          .agg(count(lit(1)).as("cnt"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val bad = rowCounts.filter(col("r") < 0 || col("r") >= nAdd).limit(1).collect()
-        require(bad.isEmpty, s"$rel: append obs_id " +
-          s"${bad.headOption.map(_.getLong(0)).getOrElse(-1L)} outside 0..${nAdd - 1}")
-        // local-chunk totals -> driver prefix sums (chunk-count-sized:
-        // one long per indptr chunk of NEW rows)
-        val nLocal = ((nAdd + L - 1) / L).toInt
-        val totals = rowCounts
-          .groupBy((col("r") / L).cast("int").as("pc")).agg(sum("cnt").as("t"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val baseArr = new Array[Long](nLocal + 1)
-        (0 until nLocal).foreach(c => baseArr(c + 1) = baseArr(c) + totals.getOrElse(c, 0L))
-        val nnzAdd = baseArr(nLocal)
-        val nnz1 = nnz0 + nnzAdd
-        // row starts: local-chunk base + within-chunk running sum
-        // (window PARTITIONED by chunk — bounded state)
-        val baseDf = spark.createDataFrame(
-          (0 until nLocal).map(c => (c, baseArr(c)))).toDF("pc", "pcbase")
-        val w = Window.partitionBy("pc").orderBy("r")
-        val rowStarts = rowCounts
-          .withColumn("pc", (col("r") / L).cast("int"))
-          .withColumn("local", sum(col("cnt")).over(w) - col("cnt"))
-          .join(broadcast(baseDf), "pc")
-          .select(col("r"), (col("pcbase") + col("local")).as("start"), col("cnt"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // boundary indptr prefix, read BEFORE the shape patches
-        val pLo = ((n0 + 1) / L) * L // first index of the boundary ptr chunk
-        val ptrPrefix: Array[Long] =
-          if (n0 + 1 == pLo) Array.empty[Long]
-          else ptrZ.readLongs(pLo, n0 + 1)
+      // committed values sharing a store object with new ones, read
+      // BEFORE the shape patches — for v3 decoded through the shard
+      // index's ranged inner-chunk reads, for v2 one chunk GET
+      val eLo = (nnz0 / objElems) * objElems
+      val pre = CsrPrefix(n0, nnz0, n0 + 1, ptrZ.readLongs((n0 + 1) / L * L, n0 + 1),
+        dataZ.readDoubles(eLo, nnz0), indZ.readLongs(eLo, nnz0))
+      extendCsr(path, rel, coo, "obs_id", colCol, nAdd, pre, L, chunkElems, objElems, v3) { nnz1 =>
         zgroup(path, rel, Some(s"""{"encoding-type":"csr_matrix","encoding-version":"0.1.0",""" +
           s""""shape":[${n0 + nAdd},$nCols]}"""), v3)
         changedMeta += (if (v3) rel else s"$rel/.zattrs")
         changedMeta += ZarrStore.patchShape(path, s"$rel/indptr", Seq(n0 + nAdd + 1))
         changedMeta += ZarrStore.patchShape(path, s"$rel/data", Seq(nnz1))
         changedMeta += ZarrStore.patchShape(path, s"$rel/indices", Seq(nnz1))
-        // target-chunk bases: cumulative new elements before each indptr
-        // chunk's first index (chunk-count-sized, driver)
-        val firstTc = ((n0 + 1) / L).toInt
-        val lastTc = ((n0 + nAdd) / L).toInt
-        val nTc = lastTc - firstTc + 1
-        val tTotals = rowCounts
-          .groupBy(((col("r") + lit(n0 + 1)) / L).cast("int").as("tc"))
-          .agg(sum("cnt").as("t"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val tBase = new Array[Long](nTc + 1)
-        (0 until nTc).foreach(i =>
-          tBase(i + 1) = tBase(i) + tTotals.getOrElse(firstTc + i, 0L))
-        val sc = spark.sparkContext
-        val ptrPrefixB = sc.broadcast(ptrPrefix)
-        val tBaseB = sc.broadcast(tBase)
-        val rootC = path; val relC = rel; val v3C = v3; val LC = L
-        val n0C = n0; val nEndC = n0 + nAdd; val nnz0C = nnz0
-        val firstTcC = firstTc
-        // indptr chunk objects: cogroup with the chunk-id range so a
-        // chunk whose rows all have zero elements still gets written
-        // (an indptr value is cumulative, never fill)
-        sc.range(firstTc.toLong, lastTc + 1L).map(c => (c, ()))
-          .cogroup(rowStarts.rdd.map(r =>
-            ((r.getLong(0) + n0C + 1) / LC, (r.getLong(0), r.getLong(1), r.getLong(2)))),
-            math.min(nTc, math.max(1, sc.defaultParallelism)))
-          .foreach { case (c, (marker, rws)) =>
-            if (marker.nonEmpty) {
-              val lo = c * LC
-              val hi = math.min(lo + LC, nEndC + 1) // indptr indices [lo, hi)
-              val newLo = math.max(lo, n0C + 1)
-              val vals = new Array[Long](LC) // edge-padded with 0
-              var k = 0
-              while (k < (newLo - lo).toInt) { vals(k) = ptrPrefixB.value(k); k += 1 }
-              // walk the chunk's indices carrying the cumulative count:
-              // rows with elements advance it, element-less rows inherit
-              val sorted = rws.toArray.sortBy(_._1)
-              var cur = nnz0C + tBaseB.value((c - firstTcC).toInt)
-              var si = 0
-              var idx = newLo
-              while (idx < hi) {
-                while (si < sorted.length && n0C + 1 + sorted(si)._1 <= idx) {
-                  cur = nnz0C + sorted(si)._2 + sorted(si)._3; si += 1
-                }
-                vals((idx - lo).toInt) = cur
-                idx += 1
-              }
-              val bb = ByteBuffer.allocate(LC * 8).order(ByteOrder.LITTLE_ENDIAN)
-              vals.foreach(bb.putLong)
-              writeBytes(rootC, s"$relC/indptr/${chunkKey1d(c.toInt, v3C)}",
-                encodeChunk(bb.array(), v3C))
-            }
-          }
-        if (nnzAdd > 0)
-          extendElementObjects(cooWithPositions(rowStarts.select("r", "start")), nnz1)
-        ptrPrefixB.unpersist(); tBaseB.unpersist()
-        rowCounts.unpersist(blocking = false); rowStarts.unpersist(blocking = false)
-      } else {
-        // ---- microbatch branch: row-sized driver structures, bounded
-        // by one indptr chunk
-        val perRow = coo.groupBy(col("obs_id")).agg(count(lit(1)).as("cnt"))
-          .collect().map(r => (r.getAs[Number](0).longValue(), r.getLong(1))).toMap
-        perRow.keys.foreach(r => require(r >= 0 && r < nAdd,
-          s"$rel: append obs_id $r outside 0..${nAdd - 1}"))
-        driverAxisRowsProbe.addAndGet(nAdd)
-        val addPtr = new Array[Long](nAdd.toInt + 1)
-        (0 until nAdd.toInt).foreach(i =>
-          addPtr(i + 1) = addPtr(i) + perRow.getOrElse(i.toLong, 0L))
-        val nnzAdd = addPtr.last
-        val nnz1 = nnz0 + nnzAdd
-
-        // indptr: boundary + new chunks (shifted by the prior nnz)
-        append1d(s"$rel/indptr", addPtr.toIndexedSeq.tail.map(v => (v + nnz0): Any))
-
-        // group shape gains the appended rows
-        zgroup(path, rel, Some(s"""{"encoding-type":"csr_matrix","encoding-version":"0.1.0",""" +
-          s""""shape":[${n0 + nAdd},$nCols]}"""), v3)
-        changedMeta += (if (v3) rel else s"$rel/.zattrs")
-
-        // data/indices: metadata grows; ONLY boundary + new objects write
-        changedMeta += ZarrStore.patchShape(path, s"$rel/data", Seq(nnz1))
-        changedMeta += ZarrStore.patchShape(path, s"$rel/indices", Seq(nnz1))
-        if (nnzAdd == 0) return
-        val starts = spark.createDataFrame(
-          (0 until nAdd.toInt).map(i => (i.toLong, addPtr(i)))).toDF("r", "start")
-        extendElementObjects(cooWithPositions(broadcast(starts)), nnz1)
       }
     }
 
@@ -1673,171 +1178,58 @@ object AnnZarrWriter {
     // would LIST every chunk directory, O(store) per microbatch
     if (v3) ZarrStore.patchConsolidatedV3(path, changedMeta.toSeq)
     else ZarrStore.patchConsolidated(path, changedMeta.toSeq)
-    } finally { matObs.unpersist(blocking = false); () }
   }
 
-  /** Executor-parallel obs-frame extend for BULK appends (the batch
-    * spans more than one chunk of the index array): the same
-    * chunk-grouped shuffle as [[writeFrameDistributed]], pointed at the
-    * offset grid — each task packs and writes the chunk objects it owns
-    * for every column, merging the straddling chunk's committed prefix
-    * (read once driver-side, bounded by ONE chunk per column) where its
-    * chunk crosses `n0`. Driver work is metadata patches, category
-    * dictionaries, and those one-chunk prefixes — never O(batch) rows
-    * (`driverAxisRowsProbe` stays untouched, spec-pinned). This is the
-    * capability analog of the reference's bulk append-with-reindex
-    * (`core/storage/_tiledbsoma.py:166-351`), shaped for chunked object
-    * stores instead of a native array DB.
+  /** The obs half of [[appendRows]]: `newObs` (obs_id local 0..n-1)
+    * extends every obs column of the store through [[writeFrameChunks]]
+    * at offset `n0`. Column kinds come from the STORE; a categorical
+    * column keeps the store's categories and appends the batch's unseen
+    * values in FIRST-OCCURRENCE (obs_id) order. Returns the batch's row
+    * count.
     */
-  private def appendObsFrameDistributed(path: String, df: DataFrame,
-                                        obsCols: Seq[String], hasName: Boolean,
-                                        n0: Long, nAdd: Long, cl: Int, v3: Boolean,
-                                        changedMeta: scala.collection.mutable.ArrayBuffer[String],
-                                        append1d: (String, IndexedSeq[Any]) => Unit): Unit = {
-    val spark = df.sparkSession
-    val n1 = n0 + nAdd
-    // per-column spec from the STORE ('S' string, 'C' categorical codes,
-    // 'F' float, 'L' integer/boolean) + the one-chunk-grid contract the
-    // writer lays every frame column out on
-    val specs: Seq[(String, Char, String)] = obsCols.map { cn =>
+  private def appendObs(path: String, newObs: DataFrame, n0: Long, v3: Boolean,
+                        changedMeta: scala.collection.mutable.ArrayBuffer[String]): Long = {
+    val cl = ZarrStore.openArray(path, "obs/_index").chunks.head
+    val cols = ZarrStore.children(path, "obs").filterNot(_ == "_index").map { cn =>
+      require(newObs.columns.contains(cn), s"append obs frame missing column '$cn'")
       if (ZarrStore.isArray(path, s"obs/$cn")) {
         val za = ZarrStore.openArray(path, s"obs/$cn")
-        require(za.chunks.head == cl,
-          s"obs/$cn: chunk len ${za.chunks.head} != index chunk len $cl")
-        (cn, za.kind match { case 'O' => 'S'; case 'f' => 'F'; case _ => 'L' }, za.dtype)
+        FrameCol(cn, za.kind match { case 'O' => 'S'; case 'f' => 'F'; case _ => 'L' }, za.dtype)
       } else {
         require(ZarrStore.attrString(path, s"obs/$cn", "encoding-type")
           .contains("categorical"), s"obs/$cn: unsupported column node")
-        require(ZarrStore.openArray(path, s"obs/$cn/codes").chunks.head == cl,
-          s"obs/$cn/codes: chunk len != index chunk len $cl")
-        (cn, 'C', "<i8")
+        FrameCol(cn, 'C', "<i8")
       }
     }
-    def relOf(cn: String, kind: Char) =
-      if (kind == 'C') s"obs/$cn/codes" else s"obs/$cn"
-    // category dictionaries: store categories + the batch's unseen
-    // values in FIRST-OCCURRENCE (obs_id) order — the order the driver
-    // path's occurrence-ordered distinct produces, derived here with a
-    // min(obs_id) aggregate so the result is deterministic
-    val dicts: Map[String, Map[String, Long]] = specs.collect {
-      case (cn, 'C', _) =>
+    materialized(newObs) { mat =>
+      val cats = cols.filter(_.kind == 'C').map(_.name)
+      val (nAdd, firstRows) = frameStats(mat, "obs_id", cats)
+      val dicts = cats.map { cn =>
         val cats0 = ZarrStore.openArray(path, s"obs/$cn/categories").readFlat()
           .map(_.asInstanceOf[String])
         val seen = cats0.toSet
-        val extra = df.filter(col(cn).isNotNull)
-          .groupBy(col(cn).cast("string").as("v"))
-          .agg(min(col("obs_id").cast("long")).as("fo"))
-          .orderBy("fo").collect().map(_.getString(0)).filterNot(seen).toIndexedSeq
-        if (extra.nonEmpty) append1d(s"obs/$cn/categories", extra.map(x => x: Any))
-        cn -> (cats0 ++ extra).zipWithIndex.map { case (s, i) => s -> i.toLong }.toMap
-    }.toMap
-    // boundary prefixes (committed values of the straddling chunk), one
-    // bounded read per column, shipped to the task that owns that chunk
-    val base = (n0 / cl) * cl
-    val prefixes: Map[String, IndexedSeq[Any]] =
-      (("_index", 'S', "obs/_index") +: specs.map { case (cn, k, _) => (cn, k, relOf(cn, k)) })
-        .map { case (key, _, rel) =>
-          val za = ZarrStore.openArray(path, rel)
-          require(za.kind != 'O' || za.vlenUtf8, s"$rel: unsupported encoding")
-          require(za.shard.isEmpty, s"$rel: 1-D axis arrays are written unsharded")
-          key -> (if (n0 == base) IndexedSeq.empty[Any]
-            else if (za.kind == 'O') za.readStrings(base, n0).toIndexedSeq
-            else if (za.kind == 'f') za.readDoubles(base, n0).toIndexedSeq
-            else za.readLongs(base, n0).toIndexedSeq)
-        }.toMap
-    // shapes extend AFTER the prefixes are read
-    changedMeta += ZarrStore.patchShape(path, "obs/_index", Seq(n1))
-    specs.foreach { case (cn, kind, _) =>
-      changedMeta += ZarrStore.patchShape(path, relOf(cn, kind), Seq(n1))
+        val extra = firstRows(cn).toIndexedSeq.sortBy(_._2).map(_._1).filterNot(seen)
+        if (extra.nonEmpty) changedMeta += extend1d(path, s"obs/$cn/categories", extra, v3)
+        cn -> (cats0 ++ extra).toArray
+      }.toMap
+      // one chunk grid for the whole frame; the straddling chunk's
+      // committed values are read BEFORE the shapes extend
+      val prefixes = (("_index", "obs/_index") +: cols.map(c => (c.name, c.rel("obs")))).map {
+        case (key, rel) =>
+          val za = unsharded1d(path, rel)
+          require(za.chunks.head == cl, s"$rel: chunk len ${za.chunks.head} != index chunk len $cl")
+          val prefix = readValues(za, n0 / cl * cl, n0)
+          changedMeta += ZarrStore.patchShape(path, rel, Seq(n0 + nAdd))
+          key -> prefix
+      }.toMap
+      val label =
+        if (mat.columns.contains("obs_name")) col("obs_name").cast("string")
+        else (col("obs_id").cast("long") + lit(n0)).cast("string")
+      writeFrameChunks(path, "obs", mat, "obs_id", label, cols, dicts, prefixes, n0, nAdd, cl, v3)
+      nAdd
     }
-    // normalized row: _g (global position), _ix label, one slot/column
-    val sel: Seq[org.apache.spark.sql.Column] =
-      (col("obs_id").cast("long") + lit(n0)).as("_g") +:
-        (if (hasName) col("obs_name").cast("string")
-         else (col("obs_id").cast("long") + lit(n0)).cast("string")).as("_ix") +:
-        specs.map { case (cn, kind, _) =>
-          kind match {
-            case 'C' | 'S' => col(cn).cast("string").as(cn)
-            case 'F' => col(cn).cast("double").as(cn)
-            case _ => col(cn).cast("long").as(cn) // bool -> 0/1; 64-bit exact
-          }
-        }
-    val dictsB = spark.sparkContext.broadcast(dicts)
-    val prefB = spark.sparkContext.broadcast(prefixes)
-    val rootC = path; val v3C = v3; val n0C = n0; val n1C = n1
-    val clC = cl; val specsC = specs
-    val firstChunk = (n0 / cl).toInt
-    val nChunks = ((n1 - 1) / cl).toInt - firstChunk + 1
-    df.select(sel: _*)
-      .rdd
-      .map { row =>
-        val g = row.getLong(0)
-        require(g >= n0C && g < n1C,
-          s"append batch: obs_id ${g - n0C} outside 0..${n1C - n0C - 1}")
-        (g / clC, row)
-      }
-      .groupByKey(math.min(nChunks, math.max(1, spark.sparkContext.defaultParallelism)))
-      .foreach { case (c, it) =>
-        val lo = c * clC
-        val hi = math.min(n1C, lo + clC)
-        val newLo = math.max(lo, n0C)
-        val preLen = (newLo - lo).toInt // committed rows in this chunk
-        val live = (hi - newLo).toInt
-        val rows = new Array[Row](live)
-        var seen = 0
-        it.foreach { r =>
-          val k = (r.getLong(0) - newLo).toInt
-          // same fill-time guard as writeFrameDistributed: a duplicate
-          // and a missing id cancelling in one chunk must still raise
-          require(k >= 0 && k < live && rows(k) == null,
-            s"append chunk $c: obs_id must be contiguous 0..n-1 " +
-              s"(global row ${r.getLong(0)} is duplicated or out of range)")
-          rows(k) = r; seen += 1
-        }
-        require(seen == live, s"append chunk $c: $seen of $live rows " +
-          "(obs_id must be contiguous 0..n-1)")
-        val pre = prefB.value
-        def column(key: String, rel: String, kind: Char, dtype: String, f: Int): Unit = {
-          val vals = new Array[Any](clC)
-          var k = 0
-          while (k < preLen) { vals(k) = pre(key)(k); k += 1 }
-          while (k < (hi - lo).toInt) {
-            val r = rows(k - preLen)
-            vals(k) = kind match {
-              case 'S' => r.getString(f)
-              case 'C' =>
-                val s = r.getString(f)
-                if (s == null) -1L else dictsB.value(key)(s)
-              case 'F' => if (r.isNullAt(f)) 0.0 else r.getDouble(f)
-              case _ => if (r.isNullAt(f)) 0L else r.getLong(f)
-            }
-            k += 1
-          }
-          while (k < clC) { vals(k) = if (kind == 'S') null else 0L; k += 1 } // edge pad
-          val raw =
-            if (kind == 'S') packVlen(vals.map(v => v.asInstanceOf[String]))
-            else packNumAny(dtype, vals, rel) // no Double detour: i64 exact
-          writeBytes(rootC, s"$rel/${chunkKey1d(c.toInt, v3C)}", encodeChunk(raw, v3C))
-        }
-        column("_index", "obs/_index", 'S', "|O", 1)
-        specsC.zipWithIndex.foreach { case ((cn, kind, dtype), j) =>
-          column(cn, if (kind == 'C') s"obs/$cn/codes" else s"obs/$cn", kind, dtype, j + 2)
-        }
-      }
-    dictsB.unpersist(); prefB.unpersist()
   }
 
-  /** Roll a (writer-produced) store back to `n0` obs rows and `nnz0` X
-    * elements — the crash-recovery half of the streaming sink's
-    * pending-marker protocol, for both writer flavors. [[appendRows]]
-    * only ever EXTENDS array shapes and its boundary-chunk (or
-    * boundary-shard) rewrites preserve the committed prefix, so
-    * shrinking the declared shapes (and patching consolidated
-    * metadata) is a complete undo: chunk objects — and shard index
-    * entries — beyond the declared shape are unreachable to readers.
-    * Assumes atomic whole-object PUTs (true on object stores; a local
-    * filesystem can expose a half-written chunk mid-crash).
-    */
   /** Physically clear a dense slot's rows >= `n0` BEFORE its shape is
     * rolled back: store objects fully beyond `n0` are deleted; the
     * objects straddling it are rewritten with only the committed row
@@ -1853,17 +1245,7 @@ object AnnZarrWriter {
     val za = ZarrStore.openArray(path, rel)
     val n1 = za.shape.head
     if (n1 <= n0) return
-    // same encoding guard as appendDenseSlot: the scrub re-encodes
-    // straddling objects with the writer's codec and 8-byte f8 layout —
-    // on a store with any other compressor, element size (f4), or a
-    // column-spanning shard grid, rewriting would corrupt data, so fail
-    // fast instead
-    require(za.rank == 2 && za.dtype == "<f8" &&
-      (if (za.shard.isDefined) za.codecs.contains(ZCodec.GzipC)
-       else za.compressor == (if (v3) "gzip" else "zlib")),
-      s"$path/$rel: dense rollback serves the writer's f8 chunk grid")
-    require(za.shard.forall(_.shardShape(1) == za.chunks(1)),
-      s"$path/$rel: dense shards must be row-banded (writer layout)")
+    requireWriterDense(path, rel, za, v3)
     val Seq(cr, cc) = za.chunks.map(identity)
     val sf = za.shard.map(_.shardShape.head / cr).getOrElse(1)
     val objRows = cr.toLong * sf
@@ -1909,6 +1291,17 @@ object AnnZarrWriter {
     }
   }
 
+  /** Roll a (writer-produced) store back to `n0` obs rows and `nnz0` X
+    * elements — the crash-recovery half of the streaming sink's
+    * pending-marker protocol, for both writer flavors. [[appendRows]]
+    * only ever EXTENDS array shapes and its boundary-chunk (or
+    * boundary-shard) rewrites preserve the committed prefix, so
+    * shrinking the declared shapes (and patching consolidated
+    * metadata) is a complete undo: chunk objects — and shard index
+    * entries — beyond the declared shape are unreachable to readers.
+    * Assumes atomic whole-object PUTs (true on object stores; a local
+    * filesystem can expose a half-written chunk mid-crash).
+    */
   def truncateTo(path: String, n0: Long, nnz0: Long): Unit = {
     val v3 = ZarrStore.format(path) == 3
     val changed = scala.collection.mutable.ArrayBuffer[String]()

@@ -612,9 +612,9 @@ class ZarrWriterSpec extends AnyFunSuite {
   test("multi-chunk axis frames + indptr write executor-side: no driver collect") {
     // the round-11 write-side asymmetry: writeFrame collected the whole
     // obs frame and writeCsr built a row-sized indptr on the driver.
-    // Contract now: a frame spanning >1 chunk routes through the
-    // distributed path — the driverAxisRowsProbe counts rows collected
-    // by the small-frame paths and must not move.
+    // Every frame and indptr now writes through the executor-side
+    // extend, so a multi-chunk store must read back identical to a
+    // single-chunk one.
     val nO = 300; val nV = 100
     val obs = spark.range(nO).select(col("id").as("obs_id"),
       concat(lit("c"), col("id")).as("obs_name"),
@@ -631,13 +631,10 @@ class ZarrWriterSpec extends AnyFunSuite {
     val ds = AnnDataset(obs, vars, x)
     for ((v3, tag) <- Seq(false -> "v2", true -> "v3")) {
       val p = TestSpark.tmpDir(s"graft_dist$tag") + "/dist.zarr"
-      val before = AnnZarrWriter.driverAxisRowsProbe.get()
       // frameChunkLen 64: obs (300), var (100), indptr (301) all multi-chunk
       AnnZarrWriter.write(ds, p, chunkElems = 256, v3 = v3, shardFactor = 4,
         frameChunkLen = 64, categoricalCols = Set("obs/cell_type"))
-      assert(AnnZarrWriter.driverAxisRowsProbe.get() == before,
-        s"$tag: driver-side axis collect on a multi-chunk frame")
-      // ...and the store reads back identical to a driver-path write
+      // ...and the store reads back identical to a single-chunk write
       val pd = TestSpark.tmpDir(s"graft_driv$tag") + "/driv.zarr"
       AnnZarrWriter.write(ds, pd, chunkElems = 256, v3 = v3, shardFactor = 4,
         frameChunkLen = 1024, categoricalCols = Set("obs/cell_type"))
@@ -649,8 +646,8 @@ class ZarrWriterSpec extends AnyFunSuite {
       }
       val (o1, v1, x1) = snap(p)
       val (o2, v2c, x2) = snap(pd)
-      assert(o1 == o2 && v1 == v2c && x1 == x2, s"$tag: distributed != driver write")
-      // the categorical encoding survived the distributed path
+      assert(o1 == o2 && v1 == v2c && x1 == x2, s"$tag: multi-chunk != single-chunk write")
+      // the categorical encoding survived the multi-chunk write
       assert(ZarrStore.attrString(p, "obs/cell_type", "encoding-type")
         .contains("categorical"), tag)
       // the store stays appendable (boundary indptr chunk extends)
@@ -669,10 +666,10 @@ class ZarrWriterSpec extends AnyFunSuite {
   test("int64 frame columns keep full 64-bit precision (no Double detour)") {
     // 2^53 + k is not representable as Double for odd k: a Double detour
     // in the column packers would silently land on a neighbor integer.
-    // Pin BOTH frame paths (driver: 10 rows; distributed: 100 rows at
-    // frameChunkLen 32).
+    // Pin a single-chunk frame (10 rows) and a multi-chunk one (100 rows
+    // at frameChunkLen 32).
     val big = (1L << 53) + 1
-    for ((n, fcl, tag) <- Seq((10, 65536, "driver"), (100, 32, "dist"))) {
+    for ((n, fcl, tag) <- Seq((10, 65536, "one-chunk"), (100, 32, "multi-chunk"))) {
       val obs = spark.range(n).select(col("id").as("obs_id"),
         concat(lit("c"), col("id")).as("obs_name"),
         (col("id") + big).as("uid64"))
@@ -686,7 +683,7 @@ class ZarrWriterSpec extends AnyFunSuite {
         .map(r => r.getAs[Long]("uid64"))
       (0 until n).foreach(i =>
         assert(got(i) == big + i, s"$tag row $i: ${got(i)} != ${big + i}"))
-      // the APPEND path (append1d boundary rewrite + new chunks) must
+      // the APPEND path (boundary-chunk rewrite + new chunks) must
       // keep the same precision — both for the appended values and the
       // re-read committed prefix it merges
       val obs1 = spark.range(5).select(col("id").as("obs_id"),
@@ -1051,10 +1048,10 @@ class ZarrWriterSpec extends AnyFunSuite {
 
   test("bulk appendRows routes executor-side: probe still, rollback-safe, both formats") {
     // a batch spanning >1 chunk of the index array (here 300 rows over
-    // 32-row chunks) must never collect axis rows driver-side: the obs
-    // frame AND the csr indptr tail write through the chunk-grouped
-    // shuffle, boundary chunks merged in-task. Read-back must equal the
-    // driver-path twin, and truncateTo must remain a complete undo.
+    // 32-row chunks): the obs frame AND the csr indptr tail write through
+    // the chunk-grouped shuffle, boundary chunks merged in-task.
+    // Read-back must equal the single-chunk twin, and truncateTo must
+    // remain a complete undo.
     val nV = 6
     val n0 = 50; val nAdd = 300
     def mkObs(pfx: String, n: Int, catMod: Int) = spark.range(n).select(
@@ -1081,7 +1078,7 @@ class ZarrWriterSpec extends AnyFunSuite {
       AnnZarrWriter.write(AnnDataset(mkObs("c", n0, 4), vars, mkX(n0, 0)), p,
         chunkElems = 64, v3 = v3, shardFactor = 2, frameChunkLen = 32,
         categoricalCols = Set("obs/cell_type"))
-      // big chunk grids: the same batch stays on the driver path (twin)
+      // big chunk grids: the same batch fits one chunk per array (twin)
       val pd = TestSpark.tmpDir(s"graft_bulkd$tag") + "/drv.zarr"
       AnnZarrWriter.write(AnnDataset(mkObs("c", n0, 4), vars, mkX(n0, 0)), pd,
         chunkElems = 4096, v3 = v3, shardFactor = 2, frameChunkLen = 1024,
@@ -1090,16 +1087,11 @@ class ZarrWriterSpec extends AnyFunSuite {
       val x1 = mkX(nAdd, 1)
       val preSnap = snap(p)
       val nnzPre = ZarrStore.openArray(p, "X/data").shape.head
-      val before = AnnZarrWriter.driverAxisRowsProbe.get()
       AnnZarrWriter.appendRows(obs1, x1, p)
-      assert(AnnZarrWriter.driverAxisRowsProbe.get() == before,
-        s"$tag: bulk append collected axis rows driver-side")
       AnnZarrWriter.appendRows(obs1, x1, pd)
-      assert(AnnZarrWriter.driverAxisRowsProbe.get() > before,
-        s"$tag: driver twin must use the bounded path")
       val (oB, xB) = snap(p); val (oD, xD) = snap(pd)
-      assert(oB == oD, s"$tag: bulk obs != driver obs")
-      assert(xB == xD, s"$tag: bulk X != driver X")
+      assert(oB == oD, s"$tag: bulk obs != single-chunk twin obs")
+      assert(xB == xD, s"$tag: bulk X != single-chunk twin X")
       assert(ZarrStore.attrString(p, "obs/cell_type", "encoding-type")
         .contains("categorical"), tag)
       // crash rollback: bulk boundary rewrites preserve the committed
@@ -1122,11 +1114,11 @@ class ZarrWriterSpec extends AnyFunSuite {
 
   test("writeFrame executes a derived frame's upstream plan exactly once") {
     // a derived obs frame (think: a join or an aggregate upstream) must
-    // not pay one execution for the routing probe and another for the
-    // write — the one-pass persist contract, pinned by an accumulator
+    // not pay one execution for the stats job and another for the
+    // chunk write — the one-pass persist contract, pinned by an accumulator
     // that fires once per upstream partition execution
     val nO = 300
-    for ((fcl, tag) <- Seq(64 -> "distributed", 1024 -> "driver")) {
+    for ((fcl, tag) <- Seq(64 -> "multi-chunk", 1024 -> "one-chunk")) {
       val execs = spark.sparkContext.longAccumulator(s"frameExecs_$tag")
       val base = spark.sparkContext.range(0L, nO, 1, numSlices = 1)
         .mapPartitions { it => execs.add(1); it }
@@ -1148,7 +1140,7 @@ class ZarrWriterSpec extends AnyFunSuite {
   }
 
   test("null column values write identically through both frame paths") {
-    // the driver and distributed paths must agree on nulls (null bool ->
+    // single- and multi-chunk frames must agree on nulls (null bool ->
     // 0, null string/label -> vlen null) or store bytes would depend on
     // row count — the size-independence contract
     def mkObs(n: Int) = spark.range(n).select(col("id").as("obs_id"),
@@ -1166,14 +1158,73 @@ class ZarrWriterSpec extends AnyFunSuite {
     val pDriver = TestSpark.tmpDir("graft_nulldrv") + "/a.zarr"
     val pDist = TestSpark.tmpDir("graft_nulldst") + "/b.zarr"
     AnnZarrWriter.write(AnnDataset(mkObs(n), vars, mkX(n)), pDriver,
-      frameChunkLen = 1024) // single-chunk -> driver path
+      frameChunkLen = 1024) // one chunk
     AnnZarrWriter.write(AnnDataset(mkObs(n), vars, mkX(n)), pDist,
-      frameChunkLen = 32) // multi-chunk -> distributed path
+      frameChunkLen = 32) // several chunks
     val a = AnnZarr.open(spark, pDriver).obs.orderBy("obs_id").collect()
       .map(_.toString).toSeq
     val b = AnnZarr.open(spark, pDist).obs.orderBy("obs_id").collect()
       .map(_.toString).toSeq
-    assert(a == b, "null handling diverges between driver and distributed paths")
+    assert(a == b, "null handling diverges between single- and multi-chunk frames")
+  }
+
+  test("job counts of an ingest-shaped write and a microbatch append stay pinned") {
+    // the ingest shapes of the benchmark: a 2,000 x 200 store at 5%
+    // density written with default chunking, then one 200-row append of
+    // driver-local frames. Spark jobs do not depend on host speed, so
+    // the counts pin the writer's cost at these overhead-bound sizes.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val nO = 2000; val nV = 200; val nAdd = 200
+    def hit(tag: Int, i: Long, j: Long) = (i * 31 + j * 17 + tag) % 20 == 0
+    def value(i: Long, j: Long) = (1 + (i * 7 + j * 3) % 64) / 4.0
+    val xSchema = StructType(Seq(StructField("obs_id", LongType, false),
+      StructField("var_id", LongType, false), StructField("value", DoubleType, false)))
+    val rows = spark.sparkContext.parallelize(0 until nO, 1).flatMap { i =>
+      (0 until nV).filter(j => hit(0, i, j)).map(j => Row(i.toLong, j.toLong, value(i, j)))
+    }
+    val base = AnnDataset(
+      spark.range(nO).select(col("id").as("obs_id"),
+        concat(lit("base-c"), col("id")).as("obs_name"), (col("id") % 8).as("batch")),
+      spark.range(nV).select(col("id").as("var_id"), concat(lit("g"), col("id")).as("var_name")),
+      spark.createDataFrame(rows, xSchema))
+    val obsSchema = StructType(Seq(StructField("obs_id", LongType, false),
+      StructField("obs_name", StringType), StructField("batch", LongType)))
+    val obs1 = spark.createDataFrame((0 until nAdd).map(i =>
+      Row(i.toLong, s"append-c$i", (i % 8).toLong)).asJava, obsSchema)
+    val x1 = spark.createDataFrame((for (i <- 0 until nAdd; j <- 0 until nV
+      if hit(1, i, j)) yield Row(i.toLong, j.toLong, value(i, j))).asJava, xSchema)
+    val token = "zarr-job-pin"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(token) == "1")
+          jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      val sc = spark.sparkContext
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      jobs.set(0)
+      sc.setLocalProperty(token, "1")
+      try body finally sc.setLocalProperty(token, null)
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      jobs.get()
+    }
+    val p = TestSpark.tmpDir("graft_jobpin") + "/pin.zarr"
+    spark.sparkContext.addSparkListener(listener)
+    val (writeJobs, appendJobs) =
+      try (jobsOf(AnnZarrWriter.write(base, p)), jobsOf(AnnZarrWriter.appendRows(obs1, x1, p)))
+      finally spark.sparkContext.removeSparkListener(listener)
+    info(s"write: $writeJobs jobs, append: $appendJobs jobs")
+    val ds = AnnZarr.open(spark, p)
+    assert(ds.obs.count() == nO + nAdd)
+    val nnz = (for (i <- 0L until nO; j <- 0L until nV if hit(0, i, j)) yield 1).size +
+      (for (i <- 0L until nAdd; j <- 0L until nV if hit(1, i, j)) yield 1).size
+    assert(ds.x.count() == nnz)
+    // counts at commit 8994339, before the driver/executor forks merged
+    assert(writeJobs <= 12, s"write ran $writeJobs jobs")
+    assert(appendJobs <= 11, s"append ran $appendJobs jobs")
   }
 
   test("distributed frame rejects duplicate row ids even when counts cancel") {
