@@ -431,10 +431,11 @@ object Bench {
       // must still produce one component for the cluster
       "b10_skewed_dups" -> (() => benchSkewedDups(spark, sfDir)),
       // native HDF5 throughput: 20000x256 f8 X (40 shuffle+deflate
-      // chunks, 40MB raw) parsed in the JVM and scanned executor-side —
-      // chunk inflation parallelizes across tasks, per-var sums
+      // chunks, 40MB raw) parsed in the JVM and scanned executor-side via
+      // the DSv2 source — chunk inflation parallelizes across tasks,
+      // per-var sums
       "b11_h5ad_native_scan" -> (() => {
-        graft.h5.AnnH5.denseCoo(spark, h5adBenchFixture, "X")
+        spark.read.format("h5ad").load(h5adBenchFixture)
           .groupBy("var_id").agg(sum(col("value")))
           .queryExecution.toRdd.count()
       }),

@@ -1,6 +1,6 @@
 package graft.artifact
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.curate.{SchemaSpec, SlotsCurator}
 
@@ -124,6 +124,40 @@ final case class AnnDataset(obs: DataFrame, vars: DataFrame, x: DataFrame,
       .agg(count(lit(1)).as("n_obs"),
         sum(col("value").cast("decimal(28,10)")).as("sum_value"))
       .join(broadcast(vars.select("var_id", "var_name")), "var_id")
+}
+
+object AnnDataset {
+
+  /** An anndata group opened slot by slot as lazy DataSource V2 scans —
+    * `spark.read.format(format).option("slot", …).load(path)` — the one
+    * slot surface of [[graft.h5.AnnH5.open]] and
+    * [[graft.zarr.AnnZarr.open]]. `p` is the group prefix ("" or ending
+    * in "/"); `children(slot)` lists a slot group's members (Nil when
+    * absent); `checkMatrix(slot)` validates a matrix slot before it is
+    * scanned. Matrix scans are COO `(obs_id, var_id, value)`, renamed to
+    * the engine's axis naming: obsm/varm's second axis is `dim_id`,
+    * varm's rows `var_id`, obsp's second axis `obs_id_2`.
+    */
+  private[graft] def scan(spark: SparkSession, format: String, path: String, p: String,
+                          children: String => Seq[String], checkMatrix: String => Unit,
+                          uns: Map[String, UnsValue]): AnnDataset = {
+    def load(slot: String): DataFrame =
+      spark.read.format(format).option("slot", p + slot).load(path)
+    def matrix(slot: String): DataFrame = { checkMatrix(p + slot); load(slot) }
+    def matrices(group: String)(axes: DataFrame => DataFrame): Map[String, DataFrame] =
+      children(group).map(n => n -> axes(matrix(s"$group/$n"))).toMap
+    val varKeyed: DataFrame => DataFrame =
+      _.withColumnRenamed("var_id", "dim_id").withColumnRenamed("obs_id", "var_id")
+    AnnDataset(
+      obs = load("obs"), vars = load("var"), x = matrix("X"),
+      obsm = matrices("obsm")(_.withColumnRenamed("var_id", "dim_id")),
+      layers = matrices("layers")(identity),
+      varm = matrices("varm")(varKeyed),
+      obsp = matrices("obsp")(_.withColumnRenamed("var_id", "obs_id_2")),
+      uns = uns,
+      raw = if (children("raw").isEmpty) None
+        else Some(RawSlots(load("raw/var"), matrix("raw/X"), matrices("raw/varm")(varKeyed))))
+  }
 }
 
 object AnnBridge {

@@ -1,9 +1,6 @@
 package graft.h5
 
-import java.nio.{ByteBuffer, ByteOrder}
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.SparkSession
 
 import graft.artifact.AnnDataset
 
@@ -17,280 +14,22 @@ import graft.artifact.AnnDataset
   * `categorical` groups (codes + categories), dense `array` X, and
   * `csr_matrix` groups (data/indices/indptr).
   *
-  * Scale shape: obs/var frames are axis-metadata-sized and decoded
-  * driver-side (the same in-memory contract as the reference's h5py
-  * accessor), while X — the part that is corpus-sized at 100 TB — is
-  * read executor-side: each task opens the file itself via Hadoop FS,
-  * seeks and inflates only ITS chunks (dense) or its element range
-  * (CSR), and emits COO rows. No matrix byte ever passes through the
-  * driver, and tasks scale with the chunk grid.
+  * Scale shape: every slot but `uns` is a lazy `h5ad` DataSource V2 scan
+  * ([[graft.h5.datasource.H5adSource]]) — obs/var/raw-var plan row
+  * ranges of the dataframe encoding, X and every matrix slot plan one
+  * partition per stored chunk (chunked dense), row band (contiguous or
+  * compact dense) or row range (csr). Each task opens the file itself
+  * via Hadoop FS and reads only its own chunks or element range, so no
+  * axis or matrix byte passes through the driver and pushed bounds prune
+  * before any read. `uns` is metadata-sized and decodes driver-side.
   */
 object AnnH5 {
 
-  // ------------------------------------------------------------ dataframe
-
-  /** Decode one column node into (spark type, row-index -> value). */
-  private def column(f: H5File, node: H5Node): (DataType, Int => Any) =
-    node match {
-      case d: H5DatasetMeta => d.dtype match {
-        case H5Dtype.VlenStr() | H5Dtype.FixedStr(_) =>
-          val v = f.decodeStrings(d.dtype, f.readRaw(d))
-          (StringType, v.apply)
-        case H5Dtype.FloatPt(_) =>
-          val v = f.decodeDoubles(d.dtype, f.readRaw(d))
-          (DoubleType, v.apply)
-        case _ =>
-          val v = f.decodeLongs(d.dtype, f.readRaw(d))
-          (LongType, v.apply)
-      }
-      case g: H5Group if f.attrString(g, "encoding-type").contains("categorical") =>
-        val codesDs = f.node(g.children("codes"), "codes").asInstanceOf[H5DatasetMeta]
-        val catsDs = f.node(g.children("categories"), "categories").asInstanceOf[H5DatasetMeta]
-        val codes = f.decodeLongs(codesDs.dtype, f.readRaw(codesDs))
-        val cats = f.decodeStrings(catsDs.dtype, f.readRaw(catsDs))
-        (StringType, i => { val c = codes(i); if (c < 0) null else cats(c.toInt) })
-      case g: H5Group =>
-        throw new UnsupportedOperationException(
-          s"dataframe column '${g.name}' has unsupported encoding " +
-            f.attrString(g, "encoding-type").getOrElse("<none>"))
-    }
-
-  /** Row ceiling for the driver-side axis-frame decode; larger frames
-    * route through the DSv2 row-range frame scan
-    * ([[graft.h5.datasource.H5adFrame]]). Shared contract with
-    * [[graft.zarr.AnnZarr.driverFrameRowLimit]].
-    */
-  private[graft] var driverFrameRowLimit: Long = 1L << 16
-
-  private[graft] val driverFrameRowsProbe = new java.util.concurrent.atomic.AtomicLong
-
-  /** [[dataFrameGroup]] with size routing: frames over
-    * [[driverFrameRowLimit]] rows whose axis naming matches the DSv2
-    * convention are served by the distributed `h5ad` frame scan instead
-    * of a driver decode.
-    */
-  private def dataFrameGroupAt(spark: SparkSession, f: H5File, path: String,
-                               slot: String, rowIdName: String, idName: String): DataFrame = {
-    val g = f.group(slot)
-    val indexCol = f.attrString(g, "_index").getOrElse("_index")
-    val n = f.node(g.children(indexCol), indexCol).asInstanceOf[H5DatasetMeta].dims(0)
-    val dsNaming =
-      if (slot == "var" || slot.endsWith("/var")) ("var_id", "var_name")
-      else ("obs_id", "obs_name")
-    if (n > driverFrameRowLimit && (rowIdName, idName) == dsNaming)
-      spark.read.format("h5ad").option("slot", slot).load(path)
-    else dataFrameGroup(spark, f, g, rowIdName, idName)
-  }
-
-  /** An anndata `dataframe` group as a Spark DataFrame. The `_index`
-    * column surfaces under `idName`; a monotone `rowIdName` long id is
-    * prepended (the bridge's axis key).
-    */
-  def dataFrameGroup(spark: SparkSession, f: H5File, g: H5Group,
-                     rowIdName: String, idName: String): DataFrame = {
-    require(f.attrString(g, "encoding-type").contains("dataframe"),
-      s"group '${g.name}' is not an anndata dataframe")
-    val indexCol = f.attrString(g, "_index").getOrElse("_index")
-    val order = f.attrStrings(g, "column-order").getOrElse(
-      g.children.keys.filter(_ != indexCol).toSeq.sorted)
-    val cols = (indexCol +: order.filter(g.children.contains)).map { nm =>
-      val (tpe, get) = column(f, f.node(g.children(nm), nm))
-      (if (nm == indexCol) idName else nm, tpe, get)
-    }
-    val n = f.node(g.children(indexCol), indexCol)
-      .asInstanceOf[H5DatasetMeta].dims(0).toInt
-    driverFrameRowsProbe.addAndGet(n)
-    val schema = StructType(
-      StructField(rowIdName, LongType, nullable = false) +:
-        cols.map { case (nm, t, _) => StructField(nm, t, nullable = true) })
-    val rows = (0 until n).map { i =>
-      Row.fromSeq(i.toLong +: cols.map(_._3(i)))
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-  }
-
-  // -------------------------------------------------------------- X scans
-
-  private val cooSchema = StructType(Seq(
-    StructField("obs_id", LongType, nullable = false),
-    StructField("var_id", LongType, nullable = false),
-    StructField("value", DoubleType, nullable = false)))
-
-  /** Dense 2-D X as distributed COO: one task bundle per chunk set. */
-  def denseCoo(spark: SparkSession, path: String, dsPath: String): DataFrame = {
-    val f = H5File.open(path)
-    try {
-      val ds = f.dataset(dsPath)
-      require(ds.dims.length == 2, s"$dsPath: dense X must be rank 2")
-      val dims = ds.dims
-      val dtype = ds.dtype
-      val filters = ds.filters
-      ds.layout match {
-        case H5Layout.Chunked(_, chunkDims) =>
-          val chunks = f.chunkRefs(ds)
-          val esize = dtype.size
-          val chunkBytes = chunkDims.product * esize
-          val slices = math.max(1, math.min(chunks.size,
-            spark.sparkContext.defaultParallelism))
-          val rdd = spark.sparkContext.parallelize(chunks, slices)
-            .mapPartitions { it =>
-              val inp = H5Input.open(path)
-              val rows = it.flatMap { c =>
-                val dec = H5File.decodeChunk(
-                  inp.readFully(c.addr, c.storedSize), filters, esize, chunkBytes)
-                val b = ByteBuffer.wrap(dec).order(ByteOrder.LITTLE_ENDIAN)
-                val rOff = c.offsets(0); val cOff = c.offsets(1)
-                val rows = math.min(chunkDims(0).toLong, dims(0) - rOff).toInt
-                val cols = math.min(chunkDims(1).toLong, dims(1) - cOff).toInt
-                for {
-                  r <- Iterator.range(0, rows)
-                  cc <- Iterator.range(0, cols)
-                } yield {
-                  b.position((r * chunkDims(1) + cc) * esize)
-                  Row(rOff + r, cOff + cc, readDouble(b, dtype))
-                }
-              }
-              new graft.h5.ClosingIterator(rows, inp)
-            }
-          spark.createDataFrame(rdd, cooSchema)
-        case _ =>
-          // contiguous / compact: small by construction — driver decode
-          val v = f.decodeDoubles(dtype, f.readRaw(ds))
-          val rows = for {
-            i <- 0 until dims(0).toInt
-            j <- 0 until dims(1).toInt
-          } yield Row(i.toLong, j.toLong, v(i * dims(1).toInt + j))
-          spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), cooSchema)
-      }
-    } finally f.close()
-  }
-
-  private def readDouble(b: ByteBuffer, dt: H5Dtype): Double = dt match {
-    case H5Dtype.FloatPt(8) => b.getDouble()
-    case H5Dtype.FloatPt(4) => b.getFloat().toDouble
-    case H5Dtype.FixedPt(4, _) => b.getInt().toDouble
-    case H5Dtype.FixedPt(8, _) => b.getLong().toDouble
-    case H5Dtype.FixedPt(2, _) => b.getShort().toDouble
-    case H5Dtype.FixedPt(1, _) => b.get().toDouble
-    case d => throw new UnsupportedOperationException(s"X element type $d")
-  }
-
-  /** Serializable recipe for reading an element range of a 1-D dataset. */
-  private final case class Slice1D(dtype: H5Dtype, filters: Seq[H5Filter],
-                                   n: Long, contiguousAddr: Long,
-                                   chunkLen: Int, chunks: Array[H5ChunkSpec])
-      extends Serializable {
-    def read(inp: H5Input, start: Long, end: Long): Array[Byte] = {
-      val esize = dtype.size
-      val out = new Array[Byte](((end - start) * esize).toInt)
-      if (contiguousAddr != H5File.Undef && chunks.isEmpty) {
-        val got = inp.readFully(contiguousAddr + start * esize, out.length)
-        System.arraycopy(got, 0, out, 0, out.length)
-      } else {
-        chunks.foreach { c =>
-          val cStart = c.offsets(0)
-          val cEnd = math.min(cStart + chunkLen, n)
-          val lo = math.max(start, cStart)
-          val hi = math.min(end, cEnd)
-          if (lo < hi) {
-            val dec = H5File.decodeChunk(inp.readFully(c.addr, c.storedSize),
-              filters, esize, chunkLen * esize)
-            System.arraycopy(dec, ((lo - cStart) * esize).toInt,
-              out, ((lo - start) * esize).toInt, ((hi - lo) * esize).toInt)
-          }
-        }
-      }
-      out
-    }
-  }
-
-  private def slice1d(f: H5File, ds: H5DatasetMeta): Slice1D = ds.layout match {
-    case H5Layout.Contiguous(addr, _) =>
-      Slice1D(ds.dtype, ds.filters, ds.dims(0), addr, 0, Array.empty)
-    case H5Layout.Chunked(_, chunkDims) =>
-      Slice1D(ds.dtype, ds.filters, ds.dims(0), H5File.Undef, chunkDims(0),
-        f.chunkRefs(ds).toArray)
-    case H5Layout.Compact(_) =>
-      throw new UnsupportedOperationException("compact CSR slot")
-  }
-
-  /** CSR X as distributed COO. `indptr` (axis-sized) is read on the
-    * driver and broadcast; tasks take disjoint row ranges and read only
-    * their `[indptr(r0), indptr(r1))` slice of data/indices.
-    */
-  def csrCoo(spark: SparkSession, path: String, groupPath: String): DataFrame = {
-    val f = H5File.open(path)
-    try {
-      val g = f.group(groupPath)
-      require(f.attrString(g, "encoding-type").contains("csr_matrix"),
-        s"$groupPath is not a csr_matrix group")
-      val indptrDs = f.node(g.children("indptr"), "indptr").asInstanceOf[H5DatasetMeta]
-      val indptr = f.decodeLongs(indptrDs.dtype, f.readRaw(indptrDs))
-      val dataS = slice1d(f, f.node(g.children("data"), "data").asInstanceOf[H5DatasetMeta])
-      val indS = slice1d(f, f.node(g.children("indices"), "indices").asInstanceOf[H5DatasetMeta])
-      val nRows = indptr.length - 1
-      val par = math.max(1, math.min(nRows, spark.sparkContext.defaultParallelism))
-      val bounds = (0 to par).map(p => nRows.toLong * p / par).distinct
-      val ranges = bounds.zip(bounds.tail) // row ranges [r0, r1)
-      val ptrB = spark.sparkContext.broadcast(indptr)
-      val dtype = dataS.dtype
-      val rdd = spark.sparkContext.parallelize(ranges, ranges.size)
-        .mapPartitions { it =>
-          val inp = H5Input.open(path)
-          val ptr = ptrB.value
-          val rows = it.flatMap { case (r0, r1) =>
-            val e0 = ptr(r0.toInt); val e1 = ptr(r1.toInt)
-            if (e0 == e1) Iterator.empty
-            else {
-              val dataRaw = dataS.read(inp, e0, e1)
-              val indRaw = indS.read(inp, e0, e1)
-              val db = ByteBuffer.wrap(dataRaw).order(ByteOrder.LITTLE_ENDIAN)
-              // elements are row-ordered: one monotone cursor per range
-              var cursor = r0.toInt
-              Iterator.range(0, (e1 - e0).toInt).map { k =>
-                val elem = e0 + k
-                while (ptr(cursor + 1) <= elem) cursor += 1
-                db.position(k * dtype.size)
-                val j = readIndexAt(indRaw, k, indS.dtype)
-                Row(cursor.toLong, j, readDouble(db, dtype))
-              }
-            }
-          }
-          new graft.h5.ClosingIterator(rows, inp)
-        }
-      spark.createDataFrame(rdd, cooSchema)
-    } finally f.close()
-  }
-
-  private def readIndexAt(raw: Array[Byte], k: Int, dt: H5Dtype): Long = {
-    val b = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-    dt match {
-      case H5Dtype.FixedPt(4, _) => b.getInt(k * 4).toLong
-      case H5Dtype.FixedPt(8, _) => b.getLong(k * 8)
-      case H5Dtype.FixedPt(2, _) => b.getShort(k * 2).toLong
-      case d => throw new UnsupportedOperationException(s"indices type $d")
-    }
-  }
-
-  // ------------------------------------------------------------- open API
-
-  /** Dense `array` or `csr_matrix` node at `nodePath` → distributed COO. */
-  private def cooAt(spark: SparkSession, path: String, nodePath: String): DataFrame = {
-    val f = H5File.open(path)
-    val isCsr =
-      try f(nodePath) match {
-        case g: H5Group => f.attrString(g, "encoding-type").contains("csr_matrix")
-        case _ => false
-      } finally f.close()
-    if (isCsr) csrCoo(spark, path, nodePath) else denseCoo(spark, path, nodePath)
-  }
-
   // ------------------------------------------------------------------ uns
 
-  /** Decode one `uns` node driver-side (uns is axis-metadata-sized by the
-    * same contract as obs/var): scalar datasets → Scalar, 1-D datasets →
-    * Arr, groups → Mapping (recursive; categorical groups decode to their
-    * string values).
+  /** Decode one `uns` node driver-side (uns is metadata-sized): scalar
+    * datasets → Scalar, 1-D datasets → Arr, groups → Mapping (recursive;
+    * categorical groups decode to their string values).
     */
   private def readUns(f: H5File, node: H5Node): graft.artifact.UnsValue = {
     import graft.artifact.UnsValue._
@@ -349,11 +88,12 @@ object AnnH5 {
   }
 
   /** Open a native `.h5ad` as the engine's [[AnnDataset]] — obs/var
-    * decoded per the dataframe encoding; X, every `layers/` slot, every
-    * `obsm/` matrix (`dim_id` columns), every `varm/` matrix (var-keyed,
-    * `dim_id` columns) and every `obsp/` pairwise matrix (`obs_id` ×
-    * `obs_id_2`) as distributed COO; `uns` as a driver-side metadata
-    * tree; `raw` as its own var frame + COO X. Downstream
+    * per the dataframe encoding; X, every `layers/` slot, every `obsm/`
+    * matrix (`dim_id` columns), every `varm/` matrix (var-keyed, `dim_id`
+    * columns) and every `obsp/` pairwise matrix (`obs_id` × `obs_id_2`)
+    * as COO; `uns` as a driver-side metadata tree; `raw` as its own var
+    * frame + COO X. Every slot but `uns` is a lazy `h5ad` scan: an action
+    * reads the file as it is when the action plans its scan. Downstream
     * slicing/aggregation (`subsetObs`, `perVarStats`, ingest) compose
     * unchanged. `prefix` selects a nested anndata group (h5mu
     * modalities).
@@ -361,54 +101,23 @@ object AnnH5 {
   def open(spark: SparkSession, path: String, prefix: String = ""): AnnDataset = {
     val p = if (prefix.isEmpty) "" else prefix.stripSuffix("/") + "/"
     val f = H5File.open(path)
-    val (obs, vars, obsmNames, layerNames, varmNames, obspNames, uns, rawInfo) =
-      try {
-        val obs = dataFrameGroupAt(spark, f, path, p + "obs", "obs_id", "obs_name")
-        val varsRaw = dataFrameGroupAt(spark, f, path, p + "var", "var_id", "var_name")
-        val container = if (p.isEmpty) f.root else f.group(prefix)
-        def slotNames(slot: String): Seq[String] =
-          if (container.children.contains(slot))
-            f.group(p + slot).children.keys.toSeq.sorted
-          else Nil
-        val uns =
-          if (container.children.contains("uns")) {
-            val g = f.group(p + "uns")
-            g.children.keys.toSeq.sorted
-              .map(k => k -> readUns(f, f.node(g.children(k), k))).toMap
-          } else Map.empty[String, graft.artifact.UnsValue]
-        val rawInfo =
-          if (container.children.contains("raw")) {
-            val rg = f.group(p + "raw")
-            Some((dataFrameGroupAt(spark, f, path, p + "raw/var", "var_id", "var_name"),
-              if (rg.children.contains("varm"))
-                f.group(p + "raw/varm").children.keys.toSeq.sorted
-              else Nil))
-          } else None
-        (obs, varsRaw, slotNames("obsm"), slotNames("layers"),
-          slotNames("varm"), slotNames("obsp"), uns, rawInfo)
-      } finally f.close()
-    AnnDataset(
-      obs = obs, vars = vars,
-      x = cooAt(spark, path, p + "X"),
-      obsm = obsmNames.map(n => n ->
-        cooAt(spark, path, s"${p}obsm/$n").withColumnRenamed("var_id", "dim_id")).toMap,
-      layers = layerNames.map(n => n -> cooAt(spark, path, s"${p}layers/$n")).toMap,
-      varm = varmNames.map(n => n ->
-        cooAt(spark, path, s"${p}varm/$n")
-          .withColumnRenamed("var_id", "dim_id")
-          .withColumnRenamed("obs_id", "var_id")).toMap,
-      obsp = obspNames.map(n => n ->
-        cooAt(spark, path, s"${p}obsp/$n").withColumnRenamed("var_id", "obs_id_2")).toMap,
-      uns = uns,
-      raw = rawInfo.map { case (rawVars, rawVarmNames) =>
-        graft.artifact.RawSlots(
-          vars = rawVars,
-          x = cooAt(spark, path, p + "raw/X"),
-          varm = rawVarmNames.map(n => n ->
-            cooAt(spark, path, s"${p}raw/varm/$n")
-              .withColumnRenamed("var_id", "dim_id")
-              .withColumnRenamed("obs_id", "var_id")).toMap)
-      })
+    try {
+      val container = if (p.isEmpty) f.root else f.group(prefix)
+      def children(slot: String): Seq[String] =
+        slot.split('/').foldLeft(Option[H5Node](container)) {
+          case (Some(g: H5Group), k) => g.children.get(k).map(f.node(_, k))
+          case _ => None
+        }.collect { case g: H5Group => g.children.keys.toSeq.sorted }.getOrElse(Nil)
+      def checkMatrix(slot: String): Unit = f(slot) match {
+        case d: H5DatasetMeta =>
+          require(d.dims.length == 2, s"$slot: dense X must be rank 2")
+        case g: H5Group =>
+          require(f.attrString(g, "encoding-type").contains("csr_matrix"),
+            s"$slot is not a csr_matrix group")
+      }
+      val uns = children("uns").map(k => k -> readUns(f, f(s"${p}uns/$k"))).toMap
+      AnnDataset.scan(spark, "h5ad", path, p, children, checkMatrix, uns)
+    } finally f.close()
   }
 
   /** Open a native `.h5mu` (MuData container, public mudata spec):

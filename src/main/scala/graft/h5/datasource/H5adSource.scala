@@ -18,12 +18,17 @@ import graft.h5._
 /** DataSource V2 surface for the native HDF5 reader:
   * `spark.read.format("h5ad").load(path)` yields the COO view
   * `(obs_id, var_id, value)` of a dense or csr X (or any slot via
-  * `.option("slot", "layers/scaled")`).
+  * `.option("slot", "layers/scaled")`; `dataframe` slots yield the
+  * frame). It is the one reader behind [[graft.h5.AnnH5.open]]: one
+  * reader per node kind (dense, csr, dataframe), one element decoder
+  * (`H5File.decodeDoubles` / `decodeLongs`) and one 1-D range read
+  * ([[H5adFrame.sliceBytes]]).
   *
   * This is the Catalyst-native presentation of `graft.h5`:
   *  - **partition planning = the chunk grid** — one input partition per
-  *    stored chunk (dense) or per row range (csr), so task parallelism
-  *    tracks the file's own layout;
+  *    stored chunk (chunked dense), per row band (contiguous or compact
+  *    dense, one ranged read each) or per row range (csr), so task
+  *    parallelism tracks the file's own layout;
   *  - **filter pushdown = chunk pruning** — min/max bounds on
   *    `obs_id`/`var_id` skip chunks whose grid offsets cannot
   *    intersect, before any byte is read (the HDF5 analog of parquet
@@ -45,7 +50,7 @@ final class H5adSource extends TableProvider with DataSourceRegister {
                         properties: JMap[String, String]): Table = {
     val path = Option(properties.get("path")).getOrElse(
       throw new IllegalArgumentException("h5ad source requires a path"))
-    new H5adTable(path, Option(properties.get("slot")).getOrElse("X"))
+    new H5adTable(path, Option(properties.get("slot")).getOrElse("X"), schema)
   }
 }
 
@@ -67,13 +72,14 @@ object H5adSource {
   }
 }
 
-final class H5adTable(path: String, slot: String) extends Table with SupportsRead {
+final class H5adTable(path: String, slot: String, tschema: StructType)
+    extends Table with SupportsRead {
   override def name(): String = s"h5ad:$path!$slot"
-  override lazy val schema: StructType = H5adSource.schemaFor(path, slot)
+  override def schema(): StructType = tschema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new H5adScanBuilder(path, slot, schema,
+    new H5adScanBuilder(path, slot, tschema,
       options.getInt("bundleThreshold", 256),
       options.getLong("bundleBytes", 32L << 20),
       options.getLong("targetRowsPerTask", 1L << 20),
@@ -123,10 +129,26 @@ object H5adScanBuilder {
     math.max(1L, math.min(nRows, math.max(byTarget, floor))).toInt
   }
 
-  /** (lo, hi) inclusive bounds per column from simple comparison filters. */
+  /** Row ranges `[r0, r1)` over `nRows` rows holding `nElems` stored
+    * elements, keeping those that meet the inclusive row bounds `rowBounds`.
+    * Rows AND elements both size the plan: a few very dense rows must not
+    * collapse into one task.
+    */
+  def rowRanges(nRows: Long, nElems: Long, targetRows: Long, targetElems: Long,
+                rowBounds: (Long, Long)): Seq[(Long, Long)] = {
+    val par = math.max(rangeCount(nRows, targetRows).toLong,
+      math.min(nRows, (nElems + targetElems - 1) / targetElems)).toInt
+    val cuts = (0 to par).map(p => nRows * p / par).distinct
+    cuts.zip(cuts.tail).filter { case (r0, r1) => r1 > rowBounds._1 && r0 <= rowBounds._2 }
+  }
+
+  private val Unbounded = (Long.MinValue, Long.MaxValue)
+
+  /** (lo, hi) inclusive bounds per column from simple comparison filters;
+    * unconstrained columns map to the full range.
+    */
   def bounds(filters: Array[Filter]): Map[String, (Long, Long)] = {
-    val b = mutable.Map.empty[String, (Long, Long)]
-      .withDefaultValue((Long.MinValue, Long.MaxValue))
+    val b = mutable.Map.empty[String, (Long, Long)].withDefaultValue(Unbounded)
     def tighten(col: String, lo: Long, hi: Long): Unit = {
       val (l0, h0) = b(col)
       b(col) = (math.max(l0, lo), math.min(h0, hi))
@@ -148,20 +170,21 @@ object H5adScanBuilder {
       }
       case _ => ()
     }
-    b.toMap
+    b.toMap.withDefaultValue(Unbounded)
   }
 }
 
 // --------------------------------------------------------------- partitions
 
-/** One stored chunk: (addr, storedSize, rOff, cOff). */
-private final case class ChunkRef4(addr: Long, storedSize: Int,
-                                   rOff: Long, cOff: Long) extends Serializable
+/** A dense block at grid offset (rOff, cOff) with clipped extents
+  * (rows, cols): a stored chunk at `addr`, or a contiguous/compact row
+  * band (`addr` unused).
+  */
+private final case class DenseBlock(rOff: Long, cOff: Long, rows: Int, cols: Int,
+                                    addr: Long, storedSize: Int) extends Serializable
 
-private final case class DenseChunkPartition(
-    path: String, chunks: Array[ChunkRef4],
-    chunkRows: Int, chunkCols: Int, nRows: Long, nCols: Long,
-    dtype: H5Dtype, filters: Seq[H5Filter]) extends InputPartition
+private final case class DensePartition(
+    path: String, ds: H5DatasetMeta, blocks: Array[DenseBlock]) extends InputPartition
 
 private final case class CsrRangePartition(
     path: String, groupPath: String, r0: Long, r1: Long) extends InputPartition
@@ -177,45 +200,36 @@ final class H5adScan(path: String, slot: String, required: StructType,
   override def description(): String =
     s"h5ad $path!$slot bounds=$colBounds cols=${required.fieldNames.mkString(",")}"
 
+  private def rowRanges(nRows: Long, nElems: Long, idCol: String) =
+    H5adScanBuilder.rowRanges(nRows, nElems, targetRows, targetElems, colBounds(idCol))
+
   override def planInputPartitions(): Array[InputPartition] = {
-    val (obsLo, obsHi) = colBounds.getOrElse("obs_id", (Long.MinValue, Long.MaxValue))
-    val (varLo, varHi) = colBounds.getOrElse("var_id", (Long.MinValue, Long.MaxValue))
+    val (obsLo, obsHi) = colBounds("obs_id")
+    val (varLo, varHi) = colBounds("var_id")
     val f = H5File.open(path)
     try {
       if (H5adFrame.isFrameSlot(f, slot)) {
         // dataframe slot: row ranges pruned by pushed row-id bounds;
         // tasks decode only their slice of each projected column
         val info = H5adFrame.describe(f, slot)
-        val (idLo, idHi) = colBounds.getOrElse(info.rowIdName,
-          (Long.MinValue, Long.MaxValue))
-        val par = H5adScanBuilder.rangeCount(info.n, targetRows)
-        val bnds = (0 to par).map(p => info.n * p / par).distinct
-        return bnds.zip(bnds.tail)
-          .filter { case (r0, r1) => r1 > idLo && r0 <= idHi }
-          .map { case (r0, r1) =>
-            FrameRangePartition(path, slot, r0, r1, info.specs.toArray): InputPartition
-          }.toArray
+        return rowRanges(info.n, 0L, info.rowIdName).map { case (r0, r1) =>
+          FrameRangePartition(path, slot, r0, r1, info.specs.toArray): InputPartition
+        }.toArray
       }
       f(slot) match {
         case g: H5Group =>
           require(f.attrString(g, "encoding-type").contains("csr_matrix"),
             s"$slot: group is not csr_matrix")
-          val indptrDs = f.node(g.children("indptr"), "indptr").asInstanceOf[H5DatasetMeta]
-          val nRows = indptrDs.dims(0) - 1
+          val nRows = f.node(g.children("indptr"), "indptr")
+            .asInstanceOf[H5DatasetMeta].dims(0) - 1
           val nnz = f.node(g.children("data"), "data")
             .asInstanceOf[H5DatasetMeta].dims(0)
-          // rows AND elements both size the plan: a few very dense rows
-          // must not collapse into one task
-          val par = math.max(
-            H5adScanBuilder.rangeCount(nRows, targetRows).toLong,
-            math.min(nRows, (nnz + targetElems - 1) / targetElems)).toInt
-          val bounds = (0 to par).map(p => nRows * p / par).distinct
-          bounds.zip(bounds.tail)
-            .filter { case (r0, r1) => r1 > obsLo && r0 <= obsHi } // chunk pruning
+          rowRanges(nRows, nnz, "obs_id")
             .map { case (r0, r1) => CsrRangePartition(path, slot, r0, r1): InputPartition }
             .toArray
         case ds: H5DatasetMeta =>
-          ds.layout match {
+          val (nRows, nCols) = (ds.dims(0), ds.dims(1))
+          val bundles: Seq[Array[DenseBlock]] = ds.layout match {
             case H5Layout.Chunked(_, chunkDims) =>
               val pruned = f.chunkRefs(ds)
                 .filter { c =>
@@ -223,34 +237,37 @@ final class H5adScan(path: String, slot: String, required: StructType,
                   (r0 + chunkDims(0)) > obsLo && r0 <= obsHi &&
                     (c0 + chunkDims(1)) > varLo && c0 <= varHi
                 }
-                .map(c => ChunkRef4(c.addr, c.storedSize, c.offsets(0), c.offsets(1)))
+                .map { c =>
+                  val (r0, c0) = (c.offsets(0), c.offsets(1))
+                  DenseBlock(r0, c0, math.min(chunkDims(0).toLong, nRows - r0).toInt,
+                    math.min(chunkDims(1).toLong, nCols - c0).toInt, c.addr, c.storedSize)
+                }
               // small files: one partition per chunk (pruning stays
               // 1:1-observable). Big files: bundle chunks to ~32MB of
               // stored bytes per task so a million-chunk X plans
               // thousands of partitions, not millions.
-              val bundles: Seq[Array[ChunkRef4]] =
-                if (pruned.length <= bundleThreshold) pruned.map(Array(_))
-                else {
-                  val target = bundleBytes
-                  val out = Seq.newBuilder[Array[ChunkRef4]]
-                  val cur = mutable.ArrayBuffer.empty[ChunkRef4]
-                  var bytes = 0L
-                  pruned.foreach { c =>
-                    if (cur.nonEmpty && bytes + c.storedSize > target) {
-                      out += cur.toArray; cur.clear(); bytes = 0L
-                    }
-                    cur += c; bytes += c.storedSize
+              if (pruned.length <= bundleThreshold) pruned.map(Array(_))
+              else {
+                val out = Seq.newBuilder[Array[DenseBlock]]
+                val cur = mutable.ArrayBuffer.empty[DenseBlock]
+                var bytes = 0L
+                pruned.foreach { c =>
+                  if (cur.nonEmpty && bytes + c.storedSize > bundleBytes) {
+                    out += cur.toArray; cur.clear(); bytes = 0L
                   }
-                  if (cur.nonEmpty) out += cur.toArray
-                  out.result()
+                  cur += c; bytes += c.storedSize
                 }
-              bundles.map(b => DenseChunkPartition(path, b,
-                chunkDims(0), chunkDims(1), ds.dims(0), ds.dims(1),
-                ds.dtype, ds.filters): InputPartition).toArray
+                if (cur.nonEmpty) out += cur.toArray
+                out.result()
+              }
             case _ =>
-              throw new UnsupportedOperationException(
-                s"$slot: only chunked dense or csr slots are exposed via DSv2")
+              // contiguous / compact (h5py's default dense layout): row
+              // bands sized like csr ranges, one ranged read each
+              rowRanges(nRows, nRows * nCols, "obs_id").map { case (r0, r1) =>
+                Array(DenseBlock(r0, 0L, (r1 - r0).toInt, nCols.toInt, H5File.Undef, 0))
+              }
           }
+          bundles.map(b => DensePartition(path, ds, b): InputPartition).toArray
       }
     } finally f.close()
   }
@@ -263,14 +280,16 @@ final class H5adReaderFactory(required: StructType)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case p: DenseChunkPartition => new DenseChunkReader(p, required)
+      case p: DensePartition => new DenseReader(p, required)
       case p: CsrRangePartition => new CsrRangeReader(p, required)
-      case p: FrameRangePartition => new FrameRangeReader(p, required)
+      case p: FrameRangePartition => new H5FrameRangeReader(p, required)
     }
 }
 
-/** Projects (obs, var, value) into the pruned schema. */
-private object Project {
+/** Projects one COO element (obs, var, value) into the pruned schema —
+  * shared by the h5ad and zarr matrix readers.
+  */
+private[graft] object CooProject {
   def row(required: StructType, i: Long, j: Long, v: Double): InternalRow = {
     val vals = required.fieldNames.map {
       case "obs_id" => java.lang.Long.valueOf(i)
@@ -281,27 +300,36 @@ private object Project {
   }
 }
 
-private final class DenseChunkReader(p: DenseChunkPartition, required: StructType)
+/** The one dense reader: each block decodes to doubles (a stored chunk
+  * through its filters, a row band through one ranged read), then emits
+  * its clipped extent row-major.
+  */
+private final class DenseReader(p: DensePartition, required: StructType)
     extends PartitionReader[InternalRow] {
-  private val inp = H5Input.open(p.path)
-  private var ci = -1
-  private var buf: java.nio.ByteBuffer = _
-  private var rows, cols = 0
-  private var cur: ChunkRef4 = _
-  private var r = 0
-  private var c = -1
+  private val file = H5File.open(p.path)
+  private val nCols = p.ds.dims(1)
+  private var bi = -1
+  private var cur: DenseBlock = _
+  private var vals: Array[Double] = _
+  private var rows, cols, stride = 0
+  private var r, c = 0
 
-  private def loadNextChunk(): Boolean = {
-    ci += 1
-    if (ci >= p.chunks.length) return false
-    cur = p.chunks(ci)
-    val esize = p.dtype.size
-    val dec = H5File.decodeChunk(inp.readFully(cur.addr, cur.storedSize),
-      p.filters, esize, p.chunkRows * p.chunkCols * esize)
-    buf = java.nio.ByteBuffer.wrap(dec).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    rows = math.min(p.chunkRows.toLong, p.nRows - cur.rOff).toInt
-    cols = math.min(p.chunkCols.toLong, p.nCols - cur.cOff).toInt
-    r = 0; c = -1
+  private def loadNextBlock(): Boolean = {
+    bi += 1
+    if (bi >= p.blocks.length) return false
+    cur = p.blocks(bi)
+    val esize = p.ds.dtype.size
+    val raw = p.ds.layout match {
+      case H5Layout.Chunked(_, chunkDims) =>
+        stride = chunkDims(1)
+        H5File.decodeChunk(file.in.readFully(cur.addr, cur.storedSize),
+          p.ds.filters, esize, chunkDims(0) * chunkDims(1) * esize)
+      case _ =>
+        stride = nCols.toInt
+        H5adFrame.sliceBytes(file, p.ds, cur.rOff * nCols, (cur.rOff + cur.rows) * nCols)
+    }
+    vals = file.decodeDoubles(p.ds.dtype, raw)
+    rows = cur.rows; cols = cur.cols
     true
   }
 
@@ -309,93 +337,45 @@ private final class DenseChunkReader(p: DenseChunkPartition, required: StructTyp
     c += 1
     if (c >= cols) { c = 0; r += 1 }
     while (r >= rows) {
-      if (!loadNextChunk()) return false
-      c = 0
+      if (!loadNextBlock()) return false
+      r = 0; c = 0
     }
     true
   }
 
-  override def get(): InternalRow = {
-    buf.position((r * p.chunkCols + c) * p.dtype.size)
-    val v = p.dtype match {
-      case H5Dtype.FloatPt(8) => buf.getDouble()
-      case H5Dtype.FloatPt(4) => buf.getFloat().toDouble
-      case H5Dtype.FixedPt(4, _) => buf.getInt().toDouble
-      case H5Dtype.FixedPt(8, _) => buf.getLong().toDouble
-      case d => throw new UnsupportedOperationException(s"X element type $d")
-    }
-    Project.row(required, cur.rOff + r, cur.cOff + c, v)
-  }
+  override def get(): InternalRow =
+    CooProject.row(required, cur.rOff + r, cur.cOff + c, vals(r * stride + c))
 
-  override def close(): Unit = inp.close()
+  override def close(): Unit = file.close()
 }
 
 private final class CsrRangeReader(p: CsrRangePartition, required: StructType)
     extends PartitionReader[InternalRow] {
-  private val inp = H5Input.open(p.path)
-  // each task reads its own indptr slice + the matching data/indices bytes
-  private val (ptr, data, ind, dataDt, indDt) = {
+  // each task reads its own indptr slice + the matching data/indices
+  // elements — indptr is axis-sized, and a full decode per task is
+  // O(store rows) at 10^8 rows
+  private val (ptr, data, ind) = {
     val f = H5File.open(p.path)
     try {
       val g = f.group(p.groupPath)
-      val indptrDs = f.node(g.children("indptr"), "indptr").asInstanceOf[H5DatasetMeta]
-      val dataDs = f.node(g.children("data"), "data").asInstanceOf[H5DatasetMeta]
-      val indDs = f.node(g.children("indices"), "indices").asInstanceOf[H5DatasetMeta]
-      def sliceBytes(ds: H5DatasetMeta, e0: Long, e1: Long): Array[Byte] = {
-        val esize = ds.dtype.size
-        ds.layout match {
-          case H5Layout.Contiguous(addr, _) =>
-            inp.readFully(addr + e0 * esize, ((e1 - e0) * esize).toInt)
-          case H5Layout.Chunked(_, chunkDims) =>
-            val out = new Array[Byte](((e1 - e0) * esize).toInt)
-            f.chunkRefs(ds).foreach { ch =>
-              val cs = ch.offsets(0); val ce = math.min(cs + chunkDims(0), ds.dims(0))
-              val lo = math.max(e0, cs); val hi = math.min(e1, ce)
-              if (lo < hi) {
-                val chunk = H5File.decodeChunk(inp.readFully(ch.addr, ch.storedSize),
-                  ds.filters, esize, chunkDims(0) * esize)
-                System.arraycopy(chunk, ((lo - cs) * esize).toInt,
-                  out, ((lo - e0) * esize).toInt, ((hi - lo) * esize).toInt)
-              }
-            }
-            out
-          case _ => throw new UnsupportedOperationException("compact CSR slot")
-        }
-      }
-      // only THIS task's indptr slice decodes — indptr is axis-sized,
-      // and a full decode per task is O(store rows) at 10^8 rows
-      val ptr = f.decodeLongs(indptrDs.dtype,
-        sliceBytes(indptrDs, p.r0, p.r1 + 1))
-      val e0 = ptr.head; val e1 = ptr.last
-      (ptr, sliceBytes(dataDs, e0, e1), sliceBytes(indDs, e0, e1),
-        dataDs.dtype, indDs.dtype)
+      def ds(name: String) = f.node(g.children(name), name).asInstanceOf[H5DatasetMeta]
+      val (ptrDs, dataDs, indDs) = (ds("indptr"), ds("data"), ds("indices"))
+      val ptr = f.decodeLongs(ptrDs.dtype, H5adFrame.sliceBytes(f, ptrDs, p.r0, p.r1 + 1))
+      val (e0, e1) = (ptr.head, ptr.last)
+      (ptr, f.decodeDoubles(dataDs.dtype, H5adFrame.sliceBytes(f, dataDs, e0, e1)),
+        f.decodeLongs(indDs.dtype, H5adFrame.sliceBytes(f, indDs, e0, e1)))
     } finally f.close()
   }
-  private val dataBuf = java.nio.ByteBuffer.wrap(data)
-    .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-  private val indBuf = java.nio.ByteBuffer.wrap(ind)
-    .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-  private val total = (ptr.last - ptr.head).toInt
   private var k = -1
   private var row = 0
 
-  override def next(): Boolean = { k += 1; k < total }
+  override def next(): Boolean = { k += 1; k < data.length }
 
   override def get(): InternalRow = {
     val elem = ptr.head + k
     while (ptr(row + 1) <= elem) row += 1
-    val v = dataDt match {
-      case H5Dtype.FloatPt(8) => dataBuf.getDouble(k * 8)
-      case H5Dtype.FloatPt(4) => dataBuf.getFloat(k * 4).toDouble
-      case d => throw new UnsupportedOperationException(s"csr data type $d")
-    }
-    val j = indDt match {
-      case H5Dtype.FixedPt(4, _) => indBuf.getInt(k * 4).toLong
-      case H5Dtype.FixedPt(8, _) => indBuf.getLong(k * 8)
-      case d => throw new UnsupportedOperationException(s"csr index type $d")
-    }
-    Project.row(required, p.r0 + row, j, v)
+    CooProject.row(required, p.r0 + row, ind(k), data(k))
   }
 
-  override def close(): Unit = inp.close()
+  override def close(): Unit = ()
 }

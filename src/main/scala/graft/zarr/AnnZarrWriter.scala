@@ -538,9 +538,9 @@ object AnnZarrWriter {
   /** Executor-side dense extend — the ONE dense writer behind [[write]]
     * (`n0 = 0`) and [[appendRows]]: COO element `(r, c)` lands at grid
     * row `n0 + r`; elements group on their store object (one shuffle)
-    * and each task fills and writes it — the write twin of
-    * [[AnnZarr.denseCoo]]. A v2 object is one chunk; a v3 row-sharded
-    * object is `sf` chunk-row bands. Only objects straddling `n0` read
+    * and each task fills and writes it — the write twin of the `zarr`
+    * source's dense chunk reader. A v2 object is one chunk; a v3
+    * row-sharded object is `sf` chunk-row bands. Only objects straddling `n0` read
     * their committed bands back, and only rows < `n0` of them survive
     * the merge: rows >= `n0` in an old object are leftovers of a
     * truncateTo-rolled-back append and must not resurrect.

@@ -33,8 +33,7 @@ object SpatialZarr {
     def shape(level: Int): Seq[Long] = levels(level).shape
 
     /** Level as distributed COO — one axis column per NGFF axis plus
-      * `value`; tasks decode their own chunk objects (rank-agnostic
-      * generalization of [[AnnZarr.denseCoo]]).
+      * `value`; tasks decode their own chunk objects, at any rank.
       */
     def coo(spark: SparkSession, level: Int = 0): DataFrame =
       SpatialZarr.imageCoo(spark, levels(level), axes)

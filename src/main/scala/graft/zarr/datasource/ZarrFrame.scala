@@ -1,20 +1,16 @@
 package graft.zarr.datasource
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.h5.datasource.{FrameRangePartition, FrameRangeReader, H5adFrame}
 import graft.zarr.ZarrStore
 
 /** DSv2 support for anndata `dataframe` slots on zarr stores:
   * `spark.read.format("zarr").option("slot", "obs")` — the zarr twin of
-  * [[graft.h5.datasource.H5adFrame]], closing the same driver-side read
-  * path: `AnnZarr.open` decodes axis frames on the driver (the
-  * reference's in-memory contract), which is fine for metadata-sized
-  * frames but not for a 10^8-cell atlas. Here the frame reads like any
-  * other table:
+  * [[graft.h5.datasource.H5adFrame]] (whose axis naming, frame layout
+  * and row emitter it shares), and the one axis-frame reader behind
+  * [[graft.zarr.AnnZarr.open]]:
   *  - **schema from the dataframe encoding** (`_index` + `column-order`
   *    attrs; vlen-utf8 → string, floats → double, ints/bools → long,
   *    categorical groups → string);
@@ -27,105 +23,52 @@ import graft.zarr.ZarrStore
   */
 object ZarrFrame {
 
-  /** One frame column: `kind` ∈ f(loat)/i(nt)/s(tring)/c(ategorical). */
-  final case class ColSpec(outName: String, rel: String, kind: Char)
-      extends Serializable
-
-  final case class FrameInfo(n: Long, rowIdName: String,
-                             specs: Seq[ColSpec], schema: StructType)
-
   def isFrameSlot(path: String, slot: String): Boolean =
     ZarrStore.attrString(path, slot, "encoding-type").contains("dataframe")
 
-  /** Axis naming mirrors [[graft.zarr.AnnZarr.open]]. */
-  private def axisNames(slot: String): (String, String) =
-    if (slot == "var" || slot.endsWith("/var")) ("var_id", "var_name")
-    else ("obs_id", "obs_name")
-
-  def describe(path: String, slot: String): FrameInfo = {
+  def describe(path: String, slot: String): H5adFrame.FrameInfo = {
     require(isFrameSlot(path, slot), s"$slot: not an anndata dataframe group")
-    val (rowIdName, idName) = axisNames(slot)
     val indexCol = ZarrStore.attrString(path, slot, "_index").getOrElse("_index")
     val present = ZarrStore.children(path, slot)
     val order = ZarrStore.attrStrings(path, slot, "column-order")
       .getOrElse(present.filterNot(_ == indexCol))
     val n = ZarrStore.openArray(path, s"$slot/$indexCol").shape.head
-    val specs = (indexCol +: order.filter(present.contains)).map { nm =>
+    H5adFrame.frameInfo(slot, n, indexCol, order.filter(present.contains), { nm =>
       val rel = s"$slot/$nm"
-      val outName = if (nm == indexCol) idName else nm
-      if (ZarrStore.isArray(path, rel)) {
-        val za = ZarrStore.openArray(path, rel)
-        za.kind match {
-          case 'O' => ColSpec(outName, rel, 's')
-          case 'f' => ColSpec(outName, rel, 'f')
-          case _ => ColSpec(outName, rel, 'i')
-        }
-      } else if (ZarrStore.attrString(path, rel, "encoding-type").contains("categorical"))
-        ColSpec(outName, rel, 'c')
+      if (ZarrStore.isArray(path, rel)) ZarrStore.openArray(path, rel).kind match {
+        case 'O' => 's'
+        case 'f' => 'f'
+        case _ => 'i'
+      }
+      else if (ZarrStore.attrString(path, rel, "encoding-type").contains("categorical")) 'c'
       else throw new UnsupportedOperationException(
         s"dataframe column '$rel' has unsupported encoding " +
           ZarrStore.attrString(path, rel, "encoding-type").getOrElse("<none>"))
-    }
-    val fields = StructField(rowIdName, LongType, nullable = false) +:
-      specs.map(s => StructField(s.outName, s.kind match {
-        case 'f' => DoubleType
-        case 'i' => LongType
-        case _ => StringType
-      }, nullable = true))
-    FrameInfo(n, rowIdName, specs, StructType(fields))
+    })
   }
 }
 
-private[datasource] final case class ZarrFrameRangePartition(
-    path: String, slot: String, r0: Long, r1: Long,
-    specs: Array[ZarrFrame.ColSpec]) extends InputPartition
-
-/** Decodes its row range of each projected column, emits one row per
-  * axis index. Column payload stays bounded by (range × projected
-  * columns); nothing else is materialized.
-  */
 private[datasource] final class ZarrFrameRangeReader(
-    p: ZarrFrameRangePartition, required: StructType)
-    extends PartitionReader[InternalRow] {
+    p: FrameRangePartition, required: StructType)
+    extends FrameRangeReader(p, required) {
 
-  private val byName: Map[String, Int => Any] = {
-    p.specs.filter(s => required.fieldNames.contains(s.outName)).map { s =>
-      val get: Int => Any = s.kind match {
-        case 'c' =>
-          val codes = ZarrStore.openArray(p.path, s"${s.rel}/codes")
-            .readLongs(p.r0, p.r1)
-          // categories are the distinct values — dictionary-sized, full read
-          val cats = ZarrStore.openArray(p.path, s"${s.rel}/categories")
-            .readFlat().map(v => UTF8String.fromString(String.valueOf(v)))
-          i => { val c = codes(i); if (c < 0) null else cats(c.toInt) }
-        case 'f' =>
-          val v = ZarrStore.openArray(p.path, s.rel).readDoubles(p.r0, p.r1)
-          i => v(i)
-        case 'i' =>
-          val v = ZarrStore.openArray(p.path, s.rel).readLongs(p.r0, p.r1)
-          i => v(i)
-        case _ =>
-          val v = ZarrStore.openArray(p.path, s.rel).readStrings(p.r0, p.r1)
-            .map(UTF8String.fromString)
-          i => v(i)
-      }
-      s.outName -> get
-    }.toMap
-  }
-
-  private var i = -1
-
-  override def next(): Boolean = { i += 1; p.r0 + i < p.r1 }
-
-  override def get(): InternalRow = {
-    // any required field without a column spec is the synthesized row id
-    val vals = required.fieldNames.map { n =>
-      byName.get(n) match {
-        case Some(get) => get(i)
-        case None => java.lang.Long.valueOf(p.r0 + i)
-      }
-    }
-    new GenericInternalRow(vals.asInstanceOf[Array[Any]])
+  override protected def column(s: H5adFrame.ColSpec): Int => Any = s.kind match {
+    case 'c' =>
+      val codes = ZarrStore.openArray(p.path, s"${s.path}/codes").readLongs(p.r0, p.r1)
+      // categories are the distinct values — dictionary-sized, full read
+      val cats = ZarrStore.openArray(p.path, s"${s.path}/categories")
+        .readFlat().map(v => UTF8String.fromString(String.valueOf(v)))
+      i => { val c = codes(i); if (c < 0) null else cats(c.toInt) }
+    case 'f' =>
+      val v = ZarrStore.openArray(p.path, s.path).readDoubles(p.r0, p.r1)
+      i => v(i)
+    case 'i' =>
+      val v = ZarrStore.openArray(p.path, s.path).readLongs(p.r0, p.r1)
+      i => v(i)
+    case _ =>
+      val v = ZarrStore.openArray(p.path, s.path).readStrings(p.r0, p.r1)
+        .map(UTF8String.fromString)
+      i => v(i)
   }
 
   override def close(): Unit = ()

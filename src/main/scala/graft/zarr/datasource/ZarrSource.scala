@@ -11,14 +11,17 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.h5.datasource.H5adScanBuilder // bounds extraction is shared
+// bounds extraction, row-range planning, COO projection and the frame
+// partition are shared with the h5ad source
+import graft.h5.datasource.{CooProject, FrameRangePartition, H5adScanBuilder}
 import graft.zarr.{ZArray, ZarrStore}
 
 /** DataSource V2 surface for the native zarr reader:
   * `spark.read.format("zarr").load(path)` yields the COO view
   * `(obs_id, var_id, value)` of the store's X (or any matrix slot via
-  * `.option("slot", "layers/log")`) — the zarr twin of
-  * [[graft.h5.datasource.H5adSource]]:
+  * `.option("slot", "layers/log")`; `dataframe` slots yield the frame)
+  * — the zarr twin of [[graft.h5.datasource.H5adSource]], and the one
+  * reader behind [[graft.zarr.AnnZarr.open]]:
   *  - **partition planning = the chunk grid** (dense) or row ranges
   *    against indptr (csr), so task parallelism tracks the store's own
   *    chunk layout;
@@ -135,35 +138,23 @@ final class ZarrScan(path: String, slot: String, tschema: StructType,
   override def description(): String =
     s"zarr $path!$slot bounds=$colBounds cols=${required.fieldNames.mkString(",")}"
 
+  private def rowRanges(nRows: Long, nElems: Long, idCol: String) =
+    H5adScanBuilder.rowRanges(nRows, nElems, targetRows, targetElems, colBounds(idCol))
+
   override def planInputPartitions(): Array[InputPartition] = {
     if (ZarrFrame.isFrameSlot(path, slot)) {
       // dataframe slot: row ranges pruned by pushed row-id bounds
       val info = ZarrFrame.describe(path, slot)
-      val (lo, hi) = colBounds.getOrElse(info.rowIdName, (Long.MinValue, Long.MaxValue))
-      val par = H5adScanBuilder.rangeCount(info.n, targetRows)
-      val bounds = (0 to par).map(p => info.n * p / par).distinct
-      bounds.zip(bounds.tail)
-        .filter { case (r0, r1) => r1 > lo && r0 <= hi }
-        .map { case (r0, r1) =>
-          ZarrFrameRangePartition(path, slot, r0, r1,
-            info.specs.toArray): InputPartition
-        }.toArray
+      rowRanges(info.n, 0L, info.rowIdName).map { case (r0, r1) =>
+        FrameRangePartition(path, slot, r0, r1, info.specs.toArray): InputPartition
+      }.toArray
     } else if (ZarrStore.attrString(path, slot, "encoding-type").contains("csr_matrix")) {
       // csr: row ranges against indptr; pushed obs bounds prune ranges,
       // and each task's element span is fixed here so tasks touch only
       // their own data/indices chunks
-      val (obsLo, obsHi) = colBounds.getOrElse("obs_id", (Long.MinValue, Long.MaxValue))
       val ptrZ = ZarrStore.openArray(path, s"$slot/indptr")
-      val nRows = ptrZ.shape.head - 1
       val nnz = ZarrStore.openArray(path, s"$slot/data").shape.head
-      // rows AND elements both size the plan: a few very dense rows
-      // must not collapse into one task
-      val par = math.max(
-        H5adScanBuilder.rangeCount(nRows, targetRows).toLong,
-        math.min(nRows, (nnz + targetElems - 1) / targetElems)).toInt
-      val bounds = (0 to par).map(p => nRows * p / par).distinct
-      val kept = bounds.zip(bounds.tail)
-        .filter { case (r0, r1) => r1 > obsLo && r0 <= obsHi }
+      val kept = rowRanges(ptrZ.shape.head - 1, nnz, "obs_id")
       // indptr values at the SURVIVING range boundaries only: O(par)
       // chunk-sliced reads, never a full O(store rows) driver decode
       val bvals = kept.flatMap { case (a, b) => Seq(a, b) }.distinct
@@ -176,7 +167,7 @@ final class ZarrScan(path: String, slot: String, tschema: StructType,
       val za = ZarrStore.openArray(path, slot)
       val axes = tschema.fieldNames.dropRight(1) // value is last
       require(za.rank == axes.length, s"$slot: rank ${za.rank} vs schema $tschema")
-      val axBounds = axes.map(a => colBounds.getOrElse(a, (Long.MinValue, Long.MaxValue)))
+      val axBounds = axes.map(colBounds)
       val pruned = za.gridCoords.filter { c =>
         c.indices.forall { d =>
           val off = c(d).toLong * za.chunks(d)
@@ -203,19 +194,8 @@ final class ZarrReaderFactory(required: StructType) extends PartitionReaderFacto
     partition match {
       case p: ZarrDenseChunkPartition => new ZarrDenseChunkReader(p, required)
       case p: ZarrCsrRangePartition => new ZarrCsrRangeReader(p, required)
-      case p: ZarrFrameRangePartition => new ZarrFrameRangeReader(p, required)
+      case p: FrameRangePartition => new ZarrFrameRangeReader(p, required)
     }
-}
-
-private object ZProject {
-  def row(required: StructType, i: Long, j: Long, v: Double): InternalRow = {
-    val vals = required.fieldNames.map {
-      case "obs_id" => java.lang.Long.valueOf(i)
-      case "var_id" => java.lang.Long.valueOf(j)
-      case "value" => java.lang.Double.valueOf(v)
-    }
-    new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-  }
 }
 
 /** Rank-agnostic dense chunk reader: odometer over each chunk's clipped
@@ -330,7 +310,7 @@ private final class ZarrCsrRangeReader(p: ZarrCsrRangePartition, required: Struc
   override def get(): InternalRow = {
     val elem = p.e0 + k
     while (ptr(row + 1) <= elem) row += 1
-    ZProject.row(required, p.r0 + row, indZ.numAt(indBuf, k).toLong,
+    CooProject.row(required, p.r0 + row, indZ.numAt(indBuf, k).toLong,
       dataZ.numAt(dataBuf, k))
   }
 

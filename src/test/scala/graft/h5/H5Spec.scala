@@ -78,39 +78,33 @@ class H5Spec extends AnyFunSuite {
   }
 
   test("obs dataframe group: index, categorical decode, f8/vlen columns") {
-    val f = H5File.open(dense)
-    try {
-      val obs = AnnH5.dataFrameGroup(spark, f, f.group("obs"), "obs_id", "obs_name")
-      assert(obs.columns.toSeq ==
-        Seq("obs_id", "obs_name", "cell_type", "n_counts", "sample"))
-      val rows = obs.orderBy("obs_id").collect()
-      assert(rows.length == nObs)
-      rows.zipWithIndex.foreach { case (r, i) =>
-        assert(r.getLong(0) == i)
-        assert(r.getString(1) == s"cell_$i")
-        assert(r.getString(2) == s"type_${i % 5}")
-        assert(r.getDouble(3) == (i * 37 % 1000) + 0.5)
-        assert(r.getString(4) == s"s${i % 7}")
-      }
-    } finally f.close()
+    val obs = AnnH5.open(spark, dense).obs
+    assert(obs.columns.toSeq ==
+      Seq("obs_id", "obs_name", "cell_type", "n_counts", "sample"))
+    val rows = obs.orderBy("obs_id").collect()
+    assert(rows.length == nObs)
+    rows.zipWithIndex.foreach { case (r, i) =>
+      assert(r.getLong(0) == i)
+      assert(r.getString(1) == s"cell_$i")
+      assert(r.getString(2) == s"type_${i % 5}")
+      assert(r.getDouble(3) == (i * 37 % 1000) + 0.5)
+      assert(r.getString(4) == s"s${i % 7}")
+    }
   }
 
   test("var dataframe group: f4 widened to double, i4 to long") {
-    val f = H5File.open(dense)
-    try {
-      val v = AnnH5.dataFrameGroup(spark, f, f.group("var"), "var_id", "var_name")
-      val rows = v.orderBy("var_id").collect()
-      assert(rows.length == nVar)
-      rows.zipWithIndex.foreach { case (r, j) =>
-        assert(r.getString(1) == s"gene_$j")
-        assert(r.getDouble(2) == j * 0.25)
-        assert(r.getLong(3) == (if (j % 3 == 0) 1L else 0L))
-      }
-    } finally f.close()
+    val v = AnnH5.open(spark, dense).vars
+    val rows = v.orderBy("var_id").collect()
+    assert(rows.length == nVar)
+    rows.zipWithIndex.foreach { case (r, j) =>
+      assert(r.getString(1) == s"gene_$j")
+      assert(r.getDouble(2) == j * 0.25)
+      assert(r.getLong(3) == (if (j % 3 == 0) 1L else 0L))
+    }
   }
 
   test("distributed dense COO scan equals the closed form") {
-    val coo = AnnH5.denseCoo(spark, dense, "X").collect()
+    val coo = AnnH5.open(spark, dense).x.collect()
     assert(coo.length == nObs * nVar)
     coo.foreach { r =>
       assert(r.getDouble(2) == xval(r.getLong(0).toInt, r.getLong(1).toInt))
@@ -118,7 +112,7 @@ class H5Spec extends AnyFunSuite {
   }
 
   test("distributed CSR scan: stored entries, row mapping, values") {
-    val coo = AnnH5.csrCoo(spark, sparse, "X").collect()
+    val coo = AnnH5.open(spark, sparse).x.collect()
     val expected = for {
       i <- 0 until nObs; j <- 0 until nVar
       if (i * 7 + j * 13) % 5 == 0
@@ -141,7 +135,7 @@ class H5Spec extends AnyFunSuite {
   }
 
   test("bench fixture scans end-to-end (20000x256, 40 chunks)") {
-    val n = AnnH5.denseCoo(spark, "fixtures/h5ad/bench.h5ad", "X").count()
+    val n = AnnH5.open(spark, "fixtures/h5ad/bench.h5ad").x.count()
     assert(n == 20000L * 256)
   }
 
@@ -281,6 +275,29 @@ class H5Spec extends AnyFunSuite {
     val subV = ds.subsetVars(col("var_id") < 10)
     assert(subV.varm("PCs").count() == 10L * 6)
     assert(subV.raw.get.x.count() == raw.x.count())
+  }
+
+  test("open(): contiguous/compact layouts and i2/i4 elements equal the closed form") {
+    // contiguous.h5ad (tools/gen_h5ad.py write_contiguous), 50 x 12
+    val (n, m) = (50, 12)
+    val ds = AnnH5.open(spark, "fixtures/h5ad/contiguous.h5ad")
+    def coo(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def grid(rows: Int, cols: Int)(v: (Int, Int) => Double) =
+      (for (i <- 0 until rows; j <- 0 until cols)
+        yield (i.toLong, j.toLong, v(i, j))).toSet
+    assert(coo(ds.x) == grid(n, m)(xval))
+    assert(coo(ds.layers("counts")) ==
+      grid(n, m)((i, j) => ((i * 5 + j * 3) % 11) - 5.0))
+    assert(coo(ds.layers("sparse")) == (for {
+      i <- 0 until n; j <- 0 until m if (i * 7 + j * 13) % 5 == 0
+    } yield (i.toLong, j.toLong, ((i + 2 * j) % 9) - 4.0)).toSet)
+    val umap = ds.obsm("X_umap")
+    assert(umap.columns.toSeq == Seq("obs_id", "dim_id", "value"))
+    assert(coo(umap) == grid(n, 2)((i, k) => ((i * 3 + k) % 7) * 0.5))
+    assert(ds.obs.orderBy("obs_id").collect().map(_.getString(1)).toSeq ==
+      (0 until n).map(i => s"cell_$i"))
+    assert(ds.vars.count() == m)
   }
 
   test("writer round-trips varm/obsp/uns/raw bit-exactly") {

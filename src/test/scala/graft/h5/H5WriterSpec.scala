@@ -50,7 +50,7 @@ class H5WriterSpec extends AnyFunSuite {
       val xg = f.group("X")
       assert(f.attrString(xg, "encoding-type").contains("csr_matrix"))
       assert(f.attrLongs(xg, "shape").contains(Seq(nObs.toLong, nVar.toLong)))
-      val obs = AnnH5.dataFrameGroup(spark, f, f.group("obs"), "obs_id", "obs_name")
+      val obs = AnnH5.open(spark, p).obs
       assert(obs.columns.toSeq == Seq("obs_id", "obs_name", "batch", "score"))
       val r7 = obs.filter(col("obs_id") === 7).collect().head
       assert(r7.getString(1) == "c7" && r7.getLong(2) == 3L && r7.getDouble(3) == 10.5)
@@ -272,24 +272,17 @@ class H5WriterSpec extends AnyFunSuite {
   }
 
   test("AnnH5.open routes large axis frames through the DSv2 scan") {
-    // round-14: same size routing as the zarr open — a frame past
-    // driverFrameRowLimit reads via the h5ad row-range frame scan, not a
-    // driver decode; results are identical either way
+    // every axis frame, whatever its size (120-row obs, 30-row var),
+    // reads through the h5ad row-range frame scan — no driver decode —
+    // and equals the writer's input frame
     val p = writeTemp()
-    val keep = AnnH5.driverFrameRowLimit
-    try {
-      AnnH5.driverFrameRowLimit = 50 // 120-row obs exceeds it, 30-row var doesn't
-      AnnH5.driverFrameRowsProbe.set(0)
-      val ds = AnnH5.open(spark, p)
-      assert(ds.obs.queryExecution.optimizedPlan.collectLeaves()
+    val ds = AnnH5.open(spark, p)
+    val input = buildDataset()
+    for ((got, want, key) <- Seq((ds.obs, input.obs, "obs_id"), (ds.vars, input.vars, "var_id"))) {
+      assert(got.queryExecution.optimizedPlan.collectLeaves()
         .exists(_.getClass.getSimpleName.contains("DataSourceV2")),
-        s"obs must read through the DSv2 scan:\n${ds.obs.queryExecution.optimizedPlan}")
-      assert(AnnH5.driverFrameRowsProbe.get() == nVar, // var only
-        s"driver path decoded ${AnnH5.driverFrameRowsProbe.get()} rows")
-      val viaDs = ds.obs.orderBy("obs_id").collect()
-      AnnH5.driverFrameRowLimit = keep
-      val viaDriver = AnnH5.open(spark, p).obs.orderBy("obs_id").collect()
-      assert(viaDs.toSeq == viaDriver.toSeq)
-    } finally AnnH5.driverFrameRowLimit = keep
+        s"$key frame must read through the DSv2 scan:\n${got.queryExecution.optimizedPlan}")
+      assert(got.orderBy(key).collect().toSeq == want.orderBy(key).collect().toSeq, key)
+    }
   }
 }

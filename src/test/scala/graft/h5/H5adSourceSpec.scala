@@ -12,15 +12,18 @@ class H5adSourceSpec extends AnyFunSuite {
   private val dense = "fixtures/h5ad/dense.h5ad"
   private val sparse = "fixtures/h5ad/sparse.h5ad"
   private def xval(i: Long, j: Long): Double = ((i * 31 + j * 17) % 97) * 0.5
+  // the sparse fixture's stored entries (tools/gen_h5ad.py write_csr)
+  private val csrEntries = (for {
+    i <- 0L until 300; j <- 0L until 40 if (i * 7 + j * 13) % 5 == 0
+  } yield (i, j, xval(i, j))).sorted
 
-  test("dense X parity with AnnH5.denseCoo") {
+  test("dense X equals the closed form") {
     val dsv2 = spark.read.format("h5ad").load(dense)
     assert(dsv2.columns.toSeq == Seq("obs_id", "var_id", "value"))
     assert(dsv2.count() == 300L * 40)
-    val viaRdd = AnnH5.denseCoo(spark, dense, "X")
-      .agg(sum("value")).collect().head.getDouble(0)
+    val expected = (for (i <- 0L until 300; j <- 0L until 40) yield xval(i, j)).sum
     val viaDsv2 = dsv2.agg(sum("value")).collect().head.getDouble(0)
-    assert(viaDsv2 == viaRdd)
+    assert(viaDsv2 == expected)
   }
 
   test("slot option exposes layers; values match the closed form") {
@@ -44,12 +47,10 @@ class H5adSourceSpec extends AnyFunSuite {
     assert(got.length == 1 && got.head.getDouble(2) == xval(70, 20))
   }
 
-  test("csr slot: row-range partitions, parity with AnnH5.csrCoo") {
+  test("csr slot: row-range partitions equal the closed form") {
     val dsv2 = spark.read.format("h5ad").load(sparse)
-    val expected = AnnH5.csrCoo(spark, sparse, "X")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
     val got = dsv2.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
-    assert(got.toSeq == expected.toSeq)
+    assert(got.toSeq == csrEntries)
     // csr partitions prune on obs_id row ranges
     val full = dsv2.rdd.getNumPartitions
     val sliced = spark.read.format("h5ad").load(sparse)
@@ -82,9 +83,7 @@ class H5adSourceSpec extends AnyFunSuite {
     val csr = spark.read.format("h5ad")
       .option("targetRowsPerTask", 30).load(sparse)
     assert(csr.rdd.getNumPartitions == 10)
-    val expected = AnnH5.csrCoo(spark, sparse, "X")
-      .agg(sum("value")).head().getDouble(0)
-    assert(csr.agg(sum("value")).head().getDouble(0) == expected)
+    assert(csr.agg(sum("value")).head().getDouble(0) == csrEntries.map(_._3).sum)
   }
 
   test("column pruning: projected schema reaches the reader") {

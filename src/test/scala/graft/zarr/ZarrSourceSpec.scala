@@ -17,7 +17,7 @@ class ZarrSourceSpec extends AnyFunSuite {
   private def xmask(i: Int, j: Int) = (i * 5 + j * 11) % 23 == 0
   private def xval(i: Int, j: Int) = ((i * 2 + j * 13) % 19) * 0.5
 
-  test("csr X parity with AnnZarr.csrCoo") {
+  test("csr X equals the closed form") {
     val dsv2 = spark.read.format("zarr").load(root)
     assert(dsv2.columns.toSeq == Seq("obs_id", "var_id", "value"))
     val expected = (for { i <- 0 until nObs; j <- 0 until nVar if xmask(i, j) }
@@ -85,8 +85,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     assert(sliced.length == 10)
     sliced.zipWithIndex.foreach { case (r, k) =>
       val i = 60 + k
-      // |b1 columns read back as 0/1 longs (the zarr frame contract,
-      // same as AnnZarr.dataFrameGroup)
+      // |b1 columns read back as 0/1 longs (the zarr frame contract)
       assert(r.getLong(0) == i && r.getLong(1) == big + i &&
         r.getLong(2) == (if (i % 3 == 0) 1L else 0L) &&
         r.getString(3) == s"t${i % 4}", s"row $i")
@@ -200,9 +199,10 @@ class ZarrSourceSpec extends AnyFunSuite {
   }
 
   test("AnnZarr.open routes large axis frames through the DSv2 scan") {
-    // round-14: a frame past driverFrameRowLimit must NOT materialize on
-    // the driver (no LocalRelation payload in task binaries) — it reads
-    // through the row-range DSv2 plan; results are identical either way
+    // every axis frame, whatever its size (120-row obs, 3-row var),
+    // reads through the row-range DSv2 plan — no driver decode, no
+    // LocalRelation payload in task binaries — and equals the writer's
+    // input frame
     val p = TestSpark.tmpDir("graft_rt_route") + "/route.zarr"
     val n = 120
     val obs = spark.range(n).select(col("id").as("obs_id"),
@@ -214,23 +214,16 @@ class ZarrSourceSpec extends AnyFunSuite {
       (col("id") % 3).as("var_id"), lit(1.0).as("value"))
     AnnZarrWriter.write(graft.artifact.AnnDataset(obs, vars, x), p,
       chunkElems = 64, frameChunkLen = 32)
-    val keep = AnnZarr.driverFrameRowLimit
-    try {
-      AnnZarr.driverFrameRowLimit = 50 // 120-row obs exceeds it, 3-row var doesn't
-      AnnZarr.driverFrameRowsProbe.set(0)
-      val ds = AnnZarr.open(spark, p)
-      assert(ds.obs.queryExecution.optimizedPlan.collectLeaves()
+    val ds = AnnZarr.open(spark, p)
+    for ((got, want, key) <- Seq((ds.obs, obs, "obs_id"), (ds.vars, vars, "var_id"))) {
+      assert(got.queryExecution.optimizedPlan.collectLeaves()
         .exists(_.getClass.getSimpleName.contains("DataSourceV2")),
-        s"obs must read through the DSv2 scan:\n${ds.obs.queryExecution.optimizedPlan}")
-      assert(ds.obs.rdd.getNumPartitions > 1, "DSv2 frame scan must parallelize")
-      assert(AnnZarr.driverFrameRowsProbe.get() == 3, // var only
-        s"driver path decoded ${AnnZarr.driverFrameRowsProbe.get()} rows")
-      val viaDs = ds.obs.orderBy("obs_id").collect()
-      AnnZarr.driverFrameRowLimit = keep // driver path for comparison
-      val viaDriver = AnnZarr.open(spark, p).obs.orderBy("obs_id").collect()
-      assert(viaDs.toSeq == viaDriver.toSeq)
-    } finally AnnZarr.driverFrameRowLimit = keep
+        s"$key frame must read through the DSv2 scan:\n${got.queryExecution.optimizedPlan}")
+      assert(got.orderBy(key).collect().toSeq == want.orderBy(key).collect().toSeq, key)
+    }
+    assert(ds.obs.rdd.getNumPartitions > 1, "DSv2 frame scan must parallelize")
   }
+
 
   test("format-transparent: same scans over the v3 store (sharded csr X)") {
     val v3 = "fixtures/zarr/pbmc_v3.zarr"

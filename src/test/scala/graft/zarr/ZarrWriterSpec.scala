@@ -48,6 +48,22 @@ class ZarrWriterSpec extends AnyFunSuite {
     p
   }
 
+  test("open() slots are lazy scans: an action after appendRows sees the new rows") {
+    val p = TestSpark.tmpDir("graft_zlazy") + "/lazy.zarr"
+    val b = buildDataset()
+    AnnZarrWriter.write(AnnDataset(b.obs, b.vars, b.x), p, chunkElems = 128)
+    val ds = AnnZarr.open(spark, p)
+    val obs1 = spark.range(10).select(col("id").as("obs_id"),
+      concat(lit("d"), col("id")).as("obs_name"),
+      (col("id") % 4).as("batch"), lit(0.5).as("score"))
+    val x1 = spark.range(10).select(col("id").as("obs_id"),
+      lit(2L).as("var_id"), lit(1.5).as("value"))
+    AnnZarrWriter.appendRows(obs1, x1, p)
+    val nnz0 = (for (i <- 0L until nObs; j <- 0L until nVar if xmask(i, j)) yield 1).size
+    assert(ds.obs.count() == nObs + 10)
+    assert(ds.x.count() == nnz0 + 10)
+  }
+
   test("round-trip: obs/var frames, csr X multi-chunk, exact values") {
     val p = writeTemp(chunkElems = 128) // nnz > 128 -> several chunk objects
     val ds = AnnZarr.open(spark, p)

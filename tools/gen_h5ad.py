@@ -605,6 +605,66 @@ def write_h5mu(path, n_obs):
     finish(fb, root, path)
 
 
+def compact_dataset(fb, gh, dtbytes, dims, raw, attrs):
+    """Compact layout: the raw bytes live inside the layout message."""
+    layout = struct.pack('<BBH', 3, 0, len(raw)) + raw
+    msgs = [(0x0001, dataspace(dims)), (0x0003, dtbytes), (0x0008, layout)]
+    msgs += attr_msgs(gh, attrs)
+    return object_header(fb, msgs)
+
+
+# contiguous.h5ad — the non-chunked layouts and narrow element types h5py
+# emits by default (closed forms mirrored by H5Spec):
+#   X[i,j]               = xval(i, j)                 (contiguous f8)
+#   layers/counts[i,j]   = ((i*5 + j*3) % 11) - 5     (i2, chunked 16x5)
+#   layers/sparse        = csr, mask (i*7 + j*13) % 5 == 0,
+#                          value ((i + 2*j) % 9) - 4  (i4 data contiguous,
+#                          i2 indices chunked, i4 indptr)
+#   obsm/X_umap[i,k]     = ((i*3 + k) % 7) * 0.5      (compact f4, 2 dims)
+def write_contiguous(path, n_obs, n_var):
+    fb = FileBuf()
+    gh = GHeapPool(fb)
+    obs = obs_group(fb, gh, n_obs)
+    var = var_group(fb, gh, n_var)
+    x_raw = b''.join(struct.pack('<d', xval(i, j))
+                     for i in range(n_obs) for j in range(n_var))
+    x = contiguous_dataset(fb, gh, dt_float(8), (n_obs, n_var), x_raw,
+                           enc_attrs(gh, 'array', '0.2.0'))
+    counts = chunked_dataset(fb, gh, dt_fixed(2), (n_obs, n_var), (16, 5), 2,
+                             lambda c: struct.pack(
+                                 '<h', ((c[0] * 5 + c[1] * 3) % 11) - 5),
+                             enc_attrs(gh, 'array', '0.2.0'))
+    data, indices, indptr = [], [], [0]
+    for i in range(n_obs):
+        for j in range(n_var):
+            if (i * 7 + j * 13) % 5 == 0:
+                data.append(((i + 2 * j) % 9) - 4)
+                indices.append(j)
+        indptr.append(len(data))
+    data_ds = contiguous_dataset(fb, gh, dt_fixed(4), (len(data),),
+                                 b''.join(struct.pack('<i', v) for v in data),
+                                 enc_attrs(gh, 'array', '0.2.0'))
+    ind_ds = chunked_dataset(fb, gh, dt_fixed(2), (len(indices),), (32,), 2,
+                             lambda c: struct.pack('<h', indices[c[0]]),
+                             enc_attrs(gh, 'array', '0.2.0'))
+    ptr_ds = contiguous_dataset(fb, gh, dt_fixed(4), (len(indptr),),
+                                b''.join(struct.pack('<i', p) for p in indptr),
+                                enc_attrs(gh, 'array', '0.2.0'))
+    sparse = group(fb, gh, {'data': data_ds, 'indices': ind_ds, 'indptr': ptr_ds},
+                   enc_attrs(gh, 'csr_matrix', '0.1.0')
+                   + [int64_array_attr('shape', [n_obs, n_var])])
+    layers = group(fb, gh, {'counts': counts, 'sparse': sparse},
+                   enc_attrs(gh, 'dict', '0.1.0'))
+    umap_raw = b''.join(struct.pack('<f', ((i * 3 + k) % 7) * 0.5)
+                        for i in range(n_obs) for k in range(2))
+    umap = compact_dataset(fb, gh, dt_float(4), (n_obs, 2), umap_raw,
+                           enc_attrs(gh, 'array', '0.2.0'))
+    obsm = group(fb, gh, {'X_umap': umap}, enc_attrs(gh, 'dict', '0.1.0'))
+    root = group(fb, gh, {'X': x, 'obs': obs, 'var': var, 'layers': layers,
+                          'obsm': obsm}, enc_attrs(gh, 'anndata', '0.1.0'))
+    finish(fb, root, path)
+
+
 def main():
     global LATEST
     out = sys.argv[1] if len(sys.argv) > 1 else 'fixtures/h5ad'
@@ -619,6 +679,7 @@ def main():
     LATEST = True
     write_dense(os.path.join(out, 'latest.h5ad'), 300, 40, (64, 16))
     LATEST = False
+    write_contiguous(os.path.join(out, 'contiguous.h5ad'), 50, 12)
 
 
 if __name__ == '__main__':
