@@ -250,35 +250,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.GateLog.muteBoundedWindowWarning()
-
-    // JVM/codegen warmup so the first measured query isn't charged for it
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = graft.core.Session.local(graft.core.Session.cpus)
+    graft.core.Session.warm(spark)
+    // parquet-reader warm-up on the suite's own tier
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(10).collect()
-    // broadcast-exchange path (HashedRelation build + codegen classload):
-    // stream-static joins pay this on their first micro-batch otherwise
-    spark.range(1000).join(broadcast(spark.range(100).toDF()), "id").count()
-    // streaming-engine warmup: classload + state-store init on a 1-row
-    // memory stream so s01/b04 measure the operator, not first-use cost
-    locally {
-      import spark.implicits._
-      implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val q = ms.toDF().groupBy(col("value")).count()
-        .writeStream.outputMode("complete").format("memory").queryName("warmup").start()
-      ms.addData(1L)
-      q.processAllAvailable()
-      q.stop()
-    }
 
     // AnnData-bridge setup: a01/a02 query a bridge artifact; the one-off
     // ingest (4 parquet writes + dir hash) is data preparation, not the

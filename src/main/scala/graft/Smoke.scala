@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Manual end-to-end smoke: runs the flagship entry exactly like the
   * driver's t1 check (rows > 0 on sf0.001) and prints the result.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(graft.core.Session.cpus)
     val df = SparkEntry.entry(spark)
     df.show(20, truncate = false)
     println("ENTRY_ROWS=" + df.count())

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Standalone host-speed probe: runs the bench suite's fixed-cost
   * calibration workload (`Bench.calibrationHash` — 64M xxhash64 in 8
@@ -17,10 +16,7 @@ import org.apache.spark.sql.SparkSession
 object CalibProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 5
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(32)
     require(graft.Bench.calibrationHash(spark) != 0L) // warm (codegen/JIT)
     val runs = Seq.fill(n) {
       val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Worst-case COST contract for the cardinality-adaptive gram-df cap
@@ -55,20 +55,18 @@ object CostContract {
     // budgeted substringSpans runs end-to-end; its star-tier contracts
     // (spans == k-1, quadratic->linear candidate collapse) still hold.
     val budgetOnly = args.length > 1 && args(1) == "budget_only"
-    // Shuffle-partition count and IO codec are env-tunable for the
+    // Shuffle-partition count and IO codec are tunable for the
     // corpus-scale legs: at 57M docs the single gram exchange is
     // ~50 GB under lz4 on a 73 GB-free box — zstd buys ~25-30% and
     // more, smaller partitions keep the join's per-task sort spills
     // bounded (the r18 first attempt died spilling, not computing).
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "32"))
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // The partition count comes from SPARK_GRAFT_SHUFFLE_PARTS; the
+    // codec is Spark's own `-Dspark.io.compression.codec=zstd` (SparkConf
+    // reads `spark.*` system properties; the session factory leaves
+    // that key alone, so Spark's lz4 default applies otherwise).
+    val spark = graft.core.Session.local(32)
+    spark.conf.set("spark.sql.shuffle.partitions",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "32"))
 
     val gramLen = 13
     // fixed 30-token block -> 30 - 13 + 1 = 18 block grams, each at df=k

@@ -165,12 +165,7 @@ object EmbRecallContract {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/repo/testdata-local/sf1.0"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(32)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans of selected queries — the plan-review
   * loop: confirm filters reach the parquet scan (PushedFilters), schemas
   * are pruned (ReadSchema), small sides broadcast, codegen spans are wide.
@@ -13,12 +11,7 @@ object Explain {
       else Seq("q01_tpch_agg", "q04_fk_traversal", "q11_eav_filter")
     // SPARK_GRAFT_CPUS like the bench, so width decisions (spread targets,
     // shuffle partitions) in the dumped plans match the bench's session
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(graft.core.Session.cpus)
     // the four simhash drills explain their SIGNATURE frame through the one
     // signature builder — the persist/self-join machinery behind the
     // candidates is checkpoint-fenced and explains as Scan ExistingRDD

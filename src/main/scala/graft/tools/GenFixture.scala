@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerate the four simhash golden-snapshot fixtures (sf0.001) after
@@ -11,10 +10,7 @@ import org.apache.spark.sql.functions._
   */
 object GenFixture {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").appName("genfix").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(32)
     val dir = "/root/testdata/sf0.001"
     val corpus = graft.queries.TextQueries.corpusWithNearDups(spark, dir)
     val nPlantedTotal = spark.read.parquet(s"$dir/documents.parquet")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of a driver testdata tier: replicates every table
@@ -39,17 +39,13 @@ object GenScale {
       if (args.length > 3) Some(args(3).split(',').map(_.trim).filter(_.nonEmpty).toSet)
       else None
     def wanted(t: String): Boolean = only.forall(_.contains(t))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS): read it as raw long nanos.
-      // Spark cannot write NANOS back, so GenScale emits ts as INT64 and
-      // tools/genscale_ts.py re-types it to timestamp[ns] afterwards, giving
-      // byte-identical semantics to the driver tier for BOTH readers (Spark
-      // nanosAsLong and the DuckDB oracle).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").appName("genscale").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(32)
+    // events.ts is parquet TIMESTAMP(NANOS): read it as raw long nanos.
+    // Spark cannot write NANOS back, so GenScale emits ts as INT64 and
+    // tools/genscale_ts.py re-types it to timestamp[ns] afterwards, giving
+    // byte-identical semantics to the input tier for BOTH readers (Spark
+    // nanosAsLong and the DuckDB oracle).
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val cp = spark.range(copies).select(col("id").cast("int").as("cp"))
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.artifact.{AnnBridge, ArtifactStore}
 import graft.catalog.Catalog
@@ -9,11 +8,7 @@ import graft.catalog.Catalog
 object ProfAnn {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("profann").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(32)
     def t[A](label: String)(f: => A): A = {
       val s = System.nanoTime(); val r = f
       println(f"$label%-28s ${(System.nanoTime() - s) / 1e9}%.3f s"); r

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -18,13 +17,8 @@ object ProfEntry {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("d10_simhash_portable")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = graft.core.Session.local(32)
+    graft.core.Session.warm(spark)
 
     case class St(name: String, tasks: Int, wallMs: Long, taskMs: Long, submitted: Long)
     val stages = mutable.ArrayBuffer[St]()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.queries.ExactSum
 
@@ -11,13 +11,8 @@ import graft.queries.ExactSum
 object ProfQ21 {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/repo/testdata-local/sf10"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = graft.core.Session.local(32)
+    graft.core.Session.warm(spark)
 
     def t(name: String): DataFrame = spark.read.parquet(s"$sfDir/$name.parquet")
     def base = {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Phase timing for the streaming MuData entries (s06/s08 shape): fixture
@@ -11,22 +10,8 @@ import org.apache.spark.sql.functions._
 object ProfS08 {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    // streaming warmup like the bench
-    locally {
-      import spark.implicits._
-      implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val q = ms.toDF().groupBy(col("value")).count()
-        .writeStream.outputMode("complete").format("memory").queryName("warmup").start()
-      ms.addData(1L); q.processAllAvailable(); q.stop()
-    }
+    val spark = graft.core.Session.local(32)
+    graft.core.Session.warm(spark)
 
     def time[T](label: String)(body: => T): T = {
       val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Planted-cluster recall contract for the gram-join dedup family
@@ -24,12 +24,7 @@ import org.apache.spark.sql.functions._
 object RecallContract {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/repo/testdata-local/sf1.0"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(32)
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))

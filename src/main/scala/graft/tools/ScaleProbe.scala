@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Third-decade spot probe: times the CORPUS-scale dedup/ANN operators
@@ -37,12 +36,7 @@ object ScaleProbe {
       if (args.length > 1) args(1).split(',').map(_.trim).toSet
       else Set("minhash", "simhash", "simhash128", "spans_budget", "emb_lsh",
         "emb_lsh_banded", "gram_stats", "cc")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(32)
 
     val results = scala.collection.mutable.ArrayBuffer.empty[String]
     def timed(name: String)(body: => Long): Unit = {

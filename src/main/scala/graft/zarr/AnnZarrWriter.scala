@@ -154,19 +154,24 @@ object AnnZarrWriter {
       writeJson(root, s"$rel/.zattrs", attrs)
     }
 
+  /** Write a group node; returns the consolidated-metadata key of its
+    * attributes (v2: the `.zattrs` object key; v3: the node path).
+    */
   private def zgroup(root: String, rel: String, attrs: Option[String],
-                     v3: Boolean = false): Unit = {
+                     v3: Boolean = false): String = {
     // rel = "" is the store root: "/.zgroup" would resolve as an
     // ABSOLUTE child in Hadoop's Path(parent, child) and land at the
     // filesystem root, so join without a leading slash
     val pfx = if (rel.isEmpty) "" else s"$rel/"
-    if (v3)
+    if (v3) {
       writeJson(root, s"${pfx}zarr.json",
         s"""{"zarr_format":3,"node_type":"group"""" +
           attrs.map(a => s""","attributes":$a""").getOrElse("") + "}")
-    else {
+      rel
+    } else {
       writeJson(root, s"$pfx.zgroup", """{"zarr_format":2}""")
       attrs.foreach(a => writeJson(root, s"$pfx.zattrs", a))
+      s"$pfx.zattrs"
     }
   }
 
@@ -975,7 +980,7 @@ object AnnZarrWriter {
       writeMatrix("raw/X", r.x, "obs_id", "var_id", nObs, nRawVar)
     }
     // consolidated metadata so reopening costs a single metadata GET
-    if (v3) ZarrStore.consolidateV3(path) else ZarrStore.consolidate(path)
+    ZarrStore.consolidate(path)
   }
 
   /** Migrate an AnnData-on-zarr store to a new layout (typically v2 →
@@ -1050,7 +1055,7 @@ object AnnZarrWriter {
     }
     // per-modality write() consolidated each subtree; the root pass
     // folds everything into ONE container-level metadata object
-    if (v3) ZarrStore.consolidateV3(path) else ZarrStore.consolidate(path)
+    ZarrStore.consolidate(path)
   }
 
   // --------------------------------------------------------------- append
@@ -1153,9 +1158,8 @@ object AnnZarrWriter {
       val pre = CsrPrefix(n0, nnz0, n0 + 1, ptrZ.readLongs((n0 + 1) / L * L, n0 + 1),
         dataZ.readDoubles(eLo, nnz0), indZ.readLongs(eLo, nnz0))
       extendCsr(path, rel, coo, "obs_id", colCol, nAdd, pre, L, chunkElems, objElems, v3) { nnz1 =>
-        zgroup(path, rel, Some(s"""{"encoding-type":"csr_matrix","encoding-version":"0.1.0",""" +
-          s""""shape":[${n0 + nAdd},$nCols]}"""), v3)
-        changedMeta += (if (v3) rel else s"$rel/.zattrs")
+        changedMeta += zgroup(path, rel, Some(s"""{"encoding-type":"csr_matrix",""" +
+          s""""encoding-version":"0.1.0","shape":[${n0 + nAdd},$nCols]}"""), v3)
         changedMeta += ZarrStore.patchShape(path, s"$rel/indptr", Seq(n0 + nAdd + 1))
         changedMeta += ZarrStore.patchShape(path, s"$rel/data", Seq(nnz1))
         changedMeta += ZarrStore.patchShape(path, s"$rel/indices", Seq(nnz1))
@@ -1176,8 +1180,7 @@ object AnnZarrWriter {
     }
     // O(changed nodes) metadata patch — a full consolidate re-walk
     // would LIST every chunk directory, O(store) per microbatch
-    if (v3) ZarrStore.patchConsolidatedV3(path, changedMeta.toSeq)
-    else ZarrStore.patchConsolidated(path, changedMeta.toSeq)
+    ZarrStore.patchConsolidated(path, changedMeta.toSeq)
   }
 
   /** The obs half of [[appendRows]]: `newObs` (obs_id local 0..n-1)
@@ -1334,9 +1337,8 @@ object AnnZarrWriter {
         reshape(s"$rel/data", nnzC)
         reshape(s"$rel/indices", nnzC)
         val nCols = ZarrStore.attrs(path, rel).get.get("shape").get(1).asLong
-        zgroup(path, rel, Some(s"""{"encoding-type":"csr_matrix",""" +
+        changed += zgroup(path, rel, Some(s"""{"encoding-type":"csr_matrix",""" +
           s""""encoding-version":"0.1.0","shape":[$n0,$nCols]}"""), v3)
-        changed += (if (v3) rel else s"$rel/.zattrs")
       }
     rollMatrix("X", nnz0)
     // aux slots roll back through the COMMITTED indptr(n0) value, which
@@ -1348,7 +1350,6 @@ object AnnZarrWriter {
             ZarrStore.openArray(path, s"$grp/$nm/indptr").readLongs(n0, n0 + 1).head)
         }
     }
-    if (v3) ZarrStore.patchConsolidatedV3(path, changed.toSeq)
-    else ZarrStore.patchConsolidated(path, changed.toSeq)
+    ZarrStore.patchConsolidated(path, changed.toSeq)
   }
 }

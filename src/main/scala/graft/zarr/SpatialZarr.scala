@@ -1,9 +1,6 @@
 package graft.zarr
 
-import java.nio.{ByteBuffer, ByteOrder}
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.artifact.AnnDataset
 
@@ -32,11 +29,13 @@ object SpatialZarr {
     def nLevels: Int = levels.size
     def shape(level: Int): Seq[Long] = levels(level).shape
 
-    /** Level as distributed COO — one axis column per NGFF axis plus
-      * `value`; tasks decode their own chunk objects, at any rank.
+    /** Level as distributed COO through the `zarr` DSv2 scan — one axis
+      * column per NGFF axis plus `value`; one task per chunk object, at
+      * any rank, with pushed axis bounds pruning chunk objects.
       */
     def coo(spark: SparkSession, level: Int = 0): DataFrame =
-      SpatialZarr.imageCoo(spark, levels(level), axes)
+      spark.read.format("zarr").option("slot", levels(level).rel)
+        .option("axes", axes.mkString(",")).load(levels(level).root)
   }
 
   /** The opened store: reference surface (`tables`) + engine extensions. */
@@ -100,49 +99,4 @@ object SpatialZarr {
       modalities = sd.tables.map { case (name, t) =>
         name -> Map("obs" -> t.obs, "var" -> t.vars)
       })
-
-  /** Rank-N dense array as distributed COO `(axis..., value)` — one task
-    * bundle per chunk set; absent chunks emit fill_value, edge chunks
-    * clip to shape.
-    */
-  def imageCoo(spark: SparkSession, za: ZArray, axes: Seq[String]): DataFrame = {
-    require(za.rank == axes.size, s"${za.rel}: rank ${za.rank} vs axes $axes")
-    val schema = StructType(
-      axes.map(StructField(_, LongType, nullable = false)) :+
-        StructField("value", DoubleType, nullable = false))
-    val coords = za.gridCoords
-    val slices = math.max(1, math.min(coords.size,
-      spark.sparkContext.defaultParallelism))
-    val rank = za.rank
-    val rdd = spark.sparkContext.parallelize(coords, slices).flatMap { coord =>
-      val offs = Array.tabulate(rank)(d => coord(d).toLong * za.chunks(d))
-      val ext = Array.tabulate(rank)(d =>
-        math.min(za.chunks(d).toLong, za.shape(d) - offs(d)).toInt)
-      // C-order strides over the FULL (padded) chunk buffer
-      val strides = new Array[Int](rank)
-      var acc = 1
-      var d = rank - 1
-      while (d >= 0) { strides(d) = acc; acc *= za.chunks(d); d -= 1 }
-      val dec = za.readChunk(coord.toSeq)
-      val buf = dec.map(b => ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN))
-      val fv = za.fillNum.getOrElse(0.0)
-      val n = ext.product
-      Iterator.range(0, n).map { cell =>
-        val idx = new Array[Any](rank + 1)
-        var rem = cell
-        var k = 0
-        var d2 = rank - 1
-        while (d2 >= 0) {
-          val i = rem % ext(d2)
-          rem /= ext(d2)
-          idx(d2) = offs(d2) + i
-          k += i * strides(d2)
-          d2 -= 1
-        }
-        idx(rank) = buf.map(za.numAt(_, k)).getOrElse(fv)
-        Row.fromSeq(idx.toIndexedSeq)
-      }
-    }
-    spark.createDataFrame(rdd, schema)
-  }
 }

@@ -58,9 +58,9 @@ object SpatialZarrWriter {
     case other => throw new UnsupportedOperationException(s"image dtype $other")
   }
 
-  /** Rank-N dense executor-parallel chunk write (the write twin of
-    * [[SpatialZarr.imageCoo]]): elements group on their C-order chunk
-    * object id, each task packs + zlib-encodes its object.
+  /** Rank-N dense executor-parallel chunk write (the write twin of the
+    * `zarr` source's dense chunk reader): elements group on their C-order
+    * chunk object id, each task packs + zlib-encodes its object.
     */
   private def writeDenseNd(path: String, rel: String, coo: DataFrame,
                            axes: Seq[String], shape: Seq[Long],

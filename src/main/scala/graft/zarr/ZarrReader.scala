@@ -448,11 +448,15 @@ object ZarrStore {
 
   // ------------------------------------------------ consolidated writing
 
-  /** Write v2 consolidated metadata (`.zmetadata`) for a finished store:
-    * the public answer to per-node metadata GETs — reopening the store
-    * costs ONE metadata object regardless of node count.
+  /** Write consolidated metadata for a finished store — v2 `.zmetadata`,
+    * v3 `consolidated_metadata` in the root `zarr.json`, by the store's
+    * [[format]]: the public answer to per-node metadata GETs — reopening
+    * the store costs ONE metadata object regardless of node count.
     */
-  def consolidate(root: String): Unit = {
+  def consolidate(root: String): Unit =
+    if (format(root) == 3) consolidateV3(root) else consolidateV2(root)
+
+  private def consolidateV2(root: String): Unit = {
     val f = fs(root)
     val out = mapper.createObjectNode()
     out.put("zarr_consolidated_format", 1)
@@ -470,162 +474,10 @@ object ZarrStore {
       }
     }
     visit("")
-    val o = f.create(new Path(root, ".zmetadata"), true)
-    try o.write(mapper.writeValueAsBytes(out)) finally o.close()
-    invalidate(root)
+    writeMeta(root, ".zmetadata", out)
   }
 
-  /** Patch v2 consolidated metadata IN PLACE for the given metadata
-    * object keys (re-read each from the store; absent keys are
-    * removed). The append path uses this so a microbatch costs O(batch)
-    * metadata work — a full [[consolidate]] re-walk LISTs every array
-    * directory (O(chunk objects) on an object store), which would make
-    * a long-running ingest stream quadratic in store size.
-    */
-  def patchConsolidated(root: String, keys: Seq[String]): Unit = {
-    readBytes(root, ".zmetadata").map(mapper.readTree) match {
-      case None => consolidate(root)
-      case Some(node) =>
-        val md = node.get("metadata").asInstanceOf[ObjectNode]
-        keys.foreach { k =>
-          readBytes(root, k) match {
-            case Some(b) => md.set[ObjectNode](k, mapper.readTree(b))
-            case None => md.remove(k)
-          }
-        }
-        val o = fs(root).create(new Path(root, ".zmetadata"), true)
-        try o.write(mapper.writeValueAsBytes(node)) finally o.close()
-        invalidate(root)
-    }
-  }
-
-  /** Merge a NESTED STORE's own consolidated metadata into this
-    * container root's — the O(subtree metadata) refresh for "a modality
-    * grew" (a MuData `mod/<m>`, a SpatialData `tables/<t>`): the append
-    * path keeps the nested store's consolidation patched per batch, so
-    * the container refresh is two metadata GETs + one PUT. A full
-    * [[consolidate]] re-walk LISTs every directory of every member —
-    * O(container) — which would make per-batch root refresh quadratic
-    * over a stream's life. Falls back to the full walk when either side
-    * has no consolidated object yet. Dispatches on store format.
-    */
-  def patchConsolidatedSubtree(root: String, subtree: String): Unit = {
-    val pfx = subtree.stripSuffix("/").stripPrefix("/")
-    require(pfx.nonEmpty, "patchConsolidatedSubtree needs a non-root subtree")
-    if (format(root) == 3) {
-      (readBytes(root, "zarr.json").map(mapper.readTree),
-        readBytes(root, s"$pfx/zarr.json").map(mapper.readTree)) match {
-        // like the v2 branch: a foreign/malformed zarr.json (a
-        // consolidated_metadata without an object-valued "metadata" map)
-        // falls through to the full walk instead of a ClassCastException
-        case (Some(rn: ObjectNode), Some(sn: ObjectNode))
-          if rn.has("consolidated_metadata") && !rn.get("consolidated_metadata").isNull &&
-            rn.get("consolidated_metadata").has("metadata") &&
-            rn.get("consolidated_metadata").get("metadata").isObject &&
-            sn.has("consolidated_metadata") && !sn.get("consolidated_metadata").isNull &&
-            sn.get("consolidated_metadata").has("metadata") &&
-            sn.get("consolidated_metadata").get("metadata").isObject =>
-          val md = rn.get("consolidated_metadata").get("metadata").asInstanceOf[ObjectNode]
-          val it = md.fieldNames()
-          val stale = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (it.hasNext) {
-            val k = it.next()
-            if (k == pfx || k.startsWith(pfx + "/")) stale += k
-          }
-          stale.foreach(md.remove)
-          // the subtree root node itself, WITHOUT its inner consolidation
-          // (the container root's map is the single source of truth)
-          val snLean = sn.deepCopy[ObjectNode]()
-          snLean.remove("consolidated_metadata")
-          md.set[ObjectNode](pfx, snLean)
-          val smd = sn.get("consolidated_metadata").get("metadata").asInstanceOf[ObjectNode]
-          val sit = smd.fieldNames()
-          while (sit.hasNext) {
-            val k = sit.next()
-            md.set[ObjectNode](s"$pfx/$k", smd.get(k))
-          }
-          val o = fs(root).create(new Path(root, "zarr.json"), true)
-          try o.write(mapper.writeValueAsBytes(rn)) finally o.close()
-          invalidate(root)
-        case _ => consolidateV3(root)
-      }
-    } else {
-      (readBytes(root, ".zmetadata").map(mapper.readTree),
-        readBytes(root, s"$pfx/.zmetadata").map(mapper.readTree)) match {
-        // a foreign or malformed .zmetadata (no object-valued "metadata"
-        // map on either side) falls through to the full walk, mirroring
-        // the v3 branch's consolidated_metadata guards
-        case (Some(rn), Some(sn))
-          if rn.has("metadata") && rn.get("metadata").isObject &&
-            sn.has("metadata") && sn.get("metadata").isObject =>
-          val md = rn.get("metadata").asInstanceOf[ObjectNode]
-          val it = md.fieldNames()
-          val stale = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (it.hasNext) {
-            val k = it.next()
-            if (k.startsWith(pfx + "/")) stale += k
-          }
-          stale.foreach(md.remove)
-          val smd = sn.get("metadata").asInstanceOf[ObjectNode]
-          val sit = smd.fieldNames()
-          while (sit.hasNext) {
-            val k = sit.next()
-            md.set[ObjectNode](s"$pfx/$k", smd.get(k))
-          }
-          val o = fs(root).create(new Path(root, ".zmetadata"), true)
-          try o.write(mapper.writeValueAsBytes(rn)) finally o.close()
-          invalidate(root)
-        case _ => consolidate(root)
-      }
-    }
-  }
-
-  /** Rewrite the declared shape of an array node's metadata object IN
-    * PLACE (either format) — the O(1) metadata step of the append /
-    * truncate paths. Returns the consolidated-metadata patch key for
-    * the rewritten object (v2: the `.zarray` file key; v3: the node
-    * path, matching [[patchConsolidatedV3]]'s keying).
-    */
-  def patchShape(root: String, rel: String, shape: Seq[Long]): String = {
-    val v3 = format(root) == 3
-    val key = if (v3) s"$rel/zarr.json" else s"$rel/.zarray"
-    val node = readBytes(root, key).map(mapper.readTree).getOrElse(
-      sys.error(s"$root/$key: no array metadata to patch")).asInstanceOf[ObjectNode]
-    val arr = node.putArray("shape")
-    shape.foreach(arr.add)
-    val o = fs(root).create(new Path(root, key), true)
-    try o.write(mapper.writeValueAsBytes(node)) finally o.close()
-    if (v3) rel else key
-  }
-
-  /** Patch v3 consolidated metadata IN PLACE for the given NODE paths
-    * (each node's `zarr.json` is re-read; absent nodes are removed) —
-    * the v3 twin of [[patchConsolidated]], same O(changed nodes)
-    * contract (a [[consolidateV3]] re-walk LISTs every directory).
-    */
-  def patchConsolidatedV3(root: String, nodes: Seq[String]): Unit = {
-    readBytes(root, "zarr.json").map(mapper.readTree) match {
-      case Some(rn: ObjectNode) if rn.has("consolidated_metadata") &&
-        !rn.get("consolidated_metadata").isNull =>
-        val md = rn.get("consolidated_metadata").get("metadata").asInstanceOf[ObjectNode]
-        nodes.filter(_.nonEmpty).distinct.foreach { n =>
-          readBytes(root, s"$n/zarr.json") match {
-            case Some(b) => md.set[ObjectNode](n, mapper.readTree(b))
-            case None => md.remove(n)
-          }
-        }
-        val o = fs(root).create(new Path(root, "zarr.json"), true)
-        try o.write(mapper.writeValueAsBytes(rn)) finally o.close()
-        invalidate(root)
-      case _ => consolidateV3(root)
-    }
-  }
-
-  /** v3 consolidation: rewrite the root `zarr.json` with
-    * `consolidated_metadata` covering every descendant node — same
-    * one-GET reopen contract as v2's `.zmetadata`.
-    */
-  def consolidateV3(root: String): Unit = {
+  private def consolidateV3(root: String): Unit = {
     val f = fs(root)
     val rootNode = readBytes(root, "zarr.json").map(mapper.readTree).getOrElse(
       sys.error(s"$root: no root zarr.json to consolidate")).asInstanceOf[ObjectNode]
@@ -646,9 +498,114 @@ object ZarrStore {
     cm.put("must_understand", false)
     cm.set[ObjectNode]("metadata", md)
     rootNode.set[ObjectNode]("consolidated_metadata", cm)
-    val o = f.create(new Path(root, "zarr.json"), true)
-    try o.write(mapper.writeValueAsBytes(rootNode)) finally o.close()
+    writeMeta(root, "zarr.json", rootNode)
+  }
+
+  /** The consolidated object of each format and its node map: v2
+    * `.zmetadata` → `metadata`, v3 root `zarr.json` →
+    * `consolidated_metadata.metadata` (MissingNode when absent).
+    */
+  private def consolidatedFile(v3: Boolean): String =
+    if (v3) "zarr.json" else ".zmetadata"
+  private def consolidatedMap(n: JsonNode, v3: Boolean): JsonNode =
+    if (v3) n.path("consolidated_metadata").path("metadata") else n.path("metadata")
+
+  /** Overwrite one metadata object and drop the root's cached snapshot. */
+  private def writeMeta(root: String, rel: String, node: JsonNode): Unit = {
+    val o = fs(root).create(new Path(root, rel), true)
+    try o.write(mapper.writeValueAsBytes(node)) finally o.close()
     invalidate(root)
+  }
+
+  /** Patch consolidated metadata IN PLACE for the given keys (re-read
+    * each from the store; absent keys are removed). Keys are what
+    * [[patchShape]] returns: v2 metadata object keys (`X/.zarray`), v3
+    * node paths (`X`). The append path uses this so a microbatch costs
+    * O(batch) metadata work — a full [[consolidate]] re-walk LISTs every
+    * array directory (O(chunk objects) on an object store), which would
+    * make a long-running ingest stream quadratic in store size. Falls
+    * back to the full walk when the store has no consolidated map yet.
+    */
+  def patchConsolidated(root: String, keys: Seq[String]): Unit = {
+    val v3 = format(root) == 3
+    val file = consolidatedFile(v3)
+    readBytes(root, file).map(mapper.readTree) match {
+      case Some(node) if consolidatedMap(node, v3).isObject =>
+        val md = consolidatedMap(node, v3).asInstanceOf[ObjectNode]
+        keys.filter(_.nonEmpty).distinct.foreach { k =>
+          readBytes(root, if (v3) s"$k/zarr.json" else k) match {
+            case Some(b) => md.set[ObjectNode](k, mapper.readTree(b))
+            case None => md.remove(k)
+          }
+        }
+        writeMeta(root, file, node)
+      case _ => consolidate(root)
+    }
+  }
+
+  /** Merge a NESTED STORE's own consolidated metadata into this
+    * container root's — the O(subtree metadata) refresh for "a modality
+    * grew" (a MuData `mod/<m>`, a SpatialData `tables/<t>`): the append
+    * path keeps the nested store's consolidation patched per batch, so
+    * the container refresh is two metadata GETs + one PUT. A full
+    * [[consolidate]] re-walk LISTs every directory of every member —
+    * O(container) — which would make per-batch root refresh quadratic
+    * over a stream's life. Falls back to the full walk when either side
+    * has no consolidated object yet, or a foreign/malformed one (no
+    * object-valued node map) — never a ClassCastException.
+    */
+  def patchConsolidatedSubtree(root: String, subtree: String): Unit = {
+    val pfx = subtree.stripSuffix("/").stripPrefix("/")
+    require(pfx.nonEmpty, "patchConsolidatedSubtree needs a non-root subtree")
+    val v3 = format(root) == 3
+    val file = consolidatedFile(v3)
+    (readBytes(root, file).map(mapper.readTree),
+      readBytes(root, s"$pfx/$file").map(mapper.readTree)) match {
+      case (Some(rn), Some(sn))
+        if consolidatedMap(rn, v3).isObject && consolidatedMap(sn, v3).isObject =>
+        val md = consolidatedMap(rn, v3).asInstanceOf[ObjectNode]
+        val it = md.fieldNames()
+        val stale = scala.collection.mutable.ArrayBuffer.empty[String]
+        while (it.hasNext) {
+          val k = it.next()
+          if (k == pfx || k.startsWith(pfx + "/")) stale += k
+        }
+        stale.foreach(md.remove)
+        if (v3) {
+          // the v3 subtree root node itself, WITHOUT its inner
+          // consolidation (the container root's map is the single
+          // source of truth); v2 keys its .zgroup inside the merge below
+          val snLean = sn.deepCopy[ObjectNode]()
+          snLean.remove("consolidated_metadata")
+          md.set[ObjectNode](pfx, snLean)
+        }
+        val smd = consolidatedMap(sn, v3)
+        val sit = smd.fieldNames()
+        while (sit.hasNext) {
+          val k = sit.next()
+          md.set[ObjectNode](s"$pfx/$k", smd.get(k))
+        }
+        writeMeta(root, file, rn)
+      case _ => consolidate(root)
+    }
+  }
+
+  /** Rewrite the declared shape of an array node's metadata object IN
+    * PLACE (either format) — the O(1) metadata step of the append /
+    * truncate paths. Returns the consolidated-metadata patch key for
+    * the rewritten object (v2: the `.zarray` file key; v3: the node
+    * path, matching [[patchConsolidated]]'s keying).
+    */
+  def patchShape(root: String, rel: String, shape: Seq[Long]): String = {
+    val v3 = format(root) == 3
+    val key = if (v3) s"$rel/zarr.json" else s"$rel/.zarray"
+    val node = readBytes(root, key).map(mapper.readTree).getOrElse(
+      sys.error(s"$root/$key: no array metadata to patch")).asInstanceOf[ObjectNode]
+    val arr = node.putArray("shape")
+    shape.foreach(arr.add)
+    val o = fs(root).create(new Path(root, key), true)
+    try o.write(mapper.writeValueAsBytes(node)) finally o.close()
+    if (v3) rel else key
   }
 }
 

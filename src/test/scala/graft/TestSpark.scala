@@ -5,13 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -55,6 +55,9 @@ class SpatialZarrSpec extends AnyFunSuite {
     assert(img.axes == Seq("c", "y", "x") && img.nLevels == 2)
     assert(img.shape(0) == Seq(3L, 64L, 64L) && img.shape(1) == Seq(3L, 32L, 32L))
     val coo = img.coo(spark)
+    assert(coo.queryExecution.optimizedPlan.collectLeaves()
+      .exists(_.getClass.getSimpleName.contains("DataSourceV2")),
+      s"image level must read through the zarr DSv2 scan:\n${coo.queryExecution.optimizedPlan}")
     assert(coo.columns.toSeq == Seq("c", "y", "x", "value"))
     assert(coo.count() == 3L * 64 * 64)
     assert(coo.rdd.getNumPartitions > 1, "chunk grid must distribute")

@@ -10,12 +10,7 @@
 set -e
 OUT=${1:?outdir}; shift
 mkdir -p "$OUT"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. "$(dirname "$0")/add_opens.sh"
 for entry in "$@"; do
   for run in 1 2 3; do
     echo "== $entry run $run" >&2

@@ -5,14 +5,8 @@ set -e
 SF_DIR=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/graft_verify}
 rm -rf "$OUT"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. "$(dirname "$0")/add_opens.sh"
 java $ADD_OPENS -Xmx${HEAP:-8g} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SF_DIR" "$OUT" ${3:+"$3"}
 python3 /root/repo/tools/compare.py "$SF_DIR" "$OUT"
