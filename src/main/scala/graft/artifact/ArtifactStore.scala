@@ -3,7 +3,7 @@ package graft.artifact
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
-import graft.core.{Hashing, Versioning}
+import graft.core.Hashing
 import graft.query.{DoesNotExist, QuerySet}
 
 /** Artifact lifecycle: idempotent creation, versioning, open/load,
@@ -195,14 +195,9 @@ final class ArtifactStore(val cat: Catalog) {
         deletePath(finalPath)
         movePath(stagePath, finalPath)
         val nObs = df.count()
-        cat.flush("artifact")
-        cat.overwrite("artifact",
-          cat.table("artifact")
-            .withColumn("hash", when(col("uid") === uid, lit(hash)).otherwise(col("hash")))
-            .withColumn("hash_type", when(col("uid") === uid, lit(hashType)).otherwise(col("hash_type")))
-            .withColumn("size", when(col("uid") === uid, lit(size)).otherwise(col("size")))
-            .withColumn("n_files", when(col("uid") === uid, lit(nFiles)).otherwise(col("n_files")))
-            .withColumn("n_observations", when(col("uid") === uid, lit(nObs)).otherwise(col("n_observations"))))
+        cat.update("artifact", col("uid") === uid,
+          "hash" -> lit(hash), "hash_type" -> lit(hashType), "size" -> lit(size),
+          "n_files" -> lit(nFiles), "n_observations" -> lit(nObs))
         current ++ Map("hash" -> hash, "hash_type" -> hashType, "size" -> size,
           "n_files" -> nFiles, "n_observations" -> nObs)
     }
@@ -324,34 +319,17 @@ final class ArtifactStore(val cat: Catalog) {
         // same key + storage, different content → new version of that family
         val family = cat.table("artifact")
           .filter(col("key") === key && col("storage_id") === storageId)
-          .select("uid", "id", "branch_id").collect()
-        val (uid, isRevision) =
-          if (family.nonEmpty) (Versioning.nextUidInFamily(family.map(_.getString(0)).toSeq), true)
-          else (cat.newUidFor(cat.tableDef("artifact")), false)
-        if (isRevision) demoteFamilyHeads(Versioning.stem(uid))
-        cat.insert("artifact", Map(
-          "uid" -> uid, "key" -> key, "suffix" -> suffix, "kind" -> kind,
+          .select("uid").collect().map(_.getString(0)).toSeq
+        cat.insertVersion("artifact", family, Map(
+          "key" -> key, "suffix" -> suffix, "kind" -> kind,
           "otype" -> otype.orNull,
           "real_path" -> realPath.orNull,
           "description" -> description, "size" -> size, "hash" -> hash,
           "hash_type" -> hashType, "n_files" -> nFiles,
           "n_observations" -> nObservations.orNull,
           "storage_id" -> storageId,
-          "run_id" -> cat.currentRunId.map(Long.box).orNull,
-          "is_latest" -> true))
+          "run_id" -> cat.currentRunId.map(Long.box).orNull))
     }
-  }
-
-  /** Flip previous is_latest heads of a family off (within the current
-    * branch) before inserting the new head.
-    */
-  private def demoteFamilyHeads(stem: String): Unit = {
-    cat.flush("artifact")
-    val t = cat.table("artifact")
-    cat.overwrite("artifact",
-      t.withColumn("is_latest",
-        when(col("uid").startsWith(stem) && col("branch_id") === cat.currentBranchId, lit(false))
-          .otherwise(col("is_latest"))))
   }
 
   def rowToMap(r: Row): Map[String, Any] =
@@ -657,7 +635,6 @@ final class ArtifactStore(val cat: Catalog) {
     * heads hand off to the newest surviving version first, like trash.
     */
   def deletePermanently(ids: Seq[Long], storageRoot: String): Unit = {
-    cat.flush("artifact")
     val promote = graft.catalog.Lifecycle.successorsFor(cat, "artifact", ids)
     val doomed = cat.table("artifact").filter(col("id").isin(ids: _*))
     val paths = pathsFor(doomed)

@@ -1,5 +1,6 @@
 package graft.artifact
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
 import graft.core.{Hashing, Versioning}
@@ -31,13 +32,13 @@ final class Blocks(cat: Catalog) {
     require(kind == "readme" || kind == "comment", s"unsupported block kind '$kind'")
     val hash = if (content.nonEmpty) Hashing.md5String(content) else null
 
-    def insertRow(uid: String): Map[String, Any] =
-      cat.insert("block", Map(
-        "uid" -> uid, "key" -> key, "content" -> content, "hash" -> hash,
+    def insertRow(family: Seq[String]): Map[String, Any] =
+      cat.insertVersion("block", family, Map(
+        "key" -> key, "content" -> content, "hash" -> hash,
         "kind" -> kind, "version_tag" -> versionTag.orNull,
-        "anchor_id" -> anchorId.map(Long.box).orNull, "is_latest" -> true))
+        "anchor_id" -> anchorId.map(Long.box).orNull))
 
-    if (kind == "comment") return insertRow(cat.newUidFor(cat.tableDef("block")))
+    if (kind == "comment") return insertRow(Seq.empty)
 
     // readme: recovery semantics from block.py:308-360. Non-trash is the
     // reference's `~Q(branch_id=-1)` — recovery looks across branches.
@@ -55,23 +56,14 @@ final class Blocks(cat: Catalog) {
         .head(1).headOption
       byHash.foreach { r => return r.schema.fieldNames.zip(r.toSeq).toMap }
     }
-    head match {
-      case Some(r) =>
-        // revise: next suffix in the head's family, demote current head
-        val stem = Versioning.stem(r.getAs[String]("uid"))
-        val familyUids = cat.table("block")
-          .filter(col("uid").startsWith(stem)).select("uid")
-          .collect().map(_.getString(0)).toSeq
-        val uid = Versioning.nextUidInFamily(familyUids)
-        cat.flush("block")
-        cat.overwrite("block",
-          cat.table("block").withColumn("is_latest",
-            when(col("uid").startsWith(stem) && col("branch_id") === cat.currentBranchId,
-              lit(false)).otherwise(col("is_latest"))))
-        insertRow(uid)
-      case None => insertRow(cat.newUidFor(cat.tableDef("block")))
-    }
+    // no head: a new family; else the next version of the head's family
+    insertRow(head.toSeq.flatMap(familyOf("block", _)))
   }
+
+  /** Every uid in the version family of a head row. */
+  private def familyOf(registry: String, head: Row): Seq[String] =
+    cat.table(registry).filter(col("uid").startsWith(Versioning.stem(head.getAs[String]("uid"))))
+      .select("uid").collect().map(_.getString(0)).toSeq
 
   /** Record-attached block (`RecordBlock`, `block.py:396`, generic init
     * `block.py:100-165` + `test_record_block_*`): readme-kind recovers the
@@ -85,13 +77,12 @@ final class Blocks(cat: Catalog) {
     require(kind == "readme" || kind == "comment", s"unsupported block kind '$kind'")
     val hash = if (content.nonEmpty) Hashing.md5String(content) else null
 
-    def insertRow(uid: String): Map[String, Any] =
-      cat.insert("record_block", Map(
-        "uid" -> uid, "record_id" -> recordId, "content" -> content,
-        "hash" -> hash, "kind" -> kind, "version_tag" -> versionTag.orNull,
-        "is_latest" -> true))
+    def insertRow(family: Seq[String]): Map[String, Any] =
+      cat.insertVersion("record_block", family, Map(
+        "record_id" -> recordId, "content" -> content,
+        "hash" -> hash, "kind" -> kind, "version_tag" -> versionTag.orNull))
 
-    if (kind == "comment") return insertRow(cat.newUidFor(cat.tableDef("record_block")))
+    if (kind == "comment") return insertRow(Seq.empty)
     val visible = cat.table("record_block").filter(
       col("record_id") === recordId && col("kind") === kind &&
         col("branch_id") =!= Catalog.TrashBranchId)
@@ -100,19 +91,8 @@ final class Blocks(cat: Catalog) {
       case Some(r) if { val c = r.getAs[String]("content"); c == null || c.isEmpty } =>
         // existing head never had content saved: recover it (block.py:137-146)
         r.schema.fieldNames.zip(r.toSeq).toMap
-      case Some(r) =>
-        val stem = Versioning.stem(r.getAs[String]("uid"))
-        val familyUids = cat.table("record_block")
-          .filter(col("uid").startsWith(stem)).select("uid")
-          .collect().map(_.getString(0)).toSeq
-        val uid = Versioning.nextUidInFamily(familyUids)
-        cat.flush("record_block")
-        cat.overwrite("record_block",
-          cat.table("record_block").withColumn("is_latest",
-            when(col("uid").startsWith(stem) && col("branch_id") === cat.currentBranchId,
-              lit(false)).otherwise(col("is_latest"))))
-        insertRow(uid)
-      case None => insertRow(cat.newUidFor(cat.tableDef("record_block")))
+      case Some(r) => insertRow(familyOf("record_block", r))
+      case None => insertRow(Seq.empty)
     }
   }
 
@@ -134,14 +114,7 @@ final class Blocks(cat: Catalog) {
           col("branch_id").isin(Catalog.defaultBranchIds(cat.currentBranchId): _*))
       .select("content").head(1).headOption.map(_.getString(0))
 
-  def trash(ids: Seq[Long]): Unit = {
-    cat.flush("block")
-    cat.overwrite("block",
-      cat.table("block")
-        .withColumn("is_latest",
-          when(col("id").isin(ids: _*), lit(false)).otherwise(col("is_latest")))
-        .withColumn("branch_id",
-          when(col("id").isin(ids: _*), lit(Catalog.TrashBranchId))
-            .otherwise(col("branch_id"))))
-  }
+  def trash(ids: Seq[Long]): Unit =
+    cat.update("block", col("id").isin(ids: _*),
+      "is_latest" -> lit(false), "branch_id" -> lit(Catalog.TrashBranchId))
 }

@@ -3,7 +3,7 @@ package graft.artifact
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
-import graft.core.{Hashing, Versioning}
+import graft.core.Hashing
 
 /** Collections: versioned, ordered lists of artifacts
   * (`lamindb/models/collection.py:98`, link table `:741`).
@@ -32,28 +32,15 @@ final class Collections(cat: Catalog, store: ArtifactStore) {
     if (existing.nonEmpty)
       return existing.head.schema.fieldNames.zip(existing.head.toSeq).toMap
     val family = cat.table("collection").filter(col("key") === key)
-      .select("uid").collect().map(_.getString(0))
-    val uid =
-      if (family.nonEmpty) Versioning.nextUidInFamily(family.toIndexedSeq)
-      else cat.newUidFor(cat.tableDef("collection"))
-    if (family.nonEmpty) demoteHeads(Versioning.stem(uid))
-    val row = cat.insert("collection", Map(
-      "uid" -> uid, "key" -> key, "hash" -> hash, "description" -> description,
-      "is_latest" -> true))
+      .select("uid").collect().map(_.getString(0)).toSeq
+    val row = cat.insertVersion("collection", family,
+      Map("key" -> key, "hash" -> hash, "description" -> description))
     val cid = row("id").asInstanceOf[Long]
     artifactIds.zipWithIndex.foreach { case (aid, pos) =>
       cat.insert("collection_artifacts",
         Map("collection_id" -> cid, "artifact_id" -> aid, "position" -> pos))
     }
     row
-  }
-
-  private def demoteHeads(stem: String): Unit = {
-    cat.flush("collection")
-    cat.overwrite("collection",
-      cat.table("collection").withColumn("is_latest",
-        when(col("uid").startsWith(stem) && col("branch_id") === cat.currentBranchId, lit(false))
-          .otherwise(col("is_latest"))))
   }
 
   /** New version of the collection with the extra artifacts appended

@@ -34,21 +34,15 @@ object BranchOps {
     if (srcId == tgtId) return // identical source and target: no-op
 
     Schemas.all.filter(_.hasBranch).foreach { t =>
-      cat.flush(t.name)
       val moved = !cat.table(t.name).filter(col("branch_id") === srcId).isEmpty
-      if (moved)
-        cat.overwrite(t.name,
-          cat.table(t.name).withColumn("branch_id",
-            when(col("branch_id") === srcId, lit(tgtId)).otherwise(col("branch_id"))))
+      if (moved) cat.update(t.name, col("branch_id") === srcId, "branch_id" -> lit(tgtId))
+      else cat.flush(t.name)
     }
 
     Schemas.all.filter(t => t.versioned && t.fieldNames.contains("is_latest"))
       .foreach(t => reconcileIsLatestWithinBranch(cat, t.name, tgtId))
 
-    cat.flush("branch")
-    cat.overwrite("branch",
-      cat.table("branch").withColumn("status_code",
-        when(col("id") === srcId, lit(StatusMerged)).otherwise(col("status_code"))))
+    cat.update("branch", col("id") === srcId, "status_code" -> lit(StatusMerged))
   }
 
   /** Keep ONE `is_latest` head per version family on `branchId`: among
@@ -57,17 +51,13 @@ object BranchOps {
     * Returns the number demoted.
     */
   def reconcileIsLatestWithinBranch(cat: Catalog, registry: String, branchId: Long): Long = {
-    cat.flush(registry)
-    val t = cat.table(registry)
-    val heads = t.filter(col("branch_id") === branchId && col("is_latest"))
+    val heads = cat.table(registry).filter(col("branch_id") === branchId && col("is_latest"))
       .withColumn("__stem", expr("substring(uid, 1, length(uid) - 4)"))
     val w = Window.partitionBy("__stem").orderBy(col("created_at").desc, col("id").desc)
     val losers = heads.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") > 1).select("id").collect().map(_.getLong(0)).toIndexedSeq
-    if (losers.nonEmpty)
-      cat.overwrite(registry,
-        t.withColumn("is_latest",
-          when(col("id").isin(losers: _*), lit(false)).otherwise(col("is_latest"))))
+    if (losers.nonEmpty) cat.update(registry, col("id").isin(losers: _*), "is_latest" -> lit(false))
+    else cat.flush(registry)
     losers.size.toLong
   }
 }

@@ -4,9 +4,9 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
-import graft.core.Base62
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, when}
+import graft.core.{Base62, Versioning}
 
 /** Parquet-backed metadata catalog with copy-on-write snapshots.
   *
@@ -20,10 +20,14 @@ import graft.core.Base62
   *  - inserts accumulate in a driver-side buffer (the reference batches
   *    bulk saves at 10k rows, `models/save.py:31`) and are unioned into
   *    reads until flushed;
-  *  - updates (trash/restore, `is_latest` flips) are whole-table
-  *    copy-on-write rewrites — registry tables are metadata (small relative
-  *    to the data plane), and rewrites are Spark jobs so they scale with
-  *    the cluster, not the driver.
+  *  - row updates enter through `update` (set columns where a predicate
+  *    holds) and `insertVersion` (new head of a version family, demoting
+  *    the family's heads on the current branch); both are one
+  *    whole-table copy-on-write rewrite of snapshot ∪ buffer. Registry
+  *    tables are metadata (small relative to the data plane), and
+  *    rewrites are Spark jobs so they scale with the cluster, not the
+  *    driver. `overwrite` stays for rewrites that drop rows or need a
+  *    different predicate per column.
   *
   * `seed` makes uid generation and the clock deterministic, which the
   * correctness harness needs; production use passes seed=None semantics via
@@ -66,7 +70,7 @@ final class Catalog(
 
   def uid(n: Int): String = Base62.randomWith(n, rng)
   def newUidFor(t: TableDef): String =
-    if (t.versioned) graft.core.Versioning.createUid(rng) else uid(t.uidLen)
+    if (t.versioned) Versioning.createUid(rng) else uid(t.uidLen)
 
   def tableDef(name: String): TableDef =
     Schemas.byName.getOrElse(name, throw new IllegalArgumentException(s"unknown registry '$name'"))
@@ -127,8 +131,7 @@ final class Catalog(
         currentUserId.foreach(u => m += "created_by_id" -> u)
       m
     }
-    val unknown = withDefaults.keySet -- t.fieldNames
-    require(unknown.isEmpty, s"unknown fields $unknown for registry '$name'")
+    requireFields(t, withDefaults.keySet)
     val row = Row.fromSeq(t.schema.fields.map(f => withDefaults.get(f.name).orNull).toSeq)
     buffers.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += row
     withDefaults
@@ -137,13 +140,50 @@ final class Catalog(
   def insertAll(name: String, rows: Seq[Map[String, Any]]): Seq[Map[String, Any]] =
     rows.map(insert(name, _))
 
-  /** Copy-on-write full-table rewrite (trash/restore, is_latest flips,
-    * bulk updates). The new content replaces snapshot AND buffer.
+  private def requireFields(t: TableDef, names: Set[String]): Unit = {
+    val unknown = names -- t.fieldNames
+    require(unknown.isEmpty, s"unknown fields $unknown for registry '${t.name}'")
+  }
+
+  /** Insert the next version of a family (`_is_versioned.py:271-338`):
+    * an empty `family` starts a new one (`newUidFor`); otherwise the uid
+    * is the family's next suffix and the family's current heads on
+    * `currentBranchId` are demoted through `update` first. The new row is
+    * the head (`is_latest = true`). Returns the completed row.
+    */
+  def insertVersion(name: String, family: Seq[String], values: Map[String, Any]): Map[String, Any] = {
+    val uid =
+      if (family.isEmpty) newUidFor(tableDef(name))
+      else {
+        val next = Versioning.nextUidInFamily(family)
+        update(name, col("uid").startsWith(Versioning.stem(next)) && col("branch_id") === currentBranchId,
+          "is_latest" -> lit(false))
+        next
+      }
+    insert(name, values ++ Map("uid" -> uid, "is_latest" -> true))
+  }
+
+  /** Set columns on the rows where `where` holds: one copy-on-write
+    * rewrite of snapshot ∪ buffer into a new version. The buffer is
+    * dropped only after the write succeeds.
+    */
+  def update(name: String, where: Column, set: (String, Column)*): Unit = {
+    val t = tableDef(name)
+    val values = set.toMap
+    requireFields(t, values.keySet)
+    overwrite(name, table(name).select(t.schema.fields.toIndexedSeq.map { f =>
+      values.get(f.name).fold(col(f.name))(v =>
+        when(where, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name))
+    }: _*))
+  }
+
+  /** Copy-on-write full-table rewrite for changes `update` cannot state
+    * (row deletes, a different predicate per column). The new content
+    * replaces snapshot AND buffer.
     */
   def overwrite(name: String, df: DataFrame): Unit = {
     val t = tableDef(name)
-    val aligned = df.select(t.schema.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-    writeSnapshot(name, aligned)
+    writeSnapshot(name, df.select(t.schema.fieldNames.map(col).toIndexedSeq: _*))
     buffers.remove(name)
   }
 

@@ -14,7 +14,6 @@ object Lifecycle {
   def trash(cat: Catalog, registry: String, ids: Seq[Long]): Unit = {
     val t = cat.tableDef(registry)
     require(t.hasBranch, s"$registry has no branch field; use permanent delete")
-    cat.flush(registry)
     val promote =
       if (t.versioned && t.fieldNames.contains("is_latest")) successorsFor(cat, registry, ids)
       else Seq.empty[Long]
@@ -29,12 +28,8 @@ object Lifecycle {
         when(col("id").isin(ids: _*), lit(Catalog.TrashBranchId)).otherwise(col("branch_id"))))
   }
 
-  def restore(cat: Catalog, registry: String, ids: Seq[Long]): Unit = {
-    cat.flush(registry)
-    cat.overwrite(registry,
-      cat.table(registry).withColumn("branch_id",
-        when(col("id").isin(ids: _*), lit(Catalog.MainBranchId)).otherwise(col("branch_id"))))
-  }
+  def restore(cat: Catalog, registry: String, ids: Seq[Long]): Unit =
+    cat.update(registry, col("id").isin(ids: _*), "branch_id" -> lit(Catalog.MainBranchId))
 
   /** Per (family stem, branch) whose head is being deleted: the id of the
     * most recently created surviving version on that branch.

@@ -64,7 +64,6 @@ final class ArtifactFeatures(cat: Catalog) {
 
   /** `artifact.labels.remove(...)`. */
   def removeLabels(artifactId: Long, labelIds: Seq[Long]): Unit = {
-    cat.flush("artifact_ulabels")
     cat.overwrite("artifact_ulabels",
       cat.table("artifact_ulabels").filter(
         !(col("artifact_id") === artifactId && col("ulabel_id").isin(labelIds: _*))))

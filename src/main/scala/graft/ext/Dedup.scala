@@ -170,7 +170,7 @@ object Dedup {
         .otherwise(array(aggregate(th, lit(0L), (acc, h) => xxhash64(acc, h)))))
 
   def tokenHashes(textCol: Column): Column =
-    transform(split(trim(textCol), "\\s+"), t => xxhash64(t))
+    transform(TextOps.tokens(textCol), t => xxhash64(t))
 
   /** Closes out a signature-cached pipeline: eagerly materializes the
     * (small) result via localCheckpoint — which is the job that consumes
@@ -333,7 +333,7 @@ object Dedup {
                            k: Int = 16, bands: Int = 4, threshold: Double = 0.4,
                            shingleN: Int = 3, seed: Long = 7L): DataFrame = {
     val withSig = graft.core.Par.spreadForCpu(df)
-      .select(col(idCol).as("id"), split(trim(col(textCol)), "\\s+").as("tk"))
+      .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("tk"))
       .select(col("id"), shinglesFromTokens(col("tk"), shingleN).as("sh"))
       .select(col("id"), col("sh"),
         transform(col("sh"),
@@ -438,7 +438,7 @@ object Dedup {
   private[graft] def simhashSignature(fam: SimhashFamily, df: DataFrame, idCol: String,
                                       textCol: String): DataFrame = {
     val tok = (if (fam.md5Words) graft.core.Par.spreadForCpu(df) else df)
-      .select(col(idCol).as("id"), explode(split(trim(col(textCol)), "\\s+")).as("tok"))
+      .select(col(idCol).as("id"), explode(TextOps.tokens(col(textCol))).as("tok"))
     val hashed =
       if (fam.md5Words) tok.withColumn("m", md5(col("tok"))).select(col("id") +:
         (0 until fam.words).map(w =>
@@ -968,7 +968,7 @@ object Dedup {
     */
   def lineDedup(docs: DataFrame, idCol: String, textCol: String,
                 lineTokens: Int = 8): DataFrame = {
-    val toks = docs.select(col(idCol).as("id"), split(trim(col(textCol)), "\\s+").as("tk"))
+    val toks = docs.select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("tk"))
       .withColumn("n", size(col("tk")))
     val lines = toks.select(col("id"),
       posexplode(transform(
@@ -991,7 +991,7 @@ object Dedup {
   def ngramJaccard(pairs: DataFrame, docs: DataFrame, idCol: String,
                    textCol: String, n: Int = 3): DataFrame = {
     val sh = graft.core.Par.spreadForCpu(docs)
-      .select(col(idCol), split(trim(col(textCol)), "\\s+").as("__toks"))
+      .select(col(idCol), TextOps.tokens(col(textCol)).as("__toks"))
       .select(col(idCol), shinglesFromTokens(col("__toks"), n).as("sh"))
     pairs
       .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
@@ -1014,7 +1014,7 @@ object Dedup {
   def ngramContainment(pairs: DataFrame, docs: DataFrame, idCol: String,
                        textCol: String, n: Int = 3): DataFrame = {
     val sh = graft.core.Par.spreadForCpu(docs)
-      .select(col(idCol), split(trim(col(textCol)), "\\s+").as("__toks"))
+      .select(col(idCol), TextOps.tokens(col(textCol)).as("__toks"))
       .select(col(idCol), shinglesFromTokens(col("__toks"), n).as("sh"))
     pairs
       .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
@@ -1104,7 +1104,7 @@ object Dedup {
         pairBudget.fold("")(b => s", per-gram pair budget $b (star above)"))
     val toks = graft.core.Par.spreadForCpu(docs)
       .select(col(idCol).cast("long").as("doc"),
-        split(trim(col(textCol)), "\\s+").as("tk"))
+        TextOps.tokens(col(textCol)).as("tk"))
       .filter(size(col("tk")) >= gramLen)
     // gram key: two xxhash64 LONGs, not an md5 hex string — the key is
     // a pure join/group key that never reaches the output (spans carry
@@ -1240,7 +1240,7 @@ object Dedup {
         x.getField("p") >= c.getField("s") && x.getField("p") < c.getField("e")))),
       x => x.getField("t"))
     docs.join(cuts, col(idCol).cast("long") === col("__doc"), "left")
-      .withColumn("__tk", split(trim(col(textCol)), "\\s+"))
+      .withColumn("__tk", TextOps.tokens(col(textCol)))
       .withColumn("__kept",
         when(col("__cuts").isNull, col("__tk")).otherwise(keptArr))
       .select(col(idCol),

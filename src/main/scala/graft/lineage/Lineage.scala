@@ -45,22 +45,10 @@ final class Lineage(val cat: Catalog) {
       val (stored, _) = Redaction.redactSource(sourceCode)
       val family = cat.table("transform").filter(col("key") === key)
         .select("uid").collect().map(_.getString(0)).toSeq
-      val uid =
-        if (family.isEmpty) cat.newUidFor(cat.tableDef("transform"))
-        else graft.core.Versioning.nextUidInFamily(family)
-      if (family.nonEmpty) {
-        val stem = graft.core.Versioning.stem(uid)
-        cat.flush("transform")
-        cat.overwrite("transform",
-          cat.table("transform").withColumn("is_latest",
-            when(col("uid").startsWith(stem) && col("branch_id") === cat.currentBranchId,
-              lit(false)).otherwise(col("is_latest"))))
-      }
-      cat.insert("transform", Map(
-        "uid" -> uid, "key" -> key, "typ" -> "script",
+      cat.insertVersion("transform", family, Map(
+        "key" -> key, "typ" -> "script",
         "source_code" -> (if (stored.isEmpty) null else stored),
-        "source_code_hash" -> hash,
-        "is_latest" -> true))("id").asInstanceOf[Long]
+        "source_code_hash" -> hash))("id").asInstanceOf[Long]
     }
     val pj = if (params.nonEmpty) Redaction.serializeParams(params) else null
     val runId = cat.insert("run", Map(
@@ -104,12 +92,8 @@ final class Lineage(val cat: Catalog) {
   /** Mark the current run completed (`ln.finish()`). */
   def finish(statusCode: Int = 0): Unit = {
     cat.currentRunId.foreach { runId =>
-      cat.flush("run")
-      cat.overwrite("run",
-        cat.table("run").withColumn("status_code",
-            when(col("id") === runId, lit(statusCode)).otherwise(col("status_code")))
-          .withColumn("finished_at",
-            when(col("id") === runId, lit(cat.clock())).otherwise(col("finished_at"))))
+      cat.update("run", col("id") === runId,
+        "status_code" -> lit(statusCode), "finished_at" -> lit(cat.clock()))
     }
     cat.currentRunId = None
   }

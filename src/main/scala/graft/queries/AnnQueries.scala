@@ -527,6 +527,26 @@ object AnnQueries {
     })
   )
 
+  /** The a17 closed forms for global rows [lo, hi): obs with a local
+    * `obs_id`, `obs_name` = 'c'||i and `extraObs(i)` (default
+    * `batch` = i%6); vars 'g'||j for j < nVars; csr X with mask
+    * (i*5+j*3)%7==0 and value ((i*11+j*29)%53)*0.5 — where i is the
+    * global row, `lo` + the local `obs_id`.
+    */
+  private def closedForm(spark: SparkSession, lo: Long, hi: Long, nVars: Int,
+                         extraObs: Column => Column = i => (i % 6).cast("long").as("batch"))
+      : (DataFrame, DataFrame, DataFrame) = {
+    val obs = spark.range(hi - lo).select(col("id").as("obs_id"),
+      concat(lit("c"), col("id") + lo).as("obs_name"), extraObs(col("id") + lo))
+    val vars = spark.range(nVars).select(col("id").as("var_id"),
+      concat(lit("g"), col("id")).as("var_name"))
+    val x = spark.range(hi - lo).select(col("id").as("obs_id"))
+      .crossJoin(spark.range(nVars).select(col("id").as("var_id")))
+      .filter(((col("obs_id") + lo) * 5 + col("var_id") * 3) % 7 === 0)
+      .withColumn("value", ((col("obs_id") + lo) * 11 + col("var_id") * 29) % 53 * 0.5)
+    (obs, vars, x)
+  }
+
   /** a17 sink fixture: same closed forms as a07 (240x32, mask
     * (i*5+j*3)%7==0, value ((i*11+j*29)%53)*0.5, batch i%6) but written
     * through the executor-parallel zarr sink, chunked small enough
@@ -536,15 +556,7 @@ object AnnQueries {
     written.getOrElseUpdate("zarr", synchronized {
       val p = java.nio.file.Paths.get(
         LifecycleQueries.TempRoot.dir("graft_sink"), "rt.zarr").toString
-      val obs = spark.range(240).select(col("id").as("obs_id"),
-        concat(lit("c"), col("id")).as("obs_name"),
-        (col("id") % 6).cast("long").as("batch"))
-      val vars = spark.range(32).select(col("id").as("var_id"),
-        concat(lit("g"), col("id")).as("var_name"))
-      val x = spark.range(240).select(col("id").as("obs_id"))
-        .crossJoin(spark.range(32).select(col("id").as("var_id")))
-        .filter((col("obs_id") * 5 + col("var_id") * 3) % 7 === 0)
-        .withColumn("value", (col("obs_id") * 11 + col("var_id") * 29) % 53 * 0.5)
+      val (obs, vars, x) = closedForm(spark, 0, 240, 32)
       graft.zarr.AnnZarrWriter.write(
         graft.artifact.AnnDataset(obs, vars, x), p, chunkElems = 512)
       p
@@ -558,15 +570,8 @@ object AnnQueries {
     written.getOrElseUpdate("zarr_encoded", synchronized {
       val p = java.nio.file.Paths.get(
         LifecycleQueries.TempRoot.dir("graft_sink"), "enc.zarr").toString
-      val obs = spark.range(240).select(col("id").as("obs_id"),
-        concat(lit("c"), col("id")).as("obs_name"),
-        concat(lit("type_"), col("id") % 5).as("cell_type"))
-      val vars = spark.range(32).select(col("id").as("var_id"),
-        concat(lit("g"), col("id")).as("var_name"))
-      val x = spark.range(240).select(col("id").as("obs_id"))
-        .crossJoin(spark.range(32).select(col("id").as("var_id")))
-        .filter((col("obs_id") * 5 + col("var_id") * 3) % 7 === 0)
-        .withColumn("value", (col("obs_id") * 11 + col("var_id") * 29) % 53 * 0.5)
+      val (obs, vars, x) = closedForm(spark, 0, 240, 32,
+        i => concat(lit("type_"), i % 5).as("cell_type"))
       val pca = spark.range(240).select(col("id").as("obs_id"))
         .crossJoin(spark.range(4).select(col("id").as("dim_id")))
         .filter((col("obs_id") + col("dim_id")) % 3 === 0)
@@ -587,23 +592,14 @@ object AnnQueries {
     written.getOrElseUpdate("zarr_cat_append", synchronized {
       val p = java.nio.file.Paths.get(
         LifecycleQueries.TempRoot.dir("graft_sink"), "cat.zarr").toString
-      def slice(lo: Long, hi: Long) = (
-        spark.range(hi - lo).select(col("id").as("obs_id"),
-          concat(lit("c"), col("id") + lo).as("obs_name"),
-          when(col("id") + lo < 140, concat(lit("type_"), (col("id") + lo) % 5))
-            .otherwise(concat(lit("late_"), (col("id") + lo) % 2)).as("grade")),
-        spark.range(hi - lo).select(col("id").as("obs_id"))
-          .crossJoin(spark.range(32).select(col("id").as("var_id")))
-          .filter(((col("obs_id") + lo) * 5 + col("var_id") * 3) % 7 === 0)
-          .withColumn("value",
-            ((col("obs_id") + lo) * 11 + col("var_id") * 29) % 53 * 0.5))
-      val vars = spark.range(32).select(col("id").as("var_id"),
-        concat(lit("g"), col("id")).as("var_name"))
-      val (obs0, x0) = slice(0, 140)
+      def slice(lo: Long, hi: Long) = closedForm(spark, lo, hi, 32, i =>
+        when(i < 140, concat(lit("type_"), i % 5))
+          .otherwise(concat(lit("late_"), i % 2)).as("grade"))
+      val (obs0, vars, x0) = slice(0, 140)
       graft.zarr.AnnZarrWriter.write(
         graft.artifact.AnnDataset(obs0, vars, x0), p, chunkElems = 256,
         categoricalCols = Set("obs/grade"))
-      val (obs1, x1) = slice(140, 240)
+      val (obs1, _, x1) = slice(140, 240)
       graft.zarr.AnnZarrWriter.appendRows(obs1, x1, p)
       p
     })
@@ -656,21 +652,10 @@ object AnnQueries {
     written.getOrElseUpdate("zarr_append", synchronized {
       val p = java.nio.file.Paths.get(
         LifecycleQueries.TempRoot.dir("graft_sink"), "grow.zarr").toString
-      def slice(lo: Long, hi: Long) = (
-        spark.range(hi - lo).select(col("id").as("obs_id"),
-          concat(lit("c"), col("id") + lo).as("obs_name"),
-          ((col("id") + lo) % 6).cast("long").as("batch")),
-        spark.range(hi - lo).select(col("id").as("obs_id"))
-          .crossJoin(spark.range(32).select(col("id").as("var_id")))
-          .filter(((col("obs_id") + lo) * 5 + col("var_id") * 3) % 7 === 0)
-          .withColumn("value",
-            ((col("obs_id") + lo) * 11 + col("var_id") * 29) % 53 * 0.5))
-      val vars = spark.range(32).select(col("id").as("var_id"),
-        concat(lit("g"), col("id")).as("var_name"))
-      val (obs0, x0) = slice(0, 160)
+      val (obs0, vars, x0) = closedForm(spark, 0, 160, 32)
       graft.zarr.AnnZarrWriter.write(
         graft.artifact.AnnDataset(obs0, vars, x0), p, chunkElems = 256)
-      val (obs1, x1) = slice(160, 240)
+      val (obs1, _, x1) = closedForm(spark, 160, 240, 32)
       graft.zarr.AnnZarrWriter.appendRows(obs1, x1, p)
       p
     })
@@ -683,22 +668,11 @@ object AnnQueries {
     written.getOrElseUpdate("zarr_v3_append", synchronized {
       val p = java.nio.file.Paths.get(
         LifecycleQueries.TempRoot.dir("graft_sink"), "grow3.zarr").toString
-      def slice(lo: Long, hi: Long) = (
-        spark.range(hi - lo).select(col("id").as("obs_id"),
-          concat(lit("c"), col("id") + lo).as("obs_name"),
-          ((col("id") + lo) % 6).cast("long").as("batch")),
-        spark.range(hi - lo).select(col("id").as("obs_id"))
-          .crossJoin(spark.range(32).select(col("id").as("var_id")))
-          .filter(((col("obs_id") + lo) * 5 + col("var_id") * 3) % 7 === 0)
-          .withColumn("value",
-            ((col("obs_id") + lo) * 11 + col("var_id") * 29) % 53 * 0.5))
-      val vars = spark.range(32).select(col("id").as("var_id"),
-        concat(lit("g"), col("id")).as("var_name"))
-      val (obs0, x0) = slice(0, 160)
+      val (obs0, vars, x0) = closedForm(spark, 0, 160, 32)
       graft.zarr.AnnZarrWriter.write(
         graft.artifact.AnnDataset(obs0, vars, x0), p, chunkElems = 64,
         v3 = true, shardFactor = 4)
-      val (obs1, x1) = slice(160, 240)
+      val (obs1, _, x1) = closedForm(spark, 160, 240, 32)
       graft.zarr.AnnZarrWriter.appendRows(obs1, x1, p)
       p
     })
@@ -711,15 +685,8 @@ object AnnQueries {
     written.getOrElseUpdate("h5ad_encoded", synchronized {
       val p = java.nio.file.Paths.get(
         LifecycleQueries.TempRoot.dir("graft_sink"), "enc.h5ad").toString
-      val obs = spark.range(240).select(col("id").as("obs_id"),
-        concat(lit("c"), col("id")).as("obs_name"),
-        concat(lit("type_"), col("id") % 5).as("cell_type"))
-      val vars = spark.range(32).select(col("id").as("var_id"),
-        concat(lit("g"), col("id")).as("var_name"))
-      val x = spark.range(240).select(col("id").as("obs_id"))
-        .crossJoin(spark.range(32).select(col("id").as("var_id")))
-        .filter((col("obs_id") * 5 + col("var_id") * 3) % 7 === 0)
-        .withColumn("value", (col("obs_id") * 11 + col("var_id") * 29) % 53 * 0.5)
+      val (obs, vars, x) = closedForm(spark, 0, 240, 32,
+        i => concat(lit("type_"), i % 5).as("cell_type"))
       val pca = spark.range(240).select(col("id").as("obs_id"))
         .crossJoin(spark.range(4).select(col("id").as("dim_id")))
         .filter((col("obs_id") + col("dim_id")) % 3 === 0)
@@ -848,14 +815,7 @@ object AnnQueries {
       val p = java.nio.file.Paths.get(
         LifecycleQueries.TempRoot.dir("graft_sink"), "aux.zarr").toString
       def slice(lo: Long, hi: Long) = {
-        val obs = spark.range(hi - lo).select(col("id").as("obs_id"),
-          concat(lit("c"), col("id") + lo).as("obs_name"),
-          ((col("id") + lo) % 6).cast("long").as("batch"))
-        val x = spark.range(hi - lo).select(col("id").as("obs_id"))
-          .crossJoin(spark.range(32).select(col("id").as("var_id")))
-          .filter(((col("obs_id") + lo) * 5 + col("var_id") * 3) % 7 === 0)
-          .withColumn("value",
-            ((col("obs_id") + lo) * 11 + col("var_id") * 29) % 53 * 0.5)
+        val (obs, vars, x) = closedForm(spark, lo, hi, 32)
         val log = spark.range(hi - lo).select(col("id").as("obs_id"))
           .crossJoin(spark.range(32).select(col("id").as("var_id")))
           .filter((col("obs_id") + lo + col("var_id")) % 4 === 1)
@@ -866,16 +826,14 @@ object AnnQueries {
           .filter((col("obs_id") + lo + col("dim_id")) % 2 === 0)
           .withColumn("value",
             ((col("obs_id") + lo) * 7 + col("dim_id") * 11) % 19 * 0.5)
-        (obs, x, log, pca)
+        (obs, vars, x, log, pca)
       }
-      val vars = spark.range(32).select(col("id").as("var_id"),
-        concat(lit("g"), col("id")).as("var_name"))
-      val (obs0, x0, log0, pca0) = slice(0, 140)
+      val (obs0, vars, x0, log0, pca0) = slice(0, 140)
       graft.zarr.AnnZarrWriter.write(
         graft.artifact.AnnDataset(obs0, vars, x0,
           layers = Map("log" -> log0), obsm = Map("X_pca" -> pca0)),
         p, chunkElems = 256, denseSlots = Set("obsm/X_pca"))
-      val (obs1, x1, log1, pca1) = slice(140, 240)
+      val (obs1, _, x1, log1, pca1) = slice(140, 240)
       graft.zarr.AnnZarrWriter.appendRows(obs1, x1, p,
         newLayers = Map("log" -> log1), newObsm = Map("X_pca" -> pca1))
       p
@@ -916,15 +874,7 @@ object AnnQueries {
     written.getOrElseUpdate("zarr_v3", synchronized {
       val p = java.nio.file.Paths.get(
         LifecycleQueries.TempRoot.dir("graft_sink"), "rt3.zarr").toString
-      val obs = spark.range(240).select(col("id").as("obs_id"),
-        concat(lit("c"), col("id")).as("obs_name"),
-        (col("id") % 6).cast("long").as("batch"))
-      val vars = spark.range(32).select(col("id").as("var_id"),
-        concat(lit("g"), col("id")).as("var_name"))
-      val x = spark.range(240).select(col("id").as("obs_id"))
-        .crossJoin(spark.range(32).select(col("id").as("var_id")))
-        .filter((col("obs_id") * 5 + col("var_id") * 3) % 7 === 0)
-        .withColumn("value", (col("obs_id") * 11 + col("var_id") * 29) % 53 * 0.5)
+      val (obs, vars, x) = closedForm(spark, 0, 240, 32)
       graft.zarr.AnnZarrWriter.write(
         graft.artifact.AnnDataset(obs, vars, x), p, chunkElems = 128,
         v3 = true, shardFactor = 4)
@@ -964,10 +914,6 @@ object AnnQueries {
     matrixDfs.foldLeft(unsDf)(_ unionByName _).orderBy("slot")
   }
 
-  /** Sink fixture: written once per (process); closed-form content
-    * mirrored by the a07 oracle. 240x32, mask (i*5+j*3)%7==0,
-    * value ((i*11+j*29)%53)*0.5, obs.batch = i%6.
-    */
   /** a14 sink fixture: every aux slot closed-form —
     * varm.emb[j,k] = ((j*3+k*5)%19)*0.5 (32×4, all cells explicit),
     * obsp.knn mask (i+2j)%41==0, value ((i*2+j)%11)*0.5 (240×240),
@@ -978,15 +924,7 @@ object AnnQueries {
     written.getOrElseUpdate("slots", synchronized {
       val p = java.nio.file.Paths.get(
         LifecycleQueries.TempRoot.dir("graft_sink"), "slots.h5ad")
-      val obs = spark.range(240).select(col("id").as("obs_id"),
-        concat(lit("c"), col("id")).as("obs_name"),
-        (col("id") % 6).cast("long").as("batch"))
-      val vars = spark.range(32).select(col("id").as("var_id"),
-        concat(lit("g"), col("id")).as("var_name"))
-      val x = spark.range(240).select(col("id").as("obs_id"))
-        .crossJoin(spark.range(32).select(col("id").as("var_id")))
-        .filter((col("obs_id") * 5 + col("var_id") * 3) % 7 === 0)
-        .withColumn("value", (col("obs_id") * 11 + col("var_id") * 29) % 53 * 0.5)
+      val (obs, vars, x) = closedForm(spark, 0, 240, 32)
       val emb = spark.range(32).select(col("id").as("var_id"))
         .crossJoin(spark.range(4).select(col("id").as("dim_id")))
         .withColumn("value", (col("var_id") * 3 + col("dim_id") * 5) % 19 * 0.5)
@@ -1016,20 +954,16 @@ object AnnQueries {
     })
 
   private val written = scala.collection.concurrent.TrieMap.empty[String, String]
+
+  /** Sink fixture: written once per (process); the a17 closed forms,
+    * mirrored by the a07 oracle.
+    */
   private def writtenH5ad(spark: SparkSession): String =
     written.getOrElseUpdate("x", synchronized {
       // under the shutdown-cleaned run root like the lifecycle fixtures
       val p = java.nio.file.Paths.get(
         LifecycleQueries.TempRoot.dir("graft_sink"), "rt.h5ad")
-      val obs = spark.range(240).select(col("id").as("obs_id"),
-        concat(lit("c"), col("id")).as("obs_name"),
-        (col("id") % 6).cast("long").as("batch"))
-      val vars = spark.range(32).select(col("id").as("var_id"),
-        concat(lit("g"), col("id")).as("var_name"))
-      val x = spark.range(240).select(col("id").as("obs_id"))
-        .crossJoin(spark.range(32).select(col("id").as("var_id")))
-        .filter((col("obs_id") * 5 + col("var_id") * 3) % 7 === 0)
-        .withColumn("value", (col("obs_id") * 11 + col("var_id") * 29) % 53 * 0.5)
+      val (obs, vars, x) = closedForm(spark, 0, 240, 32)
       graft.h5.AnnH5Writer.write(
         graft.artifact.AnnDataset(obs, vars, x), p.toString)
       p.toString

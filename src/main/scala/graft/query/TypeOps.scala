@@ -23,10 +23,7 @@ object TypeOps {
     if (chain.contains(id))
       throw new IllegalArgumentException(
         s"setting type $typeId on $registry $id would create a cycle through ${chain.mkString(" -> ")}")
-    cat.flush(registry)
-    cat.overwrite(registry,
-      cat.table(registry).withColumn("type_id",
-        when(col("id") === id, lit(typeId)).otherwise(col("type_id"))))
+    cat.update(registry, col("id") === id, "type_id" -> lit(typeId))
   }
 
   /** Super-type chain of a row, nearest first (`query_types`). Walks the

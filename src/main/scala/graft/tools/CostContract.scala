@@ -103,7 +103,7 @@ object CostContract {
       // 8-byte key is what makes this aggregate shuffle ~3× smaller
       val gramDf = corpus
         .select(col("doc_id"),
-          split(trim(col("text")), "\\s+").as("tk"))
+          graft.ext.TextOps.tokens(col("text")).as("tk"))
         .filter(size(col("tk")) >= gramLen)
         .select(posexplode(transform(
           sequence(lit(0), size(col("tk")) - gramLen),

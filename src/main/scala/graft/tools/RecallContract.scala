@@ -38,7 +38,7 @@ object RecallContract {
 
     // deterministic bases: the 4 lowest-id docs with >= 20 tokens
     val bases = docs
-      .filter(size(split(trim(col("text")), "\\s+")) >= 20)
+      .filter(size(graft.ext.TextOps.tokens(col("text"))) >= 20)
       .orderBy("doc_id").limit(nClusters).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     require(bases.length == nClusters, s"need $nClusters base docs")

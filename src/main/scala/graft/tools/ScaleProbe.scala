@@ -102,7 +102,7 @@ object ScaleProbe {
           .select("doc_id", "text")
         val cap = graft.ext.Dedup.gramDfCap(docs.count())
         val gramDf = docs
-          .select(split(trim(col("text")), "\\s+").as("tk"))
+          .select(graft.ext.TextOps.tokens(col("text")).as("tk"))
           .filter(size(col("tk")) >= 13)
           .select(posexplode(transform(
             sequence(lit(0), size(col("tk")) - 13),

@@ -226,6 +226,20 @@ class CatalogSpec extends AnyFunSuite {
       .getAs[String]("key") === "step3.scala")
   }
 
+  test("track then finish commits one run version") {
+    val root = TestSpark.tmpDir("cat")
+    val cat = Catalog.deterministic(spark, root)
+    val lin = new Lineage(cat)
+    val before = TestSpark.manifestVersion(root, "run")
+    val (_, runId) = lin.track("step.scala", "v1")
+    lin.finish()
+    // the buffered run row and its status change land in ONE snapshot
+    assert(TestSpark.manifestVersion(root, "run") === before + 1)
+    val run = cat.table("run").filter(col("id") === runId).head()
+    assert(run.getAs[Int]("status_code") === 0)
+    assert(run.getAs[java.sql.Timestamp]("finished_at") != null)
+  }
+
   test("is_latest window recompute honors base62 decoded order") {
     import spark.implicits._
     val stem = "s" * 16

@@ -1,5 +1,6 @@
 package graft.query
 
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.catalog.Catalog
@@ -26,12 +27,7 @@ class TypeOpsSpec extends AnyFunSuite {
     assert(TypeOps.instancesUnder(cat, "record", ids("t1")).count() === 5)
     assert(TypeOps.instancesUnder(cat, "record", ids("t3")).count() === 2)
     // trash type2 -> only the direct instance of type1 remains reachable
-    cat.flush("record")
-    cat.overwrite("record", cat.table("record")
-      .withColumn("branch_id",
-        org.apache.spark.sql.functions.when(
-          org.apache.spark.sql.functions.col("id") === ids("t2"),
-          Catalog.TrashBranchId).otherwise(org.apache.spark.sql.functions.col("branch_id"))))
+    cat.update("record", col("id") === ids("t2"), "branch_id" -> lit(Catalog.TrashBranchId))
     assert(TypeOps.instancesUnder(cat, "record", ids("t1")).count() === 1)
   }
 

@@ -10,7 +10,9 @@
 set -e
 OUT=${1:?outdir}; shift
 mkdir -p "$OUT"
-. "$(dirname "$0")/add_opens.sh"
+# the checkout this script lives in: its classes and its tools
+REPO=$(cd "$(dirname "$0")/.." && pwd)
+. "$REPO/tools/add_opens.sh"
 for entry in "$@"; do
   for run in 1 2 3; do
     echo "== $entry run $run" >&2
@@ -22,11 +24,11 @@ for entry in "$@"; do
     SPARK_GRAFT_BENCH_ONLY="$entry" \
     SPARK_GRAFT_BENCH_DETAIL="$OUT/${entry}_r${run}.json" \
     java $ADD_OPENS -Xmx${HEAP:-16g} \
-      -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+      -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" \
       graft.Bench > "$OUT/${entry}_r${run}.log" 2>&1 \
       || echo "RUN FAILED: $entry run $run (see $OUT/${entry}_r${run}.log)" >&2
   done
-  python3 /root/repo/tools/rebase_baseline.py "$OUT/${entry}"_r*.json 2>/dev/null \
+  python3 "$REPO/tools/rebase_baseline.py" "$OUT/${entry}"_r*.json 2>/dev/null \
     | grep "^| $entry" \
     || echo "missing row for $entry (all runs failed?)" >&2
 done
