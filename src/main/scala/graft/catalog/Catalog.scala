@@ -27,7 +27,14 @@ import graft.core.{Base62, Versioning}
   *    tables are metadata (small relative to the data plane), and
   *    rewrites are Spark jobs so they scale with the cluster, not the
   *    driver. `overwrite` stays for rewrites that drop rows or need a
-  *    different predicate per column.
+  *    different predicate per column;
+  *  - driver values derived from registry tables (the lineage run DAG's
+  *    adjacency, the feature dictionary) are memoized through `memo`,
+  *    keyed by each source table's manifest version plus its buffered-row
+  *    count: every write path (insert, flush, update, insertVersion,
+  *    overwrite) changes that key, so a memoized value is recomputed
+  *    exactly when a read of its tables could differ, and successive
+  *    reads of an unchanged catalog run no Spark job for it.
   *
   * `seed` makes uid generation and the clock deterministic, which the
   * correctness harness needs; production use passes seed=None semantics via
@@ -45,6 +52,7 @@ final class Catalog(
   private val maxIds = mutable.Map.empty[String, Long]
   private val snapshotCache = mutable.Map.empty[String, DataFrame]
   private val manifest = mutable.Map.empty[String, Int] // table -> version
+  private val memos = mutable.Map.empty[String, (Seq[(Int, Int)], Any)]
 
   /** Branch visibility context (reference: `branch_id` on SQLRecord). */
   var currentBranchId: Long = MainBranchId
@@ -96,6 +104,20 @@ final class Catalog(
       case (Some(s), None)    => s
       case (None, Some(b))    => b
       case (None, None)       => spark.createDataFrame(List.empty[Row].asJava, t.schema)
+    }
+  }
+
+  /** `compute`'s value, reused while every table in `tables` keeps its
+    * state (manifest version, buffered-row count). One entry per `key`.
+    */
+  def memo[T](key: String, tables: Seq[String])(compute: => T): T = {
+    val state = tables.map(n => (manifest.getOrElse(n, 0), buffers.get(n).fold(0)(_.size)))
+    memos.get(key) match {
+      case Some((`state`, v)) => v.asInstanceOf[T]
+      case _ =>
+        val v = compute
+        memos(key) = (state, v)
+        v
     }
   }
 

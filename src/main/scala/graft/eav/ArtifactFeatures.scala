@@ -146,7 +146,9 @@ final class ArtifactFeatures(cat: Catalog) {
     Some(cat.table("artifact_ulabels")
       .select(col("artifact_id").as("record_id"), col("feature_id"),
         col("ulabel_id").as("label_id"))),
-    Some(cat.table("ulabel").select("id", "name")))
+    Some(cat.table("ulabel").select("id", "name")),
+    Some(() => cat.memo("eav.featureDictionary", Seq("feature"))(
+      FeatureStore.dictionary(cat.table("feature")))))
 
   /** Artifact QuerySet with EAV dispatch: unknown filter keys route to
     * the feature layer (`filter_with_features`).

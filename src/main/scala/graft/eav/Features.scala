@@ -39,19 +39,19 @@ final class FeatureStore(
     val features: DataFrame,
     val values: DataFrame,
     val labelLinks: Option[DataFrame] = None,
-    val labels: Option[DataFrame] = None
+    val labels: Option[DataFrame] = None,
+    dictionary: Option[() => Map[String, (Long, String)]] = None
 ) {
 
   /** Feature dictionary (name -> (id, dtype)), collected ONCE per store,
-    * lazily. The dictionary is metadata-scale by definition; caching it
-    * turns predicate compilation into pure driver work — a 3-predicate
-    * filter used to launch a lookup job (`head`/`isEmpty`) per predicate
-    * before planning a single semi-join.
+    * lazily, unless the caller supplies it (`ArtifactFeatures` keeps one
+    * per catalog state). The dictionary is metadata-scale by definition;
+    * caching it turns predicate compilation into pure driver work — a
+    * 3-predicate filter used to launch a lookup job (`head`/`isEmpty`) per
+    * predicate before planning a single semi-join.
     */
   private lazy val dict: Map[String, (Long, String)] =
-    features.select("id", "name", "dtype").collect()
-      .map(r => r.getString(1) -> (r.getLong(0), Option(r.getString(2)).getOrElse("str")))
-      .toMap
+    dictionary.fold(FeatureStore.dictionary(features))(_())
 
   /** Is the feature name known to this store? (No cluster job.) */
   def knows(name: String): Boolean = dict.contains(name)
@@ -209,6 +209,16 @@ final class FeatureStore(
     }
     records.select(col(pk)).join(typed, Seq(pk), "left")
   }
+}
+
+object FeatureStore {
+  /** Collects a `features(id, name, dtype)` frame as name -> (id, dtype);
+    * a null dtype reads as "str".
+    */
+  def dictionary(features: DataFrame): Map[String, (Long, String)] =
+    features.select("id", "name", "dtype").collect()
+      .map(r => r.getString(1) -> (r.getLong(0), Option(r.getString(2)).getOrElse("str")))
+      .toMap
 }
 
 /** FilteredRelation-style annotation (`get_feature_annotate_kwargs`,

@@ -1,68 +1,101 @@
 package graft.lineage
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Set-based BFS over a DAG edge table — the Spark analog of the
-  * reference's frontier-loop traversal (`lamindb/models/has_parents.py:
-  * 34-71`, "optimized to have fewer recursive calls": one query per level,
-  * not per node). Spark SQL has no recursive CTE; the loop lives in the
-  * driver, the per-level joins on the cluster, exactly like the reference
-  * runs one DB query per level.
+/** BFS over an edge table — the Spark analog of the reference's
+  * frontier-loop traversal (`lamindb/models/has_parents.py:34-71`, one
+  * query per level, not per node).
+  *
+  * Lineage and type graphs are metadata-scale, so the default path
+  * collects the edge table once and walks a driver adjacency: no job per
+  * level. Callers that traverse the same graph repeatedly keep the
+  * adjacency (`Lineage` memoizes it per catalog state) and call the
+  * adjacency variant of `reachable`, whose walk runs no cluster job.
+  * Edge tables above `localFrontierLimit` edges take
+  * `reachableDistributed`, where frontier and visited set never leave
+  * the cluster.
   */
 object Graph {
 
+  /** Successors per node, built on the driver. */
+  type Adjacency = Map[Long, Array[Long]]
+
+  /** Edges (and start nodes) a driver walk takes on by default. */
+  val DefaultLocalLimit: Int = 4000000
+
+  /** `fromCol -> toCol` edges as driver pairs (edges with a null end are
+    * dropped: they reach nothing), or None when the table has more than
+    * `limit` edges.
+    */
+  def collectEdges(edges: DataFrame, fromCol: String, toCol: String,
+                   limit: Int = DefaultLocalLimit): Option[Array[(Long, Long)]] = {
+    val rows = edges
+      .select(col(fromCol).cast("long").as("from"), col(toCol).cast("long").as("to"))
+      .na.drop()
+      .limit(math.min(limit, Int.MaxValue - 1) + 1).collect()
+    if (rows.length > limit) None
+    else Some(rows.map(r => (r.getLong(0), r.getLong(1))))
+  }
+
+  def adjacency(edges: Iterable[(Long, Long)]): Adjacency =
+    edges.groupMap(_._1)(_._2).map { case (k, vs) => k -> vs.toArray }
+
+  /** Min BFS depth of every node reachable from `start` (depth 0), in
+    * visit order. `maxDepth < 0` runs to fixpoint; the visited set makes
+    * cycles terminate.
+    */
+  def walk(adj: Adjacency, start: Iterable[Long], maxDepth: Int): Seq[(Long, Int)] = {
+    val visited = mutable.LinkedHashMap.empty[Long, Int]
+    start.foreach(visited.getOrElseUpdate(_, 0))
+    var frontier = visited.keys.toVector
+    var depth = 0
+    while (frontier.nonEmpty && (maxDepth < 0 || depth < maxDepth)) {
+      depth += 1
+      val next = Vector.newBuilder[Long]
+      frontier.foreach(n => adj.getOrElse(n, Array.emptyLongArray).foreach { m =>
+        if (!visited.contains(m)) { visited(m) = depth; next += m }
+      })
+      frontier = next.result()
+    }
+    visited.toSeq
+  }
+
   /** All nodes reachable from `start` following `fromCol -> toCol` edges,
-    * annotated with min BFS depth. `maxDepth < 0` means unbounded (runs to
-    * fixpoint; the visited-set subtraction guarantees termination on DAGs
-    * and cycles alike).
+    * annotated with min BFS depth (0 = the start set). `maxDepth < 0`
+    * means unbounded.
     *
-    * Execution: the frontier is driver-resident (it was always assumed
-    * broadcast-small — lineage frontiers are metadata-scale), so each
-    * level is exactly ONE cluster job: broadcast the frontier from a
-    * local relation (no collect job), semi-join the edge table, collect
-    * the next frontier. The visited set and depth map stay on the driver.
-    * Edges are cached across levels. If a frontier outgrows
-    * `localFrontierLimit`, falls back to the fully distributed loop.
+    * Collects the start set and at most `localFrontierLimit` edges, then
+    * walks them on the driver. A start set or edge table above the limit
+    * runs `reachableDistributed` instead.
     *
-    * Returns (node, depth) with depth 0 = the start set.
+    * Returns (node, depth).
     */
   def reachable(edges: DataFrame, start: DataFrame, fromCol: String, toCol: String,
-                maxDepth: Int = -1, localFrontierLimit: Int = 4000000): DataFrame = {
+                maxDepth: Int = -1, localFrontierLimit: Int = DefaultLocalLimit): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val startIds = start.select(col(start.columns.head).cast("long")).as[Long].collect().distinct
-    if (startIds.length > localFrontierLimit)
-      return reachableDistributed(edges, start, fromCol, toCol, maxDepth)
+    val collected =
+      if (startIds.length > localFrontierLimit) None
+      else collectEdges(edges, fromCol, toCol, localFrontierLimit)
+    collected match {
+      case Some(pairs) => reachable(spark, adjacency(pairs), startIds.toSeq, maxDepth)
+      case None        => reachableDistributed(edges, start, fromCol, toCol, maxDepth)
+    }
+  }
 
-    val cached = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val visited = scala.collection.mutable.LinkedHashMap.empty[Long, Int]
-      startIds.foreach(visited.update(_, 0))
-      var frontier: Array[Long] = startIds
-      var depth = 0
-      while (frontier.nonEmpty && (maxDepth < 0 || depth < maxDepth)) {
-        depth += 1
-        val fdf = frontier.toSeq.toDF(fromCol)
-        // no .distinct(): dedup on the driver instead of paying a shuffle
-        // per level (collect size is bounded by edge fan-in x frontier)
-        val next = cached
-          .join(broadcast(fdf), fromCol)
-          .select(col(toCol).cast("long"))
-          .as[Long].collect()
-        frontier = next.distinct.filterNot(visited.contains)
-        if (visited.size + frontier.length > localFrontierLimit) {
-          // graph outgrew the driver: restart distributed (rare path)
-          return reachableDistributed(edges, start, fromCol, toCol, maxDepth)
-        }
-        frontier.foreach(visited.update(_, depth))
-      }
-      visited.toSeq.toDF("node", "depth")
-    } finally cached.unpersist(blocking = false)
+  /** `reachable` over an already-collected adjacency: the walk runs on
+    * the driver and the result is a local frame.
+    */
+  def reachable(spark: SparkSession, adj: Adjacency, start: Seq[Long], maxDepth: Int): DataFrame = {
+    import spark.implicits._
+    walk(adj, start, maxDepth).toDF("node", "depth")
   }
 
   /** Fully distributed BFS (frontier/visited never leave the cluster):
-    * the path for graphs whose frontiers exceed driver memory. Same
+    * the path for graphs whose edges exceed driver memory. Same
     * result contract as `reachable`.
     */
   def reachableDistributed(edges: DataFrame, start: DataFrame, fromCol: String, toCol: String,

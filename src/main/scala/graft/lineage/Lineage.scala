@@ -113,16 +113,29 @@ final class Lineage(val cat: Catalog) {
       .distinct()
   }
 
+  /** The run DAG as driver adjacencies (producer -> consumer, consumer ->
+    * producer), collected once per state of `artifact` and `run_inputs`;
+    * None when the edge table is above `Graph.DefaultLocalLimit`.
+    */
+  private def runDag: Option[(Graph.Adjacency, Graph.Adjacency)] =
+    cat.memo("lineage.runDag", Seq("artifact", "run_inputs")) {
+      Graph.collectEdges(artifactRunEdges, "parent", "child").map(e =>
+        (Graph.adjacency(e), Graph.adjacency(e.map(_.swap))))
+    }
+
   /** Upstream/downstream runs of a run (BFS over the run DAG) —
     * `all_parent_runs`/`all_child_runs` (`has_parents.py:527,573`).
     */
-  def downstreamRuns(runId: Long, maxDepth: Int = -1): DataFrame = {
-    val start = cat.spark.range(runId, runId + 1).select(col("id").as("node"))
-    Graph.descendants(artifactRunEdges, start, "parent", "child", maxDepth)
+  def downstreamRuns(runId: Long, maxDepth: Int = -1): DataFrame = runDag match {
+    case Some((down, _)) => Graph.reachable(cat.spark, down, Seq(runId), maxDepth)
+    case None => Graph.reachableDistributed(artifactRunEdges, runStart(runId), "parent", "child", maxDepth)
   }
 
-  def upstreamRuns(runId: Long, maxDepth: Int = -1): DataFrame = {
-    val start = cat.spark.range(runId, runId + 1).select(col("id").as("node"))
-    Graph.ancestors(artifactRunEdges, start, "parent", "child", maxDepth)
+  def upstreamRuns(runId: Long, maxDepth: Int = -1): DataFrame = runDag match {
+    case Some((_, up)) => Graph.reachable(cat.spark, up, Seq(runId), maxDepth)
+    case None => Graph.reachableDistributed(artifactRunEdges, runStart(runId), "child", "parent", maxDepth)
   }
+
+  private def runStart(runId: Long): DataFrame =
+    cat.spark.range(runId, runId + 1).select(col("id").as("node"))
 }

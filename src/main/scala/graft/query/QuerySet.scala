@@ -403,25 +403,15 @@ final class QuerySet(
     limit match {
       case None => (ordered.df, false)
       case Some(n) =>
-        // truncation detected on the first n+1 ids, BEFORE any annotate
-        // fan-out; the subset is rebuilt from those ids with the original
-        // order preserved positionally
-        val ids = ordered.df.select(t.pk).head(n + 1).map(_.get(0))
-        val isTruncated = ids.length > n
-        val keep = ids.take(n)
-        if (keep.isEmpty) (ordered.df.limit(0), false)
-        else {
-          val spark = baseDf.sparkSession
-          import scala.jdk.CollectionConverters._
-          val posSchema = org.apache.spark.sql.types.StructType(Seq(
-            ordered.df.schema(t.pk),
-            org.apache.spark.sql.types.StructField("__pos", org.apache.spark.sql.types.IntegerType)))
-          val posDf = spark.createDataFrame(
-            keep.zipWithIndex.map { case (v, i) => Row(v, i) }.toList.asJava, posSchema)
-          val out = ordered.df.join(broadcast(posDf), Seq(t.pk))
-            .orderBy(col("__pos")).drop("__pos")
-          (out, isTruncated)
-        }
+        // one pass: the first n+1 rows of the ordered plan decide
+        // truncation, and the first n come back as a local frame, so the
+        // caller's collect runs no second job and the pre-limit order
+        // holds by construction
+        val plan = ordered.df
+        val rows = plan.head(n + 1)
+        import scala.jdk.CollectionConverters._
+        val out = baseDf.sparkSession.createDataFrame(rows.take(n).toList.asJava, plan.schema)
+        (out, rows.length > n)
     }
   }
 

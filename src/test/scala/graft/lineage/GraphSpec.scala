@@ -65,8 +65,7 @@ class GraphSpec extends AnyFunSuite {
   test("frontier overflow falls back to the distributed loop automatically") {
     val edges = binTree()
     val start = Seq(0L).toDF("node")
-    // limit smaller than the visited set forces the MID-LOOP restart
-    // (visited + frontier outgrow the driver budget at depth ~4)
+    // limit smaller than the edge table (126 edges) skips the collect
     val fromFallback = Graph.reachable(edges, start, "parent", "child",
       localFrontierLimit = 20)
       .as[(Long, Int)].collect().toMap

@@ -134,6 +134,20 @@ class QuerySetSpec extends AnyFunSuite {
     assert(df5.select("id").as[Long].collect().toSeq === Seq(1L, 2L, 3L, 4L, 5L)) // explicit order wins
   }
 
+  test("toDataFrame: a non-unique pk returns each row once, limit and order kept") {
+    // the ids-then-join rebuild returned [3,a],[3,b],[3,a],[3,b] here:
+    // every row of a duplicated id came back once per kept id
+    val dup = Seq((3L, "a"), (3L, "b"), (2L, "c"), (1L, "d")).toDF("doc_id", "v")
+    val (df, truncated) = QuerySet.over(dup, "docs", pk = "doc_id")
+      .toDataFrame(limit = Some(2), defaultOrder = Some("-doc_id"))
+    val rows = df.as[(Long, String)].collect().toSeq
+    assert(truncated === true)
+    assert(rows.length === 2)
+    assert(rows.map(_._1) === Seq(3L, 3L))
+    assert(rows.map(_._2).toSet === Set("a", "b"))
+    assert(df.schema === dup.schema)
+  }
+
   test("searchQs.toDataFrame preserves rank order after the limit rebuild") {
     val (ranked, _) = qs.searchQs("cell", fields = Seq("name"), limit = 2).toDataFrame(limit = Some(2))
     val names = ranked.select("name").as[String].collect().toSeq

@@ -1211,27 +1211,10 @@ class ZarrWriterSpec extends AnyFunSuite {
       Row(i.toLong, s"append-c$i", (i % 8).toLong)).asJava, obsSchema)
     val x1 = spark.createDataFrame((for (i <- 0 until nAdd; j <- 0 until nV
       if hit(1, i, j)) yield Row(i.toLong, j.toLong, value(i, j))).asJava, xSchema)
-    val token = "zarr-job-pin"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty(token) == "1")
-          jobs.incrementAndGet()
-    }
-    def jobsOf(body: => Unit): Int = {
-      val sc = spark.sparkContext
-      org.apache.spark.ListenerBusDrain.drain(sc)
-      jobs.set(0)
-      sc.setLocalProperty(token, "1")
-      try body finally sc.setLocalProperty(token, null)
-      org.apache.spark.ListenerBusDrain.drain(sc)
-      jobs.get()
-    }
     val p = TestSpark.tmpDir("graft_jobpin") + "/pin.zarr"
-    spark.sparkContext.addSparkListener(listener)
-    val (writeJobs, appendJobs) =
-      try (jobsOf(AnnZarrWriter.write(base, p)), jobsOf(AnnZarrWriter.appendRows(obs1, x1, p)))
-      finally spark.sparkContext.removeSparkListener(listener)
+    val sc = spark.sparkContext
+    val writeJobs = org.apache.spark.ListenerBusDrain.jobs(sc)(AnnZarrWriter.write(base, p))
+    val appendJobs = org.apache.spark.ListenerBusDrain.jobs(sc)(AnnZarrWriter.appendRows(obs1, x1, p))
     info(s"write: $writeJobs jobs, append: $appendJobs jobs")
     val ds = AnnZarr.open(spark, p)
     assert(ds.obs.count() == nO + nAdd)
