@@ -138,35 +138,12 @@ object Bench {
   /** Workload position whose host factor normalizes an entry's KEPT
     * measurement: the first-pass position normally, the last probe's
     * position when the kept median came from the end-of-suite retry
-    * pass. The last probe is `RetryProbe`, run right after the retry
-    * pass, so its factor is the one in effect when the retries were
-    * measured; only when it did not run (no retries) or failed does x99
-    * stand in.
+    * pass (retries run after x99, so the end factor is the one in
+    * effect when the number was actually measured).
     */
   private[graft] def measurementPosition(firstPassPos: Int, keptRetry: Boolean,
       lastProbePos: Int): Int =
     if (keptRetry) lastProbePos else firstPassPos
-
-  /** Calibration probe run after the end-of-suite retry pass, at run
-    * position one past the last suite entry. x99 runs BEFORE the
-    * retries: normalizing kept retries by it over-corrects them when an
-    * end-of-run burst that inflated x99 is gone by the time they run.
-    * It feeds normalization only, never `isContaminated` or the retry
-    * gate, which read the first-pass x00/x99.
-    */
-  private[graft] val RetryProbe = "xretry_calibration"
-
-  /** Host-factor-normalized total over (first-pass position, kept retry,
-    * kept median) entries and (position, factor) probes: each median
-    * divided by the factor at `measurementPosition`.
-    */
-  private[graft] def normalizedTotal(entries: Seq[(Int, Boolean, Double)],
-      probes: Seq[(Int, Double)]): Double = {
-    val lastProbePos = if (probes.isEmpty) 0 else probes.map(_._1).max
-    entries.map { case (pos, keptRetry, med) =>
-      med / interpolateHostFactor(probes, measurementPosition(pos, keptRetry, lastProbePos))
-    }.sum
-  }
 
   /** The JSON-line `queries` subset. Contract: entries may be ADDED but
     * never removed or renamed — every name that has appeared in a
@@ -536,8 +513,6 @@ object Bench {
       .sortBy(-_._2).map(_._1).take(16)
     val retryTimes: Map[String, (Double, Double)] =
       retryNames.map(n => n -> median3(bodyByName(n)())).toMap
-    val retryProbe: Option[Double] =
-      if (calibrate && retryNames.nonEmpty) Some(median3(calibBody())._1) else None
 
     val retriedLog = retryNames.flatMap { n =>
       retryTimes.get(n).map(r => n -> (firstPass.toMap.apply(n), r))
@@ -600,11 +575,11 @@ object Bench {
 
     // ---- host-factor normalization (round-17 verdict ask #1) ----
     // Each calibration probe yields a (run position, measured/row)
-    // point; mid-suite and post-retry probes compare against the x99
-    // row (by x25 the JVM is in the same fully-warm state x99's row was
-    // measured in — x00's row embeds the colder post-warmup state and
-    // only prices x00 itself). Per-entry host factor interpolates
-    // between the bracketing probes; normalized_total is what the run's workload
+    // point; mid-suite probes compare against the x99 row (by x25 the
+    // JVM is in the same fully-warm state x99's row was measured in —
+    // x00's row embeds the colder post-warmup state and only prices
+    // x00 itself). Per-entry host factor interpolates between the
+    // bracketing probes; normalized_total is what the run's workload
     // total WOULD have been on a baseline-speed box, judgeable against
     // baseline_total (the governRow sum over the same matched entries)
     // even when the run self-flags contaminated.
@@ -612,29 +587,32 @@ object Bench {
     def calibRowFor(nm: String): Option[Double] =
       if (nm == "x00_calibration") baselineMed.get("x00_calibration")
       else baselineMed.get("x99_calibration")
-    val probeMedians: Seq[(String, Int, Double)] =
-      allBodies.map(_._1).filter(_.startsWith("x")).flatMap(nm =>
-        firstPass.toMap.get(nm).map(m => (nm, posByName(nm), m._1))) ++
-        retryProbe.map(m => (RetryProbe, allBodies.size, m))
-    val calibPoints: Seq[(String, Int, Double)] = probeMedians.flatMap { case (nm, p, m) =>
-      calibRowFor(nm).filter(b => b > 0 && m > 0).map(b => (nm, p, m / b))
-    }
+    val calibPoints: Seq[(String, Int, Double)] = allBodies.map(_._1).collect {
+      case nm if nm.startsWith("x") =>
+        for {
+          m <- firstPass.toMap.get(nm).map(_._1) if m > 0
+          b <- calibRowFor(nm) if b > 0
+        } yield (nm, posByName(nm), m / b)
+    }.flatten
     val probePts = calibPoints.map { case (_, p, f) => (p, f) }
     val matched = all.toSeq.collect {
       case (nm, (med, _)) if !nm.startsWith("x") && med > 0 && baselineGov.contains(nm) =>
         (nm, med, baselineGov(nm))
     }
-    // a kept RETRY median was measured in the end-of-suite retry pass —
-    // normalize it by the host factor where it was MEASURED (the probe
-    // after the retry pass), not at the entry's first-pass position:
+    // a kept RETRY median was measured in the end-of-suite retry pass,
+    // AFTER x99 — normalize it by the host factor where it was MEASURED
+    // (the last probe position), not at the entry's first-pass position:
     // on a mid-run-degraded box the first-pass factor is the inflated
     // one, and dividing a healthy retry by it would systematically
     // understate normalized_total (r18 review)
     val keptRetry: Set[String] = firstPass.collect {
       case (n, first) if retryTimes.get(n).exists(keepsRetry(first, _)) => n
     }.toSet
-    val normTotal = normalizedTotal(
-      matched.map { case (nm, med, _) => (posByName(nm), keptRetry(nm), med) }, probePts)
+    val lastProbePos = if (probePts.isEmpty) 0 else probePts.map(_._1).max
+    val normalizedTotal = matched.map { case (nm, med, _) =>
+      med / interpolateHostFactor(probePts,
+        measurementPosition(posByName(nm), keptRetry(nm), lastProbePos))
+    }.sum
     val baselineTotal = matched.map(_._3).sum
     val hasNorm = matched.nonEmpty && probePts.nonEmpty
     // the full (name, position, factor) probe series plus baseline_total
@@ -648,23 +626,19 @@ object Bench {
       else calibPoints.map { case (nm, p, f) =>
         "\"" + nm + "\":{\"pos\":" + p + ",\"factor\":" + r3(f) + "}"
       }.mkString("\"calib_points\":{", ",", "},") +
-        s""""normalized_total":${r3(normTotal)},""" +
+        s""""normalized_total":${r3(normalizedTotal)},""" +
         s""""baseline_total":${r3(baselineTotal)},""" +
-        s""""normalized_ratio":${r3(normTotal / baselineTotal)},""" +
+        s""""normalized_ratio":${r3(normalizedTotal / baselineTotal)},""" +
         s""""n_matched":${matched.size},"""
     // 2-decimal factors on the LINE only; full r3 series in the detail
     def r2(v: Double): String =
       java.lang.String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    // the post-retry probe point stays in the detail only: one more
-    // pair pushes the worst-case line past its byte budget
-    // (BenchGovernanceSpec); normalized_total already reflects it
     val normFieldsLine =
       if (!hasNorm) ""
-      else calibPoints.filter(_._1 != RetryProbe)
-        .map { case (_, p, f) => "[" + p + "," + r2(f) + "]" }
+      else calibPoints.map { case (_, p, f) => "[" + p + "," + r2(f) + "]" }
         .mkString("\"calib_points\":[", ",", "],") +
-        s""""normalized_total":${r3(normTotal)},""" +
-        s""""normalized_ratio":${r3(normTotal / baselineTotal)},"""
+        s""""normalized_total":${r3(normalizedTotal)},""" +
+        s""""normalized_ratio":${r3(normalizedTotal / baselineTotal)},"""
 
     val driftBase = calibDrift.map(d => s""""calib_drift":${r3(d)},""").getOrElse("") +
       calibDriftEnd.map(d => s""""calib_drift_end":${r3(d)},""").getOrElse("") +

@@ -115,25 +115,26 @@ final class Lineage(val cat: Catalog) {
 
   /** The run DAG as driver adjacencies (producer -> consumer, consumer ->
     * producer), collected once per state of `artifact` and `run_inputs`;
-    * None when the edge table is above `Graph.DefaultLocalLimit`.
+    * None above `Graph.DriverEdgeLimit` edges.
     */
   private def runDag: Option[(Graph.Adjacency, Graph.Adjacency)] =
     cat.memo("lineage.runDag", Seq("artifact", "run_inputs")) {
-      Graph.collectEdges(artifactRunEdges, "parent", "child").map(e =>
+      Graph.collectEdges(artifactRunEdges, "parent", "child", Graph.DriverEdgeLimit).map(e =>
         (Graph.adjacency(e), Graph.adjacency(e.map(_.swap))))
     }
 
   /** Upstream/downstream runs of a run (BFS over the run DAG) —
-    * `all_parent_runs`/`all_child_runs` (`has_parents.py:527,573`).
+    * `all_parent_runs`/`all_child_runs` (`has_parents.py:527,573`). Above
+    * the driver edge limit they take `Graph`'s per-level loop.
     */
   def downstreamRuns(runId: Long, maxDepth: Int = -1): DataFrame = runDag match {
     case Some((down, _)) => Graph.reachable(cat.spark, down, Seq(runId), maxDepth)
-    case None => Graph.reachableDistributed(artifactRunEdges, runStart(runId), "parent", "child", maxDepth)
+    case None => Graph.descendants(artifactRunEdges, runStart(runId), "parent", "child", maxDepth)
   }
 
   def upstreamRuns(runId: Long, maxDepth: Int = -1): DataFrame = runDag match {
     case Some((_, up)) => Graph.reachable(cat.spark, up, Seq(runId), maxDepth)
-    case None => Graph.reachableDistributed(artifactRunEdges, runStart(runId), "child", "parent", maxDepth)
+    case None => Graph.ancestors(artifactRunEdges, runStart(runId), "parent", "child", maxDepth)
   }
 
   private def runStart(runId: Long): DataFrame =

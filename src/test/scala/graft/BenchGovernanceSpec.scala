@@ -282,21 +282,4 @@ class BenchGovernanceSpec extends AnyFunSuite {
     assert(Bench.measurementPosition(100, keptRetry = false, lastProbePos = 179) == 100)
     assert(Bench.measurementPosition(100, keptRetry = true, lastProbePos = 179) == 179)
   }
-
-  test("normalizedTotal: kept retries divide by the probe run after the retry pass") {
-    // an end-of-run burst doubles x99 (pos 100); it is gone when the
-    // retries and the post-retry probe (pos 101) run
-    val suite = Seq((0, 1.0), (50, 1.0), (100, 2.0))
-    val withRetryProbe = suite :+ ((101, 1.0))
-    val retried = Seq((60, true, 2.0))
-    // normalized at x99 the healthy 2 s retry read as 1 s
-    assert(Bench.normalizedTotal(retried, suite) == 1.0)
-    assert(Bench.normalizedTotal(retried, withRetryProbe) == 2.0)
-    // first-pass entries keep their interpolated suite factor (1.2 at 60)
-    val firstPass = Seq((60, false, 2.4), (10, false, 1.0))
-    assert(Bench.normalizedTotal(firstPass, withRetryProbe) == Bench.normalizedTotal(firstPass, suite))
-    assert(math.abs(Bench.normalizedTotal(firstPass, suite) - 3.0) < 1e-12)
-    // no probes: unnormalized
-    assert(math.abs(Bench.normalizedTotal(retried ++ firstPass, Nil) - 5.4) < 1e-12)
-  }
 }

@@ -10,12 +10,16 @@ import graft.TestSpark
   * self-loops, ring with a self-loop, layered diamonds, long chains, a
   * start node with no edges), each with a few random extra edges, and
   * through the depth caps -1, 0, 1 and k in 2..5. Every case runs the
-  * driver adjacency walk in both directions and the edge-table driver
-  * path. The distributed loop is reached by lowering
-  * `localFrontierLimit` below the edge count; it runs once per depth
-  * cap over the disjoint union of that cap's cases (case i owns node ids
-  * [1000 i, 1000 i + 1000)), where a multi-source BFS equals the per-case
-  * BFS on every component.
+  * driver adjacency walk in both directions and the edge-table path
+  * (collect + walk, the tables being far below `Graph.DriverEdgeLimit`).
+  * The per-level loop and the distributed loop are reached by lowering
+  * `localFrontierLimit`: below the edge count (and above everything the
+  * BFS reaches) the loop runs to the end; at the start set's size the
+  * loop restarts distributed after level 1; below it the distributed loop
+  * runs from the start. These run once per depth cap over the disjoint
+  * union of that cap's cases (case i owns node ids [1000 i, 1000 i +
+  * 1000)), where a multi-source BFS equals the per-case BFS on every
+  * component.
   */
 class GraphPropertySpec extends AnyFunSuite {
   import GraphPropertySpec._
@@ -90,15 +94,14 @@ class GraphPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("distributed loop (lowered localFrontierLimit) equals the model") {
+  test("per-level and distributed loops (lowered localFrontierLimit) equal the model") {
     cases.groupBy(_.maxDepth).toSeq.sortBy(_._1).foreach { case (maxDepth, cs) =>
       val edges = cs.flatMap(c => c.edges.map { case (a, b) => (off(c, a), off(c, b)) })
       val start = cs.flatMap(c => c.start.map(off(c, _)))
       val (edf, sdf) = (edges.toDF("parent", "child"), start.toDF("node"))
-      assert(start.size < edges.size - 1)
-      // at the edge count the driver path still runs; one below it, the
-      // distributed loop does
-      Seq(edges.size, edges.size - 1).foreach { limit =>
+      val reached = cs.map(c => bfs(c.edges, c.start, c.maxDepth).size).sum
+      assert(reached <= edges.size - 1 && start.size > 1)
+      Seq(edges.size - 1, start.size, start.size - 1).foreach { limit =>
         val got = Graph.reachable(edf, sdf, "parent", "child", maxDepth, localFrontierLimit = limit)
           .as[(Long, Int)].collect().groupBy(_._1 / Span)
         cs.foreach { c =>

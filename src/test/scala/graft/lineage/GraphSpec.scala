@@ -65,7 +65,8 @@ class GraphSpec extends AnyFunSuite {
   test("frontier overflow falls back to the distributed loop automatically") {
     val edges = binTree()
     val start = Seq(0L).toDF("node")
-    // limit smaller than the edge table (126 edges) skips the collect
+    // limit smaller than the visited set forces the MID-LOOP restart
+    // (visited + frontier outgrow the driver budget at depth ~4)
     val fromFallback = Graph.reachable(edges, start, "parent", "child",
       localFrontierLimit = 20)
       .as[(Long, Int)].collect().toMap
