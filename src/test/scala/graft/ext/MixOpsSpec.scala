@@ -3,6 +3,7 @@ package graft.ext
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import ComponentsPropertySpec.singleTask
 
 /** Round-4 corpus-curation operators: connected-component duplicate
   * resolution, C4-style line dedup, benchmark decontamination, domain-mix
@@ -23,16 +24,52 @@ class MixOpsSpec extends AnyFunSuite {
   }
 
   test("connectedComponents converges on a long chain (pointer jumping)") {
-    // a 64-node path needs ~log2(64) rounds with jumps, not 64
+    // a 64-node path needs ~log2(64) rounds with jumps, not 64 (the
+    // label-propagation loop that runs above Dedup.LocalEdgeLimit edges)
     val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(pairs, maxIters = 10)
+    val cc = Dedup.labelPropagation(pairs, maxIters = 10)._1
       .as[(Long, Long)].collect()
     assert(cc.length === 64 && cc.forall(_._2 === 0L))
   }
 
+  test("connectedComponents: a null end joins nothing, one null row, on both paths") {
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (null, 3L), (4L, null), (5L, 5L))
+      .toDF("id_a", "id_b")
+    val want = Seq("[1,1]", "[2,1]", "[3,3]", "[4,4]", "[5,5]", "[null,null]")
+    val cc = Dedup.connectedComponents(pairs)
+    assert(singleTask(cc) && cc.collect().map(_.toString).sorted.toSeq === want)
+    assert(Dedup.labelPropagation(pairs)._1.collect().map(_.toString).sorted.toSeq === want)
+  }
+
+  test("connectedComponents on a small graph: one task, at most 4 jobs with the caller's collect") {
+    // 10 chains of 20 nodes (the label-propagation loop takes 24 jobs here)
+    val pairs = spark.range(0, 200).filter(col("id") % 20 =!= 19)
+      .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    var cc: Array[(Long, Long)] = null
+    val jobs = org.apache.spark.ListenerBusDrain.jobs(spark.sparkContext) {
+      val df = Dedup.connectedComponents(pairs)
+      assert(singleTask(df))
+      cc = df.as[(Long, Long)].collect()
+    }
+    assert(jobs <= 4, s"$jobs Spark jobs")
+    assert(cc.toMap === (0L until 200L).map(i => i -> i / 20 * 20).toMap)
+  }
+
+  test("exactly LocalEdgeLimit edges take the single task, one more takes the loop") {
+    // copies of one edge: the edge count decides, the graph stays two nodes
+    def copies(n: Long) = spark.range(0, n).select((col("id") * 0).as("id_a"), (col("id") * 0 + 1).as("id_b"))
+    Seq(Dedup.LocalEdgeLimit.toLong -> true, Dedup.LocalEdgeLimit + 1L -> false).foreach { case (n, single) =>
+      val cc = Dedup.connectedComponents(copies(n))
+      assert(singleTask(cc) === single, n)
+      assert(cc.as[(Long, Long)].collect().toSet === Set(0L -> 0L, 1L -> 0L), n)
+    }
+  }
+
   test("connectedComponents handles an empty pair set") {
     val pairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(Dedup.connectedComponents(pairs).count() === 0)
+    val cc = Dedup.connectedComponents(pairs)
+    assert(singleTask(cc) && cc.count() === 0)
+    assert(Dedup.labelPropagation(pairs)._1.count() === 0)
   }
 
   test("resolveDuplicates: singletons are their own canonical cluster") {
