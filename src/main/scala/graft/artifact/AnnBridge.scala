@@ -185,15 +185,19 @@ object AnnBridge {
       require(orphanObs == 0 && orphanVar == 0,
         s"X is misaligned: $orphanObs entries without obs row, $orphanVar without var row")
     }
-    val slots =
-      Seq("obs" -> ds.obs, "var" -> ds.vars, "X" -> ds.x) ++
-        ds.obsm.toSeq.sortBy(_._1).map { case (k, m) => s"obsm.$k" -> m } ++
-        ds.layers.toSeq.sortBy(_._1).map { case (k, l) => s"layers.$k" -> l }
     // n_observations = the obs slot's row count, measured on the slot's
     // own write job (nObsSlot) — not a separate ds.obs.count() pass
-    store.fromSlots(slots, key, storageRoot, suffix = ".anndata", otype = "AnnData",
+    store.fromSlots(slotsOf(ds), key, storageRoot, suffix = ".anndata", otype = "AnnData",
       description = description, nObsSlot = Some("obs"))
   }
+
+  /** The persisted slots of a dataset, in write order: obs, var, X, then
+    * the obsm and layers matrices sorted by name.
+    */
+  private def slotsOf(ds: AnnDataset): Seq[(String, DataFrame)] =
+    Seq("obs" -> ds.obs, "var" -> ds.vars, "X" -> ds.x) ++
+      ds.obsm.toSeq.sortBy(_._1).map { case (k, m) => s"obsm.$k" -> m } ++
+      ds.layers.toSeq.sortBy(_._1).map { case (k, l) => s"layers.$k" -> l }
 
   /** Backed open: every slot is a lazy Parquet scan — nothing loads until
     * a query touches it (the accessor's backed contract).
@@ -224,13 +228,10 @@ object AnnBridge {
     * re-run of the same ingest batch hashes identically.
     */
   def sliceHash(ds: AnnDataset): String = {
-    val slotFrames = Seq("obs" -> ds.obs, "var" -> ds.vars, "X" -> ds.x) ++
-      ds.obsm.toSeq.sortBy(_._1).map { case (k, m) => s"obsm.$k" -> m } ++
-      ds.layers.toSeq.sortBy(_._1).map { case (k, l) => s"layers.$k" -> l }
     // per-slot hash jobs are independent — overlap them via the shared
     // await-all pool (guide §2.6; Par.results); the md5 combine keeps
     // the deterministic slot order
-    val parts = graft.core.Par.results(slotFrames.map { case (name, df) =>
+    val parts = graft.core.Par.results(slotsOf(ds).map { case (name, df) =>
       () => {
         // to_json keeps field names, so a null/missing field can't alias a
         // neighboring column's value the way a plain concat would
@@ -338,17 +339,13 @@ object AnnBridge {
     val mergedLayers = mergeAux(base.layers, slice.layers,
       df => remapVar(remapObs(df)).select("obs_id", "var_id", "value"))
 
-    val merged = AnnDataset(mergedObs, mergedVars, mergedX, mergedObsm, mergedLayers)
-    val slots =
-      Seq("obs" -> merged.obs, "var" -> merged.vars, "X" -> merged.x) ++
-        merged.obsm.toSeq.sortBy(_._1).map { case (k, m) => s"obsm.$k" -> m } ++
-        merged.layers.toSeq.sortBy(_._1).map { case (k, l) => s"layers.$k" -> l } ++
-        Seq(LedgerSlot -> ledger.unionByName(Seq(sh).toDF("slice_hash")))
+    val slots = slotsOf(AnnDataset(mergedObs, mergedVars, mergedX, mergedObsm, mergedLayers)) :+
+      (LedgerSlot -> ledger.unionByName(Seq(sh).toDF("slice_hash")))
     // same key + new content hash → the family machinery mints the next
-    // version uid and flips is_latest heads (createArtifact revises path).
-    // n_observations rides the obs slot's write (nObsSlot): merged.nObs
-    // would re-run the whole base∪remapped-slice obs plan for a count
-    // the write already materializes.
+    // version uid and flips is_latest heads (the registration commit).
+    // n_observations rides the obs slot's write (nObsSlot): counting the
+    // merged obs would re-run the whole base∪remapped-slice obs plan for
+    // a count the write already materializes.
     store.fromSlots(slots, key, storageRoot, suffix = ".anndata", otype = "AnnData",
       description = description, nObsSlot = Some("obs"))
   }

@@ -13,7 +13,10 @@ import graft.query.{DoesNotExist, QuerySet}
   * Creation follows `get_stat_or_artifact` (`artifact.py:384-505`):
   * same content hash → return the existing artifact (idempotency);
   * same key+storage with a new hash → a new version in the same uid
-  * family (`revises` semantics); otherwise a fresh artifact.
+  * family (`revises` semantics); otherwise a fresh artifact. Every
+  * writer of managed content (`fromDataFrames`, `fromSlots`, `replace`)
+  * stages it under `.staging/` and registers it through one commit,
+  * `commit`, which makes that decision with one hash lookup.
   */
 final class ArtifactStore(val cat: Catalog) {
   private def spark: SparkSession = cat.spark
@@ -32,14 +35,14 @@ final class ArtifactStore(val cat: Catalog) {
   def registerPath(path: String, key: String, storageRoot: String,
                    kind: String = "dataset", description: String = null): Map[String, Any] = {
     val storageId = ensureStorage(storageRoot)
-    val (hash, hashType, nFiles, size) = Hashing.stat(path)
+    val s = staged(path, None)
     val suffix = {
       val name = path.split('/').last
       val i = name.lastIndexOf('.')
       if (i >= 0) name.substring(i) else ""
     }
-    createArtifact(hash, hashType, size, nFiles, key, suffix, storageId, kind, description,
-      realPath = Some(path))
+    findByHash(s.hash).getOrElse(
+      createArtifact(s, key, suffix, storageId, kind, description, realPath = Some(path)))
   }
 
   /** Write a DataFrame to the storage area under the auto-key
@@ -68,25 +71,10 @@ final class ArtifactStore(val cat: Catalog) {
     // reproducible runs, and pool-order draws would interleave randomly
     val stagePaths = items.map(_ => s"$storageRoot/.staging/${cat.uid(8)}")
     val staged = graft.core.Par.results(items.zip(stagePaths).map {
-      case ((df, _), stagePath) => () => {
-        val ob = org.apache.spark.sql.Observation()
-        df.observe(ob, count(lit(1)).as("n")).write.mode("overwrite").parquet(stagePath)
-        val (hash, hashType, nFiles, size) = Hashing.stat(stagePath)
-        (hash, hashType, nFiles, size, ob.get.apply("n").asInstanceOf[Long])
-      }
+      case ((df, _), stagePath) => () => stageFrame(df, stagePath)
     })
-    items.zip(stagePaths).zip(staged).map {
-      case (((_, key), stagePath), (hash, hashType, nFiles, size, nObs)) =>
-        findByHash(hash) match {
-          case Some(existing) =>
-            deletePath(stagePath)
-            existing
-          case None =>
-            val row = createArtifact(hash, hashType, size, nFiles, key, ".parquet",
-              storageId, "dataset", description, nObservations = Some(nObs))
-            movePath(stagePath, artifactPath(row, storageRoot))
-            row
-        }
+    items.zip(staged).map { case ((_, key), s) =>
+      commit(s, storageRoot)(createArtifact(s, key, ".parquet", storageId, "dataset", description))
     }
   }
 
@@ -139,18 +127,9 @@ final class ArtifactStore(val cat: Catalog) {
         out.write.mode("overwrite").parquet(s"$stagePath/$slot")
       }
     }: _*)
-    val nObs = obsCounter.map(_._2.get.apply("n").asInstanceOf[Long]).orElse(nObservations)
-    val (hash, hashType, nFiles, size) = Hashing.stat(stagePath)
-    findByHash(hash) match {
-      case Some(existing) =>
-        deletePath(stagePath)
-        existing
-      case None =>
-        val row = createArtifact(hash, hashType, size, nFiles, key, suffix, storageId,
-          "dataset", description, nObservations = nObs, otype = Some(otype))
-        movePath(stagePath, artifactPath(row, storageRoot))
-        row
-    }
+    val s = staged(stagePath, obsCounter.map(_._2.get.apply("n").asInstanceOf[Long]).orElse(nObservations))
+    commit(s, storageRoot)(
+      createArtifact(s, key, suffix, storageId, "dataset", description, otype = Some(otype)))
   }
 
   /** Open one named slot of a multi-slot artifact as a lazy scan. */
@@ -180,38 +159,57 @@ final class ArtifactStore(val cat: Catalog) {
   def replace(uid: String, df: DataFrame, storageRoot: String): Map[String, Any] = {
     val rows = cat.table("artifact").filter(col("uid") === uid).head(2)
     if (rows.isEmpty) throw new graft.query.DoesNotExist(s"no artifact with uid $uid")
-    val current = rowToMap(rows.head)
+    val current = rows.head.getValuesMap[Any](rows.head.schema.fieldNames)
     require(current("real_path") == null,
       "can only replace managed artifacts (ingest-by-reference content lives outside the store)")
-    val stagePath = s"$storageRoot/.staging/${cat.uid(8)}"
-    df.write.mode("overwrite").parquet(stagePath)
-    val (hash, hashType, nFiles, size) = Hashing.stat(stagePath)
-    findByHash(hash) match {
-      case Some(existing) =>
-        deletePath(stagePath)
-        existing
-      case None =>
-        val finalPath = artifactPath(current, storageRoot)
-        deletePath(finalPath)
-        movePath(stagePath, finalPath)
-        val nObs = df.count()
-        cat.update("artifact", col("uid") === uid,
-          "hash" -> lit(hash), "hash_type" -> lit(hashType), "size" -> lit(size),
-          "n_files" -> lit(nFiles), "n_observations" -> lit(nObs))
-        current ++ Map("hash" -> hash, "hash_type" -> hashType, "size" -> size,
-          "n_files" -> nFiles, "n_observations" -> nObs)
+    val s = stageFrame(df, s"$storageRoot/.staging/${cat.uid(8)}")
+    commit(s, storageRoot) {
+      deletePath(artifactPath(current, storageRoot))
+      cat.update("artifact", col("uid") === uid,
+        "hash" -> lit(s.hash), "hash_type" -> lit(s.hashType), "size" -> lit(s.size),
+        "n_files" -> lit(s.nFiles), "n_observations" -> lit(s.nObs.get))
+      current ++ Map("hash" -> s.hash, "hash_type" -> s.hashType, "size" -> s.size,
+        "n_files" -> s.nFiles, "n_observations" -> s.nObs.get)
     }
   }
 
-  /** Register pre-stat'd content (the reference's "one network request
-    * per path stat" ingest shape) through the same dedup-or-version
-    * decision as registerPath.
+  /** Stat-ed content not yet in the catalog: written under `.staging/`,
+    * or in place for `registerPath`.
     */
-  def registerByStat(hash: String, hashType: String, size: Long, nFiles: Long,
-                     key: String, suffix: String, storageId: Long,
-                     kind: String = "dataset", realPath: Option[String] = None): Map[String, Any] =
-    createArtifact(hash, hashType, size, nFiles, key, suffix, storageId, kind,
-      description = null, realPath = realPath)
+  private final case class Staged(path: String, hash: String, hashType: String,
+                                  nFiles: Long, size: Long, nObs: Option[Long])
+
+  private def staged(path: String, nObs: Option[Long]): Staged = {
+    val (hash, hashType, nFiles, size) = Hashing.stat(path)
+    Staged(path, hash, hashType, nFiles, size, nObs)
+  }
+
+  /** Write `df` to `path` and stat it. `n_observations` rides the write
+    * as an `Observation` metric instead of a second full count job: the
+    * write materializes every row anyway.
+    */
+  private def stageFrame(df: DataFrame, path: String): Staged = {
+    val ob = org.apache.spark.sql.Observation()
+    df.observe(ob, count(lit(1)).as("n")).write.mode("overwrite").parquet(path)
+    staged(path, Some(ob.get.apply("n").asInstanceOf[Long]))
+  }
+
+  /** The one registration commit for staged content: one hash lookup
+    * (it bypasses branch filtering, `query_set.py:273-293`). A hit
+    * deletes the stage and returns the existing row; a miss runs
+    * `register` and moves the stage to the managed path of the row it
+    * returns.
+    */
+  private def commit(s: Staged, storageRoot: String)(register: => Map[String, Any]): Map[String, Any] =
+    findByHash(s.hash) match {
+      case Some(existing) =>
+        deletePath(s.path)
+        existing
+      case None =>
+        val row = register
+        movePath(s.path, artifactPath(row, storageRoot))
+        row
+    }
 
   /** One stat-ed ingest candidate for the bulk path. */
   final case class StatEntry(hash: String, hashType: String, size: Long, nFiles: Long,
@@ -298,42 +296,31 @@ final class ArtifactStore(val cat: Catalog) {
     // ONE filtered collect, not a lookup per file
     val byHash = cat.table("artifact")
       .filter(col("hash").isin(kept.map(_.hash): _*))
-      .collect().map(r => r.getAs[String]("hash") -> rowToMap(r)).toMap
+      .collect().map(r => r.getAs[String]("hash") -> r.getValuesMap[Any](r.schema.fieldNames)).toMap
     FromDirResult(kept.map(e => byHash(e.hash)), dropped.map(_.key))
   }
 
-  private def findByHash(hash: String): Option[Map[String, Any]] = {
-    // hash lookup bypasses branch filtering (`query_set.py:273-293`)
-    val rows = cat.table("artifact").filter(col("hash") === hash).head(1)
-    rows.headOption.map(rowToMap)
-  }
+  private def findByHash(hash: String): Option[Map[String, Any]] =
+    cat.table("artifact").filter(col("hash") === hash).head(1).headOption
+      .map(r => r.getValuesMap[Any](r.schema.fieldNames))
 
-  private def createArtifact(hash: String, hashType: String, size: Long, nFiles: Long,
-                             key: String, suffix: String, storageId: Long, kind: String,
-                             description: String, nObservations: Option[Long] = None,
+  /** Register new content: the next version of the key+storage family,
+    * or a new family when there is none. The caller has looked the hash
+    * up already.
+    */
+  private def createArtifact(s: Staged, key: String, suffix: String, storageId: Long,
+                             kind: String, description: String,
                              realPath: Option[String] = None,
-                             otype: Option[String] = None): Map[String, Any] = {
-    findByHash(hash) match {
-      case Some(existing) => existing // content-identical: idempotent return
-      case None =>
-        // same key + storage, different content → new version of that family
-        val family = cat.table("artifact")
-          .filter(col("key") === key && col("storage_id") === storageId)
-          .select("uid").collect().map(_.getString(0)).toSeq
-        cat.insertVersion("artifact", family, Map(
-          "key" -> key, "suffix" -> suffix, "kind" -> kind,
-          "otype" -> otype.orNull,
-          "real_path" -> realPath.orNull,
-          "description" -> description, "size" -> size, "hash" -> hash,
-          "hash_type" -> hashType, "n_files" -> nFiles,
-          "n_observations" -> nObservations.orNull,
-          "storage_id" -> storageId,
-          "run_id" -> cat.currentRunId.map(Long.box).orNull))
-    }
-  }
-
-  def rowToMap(r: Row): Map[String, Any] =
-    r.schema.fieldNames.zipWithIndex.map { case (n, i) => n -> r.get(i) }.toMap
+                             otype: Option[String] = None): Map[String, Any] =
+    cat.insertVersion("artifact", col("key") === key && col("storage_id") === storageId, Map(
+      "key" -> key, "suffix" -> suffix, "kind" -> kind,
+      "otype" -> otype.orNull,
+      "real_path" -> realPath.orNull,
+      "description" -> description, "size" -> s.size, "hash" -> s.hash,
+      "hash_type" -> s.hashType, "n_files" -> s.nFiles,
+      "n_observations" -> s.nObs.orNull,
+      "storage_id" -> storageId,
+      "run_id" -> cat.currentRunId.map(Long.box).orNull))
 
   /** Physical URI: `real_path` for ingest-by-reference artifacts, else
     * `storage.root` + auto-key `.lamindb/{uid}{suffix}` — the computed
@@ -344,15 +331,17 @@ final class ArtifactStore(val cat: Catalog) {
     Option(a.getOrElse("real_path", null)).map(_.toString)
       .getOrElse(s"$storageRoot/.lamindb/${a("uid")}${Option(a.getOrElse("suffix", null)).getOrElse("")}")
 
-  def pathsFor(artifacts: DataFrame): Seq[String] = {
+  /** `artifacts` joined with `storage`, plus `artifactPath` as a
+    * `__path` column.
+    */
+  private def withPaths(artifacts: DataFrame): DataFrame = {
     val storages = cat.table("storage").select(col("id").as("storage_id"), col("root"))
-    artifacts.join(broadcast(storages), "storage_id")
-      .select(
-        coalesce(col("real_path"),
-          concat(col("root"), lit("/.lamindb/"), col("uid"), coalesce(col("suffix"), lit(""))))
-          .as("path"))
-      .collect().map(_.getString(0)).toSeq
+    artifacts.join(broadcast(storages), "storage_id").withColumn("__path", coalesce(col("real_path"),
+      concat(col("root"), lit("/.lamindb/"), col("uid"), coalesce(col("suffix"), lit("")))))
   }
+
+  def pathsFor(artifacts: DataFrame): Seq[String] =
+    withPaths(artifacts).select("__path").collect().map(_.getString(0)).toSeq
 
   /** Open a set of catalog-resolved artifacts as ONE lazy multi-path scan
     * (`ArtifactSet.open`, `artifact_set.py:63-82`): all members must share
@@ -407,7 +396,7 @@ final class ArtifactStore(val cat: Catalog) {
   def getByUid(uid: String): Map[String, Any] = {
     val rows = cat.table("artifact").filter(col("uid") === uid).head(1)
     require(rows.nonEmpty, s"no artifact with uid $uid")
-    rowToMap(rows.head)
+    rows.head.getValuesMap[Any](rows.head.schema.fieldNames)
   }
 
   /** Lineage side-effect: any open/load against an active run records the
@@ -439,18 +428,12 @@ final class ArtifactStore(val cat: Catalog) {
     */
   def getByPaths(paths: Seq[String]): Map[String, Map[String, Any]] = {
     if (paths.isEmpty) return Map.empty
-    val storages = cat.table("storage").select(col("id").as("storage_id"), col("root"))
-    val pathCol = coalesce(col("real_path"),
-      concat(col("root"), lit("/.lamindb/"), col("uid"), coalesce(col("suffix"), lit(""))))
-    val rows = cat.table("artifact").join(broadcast(storages), "storage_id")
-      .withColumn("__path", pathCol)
-      .filter(col("__path").isin(paths: _*))
-      .collect()
+    val rows = withPaths(cat.table("artifact")).filter(col("__path").isin(paths: _*)).collect()
     val byPath = rows.groupBy(_.getAs[String]("__path"))
     paths.map { p =>
       val hit = byPath.getOrElse(p, Array.empty[Row]).headOption
         .getOrElse(throw new DoesNotExist(s"no artifact at path $p"))
-      p -> (rowToMap(hit) - "__path")
+      p -> (hit.getValuesMap[Any](hit.schema.fieldNames) - "__path")
     }.toMap
   }
 
@@ -513,10 +496,12 @@ final class ArtifactStore(val cat: Catalog) {
         (if (tdef.fieldNames.contains("space_id")) Seq("space_id" -> "space") else Nil)
 
     var parentCreated = 0L
-    val remaps: Map[String, Map[Long, Long]] = fkCols.map { case (colName, parentReg) =>
-      val srcIds = fresh.flatMap(r => Option(r.getAs[Any](colName)))
-        .map(_.asInstanceOf[Long]).distinct.toIndexedSeq
-      if (srcIds.isEmpty) colName -> Map.empty[Long, Long]
+    /** Source ids of `parentReg` → the target's ids for the same uids,
+      * transferring missing parents first. An id whose row is missing on
+      * either side has no entry.
+      */
+    def remapIds(parentReg: String, srcIds: Seq[Long]): Map[Long, Long] =
+      if (srcIds.isEmpty) Map.empty
       else {
         val srcUidById = cat.table(parentReg).filter(col("id").isin(srcIds: _*))
           .select("id", "uid").collect()
@@ -527,8 +512,13 @@ final class ArtifactStore(val cat: Catalog) {
         val tgtIdByUid = target.table(parentReg).filter(col("uid").isin(parentUids: _*))
           .select("uid", "id").collect()
           .map(r => r.getString(0) -> r.getLong(1)).toMap
-        colName -> srcUidById.flatMap { case (sid, u) => tgtIdByUid.get(u).map(sid -> _) }
+        srcUidById.flatMap { case (sid, u) => tgtIdByUid.get(u).map(sid -> _) }
       }
+    def idsIn(colName: String): Seq[Long] =
+      fresh.flatMap(r => Option(r.getAs[Any](colName))).map(_.asInstanceOf[Long]).distinct.toIndexedSeq
+
+    val remaps: Map[String, Map[Long, Long]] = fkCols.map { case (colName, parentReg) =>
+      colName -> remapIds(parentReg, idsIn(colName))
     }.toMap
 
     // catalog-local branches (BranchOps creates ids >= 2): remap through
@@ -537,26 +527,10 @@ final class ArtifactStore(val cat: Catalog) {
     // carrying a dangling/wrong id across
     val branchRemap: Map[Long, Long] =
       if (registry == "branch" || !tdef.fieldNames.contains("branch_id")) Map.empty
-      else {
-        val localIds = fresh.flatMap(r => Option(r.getAs[Any]("branch_id")))
-          .map(_.asInstanceOf[Long]).filter(_ >= 2L).distinct.toIndexedSeq
-        if (localIds.isEmpty) Map.empty
-        else {
-          val srcUidById = cat.table("branch").filter(col("id").isin(localIds: _*))
-            .select("id", "uid").collect()
-            .map(r => r.getLong(0) -> r.getString(1)).toMap
-          val branchUids = srcUidById.values.toSeq.distinct
-          if (branchUids.nonEmpty)
-            parentCreated += transferTo(target, "branch", branchUids, flight)
-          val tgtIdByUid = target.table("branch").filter(col("uid").isin(branchUids: _*))
-            .select("uid", "id").collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-          srcUidById.flatMap { case (sid, u) => tgtIdByUid.get(u).map(sid -> _) }
-        }
-      }
+      else remapIds("branch", idsIn("branch_id").filter(_ >= 2L))
 
     fresh.foreach { r =>
-      var m = r.schema.fieldNames.zip(r.toSeq).toMap - "id"
+      var m = r.getValuesMap[Any](r.schema.fieldNames) - "id"
       remaps.foreach { case (c, idMap) =>
         m.get(c) match {
           case Some(v: Long) => m = m.updated(c, idMap.get(v).orNull)
@@ -584,23 +558,17 @@ final class ArtifactStore(val cat: Catalog) {
     tdef.m2ms.values.foreach { m2m =>
       val links = cat.table(m2m.link).filter(col(m2m.leftCol).isin(freshSrcIds: _*)).collect()
       if (links.nonEmpty) {
-        val rightIds = links.map(_.getAs[Long](m2m.rightCol)).distinct.toIndexedSeq
-        val rightUidBySrc = cat.table(m2m.target).filter(col("id").isin(rightIds: _*))
-          .select("id", "uid").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-        parentCreated += transferTo(target, m2m.target, rightUidBySrc.values.toSeq.distinct, flight)
-        val tgtRightByUid = target.table(m2m.target)
-          .filter(col("uid").isin(rightUidBySrc.values.toSeq.distinct: _*))
-          .select("uid", "id").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val rightRemap = remapIds(m2m.target, links.map(_.getAs[Long](m2m.rightCol)).distinct.toIndexedSeq)
         val srcUidById = srcIdByUid2.map(_.swap)
         links.foreach { lr =>
           val tgtLeft = srcUidById.get(lr.getAs[Long](m2m.leftCol)).flatMap(tgtIdByUid2.get)
-          val tgtRight = rightUidBySrc.get(lr.getAs[Long](m2m.rightCol)).flatMap(tgtRightByUid.get)
+          val tgtRight = rightRemap.get(lr.getAs[Long](m2m.rightCol))
           (tgtLeft, tgtRight) match {
             case (Some(l), Some(rgt)) =>
               val exists = !target.table(m2m.link)
                 .filter(col(m2m.leftCol) === l && col(m2m.rightCol) === rgt).isEmpty
               if (!exists) {
-                val extra = lr.schema.fieldNames.zip(lr.toSeq).toMap --
+                val extra = lr.getValuesMap[Any](lr.schema.fieldNames) --
                   Seq("id", m2m.leftCol, m2m.rightCol)
                 target.insert(m2m.link,
                   Map(m2m.leftCol -> l, m2m.rightCol -> rgt) ++ extra.filter(_._2 != null))

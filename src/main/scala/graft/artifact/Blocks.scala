@@ -1,6 +1,6 @@
 package graft.artifact
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
 import graft.core.{Hashing, Versioning}
@@ -32,13 +32,13 @@ final class Blocks(cat: Catalog) {
     require(kind == "readme" || kind == "comment", s"unsupported block kind '$kind'")
     val hash = if (content.nonEmpty) Hashing.md5String(content) else null
 
-    def insertRow(family: Seq[String]): Map[String, Any] =
+    def insertRow(family: Column): Map[String, Any] =
       cat.insertVersion("block", family, Map(
         "key" -> key, "content" -> content, "hash" -> hash,
         "kind" -> kind, "version_tag" -> versionTag.orNull,
         "anchor_id" -> anchorId.map(Long.box).orNull))
 
-    if (kind == "comment") return insertRow(Seq.empty)
+    if (kind == "comment") return insertRow(lit(false))
 
     // readme: recovery semantics from block.py:308-360. Non-trash is the
     // reference's `~Q(branch_id=-1)` — recovery looks across branches.
@@ -49,21 +49,16 @@ final class Blocks(cat: Catalog) {
     val headBlank = head.exists { r =>
       val c = r.getAs[String]("content"); c == null || c.isEmpty
     }
-    if (headBlank) return head.get.schema.fieldNames.zip(head.get.toSeq).toMap
+    if (headBlank) return head.get.getValuesMap[Any](head.get.schema.fieldNames)
     // global content-hash dedup across ALL visible latest blocks (any key)
     if (hash != null) {
       val byHash = nonTrash.filter(col("is_latest") && col("hash") === hash)
         .head(1).headOption
-      byHash.foreach { r => return r.schema.fieldNames.zip(r.toSeq).toMap }
+      byHash.foreach { r => return r.getValuesMap[Any](r.schema.fieldNames) }
     }
     // no head: a new family; else the next version of the head's family
-    insertRow(head.toSeq.flatMap(familyOf("block", _)))
+    insertRow(head.fold(lit(false))(r => Versioning.sameFamily(r.getAs[String]("uid"))))
   }
-
-  /** Every uid in the version family of a head row. */
-  private def familyOf(registry: String, head: Row): Seq[String] =
-    cat.table(registry).filter(col("uid").startsWith(Versioning.stem(head.getAs[String]("uid"))))
-      .select("uid").collect().map(_.getString(0)).toSeq
 
   /** Record-attached block (`RecordBlock`, `block.py:396`, generic init
     * `block.py:100-165` + `test_record_block_*`): readme-kind recovers the
@@ -77,12 +72,12 @@ final class Blocks(cat: Catalog) {
     require(kind == "readme" || kind == "comment", s"unsupported block kind '$kind'")
     val hash = if (content.nonEmpty) Hashing.md5String(content) else null
 
-    def insertRow(family: Seq[String]): Map[String, Any] =
+    def insertRow(family: Column): Map[String, Any] =
       cat.insertVersion("record_block", family, Map(
         "record_id" -> recordId, "content" -> content,
         "hash" -> hash, "kind" -> kind, "version_tag" -> versionTag.orNull))
 
-    if (kind == "comment") return insertRow(Seq.empty)
+    if (kind == "comment") return insertRow(lit(false))
     val visible = cat.table("record_block").filter(
       col("record_id") === recordId && col("kind") === kind &&
         col("branch_id") =!= Catalog.TrashBranchId)
@@ -90,9 +85,9 @@ final class Blocks(cat: Catalog) {
     head match {
       case Some(r) if { val c = r.getAs[String]("content"); c == null || c.isEmpty } =>
         // existing head never had content saved: recover it (block.py:137-146)
-        r.schema.fieldNames.zip(r.toSeq).toMap
-      case Some(r) => insertRow(familyOf("record_block", r))
-      case None => insertRow(Seq.empty)
+        r.getValuesMap[Any](r.schema.fieldNames)
+      case Some(r) => insertRow(Versioning.sameFamily(r.getAs[String]("uid")))
+      case None => insertRow(lit(false))
     }
   }
 

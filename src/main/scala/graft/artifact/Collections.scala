@@ -1,6 +1,6 @@
 package graft.artifact
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
 import graft.core.Hashing
@@ -29,11 +29,8 @@ final class Collections(cat: Catalog, store: ArtifactStore) {
   def create(key: String, artifactIds: Seq[Long], description: String = null): Map[String, Any] = {
     val hash = collectionHash(artifactIds)
     val existing = cat.table("collection").filter(col("hash") === hash).head(1)
-    if (existing.nonEmpty)
-      return existing.head.schema.fieldNames.zip(existing.head.toSeq).toMap
-    val family = cat.table("collection").filter(col("key") === key)
-      .select("uid").collect().map(_.getString(0)).toSeq
-    val row = cat.insertVersion("collection", family,
+    if (existing.nonEmpty) return existing.head.getValuesMap[Any](existing.head.schema.fieldNames)
+    val row = cat.insertVersion("collection", col("key") === key,
       Map("key" -> key, "hash" -> hash, "description" -> description))
     val cid = row("id").asInstanceOf[Long]
     artifactIds.zipWithIndex.foreach { case (aid, pos) =>

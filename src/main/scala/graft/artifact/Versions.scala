@@ -3,7 +3,7 @@ package graft.artifact
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Base62
+import graft.core.{Base62, Versioning}
 
 /** Version-family maintenance (`lamindb/models/_is_versioned.py`).
   *
@@ -38,8 +38,7 @@ object Versions {
     */
   def recomputeIsLatest(df: DataFrame, uidCol: String = "uid",
                         branchCol: String = "branch_id"): DataFrame = {
-    val stem = expr(s"substring($uidCol, 1, length($uidCol) - 4)")
-    val w = Window.partitionBy(stem, col(branchCol))
+    val w = Window.partitionBy(Versioning.stem(col(uidCol)), col(branchCol))
       .orderBy(suffixValue(col(uidCol)).desc)
     df.withColumn("is_latest", row_number().over(w) === 1)
   }

@@ -3,6 +3,7 @@ package graft.catalog
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Versioning
 
 /** Branch lifecycle operations (`lamindb/setup/_merge.py` +
   * `reconcile_is_latest_within_branch`, `_is_versioned.py`).
@@ -52,7 +53,7 @@ object BranchOps {
     */
   def reconcileIsLatestWithinBranch(cat: Catalog, registry: String, branchId: Long): Long = {
     val heads = cat.table(registry).filter(col("branch_id") === branchId && col("is_latest"))
-      .withColumn("__stem", expr("substring(uid, 1, length(uid) - 4)"))
+      .withColumn("__stem", Versioning.stem(col("uid")))
     val w = Window.partitionBy("__stem").orderBy(col("created_at").desc, col("id").desc)
     val losers = heads.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") > 1).select("id").collect().map(_.getLong(0)).toIndexedSeq

@@ -16,7 +16,8 @@ import graft.core.{Base62, Versioning}
   *
   *  - each registry table is a directory of versioned parquet snapshots
   *    `<root>/<table>/v<N>`; `_manifest.json` points at the current version
-  *    (atomic rename commit, single writer);
+  *    (atomic rename commit). One writer per catalog root is the caller's
+  *    contract; nothing enforces it yet (ROADMAP direction 1);
   *  - inserts accumulate in a driver-side buffer (the reference batches
   *    bulk saves at 10k rows, `models/save.py:31`) and are unioned into
   *    reads until flushed;
@@ -167,18 +168,20 @@ final class Catalog(
     require(unknown.isEmpty, s"unknown fields $unknown for registry '${t.name}'")
   }
 
-  /** Insert the next version of a family (`_is_versioned.py:271-338`):
-    * an empty `family` starts a new one (`newUidFor`); otherwise the uid
+  /** Insert the next version of a family (`_is_versioned.py:271-338`).
+    * The family is the uids of the rows where `family` holds (one
+    * collect); none starts a new family (`newUidFor`). Otherwise the uid
     * is the family's next suffix and the family's current heads on
     * `currentBranchId` are demoted through `update` first. The new row is
     * the head (`is_latest = true`). Returns the completed row.
     */
-  def insertVersion(name: String, family: Seq[String], values: Map[String, Any]): Map[String, Any] = {
+  def insertVersion(name: String, family: Column, values: Map[String, Any]): Map[String, Any] = {
+    val uids = table(name).filter(family).select("uid").collect().map(_.getString(0)).toSeq
     val uid =
-      if (family.isEmpty) newUidFor(tableDef(name))
+      if (uids.isEmpty) newUidFor(tableDef(name))
       else {
-        val next = Versioning.nextUidInFamily(family)
-        update(name, col("uid").startsWith(Versioning.stem(next)) && col("branch_id") === currentBranchId,
+        val next = Versioning.nextUidInFamily(uids)
+        update(name, Versioning.sameFamily(next) && col("branch_id") === currentBranchId,
           "is_latest" -> lit(false))
         next
       }

@@ -2,6 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Versioning
 
 /** Registry-generic soft-delete lifecycle (`query_set.py:1312-1376` +
   * `_adjust_is_latest_when_deleting_is_versioned`): works for ANY
@@ -36,7 +37,7 @@ object Lifecycle {
     */
   def successorsFor(cat: Catalog, registry: String, ids: Seq[Long]): Seq[Long] = {
     val t = cat.table(registry)
-    val stem = expr("substring(uid, 1, length(uid) - 4)")
+    val stem = Versioning.stem(col("uid"))
     val losing = t.filter(col("id").isin(ids: _*) && col("is_latest"))
       .select(stem.as("__stem"), col("branch_id")).distinct()
     val w = Window.partitionBy("__stem", "branch_id")

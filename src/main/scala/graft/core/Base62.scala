@@ -1,6 +1,8 @@
 package graft.core
 
 import java.security.SecureRandom
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{col, length, lit}
 
 /** Base62 universal IDs and version suffixes.
   *
@@ -72,6 +74,10 @@ object Versioning {
   val SuffixLen = 4
 
   def stem(uid: String): String = uid.dropRight(SuffixLen)
+  /** `stem` as a Column expression over a uid column. */
+  def stem(uid: Column): Column = uid.substr(lit(1), length(uid) - SuffixLen)
+  /** Rows of `uid`'s version family: the `uid` column shares its stem. */
+  def sameFamily(uid: String): Column = col("uid").startsWith(stem(uid))
   def suffix(uid: String): String = uid.takeRight(SuffixLen)
   def suffixValue(uid: String): Long = Base62.decode(suffix(uid))
 

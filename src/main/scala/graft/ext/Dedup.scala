@@ -820,7 +820,8 @@ object Dedup {
     *    (`repartition(1)` + `mapPartitions`, nothing collected to the
     *    driver). The result is lazy: each evaluation reruns that task;
     *  - more: [[labelPropagation]], rounds of neighbor-min propagation
-    *    plus pointer jumps; `maxIters` caps the rounds of this path only.
+    *    plus pointer jumps; `maxIters` caps the rounds of this path only,
+    *    and labels still moving at the cap throw `IllegalStateException`.
     * The path, the edge count and the round count are logged at INFO.
     * The count and the chosen path each read `pairs`, so an expensive lazy
     * input is best materialized first (the LSH edge builders return
@@ -928,8 +929,9 @@ object Dedup {
     * along paths (LSH edges point at a bucket's min id) that converges in
     * O(log(component diameter)) rounds; on a path over shuffled ids it
     * takes about half the diameter (85 rounds on chains of up to 150
-    * shuffled ids). Labels still moving after `maxIters` rounds are
-    * returned as they stand.
+    * shuffled ids). If labels are still moving after `maxIters` rounds,
+    * the cached edges and checkpoints are released and an
+    * `IllegalStateException` names the rounds run and the cap.
     */
   private[graft] def labelPropagation(pairs: DataFrame, idACol: String = "id_a",
                                       idBCol: String = "id_b",
@@ -1047,12 +1049,12 @@ object Dedup {
       iter += 1
     }
     edges.unpersist(blocking = false)
-    if (pendingFree.nonEmpty) {
-      // maxIters exhausted with a still-lazy final jump chain:
-      // materialize it so its inputs can be freed (pathological case)
-      labels.count()
-      pendingFree.foreach(freeCheckpoint)
-      pendingFree = Nil
+    if (!done) {
+      // maxIters exhausted with labels still moving: nothing of the
+      // unconverged chain is returned, so release all of it
+      (labelsCk :: pendingFree).foreach(freeCheckpoint)
+      throw new IllegalStateException(
+        s"connected components did not converge: labels still moving after $iter rounds (maxIters = $maxIters)")
     }
     (labels.select(col("id"), col("comp").as("cluster_id")), iter)
   }

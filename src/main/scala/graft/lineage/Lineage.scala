@@ -43,9 +43,7 @@ final class Lineage(val cat: Catalog) {
         .select("id").head(1).headOption
     val transformId = existing.map(_.getLong(0)).getOrElse {
       val (stored, _) = Redaction.redactSource(sourceCode)
-      val family = cat.table("transform").filter(col("key") === key)
-        .select("uid").collect().map(_.getString(0)).toSeq
-      cat.insertVersion("transform", family, Map(
+      cat.insertVersion("transform", col("key") === key, Map(
         "key" -> key, "typ" -> "script",
         "source_code" -> (if (stored.isEmpty) null else stored),
         "source_code_hash" -> hash))("id").asInstanceOf[Long]

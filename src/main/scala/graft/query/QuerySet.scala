@@ -82,15 +82,18 @@ final class QuerySet(
     * `branch_id IN defaults` unless the query references id/uid/hash
     * directly or filters branch explicitly.
     */
-  private def branchInjection: Option[Column] = {
-    if (!t.hasBranch) return None
-    val keys = allNodes.flatMap(_.keys).map(aliased)
-    val idUidHash = Set("id", "uid", "hash", "id__in", "uid__in", "hash__in")
-    val referencesIdentity = keys.exists(idUidHash.contains)
-    val referencesBranch = keys.exists(k =>
-      k == "branch" || k == "branch_id" || k.startsWith("branch__") || k.startsWith("branch_id__"))
-    if (referencesIdentity || referencesBranch) None
+  private def branchInjection: Option[Column] =
+    if (!t.hasBranch || scopedBy("branch")) None
     else Some(col("branch_id").isin(Catalog.defaultBranchIds(currentBranchId): _*))
+
+  /** True when the query addresses rows directly (id/uid/hash) or
+    * filters `field` (the FK or its `_id` column) itself: either replaces
+    * a default scope.
+    */
+  private def scopedBy(field: String): Boolean = {
+    val exact = Set("id", "uid", "hash", "id__in", "uid__in", "hash__in", field, s"${field}_id")
+    allNodes.flatMap(_.keys).map(aliased).exists(k =>
+      exact(k) || k.startsWith(s"${field}__") || k.startsWith(s"${field}_id__"))
   }
 
   /** Space DEFAULT-VISIBILITY injection — a query-scoping convenience
@@ -108,16 +111,9 @@ final class QuerySet(
     * semantics deliberately. NULL space_id is the unset db_default, i.e.
     * the "all" space.
     */
-  private def spaceInjection: Option[Column] = {
-    if (!t.fieldNames.contains("space_id")) return None
-    val keys = allNodes.flatMap(_.keys).map(aliased)
-    val idUidHash = Set("id", "uid", "hash", "id__in", "uid__in", "hash__in")
-    val referencesIdentity = keys.exists(idUidHash.contains)
-    val referencesSpace = keys.exists(k =>
-      k == "space" || k == "space_id" || k.startsWith("space__") || k.startsWith("space_id__"))
-    if (referencesIdentity || referencesSpace) None
+  private def spaceInjection: Option[Column] =
+    if (!t.fieldNames.contains("space_id") || scopedBy("space")) None
     else Some(col("space_id").isNull || col("space_id").isin(env.visibleSpaceIds: _*))
-  }
 
   private def aliased(key: String): String = {
     val seg = key.split("__", 2)

@@ -14,9 +14,11 @@ import graft.catalog.Catalog
   *
   * Exactly-once effect without a transactional sink: `foreachBatch` may
   * redeliver a batch after failure, but registration dedups on content
-  * hash (`fromDataFrame` → `findByHash`), so a redelivered batch resolves
-  * to the already-registered artifact instead of a duplicate row — the
-  * same idempotent-ingest contract as the batch path.
+  * hash (`fromDataFrame` → `ArtifactStore.commit`, the one registration
+  * commit, which looks the staged batch's hash up once), so a
+  * redelivered batch resolves to the already-registered artifact instead
+  * of a duplicate row — the same idempotent-ingest contract as the batch
+  * path.
   */
 object ArtifactSink {
 

@@ -2,6 +2,7 @@ package graft.catalog
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.ListenerBusDrain
 import graft.TestSpark
 import graft.artifact.ArtifactStore
 import graft.lineage.Lineage
@@ -61,6 +62,38 @@ class ArtifactOpsSpec extends AnyFunSuite {
     val ref = store.registerPath(s"${TestSpark.sf0001}/region.parquet", "tpch/region", root)
     intercept[IllegalArgumentException](
       store.replace(ref("uid").toString, Seq((1, "x")).toDF("id", "v"), root))
+  }
+
+  test("fromDataFrames and replace: one hash lookup per staged artifact (Spark jobs pinned)") {
+    val root = TestSpark.tmpDir("ops")
+    val cat = Catalog.deterministic(spark, root)
+    val store = new ArtifactStore(cat)
+    val sc = spark.sparkContext
+    def frame(i: Int) = Seq((i, s"v$i")).toDF("id", "v")
+    // flushed before each call: every lookup scans an artifact snapshot,
+    // as on a long-lived catalog (a buffer-only table answers on the driver)
+    store.fromDataFrame(frame(0), "seed", root)
+    cat.flushAll()
+    // new content: storage lookup, staged write, ONE hash lookup, family collect
+    val newJobs = ListenerBusDrain.jobs(sc)(store.fromDataFrames(Seq(frame(1) -> "a"), root))
+    cat.flushAll()
+    // duplicate content: storage lookup, staged write, the hash lookup's hit
+    val dupJobs = ListenerBusDrain.jobs(sc)(store.fromDataFrames(Seq(frame(1) -> "b"), root))
+    cat.flushAll()
+    // replace: uid lookup, staged write (n_observations rides it), hash
+    // lookup, one catalog update; no count job over the input
+    val uid = cat.table("artifact").filter(col("key") === "a").head().getAs[String]("uid")
+    val replaceJobs = ListenerBusDrain.jobs(sc)(store.replace(uid, frame(2).union(frame(3)), root))
+    cat.flushAll()
+    // replace with content another artifact holds: uid lookup, staged
+    // write, the hash lookup's hit
+    val replaceDupJobs = ListenerBusDrain.jobs(sc)(store.replace(uid, frame(0), root))
+    info(s"new frame: $newJobs jobs, duplicate: $dupJobs, replace: $replaceJobs, replace by duplicate: $replaceDupJobs")
+    assert(newJobs === 4)
+    assert(dupJobs === 3)
+    assert(replaceJobs === 4)
+    assert(replaceDupJobs === 3)
+    assert(cat.table("artifact").filter(col("uid") === uid).head().getAs[Long]("n_observations") === 2L)
   }
 
   test("cross-instance transfer upserts by uid") {

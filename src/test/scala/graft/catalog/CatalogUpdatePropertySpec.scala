@@ -79,7 +79,7 @@ class CatalogUpdatePropertySpec extends AnyFunSuite {
       case (NewFamily(b), i) =>
         cat.currentBranchId = b
         val uid = Versioning.createUid(m.rng)
-        assert(cat.insertVersion(Registry, Seq.empty, Map("description" -> s"op$i"))("uid") === uid)
+        assert(cat.insertVersion(Registry, lit(false), Map("description" -> s"op$i"))("uid") === uid)
         m.append(uid, b, s"op$i")
       case (Revise(b, pick), i) =>
         cat.currentBranchId = b
@@ -87,7 +87,7 @@ class CatalogUpdatePropertySpec extends AnyFunSuite {
         val family =
           if (stems.isEmpty) Seq.empty[String]
           else m.rows.map(_.uid).filter(_.startsWith(stems(pick % stems.size))).toSeq
-        val got = cat.insertVersion(Registry, family, Map("description" -> s"op$i"))
+        val got = cat.insertVersion(Registry, col("uid").isin(family: _*), Map("description" -> s"op$i"))
         val uid =
           if (family.isEmpty) Versioning.createUid(m.rng)
           else {

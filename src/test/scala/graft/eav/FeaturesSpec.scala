@@ -109,34 +109,17 @@ class FeaturesSpec extends AnyFunSuite {
   }
 
   test("compiling a multi-predicate filter runs ONE job (cached dictionary)") {
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    // listener delivery is async; poll until the count stops moving
-    def settled(): Int = {
-      var prev = -1
-      var cur = listener.jobs.get()
-      var spins = 0
-      while (cur != prev && spins < 50) { prev = cur; Thread.sleep(100); cur = listener.jobs.get(); spins += 1 }
-      cur
-    }
+    val sc = spark.sparkContext
     val s = store // fresh store, dictionary not collected yet
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // plan (don't execute) a 3-predicate filter: the only cluster work
-      // allowed is the single dictionary collect — the per-predicate
-      // head()/isEmpty() round-trips are gone
-      s.filter(records, "id",
-        F("gc_content") > 0.5, F("status") === "ok", F("gc_content").isNotNull)
-      val afterFirst = settled()
-      // (0 when the dictionary source is a local relation whose collect
-      // short-circuits; 1 when it actually scans)
-      assert(afterFirst <= 1, s"expected <=1 job, saw $afterFirst")
-      // second compile on the same store: ZERO further jobs
-      s.filter(records, "id", F("status") === "ok")
-      assert(settled() === afterFirst)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // plan (don't execute) a 3-predicate filter: the only cluster work
+    // allowed is the single dictionary collect — the per-predicate
+    // head()/isEmpty() round-trips are gone
+    val first = org.apache.spark.ListenerBusDrain.jobs(sc)(s.filter(records, "id",
+      F("gc_content") > 0.5, F("status") === "ok", F("gc_content").isNotNull))
+    // (0 when the dictionary source is a local relation whose collect
+    // short-circuits; 1 when it actually scans)
+    assert(first <= 1, s"expected <=1 job, saw $first")
+    // second compile on the same store: ZERO further jobs
+    assert(org.apache.spark.ListenerBusDrain.jobs(sc)(s.filter(records, "id", F("status") === "ok")) === 0)
   }
 }

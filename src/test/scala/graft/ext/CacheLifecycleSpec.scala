@@ -106,6 +106,18 @@ class CacheLifecycleSpec extends AnyFunSuite {
       s"CC result carries a $bits-bit size estimate — per-round stats are compounding again")
   }
 
+  test("labelPropagation throws at its cap with labels still moving, releasing its caches") {
+    spark.sharedState.cacheManager.clearCache()
+    awaitNoPersistentRdds()
+    // a 64-node path over shuffled ids needs far more than 3 rounds
+    val ids = new scala.util.Random(7).shuffle((0L until 64L).toVector)
+    val edges = spark.createDataFrame(ids.zip(ids.tail)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](Dedup.labelPropagation(edges, maxIters = 3))
+    assert(e.getMessage.contains("after 3 rounds (maxIters = 3)"), e.getMessage)
+    assert(datasetCacheEmpty, "the edge cache stayed registered")
+    awaitNoPersistentRdds()
+  }
+
   test("bloom-routed ingest dedup releases the candidate sliver on both paths") {
     spark.sharedState.cacheManager.clearCache()
     awaitNoPersistentRdds()
