@@ -22,11 +22,9 @@ final class ArtifactStore(val cat: Catalog) {
   private def spark: SparkSession = cat.spark
 
   /** Ensure a storage root exists; return its id. */
-  def ensureStorage(root: String): Long = {
-    val existing = cat.table("storage").filter(col("root") === root).select("id").head(1)
-    if (existing.nonEmpty) existing.head.getLong(0)
-    else cat.insert("storage", Map("root" -> root, "typ" -> "local"))("id").asInstanceOf[Long]
-  }
+  def ensureStorage(root: String): Long =
+    cat.ensure("storage", Seq("root"), Seq(Map("root" -> root, "typ" -> "local")))
+      .head("id").asInstanceOf[Long]
 
   /** Register an existing file/directory as an artifact (ingest-by-
     * reference). Idempotent on content hash; versions on key conflict.
@@ -404,13 +402,8 @@ final class ArtifactStore(val cat: Catalog) {
     */
   private def trackRunInputs(artifacts: DataFrame): Unit =
     cat.currentRunId.foreach { runId =>
-      val ids = artifacts.select("id").collect().map(_.getLong(0))
-      val existing = cat.table("run_inputs")
-        .filter(col("run_id") === runId && col("artifact_id").isin(ids.toIndexedSeq: _*))
-        .select("artifact_id").collect().map(_.getLong(0)).toSet
-      ids.filterNot(existing).foreach { aid =>
-        cat.insert("run_inputs", Map("run_id" -> runId, "artifact_id" -> aid))
-      }
+      cat.ensure("run_inputs", Seq("run_id", "artifact_id"), artifacts.select("id").collect()
+        .map(r => Map("run_id" -> runId, "artifact_id" -> r.getLong(0))).toIndexedSeq)
     }
 
   /** Path-based get (`artifacts_from_path`, `artifact_set.py:382-441`):
@@ -560,22 +553,15 @@ final class ArtifactStore(val cat: Catalog) {
       if (links.nonEmpty) {
         val rightRemap = remapIds(m2m.target, links.map(_.getAs[Long](m2m.rightCol)).distinct.toIndexedSeq)
         val srcUidById = srcIdByUid2.map(_.swap)
-        links.foreach { lr =>
-          val tgtLeft = srcUidById.get(lr.getAs[Long](m2m.leftCol)).flatMap(tgtIdByUid2.get)
-          val tgtRight = rightRemap.get(lr.getAs[Long](m2m.rightCol))
-          (tgtLeft, tgtRight) match {
-            case (Some(l), Some(rgt)) =>
-              val exists = !target.table(m2m.link)
-                .filter(col(m2m.leftCol) === l && col(m2m.rightCol) === rgt).isEmpty
-              if (!exists) {
-                val extra = lr.getValuesMap[Any](lr.schema.fieldNames) --
-                  Seq("id", m2m.leftCol, m2m.rightCol)
-                target.insert(m2m.link,
-                  Map(m2m.leftCol -> l, m2m.rightCol -> rgt) ++ extra.filter(_._2 != null))
-              }
-            case _ => () // unmappable side: drop the link, never carry raw ids
-          }
-        }
+        // an unmappable side drops the link: raw ids are never carried
+        target.ensure(m2m.link, Seq(m2m.leftCol, m2m.rightCol), links.toIndexedSeq.flatMap { lr =>
+          for {
+            l <- srcUidById.get(lr.getAs[Long](m2m.leftCol)).flatMap(tgtIdByUid2.get)
+            rgt <- rightRemap.get(lr.getAs[Long](m2m.rightCol))
+          } yield Map(m2m.leftCol -> l, m2m.rightCol -> rgt) ++
+            (lr.getValuesMap[Any](lr.schema.fieldNames) -- Seq("id", m2m.leftCol, m2m.rightCol))
+              .filter(_._2 != null)
+        })
       }
     }
     fresh.length.toLong + parentCreated

@@ -21,6 +21,13 @@ import graft.core.{Base62, Versioning}
   *  - inserts accumulate in a driver-side buffer (the reference batches
   *    bulk saves at 10k rows, `models/save.py:31`) and are unioned into
   *    reads until flushed;
+  *  - idempotent inserts enter through `ensure` (the reference's
+  *    `get_or_create`, `feature.py:1703-1716`): each input row is matched
+  *    on its key columns against snapshot ∪ buffer with one filtered
+  *    collect; a key matches null-safely (a null or missing key value
+  *    matches a stored null), the first stored match is returned, and
+  *    the first row of a key repeated within one call is the one
+  *    inserted (later repeats return it). Inserts keep input order;
   *  - row updates enter through `update` (set columns where a predicate
   *    holds) and `insertVersion` (new head of a version family, demoting
   *    the family's heads on the current branch); both are one
@@ -112,7 +119,7 @@ final class Catalog(
     * state (manifest version, buffered-row count). One entry per `key`.
     */
   def memo[T](key: String, tables: Seq[String])(compute: => T): T = {
-    val state = tables.map(n => (manifest.getOrElse(n, 0), buffers.get(n).fold(0)(_.size)))
+    val state = tables.map(n => (manifest.getOrElse(n, 0), buffered(n)))
     memos.get(key) match {
       case Some((`state`, v)) => v.asInstanceOf[T]
       case _ =>
@@ -121,6 +128,9 @@ final class Catalog(
         v
     }
   }
+
+  /** Rows inserted into `name` since its last flush or rewrite. */
+  def buffered(name: String): Int = buffers.get(name).fold(0)(_.size)
 
   // --------------------------------------------------------------- writes
 
@@ -162,6 +172,31 @@ final class Catalog(
 
   def insertAll(name: String, rows: Seq[Map[String, Any]]): Seq[Map[String, Any]] =
     rows.map(insert(name, _))
+
+  /** For each row, the stored row whose `key` columns match it, else the
+    * row `insert` completes for it. One filtered collect per call: each
+    * key column is narrowed to the batch's values (`isin`, plus `isNull`
+    * when a value is null or missing) and the exact key match is made on
+    * the driver. A key repeated within `rows` is inserted once.
+    */
+  def ensure(name: String, key: Seq[String], rows: Seq[Map[String, Any]]): Seq[Map[String, Any]] = {
+    requireFields(tableDef(name), key.toSet)
+    def keyOf(m: Map[String, Any]): Seq[Any] = key.map(m.getOrElse(_, null))
+    val keys = rows.map(keyOf).distinct
+    if (keys.isEmpty) return Seq.empty
+    val narrowed = key.indices.map { i =>
+      val values = keys.map(_(i)).distinct
+      val present = values.filter(_ != null)
+      val in = if (present.isEmpty) lit(false) else col(key(i)).isin(present: _*)
+      if (present.size < values.size) in || col(key(i)).isNull else in
+    }.reduce(_ && _)
+    val found = mutable.Map.empty[Seq[Any], Map[String, Any]]
+    table(name).filter(narrowed).collect().foreach { r =>
+      val m = r.getValuesMap[Any](r.schema.fieldNames)
+      found.getOrElseUpdate(keyOf(m), m)
+    }
+    rows.map(r => found.getOrElseUpdate(keyOf(r), insert(name, r)))
+  }
 
   private def requireFields(t: TableDef, names: Set[String]): Unit = {
     val unknown = names -- t.fieldNames

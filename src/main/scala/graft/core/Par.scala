@@ -35,23 +35,20 @@ object Par {
     * before. An unknown size estimate (LogicalRDD leaves report
     * `spark.sql.defaultSizeInBytes` = Long.MaxValue) lands in the same
     * branch — treat unknown as huge, never as empty. The per-partition
-    * floor is `spark.graft.spread.floorBytes` (default 64 KiB — sized
-    * so the sf0.1 ~600 KB corpus spreads ~10 ways, the width its
-    * 8-vs-32-core timings say the kernels actually amortize).
+    * floor is 64 KiB, sized so the sf0.1 ~600 KB corpus spreads ~10
+    * ways, the width its 8-vs-32-core timings say the kernels actually
+    * amortize.
     */
-  private[graft] val SpreadFloorKey = "spark.graft.spread.floorBytes"
-  private[graft] val SpreadFloorDefault = 65536L
+  private val SpreadFloorBytes = BigInt(65536)
 
   def spreadForCpu(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     if (df.isStreaming) df
     else if (!isNarrowPlan(df)) df
     else {
-      val sess = df.sparkSession
-      val cores = sess.sparkContext.defaultParallelism
-      val floor = BigInt(math.max(1L,
-        sess.conf.get(SpreadFloorKey, SpreadFloorDefault.toString).toLong))
+      val cores = df.sparkSession.sparkContext.defaultParallelism
       val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      val target = ((size + floor - 1) / floor).min(BigInt(cores)).max(BigInt(1)).toInt
+      val target = ((size + SpreadFloorBytes - 1) / SpreadFloorBytes)
+        .min(BigInt(cores)).max(BigInt(1)).toInt
       if (target > 1 && df.rdd.getNumPartitions < target) df.repartition(target) else df
     }
 

@@ -178,9 +178,7 @@ object Curate {
     */
   def fromValues(values: DataFrame, valueCol: String, registry: DataFrame,
                  field: String, synonymsCol: String = "synonyms"): FromValuesResult = {
-    val dict =
-      if (registry.columns.contains(synonymsCol)) synonymDict(registry, field, synonymsCol)
-      else registry.select(col(field).as("__name"), col(field).as("__synonym"), lit(0).as("__prio"))
+    val dict = dictKeys(registry, field, synonymsCol)
     val matched = values.join(broadcast(dict.select("__synonym").distinct()),
       col(valueCol) === col("__synonym"), "left_semi")
     val existing = registry.join(

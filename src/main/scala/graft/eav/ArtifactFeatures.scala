@@ -13,33 +13,23 @@ import graft.query.QuerySet
   * `to_dataframe(include="features")` wide annotation export.
   */
 final class ArtifactFeatures(cat: Catalog) {
-  private val records = new Records(cat)
+  /** ArtifactULabel's unique key. */
+  private val LabelLinkKey = Seq("artifact_id", "ulabel_id", "feature_id")
 
-  /** `artifact.features.add_values({...})`: infer/ensure features, write
-    * JSON values (scalars) or label links (strings naming ULabels when
-    * the feature dtype is categorical).
+  /** `artifact.features.add_values({...})`: ensure each feature (dtype
+    * inferred on first sight; a stored dtype wins), then link a JSON value
+    * (scalars) or a ULabel named by the value (categorical dtypes).
     */
   def addValues(artifactId: Long, values: Map[String, Any]): Unit =
     values.foreach { case (name, v) =>
-      val dtype = graft.dtype.Dtype.infer(v).asString
-      val fid = records.ensureFeature(name, inferredOrExisting(name, dtype))
-      val isCat = Option(cat.table("feature").filter(col("id") === fid)
-        .select("dtype").head().getString(0)).exists(_.startsWith("cat"))
-      if (isCat) {
-        val label = cat.table("ulabel").filter(col("name") === v.toString).select("id").head(1)
-        val labelId = label.headOption.map(_.getLong(0)).getOrElse(
-          cat.insert("ulabel", Map("name" -> v.toString))("id").asInstanceOf[Long])
-        cat.insert("artifact_ulabels",
-          Map("artifact_id" -> artifactId, "ulabel_id" -> labelId, "feature_id" -> fid))
-      } else {
-        val jvId = getOrCreateJsonValue(fid, toJson(v))
-        val linked = !cat.table("artifact_json_values")
-          .filter(col("artifact_id") === artifactId && col("json_value_id") === jvId)
-          .isEmpty
-        if (!linked)
-          cat.insert("artifact_json_values",
-            Map("artifact_id" -> artifactId, "json_value_id" -> jvId))
-      }
+      val feature = ensureFeature(name, v)
+      if (String.valueOf(feature("dtype")).startsWith("cat")) {
+        val label = cat.ensure("ulabel", Seq("name"), Seq(Map("name" -> v.toString))).head
+        cat.ensure("artifact_ulabels", LabelLinkKey, Seq(Map("artifact_id" -> artifactId,
+          "ulabel_id" -> label("id"), "feature_id" -> feature("id"))))
+      } else
+        cat.ensure("artifact_json_values", Seq("artifact_id", "json_value_id"),
+          Seq(Map("artifact_id" -> artifactId, "json_value_id" -> jsonValueId(feature, v))))
     }
 
   /** `artifact.labels.add(...)`: link ulabels (optionally under a
@@ -47,20 +37,9 @@ final class ArtifactFeatures(cat: Catalog) {
     * ArtifactULabel (artifact, ulabel, feature) triple — the same label
     * may be linked again under a DIFFERENT feature (`_label_manager.py`).
     */
-  def addLabels(artifactId: Long, labelIds: Seq[Long], featureId: Option[Long] = None): Unit = {
-    val existing = existingLinkKeys(artifactId)
-    labelIds.filterNot(lid => existing((lid, featureId))).foreach { lid =>
-      cat.insert("artifact_ulabels", Map("artifact_id" -> artifactId,
-        "ulabel_id" -> lid) ++ featureId.map("feature_id" -> _))
-    }
-  }
-
-  /** (ulabel_id, feature_id) pairs already linked to an artifact. */
-  private def existingLinkKeys(artifactId: Long): Set[(Long, Option[Long])] =
-    cat.table("artifact_ulabels").filter(col("artifact_id") === artifactId)
-      .select("ulabel_id", "feature_id").collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
-      .toSet
+  def addLabels(artifactId: Long, labelIds: Seq[Long], featureId: Option[Long] = None): Unit =
+    cat.ensure("artifact_ulabels", LabelLinkKey, labelIds.map(lid =>
+      Map("artifact_id" -> artifactId, "ulabel_id" -> lid) ++ featureId.map("feature_id" -> _)))
 
   /** `artifact.labels.remove(...)`. */
   def removeLabels(artifactId: Long, labelIds: Seq[Long]): Unit = {
@@ -71,23 +50,15 @@ final class ArtifactFeatures(cat: Catalog) {
 
   /** `artifact.labels.add_from(other)`: copy every label link (with its
     * feature association) from another artifact; idempotent on existing
-    * links (`_label_manager.py:310` area).
+    * links (`_label_manager.py:310` area). Returns the links created.
     */
   def addLabelsFrom(targetId: Long, sourceId: Long): Long = {
     val src = cat.table("artifact_ulabels").filter(col("artifact_id") === sourceId)
       .select("ulabel_id", "feature_id").collect()
-    val existing = existingLinkKeys(targetId)
-    var n = 0L
-    src.foreach { r =>
-      val key = (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
-      if (!existing(key)) {
-        cat.insert("artifact_ulabels", Map(
-          "artifact_id" -> targetId, "ulabel_id" -> r.getLong(0),
-          "feature_id" -> key._2.map(Long.box).orNull))
-        n += 1
-      }
-    }
-    n
+    val before = cat.buffered("artifact_ulabels")
+    cat.ensure("artifact_ulabels", LabelLinkKey, src.toIndexedSeq.map(r =>
+      Map("artifact_id" -> targetId, "ulabel_id" -> r.get(0), "feature_id" -> r.get(1))))
+    (cat.buffered("artifact_ulabels") - before).toLong
   }
 
   /** Run-side scalar annotation through the SAME deduplicated json_value
@@ -96,38 +67,21 @@ final class ArtifactFeatures(cat: Catalog) {
     */
   def addRunValues(runId: Long, values: Map[String, Any]): Unit =
     values.foreach { case (name, v) =>
-      val dtype = graft.dtype.Dtype.infer(v).asString
-      val fid = records.ensureFeature(name, inferredOrExisting(name, dtype))
-      val jvId = getOrCreateJsonValue(fid, toJson(v))
-      val linked = !cat.table("run_json_values")
-        .filter(col("run_id") === runId && col("json_value_id") === jvId)
-        .isEmpty
-      if (!linked)
-        cat.insert("run_json_values", Map("run_id" -> runId, "json_value_id" -> jvId))
+      cat.ensure("run_json_values", Seq("run_id", "json_value_id"),
+        Seq(Map("run_id" -> runId, "json_value_id" -> jsonValueId(ensureFeature(name, v), v))))
     }
 
-  /** `JsonValue.get_or_create`: dedup on (feature, value-hash) — the same
-    * (feature, value) annotation on many artifacts stores ONE value row.
+  private def ensureFeature(name: String, v: Any): Map[String, Any] =
+    cat.ensure("feature", Seq("name"),
+      Seq(Map("name" -> name, "dtype" -> graft.dtype.Dtype.infer(v).asString))).head
+
+  /** `JsonValue.get_or_create`: one row per (feature, value hash), so the
+    * same annotation on many artifacts and runs stores ONE value row.
     */
-  private def getOrCreateJsonValue(featureId: Long, valueJson: String): Long = {
-    val hash = graft.core.Hashing.md5String(valueJson)
-    val existing = cat.table("json_value")
-      .filter(col("feature_id") === featureId && col("hash") === hash)
-      .select("id").head(1)
-    existing.headOption.map(_.getLong(0)).getOrElse(
-      cat.insert("json_value", Map(
-        "feature_id" -> featureId, "value_json" -> valueJson, "hash" -> hash))("id")
-        .asInstanceOf[Long])
-  }
-
-  private def inferredOrExisting(name: String, inferred: String): String = {
-    val ex = cat.table("feature").filter(col("name") === name).select("dtype").head(1)
-    ex.headOption.flatMap(r => Option(r.getString(0))).getOrElse(inferred)
-  }
-
-  private def toJson(v: Any): String = v match {
-    case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    case other     => String.valueOf(other)
+  private def jsonValueId(feature: Map[String, Any], v: Any): Any = {
+    val json = FeatureStore.toJson(v)
+    cat.ensure("json_value", Seq("feature_id", "hash"), Seq(Map("feature_id" -> feature("id"),
+      "value_json" -> json, "hash" -> graft.core.Hashing.md5String(json)))).head("id")
   }
 
   /** Flattened (record_id, feature_id, value_json) view over the dedup'd

@@ -219,6 +219,16 @@ object FeatureStore {
     features.select("id", "name", "dtype").collect()
       .map(r => r.getString(1) -> (r.getLong(0), Option(r.getString(2)).getOrElse("str")))
       .toMap
+
+  /** A scalar as the JSON text stored in `value_json`: strings, datetimes
+    * (ISO instant) and dates (ISO date) quoted, anything else as is.
+    */
+  def toJson(v: Any): String = v match {
+    case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    case t: java.sql.Timestamp => "\"" + t.toInstant.toString + "\""
+    case d @ (_: java.sql.Date | _: java.time.LocalDate) => "\"" + d.toString + "\""
+    case other => String.valueOf(other)
+  }
 }
 
 /** FilteredRelation-style annotation (`get_feature_annotate_kwargs`,

@@ -1,9 +1,8 @@
 package graft.eav
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
-import graft.dtype.Dtype
 
 /** Record "sheets" — dynamic-schema rows stored EAV-style
   * (`lamindb/models/record.py:533`, link tables `:1262-1358`): a Record
@@ -12,23 +11,6 @@ import graft.dtype.Dtype
   * migrations. Wide import/export is the long↔wide pivot.
   */
 final class Records(cat: Catalog) {
-
-  /** Ensure a Feature row exists; returns its id. Dtype is inferred from
-    * the DataFrame column type on first sight (`infer_feature_type`).
-    */
-  def ensureFeature(name: String, dtype: String): Long = {
-    val existing = cat.table("feature").filter(col("name") === name).select("id").head(1)
-    existing.headOption.map(_.getLong(0)).getOrElse(
-      cat.insert("feature", Map("name" -> name, "dtype" -> dtype))("id").asInstanceOf[Long])
-  }
-
-  /** Ensure a Record *type* row (is_type = true), e.g. "BioSample". */
-  def ensureType(name: String): Long = {
-    val existing = cat.table("record")
-      .filter(col("name") === name && col("is_type") === true).select("id").head(1)
-    existing.headOption.map(_.getLong(0)).getOrElse(
-      cat.insert("record", Map("name" -> name, "is_type" -> true))("id").asInstanceOf[Long])
-  }
 
   private def sparkToDtype(dt: org.apache.spark.sql.types.DataType): String = dt match {
     case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType => "int"
@@ -45,11 +27,13 @@ final class Records(cat: Catalog) {
     * Returns the created record ids keyed by name.
     */
   def fromDataFrame(df: DataFrame, typeName: String, nameCol: String): Map[String, Long] = {
-    val typeId = ensureType(typeName)
+    val typeId = cat.ensure("record", Seq("name", "is_type"),
+      Seq(Map("name" -> typeName, "is_type" -> true))).head("id")
     val valueCols = df.columns.filterNot(_ == nameCol).toSeq
-    val featureIds = valueCols.map { c =>
-      c -> ensureFeature(c, sparkToDtype(df.schema(c).dataType))
-    }.toMap
+    // dtype inferred from the column type on first sight (`infer_feature_type`)
+    val features = cat.ensure("feature", Seq("name"), valueCols.map(c =>
+      Map("name" -> c, "dtype" -> sparkToDtype(df.schema(c).dataType))))
+    val featureIds = valueCols.zip(features.map(_("id"))).toMap
     val rows = df.collect() // sheets are human-scale; bulk data belongs in artifacts
     rows.map { r =>
       val name = r.getAs[Any](nameCol).toString
@@ -58,18 +42,11 @@ final class Records(cat: Catalog) {
       valueCols.foreach { c =>
         val v = r.getAs[Any](c)
         if (v != null)
-          cat.insert("record_json", Map(
-            "record_id" -> recordId, "feature_id" -> featureIds(c), "value_json" -> toJson(v)))
+          cat.insert("record_json", Map("record_id" -> recordId,
+            "feature_id" -> featureIds(c), "value_json" -> FeatureStore.toJson(v)))
       }
       name -> recordId
     }.toMap
-  }
-
-  private def toJson(v: Any): String = v match {
-    case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    case t: java.sql.Timestamp => "\"" + t.toInstant.toString + "\""
-    case d: java.sql.Date => "\"" + d.toString + "\""
-    case other => String.valueOf(other)
   }
 
   /** FeatureStore view over the records of one type (scalar JSON values +

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,39 +24,89 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
+  /** (domain, quota_d, count_d) for target fractions: T = min over
+    * domains of count_d / frac_d, quota_d = floor(frac_d * T).
+    */
   private def quotasFor(df: DataFrame, domainCol: String,
                         targets: Seq[(String, Double)]): Seq[(String, Long, Long)] = {
     require(targets.nonEmpty && targets.forall(_._2 > 0), "positive target fractions required")
-    val counts = df.groupBy(domainCol).count().collect()
-      .map(r => r.get(0).toString -> r.getLong(1)).toMap
+    val counts = domainCounts(df, domainCol).toMap
     val t = targets.map { case (d, f) => counts.getOrElse(d, 0L).toDouble / f }.min
     targets.map { case (d, f) =>
       (d, math.floor(f * t).toLong, counts.getOrElse(d, 0L))
     }
   }
 
-  /** Deterministic salt-ordered rank within each domain. */
-  private def hashOrder(df: DataFrame, idCol: String, salt: String) =
+  /** (domain, quota_d, count_d) for sqrt-weighted temperature sampling:
+    * quota_d = min(n_d, totalKeep · w_d / Σw), w_d = floor(sqrt(n_d)).
+    */
+  private def sqrtQuotas(df: DataFrame, domainCol: String,
+                         totalKeep: Long): Seq[(String, Long, Long)] = {
+    require(totalKeep >= 0, "totalKeep must be non-negative")
+    val weights = domainCounts(df, domainCol)
+      .map { case (d, n) => (d, n, math.sqrt(n.toDouble).toLong) }
+    val sumW = weights.map(_._3).sum
+    require(sumW > 0, "temperatureMix over an empty corpus")
+    weights.map { case (d, n, w) => (d, math.min(n, totalKeep * w / sumW), n) }
+  }
+
+  private def domainCounts(df: DataFrame, domainCol: String): Seq[(String, Long)] =
+    df.groupBy(domainCol).count().collect()
+      .map(r => r.get(0).toString -> r.getLong(1)).toSeq.sortBy(_._1)
+
+  /** Deterministic salt-ordered rank key: md5(id‖salt) as hex. */
+  private def hashOrder(idCol: String, salt: String): Column =
     md5(concat(col(idCol).cast("string"), lit(salt)))
+
+  /** Bucket in [0, n) from the first 15 hex digits of an md5 hex string. */
+  private def md5Bucket(hex: Column, n: Long): Column =
+    pmod(conv(substring(hex, 1, 15), 16, 10).cast("long"), lit(n))
+
+  /** Quality tier: the number of `thresholds` a row's score reaches. */
+  private def tierOf(scoreCol: String, thresholds: Seq[Double]): Column =
+    thresholds.foldLeft(lit(0)) { (acc, t) =>
+      acc + when(col(scoreCol) >= t, 1).otherwise(0)
+    }.cast("long")
+
+  /** Exact cut: a row survives iff its md5(id‖salt) rank (id tie-break)
+    * within its domain is ≤ quota_d. One per-domain window.
+    */
+  private def rankCut(df: DataFrame, idCol: String, domainCol: String,
+                      quotas: Seq[(String, Long, Long)], salt: String): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val quotaDf = quotas.map { case (d, q, _) => (d, q) }.toDF(domainCol, "__quota")
+    val w = Window.partitionBy(col(domainCol))
+      .orderBy(hashOrder(idCol, salt), col(idCol))
+    df.join(broadcast(quotaDf), Seq(domainCol))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= col("__quota"))
+      .drop("__rn", "__quota")
+  }
+
+  /** Map-only cut: keep a row iff bucket(md5(id‖salt)) < rate_d · 2^20,
+    * rate_d = quota_d / count_d. Each task filters locally.
+    */
+  private def bucketCut(df: DataFrame, idCol: String, domainCol: String,
+                        quotas: Seq[(String, Long, Long)], salt: String): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val buckets = 1L << 20
+    val rateDf = quotas.map { case (d, q, n) =>
+      (d, if (n == 0) 0L else math.round(q.toDouble / n * buckets))
+    }.toDF(domainCol, "__cut")
+    df.join(broadcast(rateDf), Seq(domainCol))
+      .filter(md5Bucket(hashOrder(idCol, salt), buckets) < col("__cut"))
+      .drop("__cut")
+  }
 
   /** Exact-quota mix: row r of domain d survives iff its md5(id‖salt)
     * rank within d is ≤ quota_d. Deterministic and engine-portable
     * (md5 hex ordering), so DuckDB replays it bit-for-bit.
     */
   def domainMix(df: DataFrame, idCol: String, domainCol: String,
-                targets: Seq[(String, Double)], salt: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val quotaDf = quotasFor(df, domainCol, targets)
-      .map { case (d, q, _) => (d, q) }
-      .toDF(domainCol, "__quota")
-    val w = Window.partitionBy(col(domainCol))
-      .orderBy(hashOrder(df, idCol, salt), col(idCol))
-    df.join(broadcast(quotaDf), Seq(domainCol))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= col("__quota"))
-      .drop("__rn", "__quota")
-  }
+                targets: Seq[(String, Double)], salt: String): DataFrame =
+    rankCut(df, idCol, domainCol, quotasFor(df, domainCol, targets), salt)
 
   /** Temperature-scaled mixture at α = 1/2 — the standard multilingual
     * upweighting (mT5-style p_d ∝ n_d^α with α < 1 lifts low-resource
@@ -77,17 +127,8 @@ object Sampling {
     * 100 TB use [[temperatureMixThreshold]], the map-only twin.
     */
   def temperatureMix(df: DataFrame, idCol: String, domainCol: String,
-                     totalKeep: Long, salt: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val quotaDf = sqrtQuotas(df, domainCol, totalKeep).toDF(domainCol, "__quota")
-    val w = Window.partitionBy(col(domainCol))
-      .orderBy(hashOrder(df, idCol, salt), col(idCol))
-    df.join(broadcast(quotaDf), Seq(domainCol))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= col("__quota"))
-      .drop("__rn", "__quota")
-  }
+                     totalKeep: Long, salt: String): DataFrame =
+    rankCut(df, idCol, domainCol, sqrtQuotas(df, domainCol, totalKeep), salt)
 
   /** Map-only twin of [[temperatureMix]] (the 100 TB path): the same
     * sqrt-weight quotas become per-domain hash-bucket rates; each task
@@ -95,39 +136,8 @@ object Sampling {
     * quotas by O(√quota), same contract as [[domainMixThreshold]].
     */
   def temperatureMixThreshold(df: DataFrame, idCol: String, domainCol: String,
-                              totalKeep: Long, salt: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val buckets = 1L << 20
-    val counts = domainCounts(df, domainCol)
-    val rateDf = sqrtQuotasFrom(counts, totalKeep).map { case (d, q) =>
-      val n = counts.toMap.apply(d)
-      (d, if (n == 0) 0L else math.round(q.toDouble / n * buckets))
-    }.toDF(domainCol, "__cut")
-    val bucket = pmod(
-      conv(substring(hashOrder(df, idCol, salt), 1, 15), 16, 10).cast("long"),
-      lit(buckets))
-    df.join(broadcast(rateDf), Seq(domainCol))
-      .filter(bucket < col("__cut"))
-      .drop("__cut")
-  }
-
-  private def domainCounts(df: DataFrame, domainCol: String): Seq[(String, Long)] =
-    df.groupBy(domainCol).count().collect()
-      .map(r => r.get(0).toString -> r.getLong(1)).toSeq.sortBy(_._1)
-
-  private def sqrtQuotas(df: DataFrame, domainCol: String,
-                         totalKeep: Long): Seq[(String, Long)] =
-    sqrtQuotasFrom(domainCounts(df, domainCol), totalKeep)
-
-  private def sqrtQuotasFrom(counts: Seq[(String, Long)],
-                             totalKeep: Long): Seq[(String, Long)] = {
-    require(totalKeep >= 0, "totalKeep must be non-negative")
-    val weights = counts.map { case (d, n) => (d, n, math.sqrt(n.toDouble).toLong) }
-    val sumW = weights.map(_._3).sum
-    require(sumW > 0, "temperatureMix over an empty corpus")
-    weights.map { case (d, n, w) => (d, math.min(n, totalKeep * w / sumW)) }
-  }
+                              totalKeep: Long, salt: String): DataFrame =
+    bucketCut(df, idCol, domainCol, sqrtQuotas(df, domainCol, totalKeep), salt)
 
   /** Map-only mix: keep a row iff bucket(md5(id‖salt)) < rate_d · 2^20,
     * rate_d = quota_d / count_d. No per-domain sort — each task filters
@@ -136,21 +146,47 @@ object Sampling {
     * from quotas by O(√quota) (binomial), fine for mixing at scale.
     */
   def domainMixThreshold(df: DataFrame, idCol: String, domainCol: String,
-                         targets: Seq[(String, Double)], salt: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val buckets = 1L << 20
-    val rateDf = quotasFor(df, domainCol, targets)
-      .map { case (d, q, c) =>
-        (d, if (c == 0) 0L else math.round(q.toDouble / c * buckets))
-      }
-      .toDF(domainCol, "__cut")
-    val bucket = pmod(
-      conv(substring(hashOrder(df, idCol, salt), 1, 15), 16, 10).cast("long"),
-      lit(buckets))
-    df.join(broadcast(rateDf), Seq(domainCol))
-      .filter(bucket < col("__cut"))
-      .drop("__cut")
+                         targets: Seq[(String, Double)], salt: String): DataFrame =
+    bucketCut(df, idCol, domainCol, quotasFor(df, domainCol, targets), salt)
+
+  /** Curriculum construction: a deterministic training ORDER in which
+    * every window of the emitted sequence carries the full quality mix
+    * (the uniform-mixing baseline of data-ordering studies). Documents
+    * are tiered by explicit score thresholds (map-only — thresholds
+    * come from a stats pass like q25's exact quantiles), ordered within
+    * a tier by `md5(id‖salt)` with an id tie-break, and round-robin
+    * interleaved: `pos = (rank-1)·nTiers + tier`. Sorting the output by
+    * `pos` IS the curriculum.
+    *
+    * Scale note: the within-tier rank is a per-tier window (few
+    * partition keys — same shape as `domainMix`, fine to ~10^8 rows per
+    * tier); `curriculumKeyMapOnly` is the no-shuffle twin for beyond
+    * that, exactly like `domainMixThreshold` twins `domainMix`.
+    */
+  def curriculumOrder(docs: DataFrame, idCol: String, scoreCol: String,
+                      thresholds: Seq[Double], salt: String): DataFrame = {
+    val nTiers = thresholds.size + 1
+    val w = Window.partitionBy("tier").orderBy(col("__h"), col(idCol))
+    docs.withColumn("tier", tierOf(scoreCol, thresholds))
+      .withColumn("__h", hashOrder(idCol, salt))
+      .withColumn("pos",
+        (row_number().over(w) - 1).cast("long") * nTiers + col("tier"))
+      .select(col(idCol), col("tier"), col("pos"))
+  }
+
+  /** Map-only curriculum KEY: `key = bucket(md5(id‖salt))·nTiers + tier`
+    * — no shuffle, no rank; sorting (or range-partitioning) by `key`
+    * yields an approximately uniform tier mix in every window, with the
+    * exact round-robin property traded for zero coordination. The 100 TB
+    * twin of [[curriculumOrder]].
+    */
+  def curriculumKeyMapOnly(docs: DataFrame, idCol: String, scoreCol: String,
+                           thresholds: Seq[Double], salt: String): DataFrame = {
+    val nTiers = thresholds.size + 1
+    docs.withColumn("tier", tierOf(scoreCol, thresholds))
+      .withColumn("curriculum_key",
+        md5Bucket(hashOrder(idCol, salt), 1L << 20) * nTiers + col("tier"))
+      .select(col(idCol), col("tier"), col("curriculum_key"))
   }
 
   /** DSIR-style data selection (importance resampling over hashed
@@ -174,64 +210,14 @@ object Sampling {
     * one shuffle on doc id with map-side combine; top-k is a
     * TakeOrdered, never a global sort.
     */
-  /** Curriculum construction: a deterministic training ORDER in which
-    * every window of the emitted sequence carries the full quality mix
-    * (the uniform-mixing baseline of data-ordering studies). Documents
-    * are tiered by explicit score thresholds (map-only — thresholds
-    * come from a stats pass like q25's exact quantiles), ordered within
-    * a tier by `md5(id‖salt)` with an id tie-break, and round-robin
-    * interleaved: `pos = (rank-1)·nTiers + tier`. Sorting the output by
-    * `pos` IS the curriculum.
-    *
-    * Scale note: the within-tier rank is a per-tier window (few
-    * partition keys — same shape as `domainMix`, fine to ~10^8 rows per
-    * tier); `curriculumKeyMapOnly` is the no-shuffle twin for beyond
-    * that, exactly like `domainMixThreshold` twins `domainMix`.
-    */
-  def curriculumOrder(docs: DataFrame, idCol: String, scoreCol: String,
-                      thresholds: Seq[Double], salt: String): DataFrame = {
-    val nTiers = thresholds.size + 1
-    val tier = thresholds.foldLeft(lit(0)) { (acc, t) =>
-      acc + when(col(scoreCol) >= t, 1).otherwise(0)
-    }.cast("long")
-    val w = Window.partitionBy("tier").orderBy(col("__h"), col(idCol))
-    docs.withColumn("tier", tier)
-      .withColumn("__h", hashOrder(docs, idCol, salt))
-      .withColumn("pos",
-        (row_number().over(w) - 1).cast("long") * nTiers + col("tier"))
-      .select(col(idCol), col("tier"), col("pos"))
-  }
-
-  /** Map-only curriculum KEY: `key = bucket(md5(id‖salt))·nTiers + tier`
-    * — no shuffle, no rank; sorting (or range-partitioning) by `key`
-    * yields an approximately uniform tier mix in every window, with the
-    * exact round-robin property traded for zero coordination. The 100 TB
-    * twin of [[curriculumOrder]].
-    */
-  def curriculumKeyMapOnly(docs: DataFrame, idCol: String, scoreCol: String,
-                           thresholds: Seq[Double], salt: String): DataFrame = {
-    val nTiers = thresholds.size + 1
-    val tier = thresholds.foldLeft(lit(0)) { (acc, t) =>
-      acc + when(col(scoreCol) >= t, 1).otherwise(0)
-    }.cast("long")
-    val bucket = pmod(
-      conv(substring(hashOrder(docs, idCol, salt), 1, 15), 16, 10).cast("long"),
-      lit(1L << 20))
-    docs.withColumn("tier", tier)
-      .withColumn("curriculum_key", bucket * nTiers + col("tier"))
-      .select(col(idCol), col("tier"), col("curriculum_key"))
-  }
-
   def importanceTopK(docs: DataFrame, textCol: String, idCol: String,
-                     isTarget: org.apache.spark.sql.Column, k: Int,
+                     isTarget: Column, k: Int,
                      buckets: Int = 4096): DataFrame = {
     val tok = graft.core.Par.spreadForCpu(docs)
       .select(col(idCol), isTarget.as("__tgt"),
         explode(split(lower(trim(col(textCol))), "\\s+")).as("__w"))
       .filter(col("__w") =!= "")
-      .withColumn("__b", pmod(
-        conv(substring(md5(col("__w")), 1, 15), 16, 10).cast("long"),
-        lit(buckets.toLong)))
+      .withColumn("__b", md5Bucket(md5(col("__w")), buckets.toLong))
     val cnt = tok.groupBy("__b").agg(
       sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct"),
       sum(when(col("__tgt"), 0L).otherwise(1L)).as("__cr"))

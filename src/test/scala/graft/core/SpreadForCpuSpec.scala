@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the `Par.spreadForCpu` gate that parallelizes CPU-heavy text
   * kernels over narrow (single-row-group) inputs:
   *  - narrow input → round-robin repartition to
-  *    `min(defaultParallelism, ceil(estimatedBytes / floorBytes))` —
+  *    `min(defaultParallelism, ceil(estimatedBytes / 64 KiB))` —
   *    the r19 input-size floor (r18 verdict: bare defaultParallelism
   *    over-partitioned every small corpus; the 8-core suite beat the
   *    32-core suite);
@@ -58,16 +58,6 @@ class SpreadForCpuSpec extends AnyFunSuite {
     val df = spark.createDataFrame(rdd, schema)
     val spread = Par.spreadForCpu(df)
     assert(spread.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
-  }
-
-  test("spread floor is configurable via spark.graft.spread.floorBytes") {
-    spark.conf.set(Par.SpreadFloorKey, "100")
-    try {
-      // 800 B at a 100-B floor → 8, capped at defaultParallelism
-      val tiny = spark.range(100).coalesce(1).toDF()
-      assert(Par.spreadForCpu(tiny).rdd.getNumPartitions ==
-        spark.sparkContext.defaultParallelism)
-    } finally spark.conf.unset(Par.SpreadFloorKey)
   }
 
   test("wide input passes through untouched") {
