@@ -21,10 +21,17 @@ import graft.query.{DoesNotExist, QuerySet}
 final class ArtifactStore(val cat: Catalog) {
   private def spark: SparkSession = cat.spark
 
-  /** Ensure a storage root exists; return its id. */
+  /** Ensure a storage root exists; return its id. A known root is
+    * answered from a root → id map kept while the `storage` table is
+    * unchanged (no Spark job); an unknown one goes through `ensure`.
+    */
   def ensureStorage(root: String): Long =
-    cat.ensure("storage", Seq("root"), Seq(Map("root" -> root, "typ" -> "local")))
-      .head("id").asInstanceOf[Long]
+    cat.memo("storage.idByRoot", Seq("storage")) {
+      // the first stored row per root wins, as in `ensure`
+      cat.table("storage").select("root", "id").collect().reverseIterator
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    }.getOrElse(root, cat.ensure("storage", Seq("root"), Seq(Map("root" -> root, "typ" -> "local")))
+      .head("id").asInstanceOf[Long])
 
   /** Register an existing file/directory as an artifact (ingest-by-
     * reference). Idempotent on content hash; versions on key conflict.
@@ -540,28 +547,33 @@ final class ArtifactStore(val cat: Catalog) {
 
     // M2M links travel with the record (the reference transfers schema
     // members etc. by uid — `tests/transfer`): related rows are
-    // transferred first, then link rows are re-created with both sides
-    // remapped; uid-conflict-free (a same-NAME local row with a different
-    // uid coexists with the transferred one).
+    // transferred first, then link rows are re-created with every FK
+    // column (both sides, and the feature a label link is scoped by)
+    // remapped through its registry's uid; uid-conflict-free (a same-NAME
+    // local row with a different uid coexists with the transferred one).
+    // Links are keyed on all their columns but `id`, so links that differ
+    // only in a scope column all arrive.
     val freshSrcIds = fresh.map(_.getAs[Long]("id")).toIndexedSeq
-    val srcIdByUid2 = fresh.map(r => r.getAs[String]("uid") -> r.getAs[Long]("id")).toMap
-    lazy val tgtIdByUid2 = target.table(registry)
-      .filter(col("uid").isin(srcIdByUid2.keys.toSeq: _*))
-      .select("uid", "id").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     tdef.m2ms.values.foreach { m2m =>
       val links = cat.table(m2m.link).filter(col(m2m.leftCol).isin(freshSrcIds: _*)).collect()
       if (links.nonEmpty) {
-        val rightRemap = remapIds(m2m.target, links.map(_.getAs[Long](m2m.rightCol)).distinct.toIndexedSeq)
-        val srcUidById = srcIdByUid2.map(_.swap)
-        // an unmappable side drops the link: raw ids are never carried
-        target.ensure(m2m.link, Seq(m2m.leftCol, m2m.rightCol), links.toIndexedSeq.flatMap { lr =>
-          for {
-            l <- srcUidById.get(lr.getAs[Long](m2m.leftCol)).flatMap(tgtIdByUid2.get)
-            rgt <- rightRemap.get(lr.getAs[Long](m2m.rightCol))
-          } yield Map(m2m.leftCol -> l, m2m.rightCol -> rgt) ++
-            (lr.getValuesMap[Any](lr.schema.fieldNames) -- Seq("id", m2m.leftCol, m2m.rightCol))
-              .filter(_._2 != null)
-        })
+        val linkDef = cat.tableDef(m2m.link)
+        val sides = Set(m2m.leftCol, m2m.rightCol)
+        val linkRemaps = ((m2m.leftCol -> registry) +: (m2m.rightCol -> m2m.target) +:
+          linkDef.fks.values.map(fk => fk.localCol -> fk.target).toSeq).map { case (c, reg) =>
+          c -> remapIds(reg, links.flatMap(l => Option(l.getAs[Any](c))).map(_.asInstanceOf[Long])
+            .distinct.toIndexedSeq)
+        }.toMap
+        // an unmappable side drops the link and an unmappable scope FK is
+        // nulled, as row FKs are: raw ids are never carried
+        target.ensure(m2m.link, linkDef.schema.fieldNames.toIndexedSeq.filter(_ != "id"),
+          links.toIndexedSeq.flatMap { lr =>
+            val m = (lr.getValuesMap[Any](lr.schema.fieldNames) - "id").map {
+              case (c, v: Long) if linkRemaps.contains(c) => c -> (linkRemaps(c).get(v).orNull: Any)
+              case kv => kv
+            }
+            if (sides.exists(m(_) == null)) None else Some(m.filter(_._2 != null))
+          })
       }
     }
     fresh.length.toLong + parentCreated

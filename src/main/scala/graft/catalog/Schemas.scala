@@ -155,7 +155,8 @@ object Schemas {
   val artifactUlabels = TableDef(
     "artifact_ulabels",
     StructType(Seq(f("id", L, false), f("artifact_id", L, false),
-      f("ulabel_id", L, false), f("feature_id", L))))
+      f("ulabel_id", L, false), f("feature_id", L))),
+    fks = Map("feature" -> FK("feature", "feature", "feature_id")))
 
   val artifactSchemas = TableDef(
     "artifact_schemas",
@@ -272,7 +273,8 @@ object Schemas {
   val artifactReferences = TableDef(
     "artifact_references",
     StructType(Seq(f("id", L, false), f("artifact_id", L, false),
-      f("reference_id", L, false), f("feature_id", L))))
+      f("reference_id", L, false), f("feature_id", L))),
+    fks = Map("feature" -> FK("feature", "feature", "feature_id")))
 
   val transformReferences = TableDef(
     "transform_references",
@@ -292,7 +294,8 @@ object Schemas {
   val artifactProjects = TableDef(
     "artifact_projects",
     StructType(Seq(f("id", L, false), f("artifact_id", L, false),
-      f("project_id", L, false), f("feature_id", L))))
+      f("project_id", L, false), f("feature_id", L))),
+    fks = Map("feature" -> FK("feature", "feature", "feature_id")))
 
   /** Project membership with a role (`ProjectUser`, `project.py:541-550`:
     * unique on (project, user, role)) — the reference's person-link

@@ -419,11 +419,12 @@ object Dedup {
   /** SimHash signature frame `(id, sim0[, sim1])`: per signature bit, sum
     * +1/-1 weighted by the token hash bit, take the sign.
     *
-    * Shaped as explode → ONE hash-aggregate of W·wordBits narrow sums →
-    * reassemble: one shuffle on the doc id, fully vectorized. The naive
-    * per-row expression form (64 nested `aggregate` folds) blows past the
-    * whole-stage-codegen method-size limit and falls back to interpreted
-    * eval — measured ~20× slower.
+    * One row per input row with non-null text, from one native per-row
+    * kernel over `TextOps.tokens(text)` (`SimhashWords`): W·wordBits int
+    * counters in a static loop inside whole-stage codegen, so the frame
+    * is a narrow projection: no explode, no aggregate, and no exchange
+    * but the md5 families' spread of a narrow input (below). Rows are not
+    * merged by id; callers pass unique ids.
     *
     * Word hashes: the xxhash64 families hash the token (word 0) and, for
     * W=2, hash it again salt FIRST, `xxhash64(1L, tok)` (r18 ADVICE): the
@@ -431,33 +432,27 @@ object Dedup {
     * seed=h0), a pure function of h0, so the second word would carry zero
     * extra token entropy; salt-first re-hashes the token bytes under an
     * independent seed. The md5 families take hex chars 1–15 and 17–31 —
-    * disjoint 60-bit halves of the same digest.
+    * disjoint 60-bit halves of the same digest. The kernel computes each
+    * word bit for bit as those expressions do (`SimhashKernelPropertySpec`).
     *
-    * Only the md5 families spread the input (`Par.spreadForCpu`). xxhash64
-    * per token is the CHEAP hash — split-only map work in front of a plain
-    * aggregate, where the added exchange was measured pure cost (r18
-    * verdict regressions d06 0.39×, d34 0.62×; the same empirical rule as
-    * tfidf/bigram/b05); md5 is where spreading pays.
+    * Only the md5 families spread the input (`Par.spreadForCpu`): md5 per
+    * token is the expensive part of the kernel. Measured at sf0.1 on 4
+    * cores (Bench medians, 3 alternating pairs, all clean), the spread
+    * still pays with the per-row kernel: d10 1.32–1.41 s without it vs
+    * 1.21–1.31 s with it, d28 1.04–1.12 s vs 0.92–1.08 s. xxhash64 per
+    * token is cheap: there the added exchange measured pure cost (r18
+    * verdict regressions d06 0.39×, d34 0.62×).
     */
   private[graft] def simhashSignature(fam: SimhashFamily, df: DataFrame, idCol: String,
                                       textCol: String): DataFrame = {
-    val tok = (if (fam.md5Words) graft.core.Par.spreadForCpu(df) else df)
-      .select(col(idCol).as("id"), explode(TextOps.tokens(col(textCol))).as("tok"))
-    val hashed =
-      if (fam.md5Words) tok.withColumn("m", md5(col("tok"))).select(col("id") +:
-        (0 until fam.words).map(w =>
-          conv(substring(col("m"), 1 + 16 * w, 15), 16, 10).cast("long").as(s"h$w")): _*)
-      else tok.select(col("id") +: Seq(xxhash64(col("tok")), xxhash64(lit(1L), col("tok")))
-        .take(fam.words).zipWithIndex.map { case (h, w) => h.as(s"h$w") }: _*)
-    val wb = fam.wordBits
-    val votes = (0 until fam.words * wb).map { bit =>
-      sum(when(shiftright(col(s"h${bit / wb}"), bit % wb).bitwiseAND(1) === 1, 1L)
-        .otherwise(-1L)).as(s"v$bit")
-    }
-    hashed.groupBy("id").agg(votes.head, votes.tail: _*)
-      .select(col("id") +: (0 until fam.words).map(w =>
-        (0 until wb).map(b => when(col(s"v${w * wb + b}") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as(s"sim$w")): _*)
+    val words = org.apache.spark.sql.graft.SimhashWords.simhashWords(
+      TextOps.tokens(col(textCol)), fam.words, fam.wordBits, fam.md5Words)
+    // two projections: the second reads the kernel's output W times, so
+    // CollapseProject keeps the (non-cheap) kernel evaluated once per row
+    val input = if (fam.md5Words) graft.core.Par.spreadForCpu(df) else df
+    input.filter(col(textCol).isNotNull) // a null text has no tokens, so no row
+      .select(col(idCol).as("id"), words.as("sig"))
+      .select(col("id") +: (0 until fam.words).map(w => col("sig")(w).as(s"sim$w")): _*)
   }
 
   /** Cardinality-adaptive band plan: (bands, bandWidth).
@@ -575,13 +570,18 @@ object Dedup {
     * background risk), or `maxBucketDf` to additionally cap per-bucket
     * membership. The chosen plan is logged per run (slf4j INFO) so runs
     * are auditable.
+    *
+    * ID CONTRACT: `idCol` must be unique. Each input row gets its own
+    * signature; rows sharing an id are not merged, and the `id_a < id_b`
+    * self-join never pairs them with each other.
     */
   private def simhashKernel(fam: SimhashFamily, df: DataFrame, idCol: String, textCol: String,
                             bandPlan: Option[(Int, Int)], maxBucketDf: Option[Int]): DataFrame = {
     // persist: both sides of the band self-join read the signature frame,
-    // and without materialization each side re-runs the whole tokenize →
-    // vote aggregation (the dominant stage) — same reasoning as the
-    // `withSig` persist in minhashPairs; released via finishPairs below
+    // and without materialization each side re-reads the input and
+    // re-runs tokenize + the per-row kernel (and, for the md5 families,
+    // the spread) — same reasoning as the `withSig` persist in
+    // minhashPairs; released via finishPairs below
     val withSim = simhashSignature(fam, df, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // adaptive plan sizes off the SIGNATURE frame (one row per doc) so the
@@ -593,14 +593,16 @@ object Dedup {
     finishPairs(bandPairs(fam, withSim, bands, bw, maxBucketDf), withSim)
   }
 
-  /** 64-bit xxhash64 simhash candidates ([[simhashKernel]], `Fast64`). */
+  /** 64-bit xxhash64 simhash candidates ([[simhashKernel]], `Fast64`).
+    * `idCol` must be unique (see the id contract there).
+    */
   def simhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         bandPlan: Option[(Int, Int)] = None,
                         maxBucketDf: Option[Int] = None): DataFrame =
     simhashKernel(Fast64, df, idCol, textCol, bandPlan, maxBucketDf)
 
   /** 60-bit md5 simhash candidates, replayed by [[simhashPortableOracleSql]]
-    * ([[simhashKernel]], `Portable60`).
+    * ([[simhashKernel]], `Portable60`). `idCol` must be unique.
     */
   def simhashCandidatesPortable(df: DataFrame, idCol: String, textCol: String,
                                 bandPlan: Option[(Int, Int)] = None,
@@ -608,7 +610,7 @@ object Dedup {
     simhashKernel(Portable60, df, idCol, textCol, bandPlan, maxBucketDf)
 
   /** 128-bit (two xxhash64 words) simhash candidates ([[simhashKernel]],
-    * `Fast128`).
+    * `Fast128`). `idCol` must be unique.
     */
   def simhash128Candidates(df: DataFrame, idCol: String, textCol: String,
                            bandPlan: Option[(Int, Int)] = None,
@@ -617,6 +619,7 @@ object Dedup {
 
   /** 120-bit (two md5 words) simhash candidates, replayed by
     * [[simhash128PortableOracleSql]] ([[simhashKernel]], `Portable120`).
+    * `idCol` must be unique.
     */
   def simhash128CandidatesPortable(df: DataFrame, idCol: String, textCol: String,
                                    bandPlan: Option[(Int, Int)] = None,

@@ -74,10 +74,12 @@ class ArtifactOpsSpec extends AnyFunSuite {
     // as on a long-lived catalog (a buffer-only table answers on the driver)
     store.fromDataFrame(frame(0), "seed", root)
     cat.flushAll()
-    // new content: storage lookup, staged write, ONE hash lookup, family collect
+    // new content: the storage map (rebuilt once: the flush changed the
+    // storage table's state), staged write, ONE hash lookup, family collect
     val newJobs = ListenerBusDrain.jobs(sc)(store.fromDataFrames(Seq(frame(1) -> "a"), root))
     cat.flushAll()
-    // duplicate content: storage lookup, staged write, the hash lookup's hit
+    // duplicate content: staged write, the hash lookup's hit (the storage
+    // root is answered from the map, no job)
     val dupJobs = ListenerBusDrain.jobs(sc)(store.fromDataFrames(Seq(frame(1) -> "b"), root))
     cat.flushAll()
     // replace: uid lookup, staged write (n_observations rides it), hash
@@ -90,7 +92,7 @@ class ArtifactOpsSpec extends AnyFunSuite {
     val replaceDupJobs = ListenerBusDrain.jobs(sc)(store.replace(uid, frame(0), root))
     info(s"new frame: $newJobs jobs, duplicate: $dupJobs, replace: $replaceJobs, replace by duplicate: $replaceDupJobs")
     assert(newJobs === 4)
-    assert(dupJobs === 3)
+    assert(dupJobs === 2)
     assert(replaceJobs === 4)
     assert(replaceDupJobs === 3)
     assert(cat.table("artifact").filter(col("uid") === uid).head().getAs[Long]("n_observations") === 2L)
@@ -215,6 +217,33 @@ class ArtifactOpsSpec extends AnyFunSuite {
     assert(linkLabels.length === 1)
     assert(linkLabels.head.getString(0) === "curated")
     assert(linkLabels.head.getString(1) === lab("uid"))
+  }
+
+  test("transfer keeps a label linked under two features, each link's feature remapped") {
+    val cat1 = Catalog.deterministic(spark, TestSpark.tmpDir("src"), seed = 9)
+    val cat2 = Catalog.deterministic(spark, TestSpark.tmpDir("dst"), seed = 10)
+    val store1 = new ArtifactStore(cat1)
+    val st = cat1.insert("storage", Map("root" -> "/data/src"))
+    val art = cat1.insert("artifact", Map("key" -> "f.parquet", "hash" -> "h10",
+      "storage_id" -> st("id"), "is_latest" -> true))
+    val lab = cat1.insert("ulabel", Map("name" -> "T cell"))
+    val features = Seq("cell_type", "cell_type_curated")
+      .map(n => cat1.insert("feature", Map("name" -> n, "dtype" -> "cat[ULabel]")))
+    features.foreach(f => cat1.insert("artifact_ulabels", Map(
+      "artifact_id" -> art("id"), "ulabel_id" -> lab("id"), "feature_id" -> f("id"))))
+    // skew target ids so a verbatim feature_id copy would hit the wrong row
+    (1 to 3).foreach(i => cat2.insert("feature", Map("name" -> s"other$i", "dtype" -> "str")))
+
+    store1.transferTo(cat2, "artifact", Seq(art("uid").toString))
+    val tgtArt = cat2.table("artifact").filter(col("uid") === art("uid")).head().getAs[Long]("id")
+    val links = cat2.table("artifact_ulabels").filter(col("artifact_id") === tgtArt)
+      .join(cat2.table("feature").select(col("id").as("feature_id"), col("uid").as("feature_uid")), "feature_id")
+      .join(cat2.table("ulabel").select(col("id").as("ulabel_id"), col("uid").as("ulabel_uid")), "ulabel_id")
+      .select("feature_uid", "ulabel_uid").as[(String, String)].collect().toSet
+    assert(links === features.map(f => (f("uid").toString, lab("uid").toString)).toSet)
+    // re-linking in place: a second transfer of the same links adds none
+    store1.transferTo(cat2, "artifact", Seq(art("uid").toString))
+    assert(cat2.table("artifact_ulabels").count() === 2)
   }
 
   test("transfer survives self-referential FK chains (record.type_id)") {
