@@ -79,7 +79,8 @@ final class ArtifactStore(val cat: Catalog) {
       case ((df, _), stagePath) => () => stageFrame(df, stagePath)
     })
     items.zip(staged).map { case ((_, key), s) =>
-      commit(s, storageRoot)(createArtifact(s, key, ".parquet", storageId, "dataset", description))
+      commit(s, storageRoot)(place =>
+        createArtifact(s, key, ".parquet", storageId, "dataset", description, place = place))
     }
   }
 
@@ -133,8 +134,8 @@ final class ArtifactStore(val cat: Catalog) {
       }
     }: _*)
     val s = staged(stagePath, obsCounter.map(_._2.get.apply("n").asInstanceOf[Long]).orElse(nObservations))
-    commit(s, storageRoot)(
-      createArtifact(s, key, suffix, storageId, "dataset", description, otype = Some(otype)))
+    commit(s, storageRoot)(place =>
+      createArtifact(s, key, suffix, storageId, "dataset", description, otype = Some(otype), place = place))
   }
 
   /** Open one named slot of a multi-slot artifact as a lazy scan. */
@@ -168,8 +169,9 @@ final class ArtifactStore(val cat: Catalog) {
     require(current("real_path") == null,
       "can only replace managed artifacts (ingest-by-reference content lives outside the store)")
     val s = stageFrame(df, s"$storageRoot/.staging/${cat.uid(8)}")
-    commit(s, storageRoot) {
+    commit(s, storageRoot) { place =>
       deletePath(artifactPath(current, storageRoot))
+      place(current)
       cat.update("artifact", col("uid") === uid,
         "hash" -> lit(s.hash), "hash_type" -> lit(s.hashType), "size" -> lit(s.size),
         "n_files" -> lit(s.nFiles), "n_observations" -> lit(s.nObs.get))
@@ -202,18 +204,17 @@ final class ArtifactStore(val cat: Catalog) {
   /** The one registration commit for staged content: one hash lookup
     * (it bypasses branch filtering, `query_set.py:273-293`). A hit
     * deletes the stage and returns the existing row; a miss runs
-    * `register` and moves the stage to the managed path of the row it
-    * returns.
+    * `register` with `place`, which moves the stage to a row's managed
+    * path. `register` places its row before its catalog write, so no
+    * durable row points at content that is not there yet.
     */
-  private def commit(s: Staged, storageRoot: String)(register: => Map[String, Any]): Map[String, Any] =
+  private def commit(s: Staged, storageRoot: String)(
+      register: (Map[String, Any] => Unit) => Map[String, Any]): Map[String, Any] =
     findByHash(s.hash) match {
       case Some(existing) =>
         deletePath(s.path)
         existing
-      case None =>
-        val row = register
-        movePath(s.path, artifactPath(row, storageRoot))
-        row
+      case None => register(row => movePath(s.path, artifactPath(row, storageRoot)))
     }
 
   /** One stat-ed ingest candidate for the bulk path. */
@@ -311,12 +312,13 @@ final class ArtifactStore(val cat: Catalog) {
 
   /** Register new content: the next version of the key+storage family,
     * or a new family when there is none. The caller has looked the hash
-    * up already.
+    * up already; `place` sees the row before the catalog writes it.
     */
   private def createArtifact(s: Staged, key: String, suffix: String, storageId: Long,
                              kind: String, description: String,
                              realPath: Option[String] = None,
-                             otype: Option[String] = None): Map[String, Any] =
+                             otype: Option[String] = None,
+                             place: Map[String, Any] => Unit = _ => ()): Map[String, Any] =
     cat.insertVersion("artifact", col("key") === key && col("storage_id") === storageId, Map(
       "key" -> key, "suffix" -> suffix, "kind" -> kind,
       "otype" -> otype.orNull,
@@ -325,7 +327,7 @@ final class ArtifactStore(val cat: Catalog) {
       "hash_type" -> s.hashType, "n_files" -> s.nFiles,
       "n_observations" -> s.nObs.orNull,
       "storage_id" -> storageId,
-      "run_id" -> cat.currentRunId.map(Long.box).orNull))
+      "run_id" -> cat.currentRunId.map(Long.box).orNull), beforeWrite = place)
 
   /** Physical URI: `real_path` for ingest-by-reference artifacts, else
     * `storage.root` + auto-key `.lamindb/{uid}{suffix}` — the computed

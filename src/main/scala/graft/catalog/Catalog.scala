@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 import graft.core.{Base62, Versioning}
 
 /** Parquet-backed metadata catalog with copy-on-write snapshots.
@@ -30,19 +31,32 @@ import graft.core.{Base62, Versioning}
   *    inserted (later repeats return it). Inserts keep input order;
   *  - row updates enter through `update` (set columns where a predicate
   *    holds) and `insertVersion` (new head of a version family, demoting
-  *    the family's heads on the current branch); both are one
-  *    whole-table copy-on-write rewrite of snapshot ∪ buffer. Registry
+  *    the family's other heads on the current branch); both are one
+  *    whole-table copy-on-write rewrite of snapshot ∪ buffer, and
+  *    `insertVersion` buffers the new head before that rewrite, so the
+  *    demotion and the new head become durable in one snapshot. Registry
   *    tables are metadata (small relative to the data plane), and
   *    rewrites are Spark jobs so they scale with the cluster, not the
   *    driver. `overwrite` stays for rewrites that drop rows or need a
   *    different predicate per column;
   *  - driver values derived from registry tables (the lineage run DAG's
-  *    adjacency, the feature dictionary) are memoized through `memo`,
-  *    keyed by each source table's manifest version plus its buffered-row
-  *    count: every write path (insert, flush, update, insertVersion,
-  *    overwrite) changes that key, so a memoized value is recomputed
-  *    exactly when a read of its tables could differ, and successive
-  *    reads of an unchanged catalog run no Spark job for it.
+  *    adjacency, the feature dictionary, the storage-root map, the
+  *    indexes below) are memoized through `memo`, keyed by each source
+  *    table's content generation: `insert` and `overwrite` (so `ensure`,
+  *    `update` and `insertVersion` through them) bump it, while `flush`
+  *    and `vacuum` move the same rows into new files and leave it. A
+  *    memoized value is recomputed exactly when a read of its tables
+  *    could differ, and successive reads of an unchanged catalog, flushed
+  *    or not, run no Spark job for it;
+  *  - `index(table, keyCol, valueCol)` is a memoized driver multimap from
+  *    a column's values to the ids in another column of the same rows
+  *    (snapshot ∪ buffer), built with one two-column collect. It is
+  *    offered only while the table's plan-stats size estimate is at or
+  *    below the session's `spark.sql.autoBroadcastJoinThreshold`, the
+  *    size below which Spark broadcasts the table into every join that
+  *    reads it anyway (`Session.broadcastable`); above it callers keep
+  *    their join plan. QuerySet traversals and the EAV filter resolve
+  *    `exact`/`in` lookups through these to an `id IN (...)` predicate.
   *
   * `seed` makes uid generation and the clock deterministic, which the
   * correctness harness needs; production use passes seed=None semantics via
@@ -60,7 +74,11 @@ final class Catalog(
   private val maxIds = mutable.Map.empty[String, Long]
   private val snapshotCache = mutable.Map.empty[String, DataFrame]
   private val manifest = mutable.Map.empty[String, Int] // table -> version
-  private val memos = mutable.Map.empty[String, (Seq[(Int, Int)], Any)]
+  private val memos = mutable.Map.empty[String, (Seq[Long], Any)]
+  /** table -> content generation: bumped by every write that can change
+    * what `table(name)` returns, never by a flush.
+    */
+  private val generations = mutable.Map.empty[String, Long]
 
   /** Branch visibility context (reference: `branch_id` on SQLRecord). */
   var currentBranchId: Long = MainBranchId
@@ -116,10 +134,10 @@ final class Catalog(
   }
 
   /** `compute`'s value, reused while every table in `tables` keeps its
-    * state (manifest version, buffered-row count). One entry per `key`.
+    * content generation. One entry per `key`.
     */
   def memo[T](key: String, tables: Seq[String])(compute: => T): T = {
-    val state = tables.map(n => (manifest.getOrElse(n, 0), buffered(n)))
+    val state = tables.map(generations.getOrElse(_, 0L))
     memos.get(key) match {
       case Some((`state`, v)) => v.asInstanceOf[T]
       case _ =>
@@ -131,6 +149,33 @@ final class Catalog(
 
   /** Rows inserted into `name` since its last flush or rewrite. */
   def buffered(name: String): Int = buffers.get(name).fold(0)(_.size)
+
+  /** Whether `name` passes `index`'s gate: its plan-stats size estimate
+    * (memoized per content generation) is at or below the session's
+    * broadcast threshold.
+    */
+  def fits(name: String): Boolean =
+    graft.core.Session.broadcastable(spark,
+      memo(s"size/$name", Seq(name))(table(name).queryExecution.optimizedPlan.stats.sizeInBytes))
+
+  /** Driver multimap from `keyCol`'s values (String, Long or Int; null
+    * included) to the non-null `valueCol` ids (Long) of the same rows of
+    * snapshot ∪ buffer. Built with one two-column collect and memoized
+    * per content generation; None when `name` does not `fit` or the
+    * column types are not indexable, so the caller keeps its Spark plan.
+    */
+  def index(name: String, keyCol: String, valueCol: String): Option[Index] = {
+    val schema = tableDef(name).schema
+    val keyType = schema(keyCol).dataType
+    if (!IndexKeyTypes(keyType) || schema(valueCol).dataType != LongType || !fits(name)) None
+    else Some(memo(s"index/$name/$keyCol/$valueCol", Seq(name)) {
+      val byKey = mutable.HashMap.empty[Any, mutable.ArrayBuilder.ofLong]
+      table(name).select(keyCol, valueCol).filter(col(valueCol).isNotNull).collect().foreach { r =>
+        byKey.getOrElseUpdate(r.get(0), new mutable.ArrayBuilder.ofLong) += r.getLong(1)
+      }
+      new Index(keyType, byKey.map { case (k, ids) => k -> ids.result() }.toMap)
+    })
+  }
 
   // --------------------------------------------------------------- writes
 
@@ -167,6 +212,7 @@ final class Catalog(
     requireFields(t, withDefaults.keySet)
     val row = Row.fromSeq(t.schema.fields.map(f => withDefaults.get(f.name).orNull).toSeq)
     buffers.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += row
+    bump(name)
     withDefaults
   }
 
@@ -205,22 +251,25 @@ final class Catalog(
 
   /** Insert the next version of a family (`_is_versioned.py:271-338`).
     * The family is the uids of the rows where `family` holds (one
-    * collect); none starts a new family (`newUidFor`). Otherwise the uid
-    * is the family's next suffix and the family's current heads on
-    * `currentBranchId` are demoted through `update` first. The new row is
-    * the head (`is_latest = true`). Returns the completed row.
+    * collect); none starts a new family (`newUidFor`) and the row stays
+    * buffered. Otherwise the uid is the family's next suffix: the new row
+    * is buffered, then one `update` demotes the family's other heads on
+    * `currentBranchId`, so the new head and the demotion land in one
+    * snapshot and no crash leaves the family without a head. The new row
+    * is the head (`is_latest = true`). `beforeWrite` sees the completed
+    * row before anything is written (a caller places the row's content
+    * there). Returns the completed row.
     */
-  def insertVersion(name: String, family: Column, values: Map[String, Any]): Map[String, Any] = {
+  def insertVersion(name: String, family: Column, values: Map[String, Any],
+                    beforeWrite: Map[String, Any] => Unit = _ => ()): Map[String, Any] = {
     val uids = table(name).filter(family).select("uid").collect().map(_.getString(0)).toSeq
-    val uid =
-      if (uids.isEmpty) newUidFor(tableDef(name))
-      else {
-        val next = Versioning.nextUidInFamily(uids)
-        update(name, Versioning.sameFamily(next) && col("branch_id") === currentBranchId,
-          "is_latest" -> lit(false))
-        next
-      }
-    insert(name, values ++ Map("uid" -> uid, "is_latest" -> true))
+    val uid = if (uids.isEmpty) newUidFor(tableDef(name)) else Versioning.nextUidInFamily(uids)
+    val row = insert(name, values ++ Map("uid" -> uid, "is_latest" -> true))
+    beforeWrite(row)
+    if (uids.nonEmpty)
+      update(name, Versioning.sameFamily(uid) && col("branch_id") === currentBranchId && col("uid") =!= uid,
+        "is_latest" -> lit(false))
+    row
   }
 
   /** Set columns on the rows where `where` holds: one copy-on-write
@@ -245,7 +294,10 @@ final class Catalog(
     val t = tableDef(name)
     writeSnapshot(name, df.select(t.schema.fieldNames.map(col).toIndexedSeq: _*))
     buffers.remove(name)
+    bump(name)
   }
+
+  private def bump(name: String): Unit = generations(name) = generations.getOrElse(name, 0L) + 1
 
   /** Persist buffered inserts of one table into a new snapshot version. */
   def flush(name: String): Unit =
@@ -336,6 +388,29 @@ final class Catalog(
 }
 
 object Catalog {
+  /** `Catalog.index`'s multimap. */
+  final class Index private[catalog] (keyType: DataType, byKey: Map[Any, Array[Long]]) {
+    /** The ids of the rows whose key equals one of `keys` (a null key
+      * matches the rows with a null key). An Int or Long key matches an
+      * Int or Long column by value, as Spark widens one to the other
+      * (Scala compares boxed numbers by value). None when a key is of any
+      * other type than the column's, so that the caller keeps the Spark
+      * plan and its type coercion.
+      */
+    def get(keys: Iterable[Any]): Option[Set[Long]] = {
+      val typed = keys.map {
+        case null => Some(null)
+        case s: String if keyType == StringType => Some(s)
+        case n @ (_: Int | _: Long) if keyType != StringType => Some(n)
+        case _ => None
+      }
+      if (typed.exists(_.isEmpty)) None
+      else Some(typed.iterator.flatMap(k => byKey.getOrElse(k.get, Array.emptyLongArray)).toSet)
+    }
+  }
+
+  private val IndexKeyTypes: Set[DataType] = Set(StringType, LongType, IntegerType)
+
   val MainBranchId = 1L
   val TrashBranchId = -1L
   val ArchiveBranchId = 0L

@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{broadcast, col}
 
@@ -26,6 +27,17 @@ object Session {
     spark.sparkContext.setLogLevel("WARN")
     muteBoundedWindowWarning()
     spark
+  }
+
+  /** Whether `sizeInBytes` (a plan-stats estimate) is at or below the
+    * session's `spark.sql.autoBroadcastJoinThreshold`: the size below
+    * which Spark copies a join side to every task, so a driver copy of
+    * it costs no more. A disabled threshold (-1, or any value <= 0)
+    * admits nothing.
+    */
+  def broadcastable(spark: SparkSession, sizeInBytes: BigInt): Boolean = {
+    val conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
+    !conf.startsWith("-") && { val thresh = JavaUtils.byteStringAsBytes(conf); thresh > 0 && sizeInBytes <= thresh }
   }
 
   /** Gate-log hygiene: the verify/bench logs carried ~250

@@ -95,19 +95,42 @@ final class ArtifactFeatures(cat: Catalog) {
       .select(col("artifact_id").as("record_id"), col("feature_id"), col("value_json"))
 
   def store: FeatureStore = new FeatureStore(
-    cat.table("feature").select("id", "name", "dtype"),
+    features,
     valuesView,
     Some(cat.table("artifact_ulabels")
       .select(col("artifact_id").as("record_id"), col("feature_id"),
         col("ulabel_id").as("label_id"))),
     Some(cat.table("ulabel").select("id", "name")),
-    Some(() => cat.memo("eav.featureDictionary", Seq("feature"))(
-      FeatureStore.dictionary(cat.table("feature")))))
+    Some(dictionary))
+
+  private def features: DataFrame = cat.table("feature").select("id", "name", "dtype")
+  private val dictionary: () => Map[String, (Long, String)] = () =>
+    cat.memo("eav.featureDictionary", Seq("feature"))(FeatureStore.dictionary(cat.table("feature")))
 
   /** Artifact QuerySet with EAV dispatch: unknown filter keys route to
     * the feature layer (`filter_with_features`).
     */
-  def querySet: QuerySet = QuerySet(cat, "artifact", featureHook = Some(store.hook))
+  def querySet: QuerySet = QuerySet(cat, "artifact", featureHook = Some(hook))
+
+  /** `store.hook`, except that a scalar predicate resolves on the driver
+    * while `json_value` and `artifact_json_values` fit `Catalog.index`'s
+    * gate: the same predicate over the `json_value` rows collects the
+    * matching value ids (one job), and the `artifact_json_values` index
+    * maps them to artifact ids. Label predicates keep the store's plan.
+    */
+  private def hook: QuerySet.FeatureHook = {
+    val s = store
+    lazy val valueRows = new FeatureStore(features,
+      cat.table("json_value").select(col("id").as("record_id"), col("feature_id"), col("value_json")),
+      dictionary = Some(dictionary))
+    (feature, lookupSegs, value) => s.predicate(feature, lookupSegs, value).map { case (p, negate) =>
+      val ids =
+        if (s.usesLabels(p) || !cat.fits("json_value")) None
+        else cat.index("artifact_json_values", "json_value_id", "artifact_id").flatMap(links =>
+          links.get(valueRows.matchingIds(p).filter(col("record_id").isNotNull).collect().map(_.getLong(0))))
+      (ids.toRight(s.matchingIds(p).withColumnRenamed("record_id", "id")), negate)
+    }
+  }
 
   /** `to_dataframe(include="features")`: artifact rows annotated wide
     * with one column per feature (set-agg + single-element unwrap).

@@ -89,12 +89,10 @@ final class FeatureStore(
         val pred = graft.query.Lookups.compile(extractedNum, c, p.value)
         forFeature.filter(pred).select(col("record_id"))
       case "exact" =>
-        p.value match {
-          case s: String if labels.isDefined && labelLinks.isDefined && isCategorical(p.feature) =>
-            categoricalIds(p.feature, Seq(s))
-          case v =>
-            val asStr = v match { case _: String => lit(p.value) case _ => lit(p.value).cast("string") }
-            forFeature.filter(extracted === asStr).select(col("record_id"))
+        if (usesLabels(p)) categoricalIds(p.feature, Seq(p.value))
+        else {
+          val asStr = p.value match { case _: String => lit(p.value) case _ => lit(p.value).cast("string") }
+          forFeature.filter(extracted === asStr).select(col("record_id"))
         }
       case "in" =>
         val vs = p.value match {
@@ -102,8 +100,7 @@ final class FeatureStore(
           case a: Array[_]     => a.toSeq
           case v               => Seq(v)
         }
-        if (labels.isDefined && labelLinks.isDefined && isCategorical(p.feature))
-          categoricalIds(p.feature, vs)
+        if (usesLabels(p)) categoricalIds(p.feature, vs)
         else forFeature.filter(extracted.isin(vs.map(_.toString): _*)).select(col("record_id"))
       case "contains" =>
         forFeature.filter(extracted.contains(lit(p.value))).select(col("record_id"))
@@ -111,8 +108,17 @@ final class FeatureStore(
     }
   }
 
-  private def isCategorical(name: String): Boolean =
-    dict.get(name).exists(_._2.startsWith("cat"))
+  /** Whether `matchingIds(p)` resolves label names through the label
+    * registry (a categorical feature's `exact` on a string or `in`)
+    * rather than the scalar values.
+    */
+  def usesLabels(p: FeaturePredicate): Boolean =
+    labels.isDefined && labelLinks.isDefined && dict.get(p.feature).exists(_._2.startsWith("cat")) &&
+      (p.comparator match {
+        case "exact" | "ne" => p.value.isInstanceOf[String]
+        case "in"           => true
+        case _              => false
+      })
 
   /** Resolve label names in the label registry then follow the link table
     * (`_feature_manager.py:934-971`). Raises if no label matches.
@@ -139,30 +145,34 @@ final class FeatureStore(
       df.join(ids, Seq(pk), joinType)
     }
 
+  /** The predicate a `featureName__lookup` filter key states, with a
+    * negate flag; None when `feature` is no known feature. `isnull=true`
+    * and `ne` are exclusion predicates in the reference
+    * (`_filter_one_feature_clause` uses queryset.exclude for isnull=True;
+    * `filter_with_feature_predicates` anti-joins __ne): `matchingIds`
+    * returns the positive set, so the flag asks for its negation.
+    */
+  def predicate(feature: String, lookupSegs: List[String], value: Any): Option[(FeaturePredicate, Boolean)] =
+    if (!knows(feature)) None
+    else {
+      val comparator = lookupSegs match {
+        case Nil      => "exact"
+        case c :: Nil => c
+        case other    => throw new FieldError(s"unsupported feature lookup path $other")
+      }
+      val negate = comparator == "ne" ||
+        (comparator == "isnull" && (value == true || value == "true"))
+      Some((FeaturePredicate(feature, comparator, value), negate))
+    }
+
   /** QuerySet feature hook: routes `filter("featureName__lookup" -> v)`
     * keys that are not model fields into this store
     * (`filter_with_features`, `_feature_manager.py:1036-1089`).
     */
-  def hook: QuerySet.FeatureHook = new QuerySet.FeatureHook {
-    def compile(feature: String, lookupSegs: List[String], value: Any): Option[(DataFrame, Boolean)] = {
-      if (!knows(feature)) None
-      else {
-        val comparator = lookupSegs match {
-          case Nil      => "exact"
-          case c :: Nil => c
-          case other    => throw new FieldError(s"unsupported feature lookup path $other")
-        }
-        // `isnull=true` and `ne` are exclusion predicates in the reference
-        // (`_filter_one_feature_clause` uses queryset.exclude for
-        // isnull=True; `filter_with_feature_predicates` anti-joins __ne):
-        // matchingIds returns the positive set, so flag it for negation.
-        val negate = comparator == "ne" ||
-          (comparator == "isnull" && (value == true || value == "true"))
-        Some((matchingIds(FeaturePredicate(feature, comparator, value))
-          .withColumnRenamed("record_id", "id"), negate))
-      }
+  def hook: QuerySet.FeatureHook = (feature, lookupSegs, value) =>
+    predicate(feature, lookupSegs, value).map { case (p, negate) =>
+      (Left(matchingIds(p).withColumnRenamed("record_id", "id")), negate)
     }
-  }
 
   /** Long→wide pivot (`reshape_annotate_result`, `query_set.py:802-1009`):
     * one column per feature over the record pk, multi-values aggregated as

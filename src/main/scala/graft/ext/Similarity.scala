@@ -40,13 +40,10 @@ object Similarity {
     * fall back to a shuffle join instead of OOMing an executor on an
     * unbounded query set at scale.
     */
-  private def gatedBroadcast(df: DataFrame, fanout: Long = 1L): DataFrame = {
-    val conf = df.sparkSession.conf
-    val thresh = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes * fanout
-    if (thresh > 0 && est <= thresh) broadcast(df) else df
-  }
+  private def gatedBroadcast(df: DataFrame, fanout: Long = 1L): DataFrame =
+    if (graft.core.Session.broadcastable(df.sparkSession,
+        df.queryExecution.optimizedPlan.stats.sizeInBytes * fanout)) broadcast(df)
+    else df
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 

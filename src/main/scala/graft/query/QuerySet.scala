@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.IdSets
 import graft.catalog.{Catalog, Schemas, TableDef, FK, M2M}
 
 /** A lazily-composed registry query — the Spark re-expression of the
@@ -12,6 +13,15 @@ import graft.catalog.{Catalog, Schemas, TableDef, FK, M2M}
   * semantics), branch visibility is injected exactly like
   * `process_expressions` (`query_set.py:216-305`), and terminal operations
   * (`one/first/count/exists/toDF`) trigger execution.
+  *
+  * A traversal whose innermost predicate is an `exact` or `in` lookup on
+  * a field or FK column (`ulabels__name`, `ulabels`, `run__transform__key`,
+  * chains of any depth) resolves on the driver instead when the
+  * environment offers an index for every table it crosses
+  * (`Catalog.index`: catalog querysets, tables that fit the broadcast
+  * threshold): the matching ids become `col IN (ids)` on this table and
+  * the read is one scan. Any other lookup, a table above the gate, or a
+  * `MapEnv`/`over` frame keeps the semi-join plan.
   *
   * Immutable: every chained call returns a new QuerySet.
   */
@@ -24,6 +34,8 @@ trait QueryEnv {
     * collaborator's default (reference: `Space`, `models/sqlrecord.py:1702`).
     */
   def visibleSpaceIds: Seq[Long] = Seq(Catalog.AllSpaceId)
+  /** `Catalog.index` over `name`, when this environment offers one. */
+  def index(name: String, keyCol: String, valueCol: String): Option[Catalog.Index] = None
 }
 
 final class QuerySet(
@@ -139,15 +151,20 @@ final class QuerySet(
   /** Compile one `path__lookup=value` predicate against table `forT` whose
     * DataFrame is `forDf`. Relation traversal recurses into related tables.
     */
-  private def compilePred(forT: TableDef, forDf: DataFrame, key: String, value: Any): Compiled = {
-    val k0 = if (forT eq t) aliased(key) else key
-    // `branch` is filterable like an FK on every branch-carrying registry
-    // (`filter(branch=branch)` / `branch_id=...`, test_get_filter_branch);
-    // an explicit branch/branch_id of None means "no branch constraint"
-    // (the reference drops it after it has disabled injection), NOT
-    // "branch IS NULL".
-    val segs0 = k0.split("__").toList
-    val segs = segs0 match {
+  private def compilePred(forT: TableDef, forDf: DataFrame, key: String, value: Any): Compiled =
+    segments(forT, key) match {
+      case "branch_id" :: Nil if value == null => Cond(lit(true))
+      case segs => compileSegs(forT, forDf, segs, value)
+    }
+
+  /** `key`'s path segments on `forT`. `branch` is filterable like an FK
+    * on every branch-carrying registry (`filter(branch=branch)` /
+    * `branch_id=...`, test_get_filter_branch); an explicit
+    * branch/branch_id of None means "no branch constraint" (the reference
+    * drops it after it has disabled injection), NOT "branch IS NULL".
+    */
+  private def segments(forT: TableDef, key: String): List[String] =
+    (if (forT eq t) aliased(key) else key).split("__").toList match {
       case "branch" :: rest if forT.hasBranch && !forT.fieldNames.contains("branch") =>
         "branch_id" :: rest
       case "space" :: rest
@@ -155,11 +172,6 @@ final class QuerySet(
         "space_id" :: rest
       case other => other
     }
-    segs match {
-      case "branch_id" :: Nil if value == null => Cond(lit(true))
-      case _ => compileSegs(forT, forDf, segs, value)
-    }
-  }
 
   /** String→code translation for enum-coded columns (`_map_status_value`,
     * `query_set.py:164-181`): names map to codes, raw codes pass through,
@@ -195,29 +207,39 @@ final class QuerySet(
             Cond(Lookups.compile(col(fk.localCol), lookup, value))
           case _ =>
             val target = env.tableDef(fk.target)
-            val sub = compileToIds(target, tables(fk.target), QPred(rest.mkString("__"), value), fk.targetCol)
-            Sub(fk.localCol, sub)
+            val key = rest.mkString("__")
+            indexedIds(target, key, value, fk.targetCol) match {
+              case Some(ids) => Cond(IdSets.isIn(col(fk.localCol), ids))
+              case None => Sub(fk.localCol, compileToIds(target, tables(fk.target), QPred(key, value), fk.targetCol))
+            }
         }
       case m2mName :: rest if forT.m2ms.contains(m2mName) =>
         val m = forT.m2ms(m2mName)
-        val link = tables(m.link)
-        val matchingLinks = rest match {
-          case Nil =>
-            link.filter(Lookups.compile(col(m.rightCol), "exact", value))
-          case lookup :: Nil if Lookups.all.contains(lookup) =>
-            link.filter(Lookups.compile(col(m.rightCol), lookup, value))
-          case _ =>
-            val target = env.tableDef(m.target)
-            val targetIds = compileToIds(target, tables(m.target), QPred(rest.mkString("__"), value), target.pk)
-            link.join(targetIds.withColumnRenamed(target.pk, m.rightCol), m.rightCol, "left_semi")
+        m2mIds(m, rest, value) match {
+          case Some(ids) => Cond(IdSets.isIn(col(forT.pk), ids))
+          case None =>
+            val link = tables(m.link)
+            val matchingLinks = rest match {
+              case Nil =>
+                link.filter(Lookups.compile(col(m.rightCol), "exact", value))
+              case lookup :: Nil if Lookups.all.contains(lookup) =>
+                link.filter(Lookups.compile(col(m.rightCol), lookup, value))
+              case _ =>
+                val target = env.tableDef(m.target)
+                val targetIds = compileToIds(target, tables(m.target), QPred(rest.mkString("__"), value), target.pk)
+                link.join(targetIds.withColumnRenamed(target.pk, m.rightCol), m.rightCol, "left_semi")
+            }
+            Sub(forT.pk, matchingLinks.select(col(m.leftCol).as(forT.pk)))
         }
-        Sub(forT.pk, matchingLinks.select(col(m.leftCol).as(forT.pk)))
       case field :: restOrNil if featureHook.isDefined && (forT eq t) =>
         // not a model field: route to the EAV feature layer
         // (`filter_with_features`, `_feature_manager.py:1036-1089`)
         featureHook.get.compile(field, restOrNil, value) match {
-          case Some((ids, false)) => Sub(t.pk, ids)
-          case Some((ids, true))  =>
+          case Some((Right(ids), negate)) =>
+            val in = IdSets.isIn(col(t.pk), ids)
+            Cond(if (negate) !coalesce(in, lit(false)) else in)
+          case Some((Left(ids), false)) => Sub(t.pk, ids)
+          case Some((Left(ids), true))  =>
             // hook returned the exclusion set — complement against the base
             // table so Sub keeps positive-match semantics (then exclude()/
             // QNot invert it back correctly)
@@ -228,6 +250,68 @@ final class QuerySet(
       case field :: _ => fieldError(field, forT)
       case Nil        => throw new FieldError("empty lookup key")
     }
+
+  /** The `idCol` values of `forT`'s rows where `key = value` holds, read
+    * from driver indexes. `key` is an `exact`/`in` lookup on a field or FK
+    * column, or an FK/M2M traversal ending in one; None when it is not, or
+    * when a table on the way offers no index (the caller compiles the
+    * semi-join plan instead). Mirrors `compilePred`/`compileSegs`.
+    */
+  private def indexedIds(forT: TableDef, key: String, value: Any, idCol: String): Option[Set[Long]] = {
+    def via(localCol: String, keys: Iterable[Any]): Option[Set[Long]] =
+      env.index(forT.name, localCol, idCol).flatMap(_.get(keys))
+    segments(forT, key) match {
+      case "branch_id" :: Nil if value == null => None
+      case field :: rest if forT.fieldNames.contains(field) =>
+        equalityKeys(rest, mapEnum(forT, field, value)).flatMap(via(field, _))
+      case fkName :: rest if forT.fks.contains(fkName) =>
+        val fk = forT.fks(fkName)
+        val targetIds =
+          if (isLookup(rest)) equalityKeys(rest, value)
+          else indexedIds(env.tableDef(fk.target), rest.mkString("__"), value, fk.targetCol)
+        targetIds.flatMap(via(fk.localCol, _))
+      case m2mName :: rest if forT.m2ms.contains(m2mName) =>
+        m2mIds(forT.m2ms(m2mName), rest, value).flatMap(pks =>
+          if (idCol == forT.pk) Some(pks) else via(forT.pk, pks))
+      case _ => None
+    }
+  }
+
+  /** The `m.leftCol` ids of the link rows whose `m.rightCol` matches
+    * `rest = value` (a lookup on the link, or a traversal of the target),
+    * read from driver indexes; None as for `indexedIds`.
+    */
+  private def m2mIds(m: M2M, rest: List[String], value: Any): Option[Set[Long]] = {
+    val targetIds =
+      if (isLookup(rest)) equalityKeys(rest, value)
+      else {
+        val target = env.tableDef(m.target)
+        indexedIds(target, rest.mkString("__"), value, target.pk)
+      }
+    targetIds.flatMap(ids => env.index(m.link, m.rightCol, m.leftCol).flatMap(_.get(ids)))
+  }
+
+  /** No lookup segment (an implicit `exact`) or exactly one. */
+  private def isLookup(rest: List[String]): Boolean = rest match {
+    case Nil      => true
+    case l :: Nil => Lookups.all.contains(l)
+    case _        => false
+  }
+
+  /** The keys an `exact` or `in` lookup matches by equality, as
+    * `Lookups.compile` states them: `exact` null matches null keys, an
+    * `in` list's nulls match nothing. None for any other lookup.
+    */
+  private def equalityKeys(lookup: List[String], value: Any): Option[Iterable[Any]] = lookup match {
+    case Nil | "exact" :: Nil => Some(Seq(value))
+    case "in" :: Nil =>
+      Some((value match {
+        case vs: Iterable[_] => vs.toSeq
+        case vs: Array[_]    => vs.toSeq
+        case v               => Seq(v)
+      }).filter(_ != null))
+    case _ => None
+  }
 
   /** Compile a node over a (possibly related) table into a DataFrame of the
     * matching `idCol` values.
@@ -298,7 +382,15 @@ final class QuerySet(
 
   // ------------------------------------------------------------ terminals
 
-  def count(): Long = df.count()
+  /** One job with no exchange for a filter-only plan: the rows of the
+    * column-pruned, unordered plan are counted where they are read (a
+    * `Dataset.count` is a partial aggregate, an exchange and a final
+    * stage); a limit caps the count.
+    */
+  def count(): Long = {
+    val n = copyWith(order = Nil, limitN = None).df.select().queryExecution.toRdd.count()
+    limitN.fold(n)(l => math.min(l.toLong, n))
+  }
   def exists(): Boolean = !df.isEmpty
 
   def first(): Option[Row] = {
@@ -505,15 +597,18 @@ final class QuerySet(
 object QuerySet {
   /** EAV dispatch hook: given (featureName, lookupSegs, value), return the
     * matching base-table pk ids plus a negate flag, or None if the name is
-    * no known feature. `negate = true` means the returned ids are the set
-    * to EXCLUDE (the reference compiles `isnull=True` via
-    * `queryset.exclude` and `__ne` via an anti-join —
-    * `_feature_manager.py` `_filter_one_feature_clause` /
-    * `filter_with_feature_predicates`); the QuerySet anti-joins the base
-    * table so the resulting `Sub` always carries positive-match semantics.
+    * no known feature. The ids are a one-column frame (`Left`) or a
+    * driver set (`Right`, compiled to `pk IN (ids)`). `negate = true`
+    * means the returned ids are the set to EXCLUDE (the reference
+    * compiles `isnull=True` via `queryset.exclude` and `__ne` via an
+    * anti-join — `_feature_manager.py` `_filter_one_feature_clause` /
+    * `filter_with_feature_predicates`); the QuerySet complements them
+    * against the base table so the compiled predicate always carries
+    * positive-match semantics.
     */
   trait FeatureHook {
-    def compile(feature: String, lookupSegs: List[String], value: Any): Option[(DataFrame, Boolean)]
+    def compile(feature: String, lookupSegs: List[String],
+                value: Any): Option[(Either[DataFrame, Set[Long]], Boolean)]
   }
 
   /** QuerySet over a catalog registry. */
@@ -524,6 +619,8 @@ object QuerySet {
       def tableDef(name: String): TableDef = cat.tableDef(name)
       def currentBranchId: Long = cat.currentBranchId
       override def visibleSpaceIds: Seq[Long] = cat.visibleSpaceIds
+      override def index(name: String, keyCol: String, valueCol: String): Option[Catalog.Index] =
+        cat.index(name, keyCol, valueCol)
     }
     new QuerySet(cat.tableDef(registry), cat.table(registry), envImpl, featureHook = featureHook)
   }

@@ -74,8 +74,9 @@ class ArtifactOpsSpec extends AnyFunSuite {
     // as on a long-lived catalog (a buffer-only table answers on the driver)
     store.fromDataFrame(frame(0), "seed", root)
     cat.flushAll()
-    // new content: the storage map (rebuilt once: the flush changed the
-    // storage table's state), staged write, ONE hash lookup, family collect
+    // new content: the storage map (rebuilt once: the first call's
+    // `ensure` inserted the root after the map was built; the flush since
+    // leaves it), staged write, ONE hash lookup, family collect
     val newJobs = ListenerBusDrain.jobs(sc)(store.fromDataFrames(Seq(frame(1) -> "a"), root))
     cat.flushAll()
     // duplicate content: staged write, the hash lookup's hit (the storage

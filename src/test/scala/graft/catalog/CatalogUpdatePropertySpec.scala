@@ -22,7 +22,9 @@ import graft.core.{Base62, Versioning}
   *  - every (stem, branch) has at most one `is_latest` head;
   *  - the manifest version rose by exactly one per `update`, per
   *    `insertVersion` that demotes, and per `flush` of a non-empty buffer;
-  *  - a fresh catalog on the same root reads the model's durable rows.
+  *  - a fresh catalog on the same root reads the model's durable rows: a
+  *    demoting `insertVersion` writes its new head with the demotion, so
+  *    the buffered rows before it are durable too.
   */
 class CatalogUpdatePropertySpec extends AnyFunSuite {
   import CatalogUpdatePropertySpec._
@@ -88,19 +90,19 @@ class CatalogUpdatePropertySpec extends AnyFunSuite {
           if (stems.isEmpty) Seq.empty[String]
           else m.rows.map(_.uid).filter(_.startsWith(stems(pick % stems.size))).toSeq
         val got = cat.insertVersion(Registry, col("uid").isin(family: _*), Map("description" -> s"op$i"))
-        val uid =
-          if (family.isEmpty) Versioning.createUid(m.rng)
-          else {
-            val stem = Versioning.stem(family.head)
-            m.rows.indices.foreach { k =>
-              val r = m.rows(k)
-              if (Versioning.stem(r.uid) == stem && r.branchId == b) m.rows(k) = r.copy(isLatest = false)
-            }
-            m.write()
-            stem + Base62.encode(family.map(u => Base62.decode(u.takeRight(4))).max + 1, 4)
+        if (family.isEmpty) m.append(Versioning.createUid(m.rng), b, s"op$i")
+        else {
+          // the new head is buffered first, then one write demotes the
+          // family's other heads: the new head is durable with it
+          val stem = Versioning.stem(family.head)
+          m.append(stem + Base62.encode(family.map(u => Base62.decode(u.takeRight(4))).max + 1, 4), b, s"op$i")
+          m.rows.indices.init.foreach { k =>
+            val r = m.rows(k)
+            if (Versioning.stem(r.uid) == stem && r.branchId == b) m.rows(k) = r.copy(isLatest = false)
           }
-        assert(got("uid") === uid)
-        m.append(uid, b, s"op$i")
+          m.write()
+        }
+        assert(got("uid") === m.rows.last.uid)
       case (Update(mask, salt), _) =>
         val ids = (1L to 9L).filter(id => ((mask >> (id - 1).toInt) & 1) == 1)
         cat.update(Registry, col("id").isin(ids: _*),
@@ -131,6 +133,18 @@ class CatalogUpdatePropertySpec extends AnyFunSuite {
 
   test("update and insertVersion match the in-memory model (40 seeded cases)") {
     cases.foreach(run)
+  }
+
+  test("a new version's head is durable without a flush") {
+    val root = TestSpark.tmpDir("catupd")
+    val cat = Catalog.deterministic(spark, root)
+    val v1 = cat.insert(Registry, Map("description" -> "v1"))("uid").toString
+    cat.flush(Registry)
+    val v2 = cat.insertVersion(Registry, col("uid") === v1, Map("description" -> "v2"))("uid")
+    // no flush: a process that stops here leaves what a fresh catalog reads
+    val heads = rowsOf(Catalog.deterministic(spark, root)).filter(_.isLatest)
+    assert(heads.map(_.uid) === Seq(v2))
+    assert(TestSpark.manifestVersion(root, Registry) === 2)
   }
 
   test("update rejects unknown fields without writing") {
