@@ -52,11 +52,14 @@ import graft.core.{Base62, Versioning}
   *    a column's values to the ids in another column of the same rows
   *    (snapshot ∪ buffer), built with one two-column collect. It is
   *    offered only while the table's plan-stats size estimate is at or
-  *    below the session's `spark.sql.autoBroadcastJoinThreshold`, the
-  *    size below which Spark broadcasts the table into every join that
-  *    reads it anyway (`Session.broadcastable`); above it callers keep
-  *    their join plan. QuerySet traversals and the EAV filter resolve
-  *    `exact`/`in` lookups through these to an `id IN (...)` predicate.
+  *    below the session's `spark.sql.autoBroadcastJoinThreshold` (the
+  *    size below which Spark broadcasts it into a join anyway,
+  *    `Session.broadcastable`) and a row count finds at most
+  *    `IndexRowLimit` rows, the measured size up to which a read right
+  *    after a write still gains and which bounds the driver heap an
+  *    index holds; otherwise callers keep their join plan. QuerySet
+  *    traversals and the EAV filter resolve `exact`/`in` lookups through
+  *    these to an `id IN (...)` predicate.
   *
   * `seed` makes uid generation and the clock deterministic, which the
   * correctness harness needs; production use passes seed=None semantics via
@@ -151,12 +154,15 @@ final class Catalog(
   def buffered(name: String): Int = buffers.get(name).fold(0)(_.size)
 
   /** Whether `name` passes `index`'s gate: its plan-stats size estimate
-    * (memoized per content generation) is at or below the session's
-    * broadcast threshold.
+    * is at or below the session's broadcast threshold, and it holds at
+    * most `IndexRowLimit` rows. Both are memoized per content generation;
+    * the row count (one job, no exchange) runs only for a table under
+    * the size gate.
     */
   def fits(name: String): Boolean =
     graft.core.Session.broadcastable(spark,
-      memo(s"size/$name", Seq(name))(table(name).queryExecution.optimizedPlan.stats.sizeInBytes))
+      memo(s"size/$name", Seq(name))(table(name).queryExecution.optimizedPlan.stats.sizeInBytes)) &&
+      memo(s"rows/$name", Seq(name))(table(name).select().queryExecution.toRdd.count()) <= IndexRowLimit
 
   /** Driver multimap from `keyCol`'s values (String, Long or Int; null
     * included) to the non-null `valueCol` ids (Long) of the same rows of
@@ -410,6 +416,24 @@ object Catalog {
   }
 
   private val IndexKeyTypes: Set[DataType] = Set(StringType, LongType, IntegerType)
+
+  /** Rows up to which a table is indexed. Measured on synthetic catalogs
+    * (link rows L, L/2 artifacts, L/20 runs, 1,000 labels, 100
+    * transforms), local[4] on a 4-vCPU host, p50 ms of the index path
+    * against the semi-join path. A repeated `ulabels__name` count: 83 vs
+    * 291 at L = 10k, 80 vs 264 at 100k, and, with this limit lifted, 96
+    * vs 280 at 300k, 126 vs 318 at 1M, 124 vs 338 at 1.2M (the largest
+    * link table under the default 10 MB size gate); `run__transform__key`
+    * 68-130 vs 200-270 over the same range. The first count after an
+    * insert into the link table (the row count and the index rebuilt):
+    * 251 vs 254 at 10k, 250 vs 272 at 50k, 251 vs 256 at 100k, 294 vs
+    * 241 at 140k and 333 vs 283 at 190k, so a read that follows every
+    * write stops gaining at about 100k rows. Heap held by an index after
+    * GC: about 9 bytes per row for a link table's few keys, 74-88 for
+    * unique Long keys and 105-121 for unique String keys (12 MB at this
+    * limit).
+    */
+  val IndexRowLimit: Long = 100000L
 
   val MainBranchId = 1L
   val TrashBranchId = -1L

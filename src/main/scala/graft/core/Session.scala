@@ -30,10 +30,11 @@ object Session {
   }
 
   /** Whether `sizeInBytes` (a plan-stats estimate) is at or below the
-    * session's `spark.sql.autoBroadcastJoinThreshold`: the size below
-    * which Spark copies a join side to every task, so a driver copy of
-    * it costs no more. A disabled threshold (-1, or any value <= 0)
-    * admits nothing.
+    * session's `spark.sql.autoBroadcastJoinThreshold`, the size below
+    * which Spark broadcasts a join side. The estimate of a parquet scan
+    * is its compressed file size, so the decoded rows can take many
+    * times that in memory: this bounds no heap. A disabled threshold
+    * (-1, or any value <= 0) admits nothing.
     */
   def broadcastable(spark: SparkSession, sizeInBytes: BigInt): Boolean = {
     val conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim

@@ -18,10 +18,11 @@ import graft.catalog.{Catalog, Schemas, TableDef, FK, M2M}
   * a field or FK column (`ulabels__name`, `ulabels`, `run__transform__key`,
   * chains of any depth) resolves on the driver instead when the
   * environment offers an index for every table it crosses
-  * (`Catalog.index`: catalog querysets, tables that fit the broadcast
-  * threshold): the matching ids become `col IN (ids)` on this table and
-  * the read is one scan. Any other lookup, a table above the gate, or a
-  * `MapEnv`/`over` frame keeps the semi-join plan.
+  * (`Catalog.index`: catalog querysets, tables under the broadcast
+  * threshold and `Catalog.IndexRowLimit` rows): the matching ids become
+  * `col IN (ids)` on this table and the read is one scan. Any other
+  * lookup, a table above the gate, or a `MapEnv`/`over` frame keeps the
+  * semi-join plan from that table on.
   *
   * Immutable: every chained call returns a new QuerySet.
   */
@@ -136,7 +137,12 @@ final class QuerySet(
   }
 
   private sealed trait Compiled
-  private final case class Cond(c: Column) extends Compiled
+  /** A predicate on the rows; `keys`, when set, states it as an equality
+    * that an index can resolve.
+    */
+  private final case class Cond(c: Column, keys: Option[Keys] = None) extends Compiled
+  /** `localCol` equals one of `values`. */
+  private final case class Keys(localCol: String, values: Iterable[Any])
   /** base.`localCol` IN (ids — a single-column DataFrame) */
   private final case class Sub(localCol: String, ids: DataFrame) extends Compiled
 
@@ -151,20 +157,15 @@ final class QuerySet(
   /** Compile one `path__lookup=value` predicate against table `forT` whose
     * DataFrame is `forDf`. Relation traversal recurses into related tables.
     */
-  private def compilePred(forT: TableDef, forDf: DataFrame, key: String, value: Any): Compiled =
-    segments(forT, key) match {
-      case "branch_id" :: Nil if value == null => Cond(lit(true))
-      case segs => compileSegs(forT, forDf, segs, value)
-    }
-
-  /** `key`'s path segments on `forT`. `branch` is filterable like an FK
-    * on every branch-carrying registry (`filter(branch=branch)` /
-    * `branch_id=...`, test_get_filter_branch); an explicit
-    * branch/branch_id of None means "no branch constraint" (the reference
-    * drops it after it has disabled injection), NOT "branch IS NULL".
-    */
-  private def segments(forT: TableDef, key: String): List[String] =
-    (if (forT eq t) aliased(key) else key).split("__").toList match {
+  private def compilePred(forT: TableDef, forDf: DataFrame, key: String, value: Any): Compiled = {
+    val k0 = if (forT eq t) aliased(key) else key
+    // `branch` is filterable like an FK on every branch-carrying registry
+    // (`filter(branch=branch)` / `branch_id=...`, test_get_filter_branch);
+    // an explicit branch/branch_id of None means "no branch constraint"
+    // (the reference drops it after it has disabled injection), NOT
+    // "branch IS NULL".
+    val segs0 = k0.split("__").toList
+    val segs = segs0 match {
       case "branch" :: rest if forT.hasBranch && !forT.fieldNames.contains("branch") =>
         "branch_id" :: rest
       case "space" :: rest
@@ -172,6 +173,11 @@ final class QuerySet(
         "space_id" :: rest
       case other => other
     }
+    segs match {
+      case "branch_id" :: Nil if value == null => Cond(lit(true))
+      case _ => compileSegs(forT, forDf, segs, value)
+    }
+  }
 
   /** String→code translation for enum-coded columns (`_map_status_value`,
     * `query_set.py:164-181`): names map to codes, raw codes pass through,
@@ -195,145 +201,110 @@ final class QuerySet(
   private def compileSegs(forT: TableDef, forDf: DataFrame, segs: List[String], value: Any): Compiled =
     segs match {
       case field :: Nil if forT.fieldNames.contains(field) =>
-        Cond(Lookups.compile(col(field), "exact", mapEnum(forT, field, value)))
-      case field :: lookup :: Nil if forT.fieldNames.contains(field) && Lookups.all.contains(lookup) =>
-        Cond(Lookups.compile(col(field), lookup, mapEnum(forT, field, value)))
+        lookup(field, "exact", mapEnum(forT, field, value))
+      case field :: l :: Nil if forT.fieldNames.contains(field) && Lookups.all.contains(l) =>
+        lookup(field, l, mapEnum(forT, field, value))
       case fkName :: rest if forT.fks.contains(fkName) =>
         val fk = forT.fks(fkName)
         rest match {
-          case Nil =>
-            Cond(Lookups.compile(col(fk.localCol), "exact", value))
-          case lookup :: Nil if Lookups.all.contains(lookup) =>
-            Cond(Lookups.compile(col(fk.localCol), lookup, value))
+          case Nil                                 => lookup(fk.localCol, "exact", value)
+          case l :: Nil if Lookups.all.contains(l) => lookup(fk.localCol, l, value)
           case _ =>
             val target = env.tableDef(fk.target)
-            val key = rest.mkString("__")
-            indexedIds(target, key, value, fk.targetCol) match {
-              case Some(ids) => Cond(IdSets.isIn(col(fk.localCol), ids))
-              case None => Sub(fk.localCol, compileToIds(target, tables(fk.target), QPred(key, value), fk.targetCol))
-            }
+            within(fk.localCol,
+              compileToIds(target, tables(fk.target), QPred(rest.mkString("__"), value), fk.targetCol))
         }
       case m2mName :: rest if forT.m2ms.contains(m2mName) =>
         val m = forT.m2ms(m2mName)
-        m2mIds(m, rest, value) match {
-          case Some(ids) => Cond(IdSets.isIn(col(forT.pk), ids))
-          case None =>
-            val link = tables(m.link)
-            val matchingLinks = rest match {
-              case Nil =>
-                link.filter(Lookups.compile(col(m.rightCol), "exact", value))
-              case lookup :: Nil if Lookups.all.contains(lookup) =>
-                link.filter(Lookups.compile(col(m.rightCol), lookup, value))
-              case _ =>
-                val target = env.tableDef(m.target)
-                val targetIds = compileToIds(target, tables(m.target), QPred(rest.mkString("__"), value), target.pk)
-                link.join(targetIds.withColumnRenamed(target.pk, m.rightCol), m.rightCol, "left_semi")
-            }
-            Sub(forT.pk, matchingLinks.select(col(m.leftCol).as(forT.pk)))
+        val onLink = rest match {
+          case Nil                                 => lookup(m.rightCol, "exact", value)
+          case l :: Nil if Lookups.all.contains(l) => lookup(m.rightCol, l, value)
+          case _ =>
+            val target = env.tableDef(m.target)
+            within(m.rightCol,
+              compileToIds(target, tables(m.target), QPred(rest.mkString("__"), value), target.pk))
         }
+        within(forT.pk, idsOf(m.link, tables(m.link), onLink, m.leftCol))
       case field :: restOrNil if featureHook.isDefined && (forT eq t) =>
         // not a model field: route to the EAV feature layer
-        // (`filter_with_features`, `_feature_manager.py:1036-1089`)
+        // (`filter_with_features`, `_feature_manager.py:1036-1089`); an
+        // exclusion set is complemented against the base table so the
+        // result keeps positive-match semantics (then exclude()/QNot
+        // invert it back correctly)
         featureHook.get.compile(field, restOrNil, value) match {
-          case Some((Right(ids), negate)) =>
-            val in = IdSets.isIn(col(t.pk), ids)
-            Cond(if (negate) !coalesce(in, lit(false)) else in)
-          case Some((Left(ids), false)) => Sub(t.pk, ids)
-          case Some((Left(ids), true))  =>
-            // hook returned the exclusion set — complement against the base
-            // table so Sub keeps positive-match semantics (then exclude()/
-            // QNot invert it back correctly)
-            Sub(t.pk,
-              forDf.join(ids.withColumnRenamed(ids.columns.head, t.pk), t.pk, "left_anti").select(t.pk))
+          case Some((ids, negate)) =>
+            val matching = within(t.pk, ids)
+            if (negate) complement(forT, forDf, matching) else matching
           case None => fieldError(field, forT)
         }
       case field :: _ => fieldError(field, forT)
       case Nil        => throw new FieldError("empty lookup key")
     }
 
-  /** The `idCol` values of `forT`'s rows where `key = value` holds, read
-    * from driver indexes. `key` is an `exact`/`in` lookup on a field or FK
-    * column, or an FK/M2M traversal ending in one; None when it is not, or
-    * when a table on the way offers no index (the caller compiles the
-    * semi-join plan instead). Mirrors `compilePred`/`compileSegs`.
+  /** `localCol`'s `lookup` predicate. An `exact` or `in` lookup also
+    * states the keys it matches by equality, as `Lookups.compile` does
+    * (`exact` null matches null keys, an `in` list's nulls match
+    * nothing), so that an index can resolve it.
     */
-  private def indexedIds(forT: TableDef, key: String, value: Any, idCol: String): Option[Set[Long]] = {
-    def via(localCol: String, keys: Iterable[Any]): Option[Set[Long]] =
-      env.index(forT.name, localCol, idCol).flatMap(_.get(keys))
-    segments(forT, key) match {
-      case "branch_id" :: Nil if value == null => None
-      case field :: rest if forT.fieldNames.contains(field) =>
-        equalityKeys(rest, mapEnum(forT, field, value)).flatMap(via(field, _))
-      case fkName :: rest if forT.fks.contains(fkName) =>
-        val fk = forT.fks(fkName)
-        val targetIds =
-          if (isLookup(rest)) equalityKeys(rest, value)
-          else indexedIds(env.tableDef(fk.target), rest.mkString("__"), value, fk.targetCol)
-        targetIds.flatMap(via(fk.localCol, _))
-      case m2mName :: rest if forT.m2ms.contains(m2mName) =>
-        m2mIds(forT.m2ms(m2mName), rest, value).flatMap(pks =>
-          if (idCol == forT.pk) Some(pks) else via(forT.pk, pks))
+  private def lookup(localCol: String, op: String, value: Any): Compiled = {
+    val keys = op match {
+      case "exact" => Some(Seq(value))
+      case "in" =>
+        Some((value match {
+          case vs: Iterable[_] => vs.toSeq
+          case vs: Array[_]    => vs.toSeq
+          case v               => Seq(v)
+        }).filter(_ != null))
       case _ => None
     }
+    Cond(Lookups.compile(col(localCol), op, value), keys.map(Keys(localCol, _)))
   }
 
-  /** The `m.leftCol` ids of the link rows whose `m.rightCol` matches
-    * `rest = value` (a lookup on the link, or a traversal of the target),
-    * read from driver indexes; None as for `indexedIds`.
+  /** The rows whose `localCol` is one of `ids`. */
+  private def within(localCol: String, ids: Ids): Compiled = ids match {
+    case Right(set) => Cond(IdSets.isIn(col(localCol), set), Some(Keys(localCol, set)))
+    case Left(frame) => Sub(localCol, frame)
+  }
+
+  /** The `idCol` values of the rows of table `name` (frame `forDf`) that
+    * `compiled` selects: a driver set when `compiled` is an equality that
+    * the environment's index from its column to `idCol` resolves, else a
+    * one-column frame (the semi-join plan).
     */
-  private def m2mIds(m: M2M, rest: List[String], value: Any): Option[Set[Long]] = {
-    val targetIds =
-      if (isLookup(rest)) equalityKeys(rest, value)
-      else {
-        val target = env.tableDef(m.target)
-        indexedIds(target, rest.mkString("__"), value, target.pk)
-      }
-    targetIds.flatMap(ids => env.index(m.link, m.rightCol, m.leftCol).flatMap(_.get(ids)))
-  }
-
-  /** No lookup segment (an implicit `exact`) or exactly one. */
-  private def isLookup(rest: List[String]): Boolean = rest match {
-    case Nil      => true
-    case l :: Nil => Lookups.all.contains(l)
-    case _        => false
-  }
-
-  /** The keys an `exact` or `in` lookup matches by equality, as
-    * `Lookups.compile` states them: `exact` null matches null keys, an
-    * `in` list's nulls match nothing. None for any other lookup.
-    */
-  private def equalityKeys(lookup: List[String], value: Any): Option[Iterable[Any]] = lookup match {
-    case Nil | "exact" :: Nil => Some(Seq(value))
-    case "in" :: Nil =>
-      Some((value match {
-        case vs: Iterable[_] => vs.toSeq
-        case vs: Array[_]    => vs.toSeq
-        case v               => Seq(v)
-      }).filter(_ != null))
-    case _ => None
-  }
-
-  /** Compile a node over a (possibly related) table into a DataFrame of the
-    * matching `idCol` values.
-    */
-  private def compileToIds(forT: TableDef, forDf: DataFrame, node: QNode, idCol: String): DataFrame =
-    compileNode(forT, forDf, node) match {
-      case Cond(c)        => forDf.filter(c).select(idCol)
+  private def idsOf(name: String, forDf: DataFrame, compiled: Compiled, idCol: String): Ids =
+    compiled match {
+      case Cond(c, keys) =>
+        keys.flatMap(k => env.index(name, k.localCol, idCol).flatMap(_.get(k.values)))
+          .toRight(forDf.filter(c).select(idCol))
       case Sub(local, ids) =>
-        if (local == idCol) ids
-        else forDf.join(ids.withColumnRenamed(ids.columns.head, local), local, "left_semi").select(idCol)
+        Left(if (local == idCol) ids
+             else forDf.join(ids.withColumnRenamed(ids.columns.head, local), local, "left_semi").select(idCol))
     }
+
+  /** Compile a node over a (possibly related) table into the matching
+    * `idCol` values.
+    */
+  private def compileToIds(forT: TableDef, forDf: DataFrame, node: QNode, idCol: String): Ids =
+    idsOf(forT.name, forDf, compileNode(forT, forDf, node), idCol)
+
+  /** The rows of `forT` that `c` does not select. */
+  private def complement(forT: TableDef, forDf: DataFrame, c: Compiled): Compiled = c match {
+    case Cond(cc, _)     => Cond(!coalesce(cc, lit(false)))
+    case Sub(local, ids) =>
+      Sub(forT.pk,
+        forDf.join(ids.withColumnRenamed(ids.columns.head, local), local, "left_anti").select(forT.pk))
+  }
 
   private def compileNode(forT: TableDef, forDf: DataFrame, node: QNode): Compiled = node match {
     case QPred(k, v) => compilePred(forT, forDf, k, v)
     case QAnd(cs) =>
       val compiled = cs.map(compileNode(forT, forDf, _))
       if (compiled.forall(_.isInstanceOf[Cond]))
-        Cond(compiled.collect { case Cond(c) => c }.reduce(_ && _))
+        Cond(compiled.collect { case Cond(c, _) => c }.reduce(_ && _))
       else {
         var ids = forDf
         compiled.foreach {
-          case Cond(c)         => ids = ids.filter(c)
+          case Cond(c, _)      => ids = ids.filter(c)
           case Sub(local, sub) => ids = ids.join(sub.withColumnRenamed(sub.columns.head, local), local, "left_semi")
         }
         Sub(forT.pk, ids.select(forT.pk))
@@ -341,27 +312,21 @@ final class QuerySet(
     case QOr(cs) =>
       val compiled = cs.map(compileNode(forT, forDf, _))
       if (compiled.forall(_.isInstanceOf[Cond]))
-        Cond(compiled.collect { case Cond(c) => c }.reduce(_ || _))
+        Cond(compiled.collect { case Cond(c, _) => c }.reduce(_ || _))
       else {
         val idDfs = compiled.map {
-          case Cond(c)         => forDf.filter(c).select(forT.pk)
+          case Cond(c, _)      => forDf.filter(c).select(forT.pk)
           case Sub(local, sub) =>
             forDf.join(sub.withColumnRenamed(sub.columns.head, local), local, "left_semi").select(forT.pk)
         }
         Sub(forT.pk, idDfs.reduce(_ union _))
       }
-    case QNot(c) =>
-      compileNode(forT, forDf, c) match {
-        case Cond(cc)        => Cond(!coalesce(cc, lit(false)))
-        case Sub(local, ids) =>
-          Sub(forT.pk,
-            forDf.join(ids.withColumnRenamed(ids.columns.head, local), local, "left_anti").select(forT.pk))
-      }
+    case QNot(c) => complement(forT, forDf, compileNode(forT, forDf, c))
   }
 
   private def applyNode(df: DataFrame, node: QNode, negate: Boolean): DataFrame =
     compileNode(t, df, node) match {
-      case Cond(c) => if (negate) df.filter(!coalesce(c, lit(false))) else df.filter(c)
+      case Cond(c, _) => if (negate) df.filter(!coalesce(c, lit(false))) else df.filter(c)
       case Sub(local, ids) =>
         val renamed = ids.withColumnRenamed(ids.columns.head, local)
         df.join(renamed, Seq(local), if (negate) "left_anti" else "left_semi")
@@ -595,10 +560,14 @@ final class QuerySet(
 }
 
 object QuerySet {
+  /** Matching ids: a one-column frame (`Left`, joined into the plan) or
+    * a driver set (`Right`, compiled to `col IN (ids)`).
+    */
+  type Ids = Either[DataFrame, Set[Long]]
+
   /** EAV dispatch hook: given (featureName, lookupSegs, value), return the
     * matching base-table pk ids plus a negate flag, or None if the name is
-    * no known feature. The ids are a one-column frame (`Left`) or a
-    * driver set (`Right`, compiled to `pk IN (ids)`). `negate = true`
+    * no known feature. `negate = true`
     * means the returned ids are the set to EXCLUDE (the reference
     * compiles `isnull=True` via `queryset.exclude` and `__ne` via an
     * anti-join — `_feature_manager.py` `_filter_one_feature_clause` /
@@ -607,8 +576,7 @@ object QuerySet {
     * positive-match semantics.
     */
   trait FeatureHook {
-    def compile(feature: String, lookupSegs: List[String],
-                value: Any): Option[(Either[DataFrame, Set[Long]], Boolean)]
+    def compile(feature: String, lookupSegs: List[String], value: Any): Option[(Ids, Boolean)]
   }
 
   /** QuerySet over a catalog registry. */

@@ -198,12 +198,13 @@ class CatalogMemoSpec extends AnyFunSuite {
     assert(labelled.count() === 2)
   }
 
+  private def semiJoins(qs: QuerySet): Int =
+    qs.df.queryExecution.optimizedPlan.collect { case j: Join if j.joinType == LeftSemi => j }.size
+
   test("above the broadcast threshold a traversal keeps its semi-join plan") {
     val (_, cat) = built()
     val m2m = QuerySet(cat, "artifact").filter("ulabels__name" -> "l1")
     val fk = QuerySet(cat, "artifact").filter("run__transform__key" -> "pipeline.scala")
-    def semiJoins(qs: QuerySet): Int =
-      qs.df.queryExecution.optimizedPlan.collect { case j: Join if j.joinType == LeftSemi => j }.size
     def eav = new ArtifactFeatures(cat).querySet.filter("n_cells__gt" -> 2)
     val indexed = (m2m.count(), fk.count(), eav.count())
     assert(semiJoins(m2m) === 0 && semiJoins(fk) === 0 && semiJoins(eav) === 0)
@@ -218,5 +219,23 @@ class CatalogMemoSpec extends AnyFunSuite {
       assert(semiJoins(m2m) >= 1 && semiJoins(eav) >= 1)
       assert((m2m.count(), fk.count(), eav.count()) === indexed)
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("above IndexRowLimit rows a traversal keeps its semi-join plan") {
+    val (_, cat) = built()
+    val n = Catalog.IndexRowLimit
+    // link i: artifact i % 24 + 1, ulabel i % 4 + 1, so l1 (id 1) labels 1, 5, ..., 21
+    cat.overwrite("artifact_ulabels", spark.range(1, n + 1).select(col("id"),
+      (col("id") % 24 + 1).as("artifact_id"), (col("id") % 4 + 1).as("ulabel_id"),
+      lit(null).cast("long").as("feature_id")))
+    val m2m = QuerySet(cat, "artifact").filter("ulabels__name" -> "l1")
+    assert(m2m.count() === 6)
+    assert(cat.index("artifact_ulabels", "ulabel_id", "artifact_id").isDefined)
+    assert(semiJoins(m2m) === 0)
+
+    cat.insert("artifact_ulabels", Map("artifact_id" -> 2L, "ulabel_id" -> 1L))
+    assert(cat.index("artifact_ulabels", "ulabel_id", "artifact_id").isEmpty)
+    assert(semiJoins(m2m) >= 1)
+    assert(m2m.count() === 7)
   }
 }
