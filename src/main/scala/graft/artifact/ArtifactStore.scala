@@ -147,12 +147,17 @@ final class ArtifactStore(val cat: Catalog) {
     spark.read.parquet(s"${paths.head}/$slot")
   }
 
-  /** Slot names present in a multi-slot artifact (storage listing). */
+  /** Slot names present in a multi-slot artifact (storage listing, on
+    * whatever filesystem the storage root's URI names).
+    */
   def listSlots(uid: String): Seq[String] = {
     val paths = pathsFor(cat.table("artifact").filter(col("uid") === uid))
     if (paths.isEmpty) throw new DoesNotExist(s"no artifact with uid $uid")
-    val dir = new java.io.File(paths.head)
-    Option(dir.listFiles()).toSeq.flatten.filter(_.isDirectory).map(_.getName).sorted
+    val dir = new org.apache.hadoop.fs.Path(paths.head)
+    val statuses =
+      try Hashing.fileSystem(paths.head).listStatus(dir).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    statuses.filter(_.isDirectory).map(_.getPath.getName).sorted
   }
 
   /** Replace the artifact's content in storage WITHOUT a new version

@@ -51,13 +51,11 @@ import graft.core.{Base62, Versioning}
   *  - `index(table, keyCol, valueCol)` is a memoized driver multimap from
   *    a column's values to the ids in another column of the same rows
   *    (snapshot ∪ buffer), built with one two-column collect. It is
-  *    offered only while the table's plan-stats size estimate is at or
-  *    below the session's `spark.sql.autoBroadcastJoinThreshold` (the
-  *    size below which Spark broadcasts it into a join anyway,
-  *    `Session.broadcastable`) and a row count finds at most
-  *    `IndexRowLimit` rows, the measured size up to which a read right
-  *    after a write still gains and which bounds the driver heap an
-  *    index holds; otherwise callers keep their join plan. QuerySet
+  *    offered only while a row count finds at most `IndexRowLimit` rows,
+  *    the measured size up to which a read right after a write still
+  *    gains and which bounds the driver heap an index holds; otherwise
+  *    callers keep their join plan. The session's broadcast threshold
+  *    plays no part: a plan-stats size estimate bounds no heap. QuerySet
   *    traversals and the EAV filter resolve `exact`/`in` lookups through
   *    these to an `id IN (...)` predicate.
   *
@@ -153,16 +151,12 @@ final class Catalog(
   /** Rows inserted into `name` since its last flush or rewrite. */
   def buffered(name: String): Int = buffers.get(name).fold(0)(_.size)
 
-  /** Whether `name` passes `index`'s gate: its plan-stats size estimate
-    * is at or below the session's broadcast threshold, and it holds at
-    * most `IndexRowLimit` rows. Both are memoized per content generation;
-    * the row count (one job, no exchange) runs only for a table under
-    * the size gate.
+  /** Whether `name` passes `index`'s gate: it holds at most
+    * `IndexRowLimit` rows. The row count (one job, no exchange) is
+    * memoized per content generation.
     */
   def fits(name: String): Boolean =
-    graft.core.Session.broadcastable(spark,
-      memo(s"size/$name", Seq(name))(table(name).queryExecution.optimizedPlan.stats.sizeInBytes)) &&
-      memo(s"rows/$name", Seq(name))(table(name).select().queryExecution.toRdd.count()) <= IndexRowLimit
+    memo(s"rows/$name", Seq(name))(table(name).select().queryExecution.toRdd.count()) <= IndexRowLimit
 
   /** Driver multimap from `keyCol`'s values (String, Long or Int; null
     * included) to the non-null `valueCol` ids (Long) of the same rows of
@@ -422,8 +416,8 @@ object Catalog {
     * transforms), local[4] on a 4-vCPU host, p50 ms of the index path
     * against the semi-join path. A repeated `ulabels__name` count: 83 vs
     * 291 at L = 10k, 80 vs 264 at 100k, and, with this limit lifted, 96
-    * vs 280 at 300k, 126 vs 318 at 1M, 124 vs 338 at 1.2M (the largest
-    * link table under the default 10 MB size gate); `run__transform__key`
+    * vs 280 at 300k, 126 vs 318 at 1M, 124 vs 338 at 1.2M (a link table
+    * of 9.8 MB on disk); `run__transform__key`
     * 68-130 vs 200-270 over the same range. The first count after an
     * insert into the link table (the row count and the index rebuilt):
     * 251 vs 254 at 10k, 250 vs 272 at 50k, 251 vs 256 at 100k, 294 vs

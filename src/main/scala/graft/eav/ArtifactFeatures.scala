@@ -113,10 +113,11 @@ final class ArtifactFeatures(cat: Catalog) {
   def querySet: QuerySet = QuerySet(cat, "artifact", featureHook = Some(hook))
 
   /** `store.hook`, except that a scalar predicate resolves on the driver
-    * while `json_value` and `artifact_json_values` fit `Catalog.index`'s
-    * gate: the same predicate over the `json_value` rows collects the
-    * matching value ids (one job), and the `artifact_json_values` index
-    * maps them to artifact ids. Label predicates keep the store's plan.
+    * while `json_value` and `artifact_json_values` each hold at most
+    * `Catalog.IndexRowLimit` rows (`Catalog.fits`, `Catalog.index`): the
+    * same predicate over the `json_value` rows collects the matching
+    * value ids (one job), and the `artifact_json_values` index maps them
+    * to artifact ids. Label predicates keep the store's plan.
     */
   private def hook: QuerySet.FeatureHook = {
     val s = store

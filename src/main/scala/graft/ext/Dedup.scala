@@ -1164,9 +1164,10 @@ object Dedup {
     * Σdf² over kept grams is cap·Σdf — quadratic only when the corpus
     * is wall-to-wall boilerplate sitting exactly at the threshold; the
     * synthetic tiers measure max df 4 (sf1.0) / 12 (sf10), so the
-    * adaptive cap changes nothing on natural text, and the
-    * planted-cluster recall contract (`graft.tools.RecallContract`,
-    * SCALING.md) bounds the real candidate counts at each tier.
+    * adaptive cap changes nothing on natural text. `RecallContractSpec`
+    * gates both sides at the sf0.001 fixture: planted clusters of half
+    * the cap are recalled in full, and a block planted past a fixed cap
+    * is dropped, or kept at linear cost under `pairBudget`.
     */
   def gramDfCap(nDocs: Long, base: Long = 50L, freqDenom: Long = 1000L): Long =
     math.max(base, nDocs / freqDenom)
@@ -1229,8 +1230,8 @@ object Dedup {
     // yields identical spans and the DuckDB oracle's md5-keyed replay
     // still matches. 16 key bytes cut the corpus-scale gram shuffle
     // ~2.5× vs the 32-char hex string (the only corpus-wide exchange
-    // in this plan): the r18 sf1,000 CostContract leg exhausted this
-    // box's disk on the md5 keys before the narrower key landed.
+    // in this plan): the r18 sf1,000 cost-contract leg exhausted the
+    // disk on the md5 keys before the narrower key landed.
     // ONE corpus-wide exchange, shared by every consumer: the raw gram
     // occurrences are explicitly hash-partitioned on (gh0,gh1), so the df
     // aggregate (clustering satisfied — partial+final collapse into

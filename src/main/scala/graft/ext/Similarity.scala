@@ -38,12 +38,16 @@ object Similarity {
     * for sides about to be exploded) the hint pins the efficient
     * broadcast plan; over it the hint is DROPPED so the planner/AQE can
     * fall back to a shuffle join instead of OOMing an executor on an
-    * unbounded query set at scale.
+    * unbounded query set at scale. A disabled threshold (-1, or any
+    * value <= 0) admits nothing.
     */
-  private def gatedBroadcast(df: DataFrame, fanout: Long = 1L): DataFrame =
-    if (graft.core.Session.broadcastable(df.sparkSession,
-        df.queryExecution.optimizedPlan.stats.sizeInBytes * fanout)) broadcast(df)
-    else df
+  private def gatedBroadcast(df: DataFrame, fanout: Long = 1L): DataFrame = {
+    val conf = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
+    val thresh = if (conf.startsWith("-")) 0L
+                 else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes * fanout
+    if (thresh > 0 && est <= thresh) broadcast(df) else df
+  }
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 

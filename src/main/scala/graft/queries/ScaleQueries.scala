@@ -25,7 +25,7 @@ object ScaleQueries {
       // broadcast), one final 25-group aggregate. A round-14 rewrite
       // pre-aggregated lineitem by l_orderkey before the joins on the
       // theory that ~4x fewer join rows would win; measured head-to-head
-      // in fresh JVMs (tools/ProfQ21, SCALING.md) it LOST at both tiers —
+      // in fresh JVMs (SCALING.md, round 15) it LOST at both tiers —
       // 2.4x slower at sf0.1 and 3.3x at sf10 (25.3 s vs 7.5 s median) —
       // because a hash aggregate over the full lineitem keyspace (one
       // group PER ORDER: 15M groups at sf10, growing linearly forever)

@@ -18,11 +18,11 @@ import graft.catalog.{Catalog, Schemas, TableDef, FK, M2M}
   * a field or FK column (`ulabels__name`, `ulabels`, `run__transform__key`,
   * chains of any depth) resolves on the driver instead when the
   * environment offers an index for every table it crosses
-  * (`Catalog.index`: catalog querysets, tables under the broadcast
-  * threshold and `Catalog.IndexRowLimit` rows): the matching ids become
-  * `col IN (ids)` on this table and the read is one scan. Any other
-  * lookup, a table above the gate, or a `MapEnv`/`over` frame keeps the
-  * semi-join plan from that table on.
+  * (`Catalog.index`: catalog querysets, tables of at most
+  * `Catalog.IndexRowLimit` rows): the matching ids become `col IN (ids)`
+  * on this table and the read is one scan. Any other lookup, a table
+  * above the limit, or a `MapEnv`/`over` frame keeps the semi-join plan
+  * from that table on.
   *
   * Immutable: every chained call returns a new QuerySet.
   */
@@ -144,7 +144,13 @@ final class QuerySet(
   /** `localCol` equals one of `values`. */
   private final case class Keys(localCol: String, values: Iterable[Any])
   /** base.`localCol` IN (ids — a single-column DataFrame) */
-  private final case class Sub(localCol: String, ids: DataFrame) extends Compiled
+  private final case class Sub(localCol: String, ids: DataFrame) extends Compiled {
+    /** `x`'s rows whose `localCol` is (`left_semi`) or is not
+      * (`left_anti`) among `ids`.
+      */
+    def join(x: DataFrame, how: String): DataFrame =
+      x.join(ids.withColumnRenamed(ids.columns.head, localCol), localCol, how)
+  }
 
   private def fieldError(name: String, forT: TableDef): Nothing = {
     val available = forT.schema.fieldNames.toSeq ++ forT.fks.keys ++ forT.m2ms.keys
@@ -276,9 +282,8 @@ final class QuerySet(
       case Cond(c, keys) =>
         keys.flatMap(k => env.index(name, k.localCol, idCol).flatMap(_.get(k.values)))
           .toRight(forDf.filter(c).select(idCol))
-      case Sub(local, ids) =>
-        Left(if (local == idCol) ids
-             else forDf.join(ids.withColumnRenamed(ids.columns.head, local), local, "left_semi").select(idCol))
+      case s: Sub =>
+        Left(if (s.localCol == idCol) s.ids else s.join(forDf, "left_semi").select(idCol))
     }
 
   /** Compile a node over a (possibly related) table into the matching
@@ -289,10 +294,8 @@ final class QuerySet(
 
   /** The rows of `forT` that `c` does not select. */
   private def complement(forT: TableDef, forDf: DataFrame, c: Compiled): Compiled = c match {
-    case Cond(cc, _)     => Cond(!coalesce(cc, lit(false)))
-    case Sub(local, ids) =>
-      Sub(forT.pk,
-        forDf.join(ids.withColumnRenamed(ids.columns.head, local), local, "left_anti").select(forT.pk))
+    case Cond(cc, _) => Cond(!coalesce(cc, lit(false)))
+    case s: Sub      => Sub(forT.pk, s.join(forDf, "left_anti").select(forT.pk))
   }
 
   private def compileNode(forT: TableDef, forDf: DataFrame, node: QNode): Compiled = node match {
@@ -304,8 +307,8 @@ final class QuerySet(
       else {
         var ids = forDf
         compiled.foreach {
-          case Cond(c, _)      => ids = ids.filter(c)
-          case Sub(local, sub) => ids = ids.join(sub.withColumnRenamed(sub.columns.head, local), local, "left_semi")
+          case Cond(c, _) => ids = ids.filter(c)
+          case s: Sub     => ids = s.join(ids, "left_semi")
         }
         Sub(forT.pk, ids.select(forT.pk))
       }
@@ -315,9 +318,8 @@ final class QuerySet(
         Cond(compiled.collect { case Cond(c, _) => c }.reduce(_ || _))
       else {
         val idDfs = compiled.map {
-          case Cond(c, _)      => forDf.filter(c).select(forT.pk)
-          case Sub(local, sub) =>
-            forDf.join(sub.withColumnRenamed(sub.columns.head, local), local, "left_semi").select(forT.pk)
+          case Cond(c, _) => forDf.filter(c).select(forT.pk)
+          case s: Sub     => s.join(forDf, "left_semi").select(forT.pk)
         }
         Sub(forT.pk, idDfs.reduce(_ union _))
       }
@@ -327,9 +329,7 @@ final class QuerySet(
   private def applyNode(df: DataFrame, node: QNode, negate: Boolean): DataFrame =
     compileNode(t, df, node) match {
       case Cond(c, _) => if (negate) df.filter(!coalesce(c, lit(false))) else df.filter(c)
-      case Sub(local, ids) =>
-        val renamed = ids.withColumnRenamed(ids.columns.head, local)
-        df.join(renamed, Seq(local), if (negate) "left_anti" else "left_semi")
+      case s: Sub     => s.join(df, if (negate) "left_anti" else "left_semi")
     }
 
   /** The resolved, still-lazy plan. */

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Threshold-boundary recall contract for the banded embedding LSH
-  * (e11, `Dedup.embeddingCosinePairsLSHBanded`) — the RecallContract
-  * pattern pointed at the hyperplane-LSH sampling trade (round-15
-  * verdict ask #4).
+  * (e11, `Dedup.embeddingCosinePairsLSHBanded`) — the planted-cluster
+  * recall contract of `RecallContractSpec` pointed at the hyperplane-LSH
+  * sampling trade (round-15 verdict ask #4).
   *
   * The adaptive band width w (`Similarity.lshBandBits`: 2^w ≥ 16n)
   * keeps candidates linear by making boundary-cosine pairs a SAMPLE:

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Third-decade spot probe: times the CORPUS-scale dedup/ANN operators
@@ -27,18 +28,29 @@ import org.apache.spark.sql.functions._
   * and a 40M-nnz store (store build untimed), walls compared — if the
   * per-trigger cost scaled with the store, the second wall would be ~10×.
   *
-  * Usage: ScaleProbe <sfDir> [ops=minhash,simhash,simhash128,spans_budget,emb_lsh]
+  * Usage: ScaleProbe <sfDir> [ops, comma-separated; default `DefaultOps`]
+  * Prints one JSON line; `ScaleProbeSpec` smoke-runs the default ops on
+  * the sf0.001 fixture.
   */
 object ScaleProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val ops: Set[String] =
-      if (args.length > 1) args(1).split(',').map(_.trim).toSet
-      else Set("minhash", "simhash", "simhash128", "spans_budget", "emb_lsh",
-        "emb_lsh_banded", "gram_stats", "cc")
-    val spark = graft.core.Session.local(32)
+  /** The documents/embeddings ops, run when none are named. */
+  val DefaultOps: Set[String] = Set("minhash", "simhash", "simhash128", "spans_budget",
+    "emb_lsh", "emb_lsh_banded", "gram_stats", "cc")
 
+  def main(args: Array[String]): Unit = {
+    val ops = if (args.length > 1) args(1).split(',').map(_.trim).toSet else DefaultOps
+    val spark = graft.core.Session.local(32)
+    try println(run(spark, args(0), ops))
+    finally spark.stop()
+  }
+
+  /** Runs `ops` once each against the tier at `sfDir` and returns the
+    * JSON line: the adaptive plans picked at this n (when the tier has
+    * documents) and, under `ops`, each op's seconds and output rows.
+    */
+  def run(spark: SparkSession, sfDir: String, ops: Set[String]): String = {
     val results = scala.collection.mutable.ArrayBuffer.empty[String]
+    var gramMaxDf = ""
     def timed(name: String)(body: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = body
@@ -112,7 +124,7 @@ object ScaleProbe {
         val r = gramDf.agg(max("df").as("max_df"),
           sum(when(col("df") <= cap, col("df") * (col("df") - 1)).otherwise(0L)).as("c2"))
           .head()
-        results += s""""gram_cap":$cap,"gram_max_df":${r.getLong(0)}"""
+        gramMaxDf = s""""gram_max_df":${r.getLong(0)},"""
         r.getLong(1) / 2 // rows = exact candidate count under the cap
       }
     if (ops("emb_lsh"))
@@ -227,8 +239,7 @@ object ScaleProbe {
       s""""n_corpus":$nCorpus,"n_docs":$nDocs,""" +
         s""""plan60":"${b60}x$w60","plan120":"${b120}x$w120","gram_cap":$cap,"""
     } else ""
-    println(s"""{"sf_dir":"$sfDir",""" + planFields +
-      results.mkString("\"ops\":{", ",", "}}"))
-    spark.stop()
+    s"""{"sf_dir":"$sfDir",""" + planFields + gramMaxDf +
+      results.mkString("\"ops\":{", ",", "}}")
   }
 }

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.catalog.Catalog
 import graft.core.Versioning
-import graft.curate.{FeatureSpec, SchemaSpec}
+import graft.curate.{FeatureSpec, MuDataset, SchemaSpec}
 
 class AnnBridgeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -47,6 +47,32 @@ class AnnBridgeSpec extends AnyFunSuite {
     assert(ds.obsm.keySet === Set("X_pca"))
     assert(ds.obs.orderBy("obs_id").select("cell_type").as[String].collect().toSeq ===
       Seq("B", "T", "B"))
+  }
+
+  test("AnnData and MuData round-trip under a file:// storage root") {
+    val root = TestSpark.tmpDir("ann")
+    val store = new ArtifactStore(Catalog.deterministic(spark, root))
+    val uriRoot = new java.io.File(root).toURI.toString.stripSuffix("/")
+    assert(uriRoot.startsWith("file:/"))
+
+    val art = AnnBridge.ingest(store, tinyDataset(), "sc/uri.anndata", uriRoot)
+    assert(store.listSlots(art("uid").toString) === Seq("X", "obs", "obsm.X_pca", "var"))
+    val ds = AnnBridge.open(store, art("uid").toString)
+    assert(ds.shape === ((3L, 3L)))
+    assert(ds.x.count() === 8)
+    assert(ds.obsm.keySet === Set("X_pca"))
+
+    val mu = MuDataset(
+      global = Map("obs" -> Seq(("c1", "s1"), ("c2", "s2")).toDF("cell_id", "sample")),
+      modalities = Map("rna" -> Map(
+        "obs" -> Seq(("c1", "T cell"), ("c2", "B cell")).toDF("cell_id", "cell_type"),
+        "var" -> Seq(("ENSG01", "ACTB")).toDF("gene_id", "symbol"))))
+    val muArt = MuBridge.ingest(store, mu, "multi/uri", uriRoot)
+    val back = MuBridge.open(store, muArt("uid").toString)
+    assert(back.global.keySet === Set("obs"))
+    assert(back.modalities.keySet === Set("rna"))
+    assert(back.modalities("rna").keySet === Set("obs", "var"))
+    assert(back.modalities("rna")("obs").count() === 2)
   }
 
   test("obs/var slicing slices X, layers and obsm like the backed accessor") {

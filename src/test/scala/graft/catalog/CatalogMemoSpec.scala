@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, lit, when}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.eav.ArtifactFeatures
@@ -201,22 +201,21 @@ class CatalogMemoSpec extends AnyFunSuite {
   private def semiJoins(qs: QuerySet): Int =
     qs.df.queryExecution.optimizedPlan.collect { case j: Join if j.joinType == LeftSemi => j }.size
 
-  test("above the broadcast threshold a traversal keeps its semi-join plan") {
+  test("a traversal stays indexed above a lowered broadcast threshold") {
     val (_, cat) = built()
     val m2m = QuerySet(cat, "artifact").filter("ulabels__name" -> "l1")
     val fk = QuerySet(cat, "artifact").filter("run__transform__key" -> "pipeline.scala")
     def eav = new ArtifactFeatures(cat).querySet.filter("n_cells__gt" -> 2)
     val indexed = (m2m.count(), fk.count(), eav.count())
-    assert(semiJoins(m2m) === 0 && semiJoins(fk) === 0 && semiJoins(eav) === 0)
 
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.getOption(key)
     val linkBytes = cat.table("artifact_ulabels").queryExecution.optimizedPlan.stats.sizeInBytes
     spark.conf.set(key, (linkBytes - 1).toString)
     try {
-      assert(!cat.fits("artifact_ulabels"))
-      assert(cat.index("artifact_ulabels", "ulabel_id", "artifact_id").isEmpty)
-      assert(semiJoins(m2m) >= 1 && semiJoins(eav) >= 1)
+      assert(cat.fits("artifact_ulabels"))
+      assert(cat.index("artifact_ulabels", "ulabel_id", "artifact_id").isDefined)
+      assert(semiJoins(m2m) === 0 && semiJoins(fk) === 0 && semiJoins(eav) === 0)
       assert((m2m.count(), fk.count(), eav.count()) === indexed)
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
@@ -237,5 +236,18 @@ class CatalogMemoSpec extends AnyFunSuite {
     assert(cat.index("artifact_ulabels", "ulabel_id", "artifact_id").isEmpty)
     assert(semiJoins(m2m) >= 1)
     assert(m2m.count() === 7)
+
+    // the EAV filter: n_cells = artifact id mod 5, so 10 artifacts are > 2
+    def eav = new ArtifactFeatures(cat).querySet.filter("n_cells__gt" -> 2)
+    assert(eav.count() === 10)
+    assert(semiJoins(eav) === 0)
+    // one more than IndexRowLimit value links: artifacts 1..24 as built,
+    // the rest on artifact ids that do not exist
+    cat.overwrite("artifact_json_values", spark.range(1, n + 2).select(col("id"),
+      when(col("id") <= 24, col("id")).otherwise(col("id") + 1000).as("artifact_id"),
+      (col("id") % 5 + 1).as("json_value_id")))
+    assert(cat.index("artifact_json_values", "json_value_id", "artifact_id").isEmpty)
+    assert(semiJoins(eav) >= 1)
+    assert(eav.count() === 10)
   }
 }
