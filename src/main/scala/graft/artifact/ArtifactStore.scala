@@ -1,7 +1,14 @@
 package graft.artifact
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import graft.catalog.Catalog
 import graft.core.Hashing
 import graft.query.{DoesNotExist, QuerySet}
@@ -22,16 +29,22 @@ final class ArtifactStore(val cat: Catalog) {
   private def spark: SparkSession = cat.spark
 
   /** Ensure a storage root exists; return its id. A known root is
-    * answered from a root → id map kept while the `storage` table is
-    * unchanged (no Spark job); an unknown one goes through `ensure`.
+    * answered from `storageRoots` (no Spark job); an unknown one goes
+    * through `ensure`.
     */
   def ensureStorage(root: String): Long =
-    cat.memo("storage.idByRoot", Seq("storage")) {
-      // the first stored row per root wins, as in `ensure`
-      cat.table("storage").select("root", "id").collect().reverseIterator
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    }.getOrElse(root, cat.ensure("storage", Seq("root"), Seq(Map("root" -> root, "typ" -> "local")))
+    storageRoots._1.getOrElse(root, cat.ensure("storage", Seq("root"), Seq(Map("root" -> root, "typ" -> "local")))
       .head("id").asInstanceOf[Long])
+
+  /** The `storage` table as root → id (the first stored row per root
+    * wins, as in `ensure`) and id → root, collected once and kept while
+    * the table is unchanged.
+    */
+  private def storageRoots: (Map[String, Long], Map[Long, String]) =
+    cat.memo("storage.roots", Seq("storage")) {
+      val rows = cat.table("storage").select("root", "id").collect().map(r => r.getString(0) -> r.getLong(1))
+      (rows.reverseIterator.toMap, rows.iterator.map(_.swap).toMap)
+    }
 
   /** Register an existing file/directory as an artifact (ingest-by-
     * reference). Idempotent on content hash; versions on key conflict.
@@ -46,7 +59,7 @@ final class ArtifactStore(val cat: Catalog) {
       val i = name.lastIndexOf('.')
       if (i >= 0) name.substring(i) else ""
     }
-    findByHash(s.hash).getOrElse(
+    findByHashes(Seq(s.hash)).getOrElse(s.hash,
       createArtifact(s, key, suffix, storageId, kind, description, realPath = Some(path)))
   }
 
@@ -78,9 +91,8 @@ final class ArtifactStore(val cat: Catalog) {
     val staged = graft.core.Par.results(items.zip(stagePaths).map {
       case ((df, _), stagePath) => () => stageFrame(df, stagePath)
     })
-    items.zip(staged).map { case ((_, key), s) =>
-      commit(s, storageRoot)(place =>
-        createArtifact(s, key, ".parquet", storageId, "dataset", description, place = place))
+    commit(staged, storageRoot) { (i, place) =>
+      createArtifact(staged(i), items(i)._2, ".parquet", storageId, "dataset", description, place = place)
     }
   }
 
@@ -134,31 +146,32 @@ final class ArtifactStore(val cat: Catalog) {
       }
     }: _*)
     val s = staged(stagePath, obsCounter.map(_._2.get.apply("n").asInstanceOf[Long]).orElse(nObservations))
-    commit(s, storageRoot)(place =>
-      createArtifact(s, key, suffix, storageId, "dataset", description, otype = Some(otype), place = place))
+    commit(Seq(s), storageRoot)((_, place) =>
+      createArtifact(s, key, suffix, storageId, "dataset", description, otype = Some(otype), place = place)).head
   }
 
-  /** Open one named slot of a multi-slot artifact as a lazy scan. */
+  /** Open one named slot of a multi-slot artifact as a lazy scan: the
+    * member resolution and the footer schema of `open`.
+    */
   def openSlot(uid: String, slot: String): DataFrame = {
-    val art = cat.table("artifact").filter(col("uid") === uid)
-    trackRunInputs(art)
-    val paths = pathsFor(art)
-    if (paths.isEmpty) throw new DoesNotExist(s"no artifact with uid $uid")
-    spark.read.parquet(s"${paths.head}/$slot")
+    val ms = members(cat.table("artifact").filter(col("uid") === uid))
+    trackRunInputs(ms)
+    readParquet(Seq(s"${pathOf(uid, ms)}/$slot"))
   }
 
   /** Slot names present in a multi-slot artifact (storage listing, on
     * whatever filesystem the storage root's URI names).
     */
   def listSlots(uid: String): Seq[String] = {
-    val paths = pathsFor(cat.table("artifact").filter(col("uid") === uid))
-    if (paths.isEmpty) throw new DoesNotExist(s"no artifact with uid $uid")
-    val dir = new org.apache.hadoop.fs.Path(paths.head)
+    val path = pathOf(uid, members(cat.table("artifact").filter(col("uid") === uid)))
     val statuses =
-      try Hashing.fileSystem(paths.head).listStatus(dir).toSeq
+      try Hashing.fileSystem(path).listStatus(new Path(path)).toSeq
       catch { case _: java.io.FileNotFoundException => Nil }
     statuses.filter(_.isDirectory).map(_.getPath.getName).sorted
   }
+
+  private def pathOf(uid: String, ms: Seq[Member]): String =
+    ms.flatMap(_.path).headOption.getOrElse(throw new DoesNotExist(s"no artifact with uid $uid"))
 
   /** Replace the artifact's content in storage WITHOUT a new version
     * (`Artifact.replace`, `artifact.py:2809-2900`): same uid, updated
@@ -174,7 +187,7 @@ final class ArtifactStore(val cat: Catalog) {
     require(current("real_path") == null,
       "can only replace managed artifacts (ingest-by-reference content lives outside the store)")
     val s = stageFrame(df, s"$storageRoot/.staging/${cat.uid(8)}")
-    commit(s, storageRoot) { place =>
+    commit(Seq(s), storageRoot) { (_, place) =>
       deletePath(artifactPath(current, storageRoot))
       place(current)
       cat.update("artifact", col("uid") === uid,
@@ -182,7 +195,7 @@ final class ArtifactStore(val cat: Catalog) {
         "n_files" -> lit(s.nFiles), "n_observations" -> lit(s.nObs.get))
       current ++ Map("hash" -> s.hash, "hash_type" -> s.hashType, "size" -> s.size,
         "n_files" -> s.nFiles, "n_observations" -> s.nObs.get)
-    }
+    }.head
   }
 
   /** Stat-ed content not yet in the catalog: written under `.staging/`,
@@ -206,21 +219,30 @@ final class ArtifactStore(val cat: Catalog) {
     staged(path, Some(ob.get.apply("n").asInstanceOf[Long]))
   }
 
-  /** The one registration commit for staged content: one hash lookup
-    * (it bypasses branch filtering, `query_set.py:273-293`). A hit
-    * deletes the stage and returns the existing row; a miss runs
-    * `register` with `place`, which moves the stage to a row's managed
-    * path. `register` places its row before its catalog write, so no
-    * durable row points at content that is not there yet.
+  /** The one registration commit for a batch of staged content: one
+    * lookup of every staged hash (it bypasses branch filtering,
+    * `query_set.py:273-293`). In input order, a hash held by the catalog
+    * or by an earlier item of the batch (the first occurrence wins, as in
+    * `registerBatch`) deletes the stage and returns that row; otherwise
+    * `register(i, place)` runs, where `place` moves the stage to a row's
+    * managed path. `register` places its row before its catalog write, so
+    * no durable row points at content that is not there yet.
     */
-  private def commit(s: Staged, storageRoot: String)(
-      register: (Map[String, Any] => Unit) => Map[String, Any]): Map[String, Any] =
-    findByHash(s.hash) match {
-      case Some(existing) =>
-        deletePath(s.path)
-        existing
-      case None => register(row => movePath(s.path, artifactPath(row, storageRoot)))
+  private def commit(batch: Seq[Staged], storageRoot: String)(
+      register: (Int, Map[String, Any] => Unit) => Map[String, Any]): Seq[Map[String, Any]] = {
+    val known = findByHashes(batch.map(_.hash))
+    batch.zipWithIndex.map { case (s, i) =>
+      known.get(s.hash) match {
+        case Some(existing) =>
+          deletePath(s.path)
+          existing
+        case None =>
+          val row = register(i, row => movePath(s.path, artifactPath(row, storageRoot)))
+          known(s.hash) = row
+          row
+      }
     }
+  }
 
   /** One stat-ed ingest candidate for the bulk path. */
   final case class StatEntry(hash: String, hashType: String, size: Long, nFiles: Long,
@@ -311,9 +333,16 @@ final class ArtifactStore(val cat: Catalog) {
     FromDirResult(kept.map(e => byHash(e.hash)), dropped.map(_.key))
   }
 
-  private def findByHash(hash: String): Option[Map[String, Any]] =
-    cat.table("artifact").filter(col("hash") === hash).head(1).headOption
-      .map(r => r.getValuesMap[Any](r.schema.fieldNames))
+  /** The first stored artifact row per hash, for every hash of `hashes`
+    * the catalog holds: one filtered collect.
+    */
+  private def findByHashes(hashes: Seq[String]): scala.collection.mutable.Map[String, Map[String, Any]] = {
+    val found = scala.collection.mutable.Map.empty[String, Map[String, Any]]
+    cat.table("artifact").filter(col("hash").isin(hashes.distinct: _*)).collect().foreach { r =>
+      found.getOrElseUpdate(r.getAs[String]("hash"), r.getValuesMap[Any](r.schema.fieldNames))
+    }
+    found
+  }
 
   /** Register new content: the next version of the key+storage family,
     * or a new family when there is none. The caller has looked the hash
@@ -344,7 +373,7 @@ final class ArtifactStore(val cat: Catalog) {
       .getOrElse(s"$storageRoot/.lamindb/${a("uid")}${Option(a.getOrElse("suffix", null)).getOrElse("")}")
 
   /** `artifacts` joined with `storage`, plus `artifactPath` as a
-    * `__path` column.
+    * `__path` column, for lookups that match on the path in Spark.
     */
   private def withPaths(artifacts: DataFrame): DataFrame = {
     val storages = cat.table("storage").select(col("id").as("storage_id"), col("root"))
@@ -352,22 +381,48 @@ final class ArtifactStore(val cat: Catalog) {
       concat(col("root"), lit("/.lamindb/"), col("uid"), coalesce(col("suffix"), lit("")))))
   }
 
-  def pathsFor(artifacts: DataFrame): Seq[String] =
-    withPaths(artifacts).select("__path").collect().map(_.getString(0)).toSeq
+  /** An artifact as `open` resolves it. `path` is its `artifactPath`,
+    * None when its storage row is missing (a managed path has no root).
+    */
+  private final case class Member(id: Long, suffix: String, path: Option[String])
+
+  /** The members of `artifacts` from one collect, their paths computed
+    * on the driver with `storageRoots`. In `position` order when the
+    * frame carries that column (a collection's member order), else in
+    * the frame's order.
+    */
+  private def members(artifacts: DataFrame): Seq[Member] = {
+    val ordered = artifacts.columns.contains("position")
+    val cols = Seq("id", "uid", "suffix", "real_path", "storage_id") ++ (if (ordered) Seq("position") else Nil)
+    val rows = artifacts.select(cols.map(col): _*).collect().toSeq
+    val roots = storageRoots._2
+    (if (ordered) rows.sortBy(_.getInt(5)) else rows).map { r =>
+      val path = (if (r.isNullAt(4)) None else roots.get(r.getLong(4))).map(root =>
+        artifactPath(Map("uid" -> r.getString(1), "suffix" -> r.getString(2), "real_path" -> r.getString(3)), root))
+      Member(r.getLong(0), r.getString(2), path)
+    }
+  }
 
   /** Open a set of catalog-resolved artifacts as ONE lazy multi-path scan
     * (`ArtifactSet.open`, `artifact_set.py:63-82`): all members must share
     * a suffix (pre-read validation like the reference).
     * Auto-links run inputs when a run is active (`track_run_input`).
+    *
+    * Jobs: the members' collect (one, or two for a joined frame such as
+    * a collection's: the broadcast and the collect), one more for the
+    * storage roots after `storage` changed, and the run-input `ensure`
+    * when a run is active. A `.parquet` set is read with a footer schema
+    * (`readParquet`), so no schema-inference job runs.
     */
   def open(artifacts: DataFrame): DataFrame = {
-    val suffixes = artifacts.select("suffix").distinct().collect().map(_.getString(0))
+    val ms = members(artifacts)
+    val suffixes = ms.map(_.suffix).distinct
     require(suffixes.length == 1,
       s"cannot open artifacts with mixed suffixes: ${suffixes.mkString(", ")}")
-    trackRunInputs(artifacts)
-    val paths = pathsFor(artifacts)
+    trackRunInputs(ms)
+    val paths = ms.flatMap(_.path)
     suffixes.head match {
-      case ".parquet" => spark.read.parquet(paths: _*)
+      case ".parquet" => readParquet(paths)
       case ".csv"     => spark.read.option("header", "true").option("inferSchema", "true").csv(paths: _*)
       case ".tsv"     => spark.read.option("header", "true").option("sep", "\t").option("inferSchema", "true").csv(paths: _*)
       case ".json" | ".ndjson" => spark.read.json(paths: _*)
@@ -414,11 +469,53 @@ final class ArtifactStore(val cat: Catalog) {
   /** Lineage side-effect: any open/load against an active run records the
     * artifacts as run inputs (`track_run_input`, `artifact.py:3783-3955`).
     */
-  private def trackRunInputs(artifacts: DataFrame): Unit =
+  private def trackRunInputs(ms: Seq[Member]): Unit =
     cat.currentRunId.foreach { runId =>
-      cat.ensure("run_inputs", Seq("run_id", "artifact_id"), artifacts.select("id").collect()
-        .map(r => Map("run_id" -> runId, "artifact_id" -> r.getLong(0))).toIndexedSeq)
+      cat.ensure("run_inputs", Seq("run_id", "artifact_id"),
+        ms.map(m => Map("run_id" -> runId, "artifact_id" -> m.id)))
     }
+
+  /** `spark.read.parquet(paths: _*)` without its schema-inference job.
+    * Spark's inference (without `mergeSchema`) reads one footer: the
+    * first `_common_metadata`, else `_metadata`, else data file in path
+    * order, among the files its listing keeps (it skips names that start
+    * with `_` or `.`). That footer is read here on the driver, with
+    * Spark's own reader: its row-metadata schema first, otherwise the
+    * Parquet→Spark conversion under inference's settings. With no such
+    * file the read is left to Spark.
+    */
+  private def readParquet(paths: Seq[String]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def rank(st: FileStatus) = st.getPath.getName match {
+      case "_common_metadata" => (0, st.getPath.toString)
+      case "_metadata" => (1, st.getPath.toString)
+      case _ => (2, st.getPath.toString)
+    }
+    def hidden(name: String) =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")) &&
+        !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+    // a missing path lists nothing here; Spark's read reports it
+    def leaves(fs: FileSystem, p: Path): Seq[FileStatus] =
+      (try fs.listStatus(p).toSeq catch { case _: java.io.FileNotFoundException => Nil })
+        .filterNot(st => hidden(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) leaves(fs, st.getPath) else Seq(st))
+    val first = paths.flatMap { p =>
+      val path = new Path(p)
+      leaves(path.getFileSystem(conf), path).minByOption(rank)
+    }.minByOption(rank)
+    first.fold(spark.read.parquet(paths: _*)) { st =>
+      val sql = SQLConf.get
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = sql.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+        nanosAsLong = sql.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
+      val footer = new Footer(st.getPath,
+        ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer, converter)).parquet(paths: _*)
+    }
+  }
 
   /** Path-based get (`artifacts_from_path`, `artifact_set.py:382-441`):
     * match the computed physical path — real_path for referenced
@@ -609,8 +706,7 @@ final class ArtifactStore(val cat: Catalog) {
     */
   def deletePermanently(ids: Seq[Long], storageRoot: String): Unit = {
     val promote = graft.catalog.Lifecycle.successorsFor(cat, "artifact", ids)
-    val doomed = cat.table("artifact").filter(col("id").isin(ids: _*))
-    val paths = pathsFor(doomed)
+    val paths = members(cat.table("artifact").filter(col("id").isin(ids: _*))).flatMap(_.path)
     cat.overwrite("artifact",
       cat.table("artifact")
         .withColumn("is_latest",

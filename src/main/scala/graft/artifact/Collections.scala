@@ -55,15 +55,21 @@ final class Collections(cat: Catalog, store: ArtifactStore) {
     cat.table("collection_artifacts").filter(col("collection_id") === collectionId)
       .orderBy("position").select("artifact_id").collect().map(_.getLong(0)).toSeq
 
-  /** Member artifact rows (catalog DataFrame, position order retained). */
-  def artifacts(collectionId: Long): DataFrame =
+  /** Member artifact rows with their `position`, unordered. */
+  private def members(collectionId: Long): DataFrame =
     cat.table("collection_artifacts").filter(col("collection_id") === collectionId)
       .select(col("artifact_id").as("id"), col("position"))
       .join(cat.table("artifact"), "id")
-      .orderBy("position")
 
-  /** One lazy multi-path scan over all members (`Collection.open`). */
-  def open(collectionId: Long): DataFrame = store.open(artifacts(collectionId))
+  /** Member artifact rows (catalog DataFrame, position order retained). */
+  def artifacts(collectionId: Long): DataFrame = members(collectionId).orderBy("position")
+
+  /** One lazy multi-path scan over all members (`Collection.open`). The
+    * members are not sorted in Spark: a parquet scan does not keep path
+    * order, and `ArtifactStore.open` unions the per-member frames of
+    * other formats in `position` order itself.
+    */
+  def open(collectionId: Long): DataFrame = store.open(members(collectionId))
 
   /** Eager concat with inner/outer column alignment and per-member
     * provenance (`_load_concat_artifacts`, `collection.py:63-95`):
@@ -71,10 +77,9 @@ final class Collections(cat: Catalog, store: ArtifactStore) {
     * `artifact_uid` is the provenance label column.
     */
   def load(collectionId: Long, join: String = "outer"): DataFrame = {
-    val members = artifacts(collectionId)
-    val rows = members.select("id", "uid").collect()
+    val rows = artifacts(collectionId).select("id", "uid").collect()
     val dfs = rows.map { r =>
-      store.open(members.filter(col("id") === r.getLong(0)))
+      store.open(cat.table("artifact").filter(col("id") === r.getLong(0)))
         .withColumn("artifact_uid", lit(r.getString(1)))
     }
     join match {

@@ -4,10 +4,12 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
-import graft.core.{Base62, Versioning}
+import graft.core.{Base62, Par, Versioning}
 
 /** Parquet-backed metadata catalog with copy-on-write snapshots.
   *
@@ -21,7 +23,10 @@ import graft.core.{Base62, Versioning}
   *    contract; nothing enforces it yet (ROADMAP direction 1);
   *  - inserts accumulate in a driver-side buffer (the reference batches
   *    bulk saves at 10k rows, `models/save.py:31`) and are unioned into
-  *    reads until flushed;
+  *    reads until flushed. `flush(names*)` (and `flushAll`, over every
+  *    table) is one commit over several tables: their new versions are
+  *    written concurrently, then one manifest save installs them all, so
+  *    a failed write leaves the manifest and every buffer unchanged;
   *  - idempotent inserts enter through `ensure` (the reference's
   *    `get_or_create`, `feature.py:1703-1716`): each input row is matched
   *    on its key columns against snapshot ∪ buffer with one filtered
@@ -51,11 +56,12 @@ import graft.core.{Base62, Versioning}
   *  - `index(table, keyCol, valueCol)` is a memoized driver multimap from
   *    a column's values to the ids in another column of the same rows
   *    (snapshot ∪ buffer), built with one two-column collect. It is
-  *    offered only while a row count finds at most `IndexRowLimit` rows,
-  *    the measured size up to which a read right after a write still
-  *    gains and which bounds the driver heap an index holds; otherwise
-  *    callers keep their join plan. The session's broadcast threshold
-  *    plays no part: a plan-stats size estimate bounds no heap. QuerySet
+  *    offered only while the table holds at most `IndexRowLimit` rows
+  *    (counted from parquet footers, no job), the measured size up to
+  *    which a read right after a write still gains and which bounds the
+  *    driver heap an index holds; otherwise callers keep their join plan.
+  *    The session's broadcast threshold plays no part: a plan-stats size
+  *    estimate bounds no heap. QuerySet
   *    traversals and the EAV filter resolve `exact`/`in` lookups through
   *    these to an `id IN (...)` predicate.
   *
@@ -74,6 +80,7 @@ final class Catalog(
   private val buffers = mutable.Map.empty[String, mutable.ArrayBuffer[Row]]
   private val maxIds = mutable.Map.empty[String, Long]
   private val snapshotCache = mutable.Map.empty[String, DataFrame]
+  private val snapshotRows = mutable.Map.empty[String, Long] // "<table>/v<N>" -> rows, for `fits`
   private val manifest = mutable.Map.empty[String, Int] // table -> version
   private val memos = mutable.Map.empty[String, (Seq[Long], Any)]
   /** table -> content generation: bumped by every write that can change
@@ -151,12 +158,28 @@ final class Catalog(
   /** Rows inserted into `name` since its last flush or rewrite. */
   def buffered(name: String): Int = buffers.get(name).fold(0)(_.size)
 
-  /** Whether `name` passes `index`'s gate: it holds at most
-    * `IndexRowLimit` rows. The row count (one job, no exchange) is
-    * memoized per content generation.
+  /** Whether `name` passes `index`'s gate: snapshot ∪ buffer holds at
+    * most `IndexRowLimit` rows. Counted without a Spark job: the buffer's
+    * size plus the snapshot version's row count, read once per version
+    * from its parquet footers (until the sum passes the limit).
     */
   def fits(name: String): Boolean =
-    memo(s"rows/$name", Seq(name))(table(name).select().queryExecution.toRdd.count()) <= IndexRowLimit
+    buffered(name) + manifest.get(name).fold(0L)(v => snapshotRows.getOrElseUpdate(s"$name/v$v", {
+      val files = Files.list(Paths.get(root, name, s"v$v"))
+      try {
+        val parts = files.iterator().asScala.filter { p =>
+          val n = p.getFileName.toString
+          n.endsWith(".parquet") && !n.startsWith(".")
+        }
+        var rows = 0L
+        while (rows <= IndexRowLimit && parts.hasNext) {
+          val footer = ParquetFileReader.open(HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(parts.next().toUri), spark.sparkContext.hadoopConfiguration))
+          try rows += footer.getRecordCount finally footer.close()
+        }
+        rows
+      } finally files.close()
+    })) <= IndexRowLimit
 
   /** Driver multimap from `keyCol`'s values (String, Long or Int; null
     * included) to the non-null `valueCol` ids (Long) of the same rows of
@@ -292,22 +315,38 @@ final class Catalog(
     */
   def overwrite(name: String, df: DataFrame): Unit = {
     val t = tableDef(name)
-    writeSnapshot(name, df.select(t.schema.fieldNames.map(col).toIndexedSeq: _*))
+    val v = manifest.getOrElse(name, 0) + 1
+    writeVersion(name, v, df.select(t.schema.fieldNames.map(col).toIndexedSeq: _*))
+    commit(Seq(name -> v))
     buffers.remove(name)
     bump(name)
   }
 
   private def bump(name: String): Unit = generations(name) = generations.getOrElse(name, 0L) + 1
 
-  /** Persist buffered inserts of one table into a new snapshot version. */
-  def flush(name: String): Unit =
-    if (buffers.get(name).exists(_.nonEmpty)) { writeSnapshot(name, table(name)); buffers.remove(name) }
+  /** Persist the buffered inserts of `names` as one commit: each buffered
+    * table's frame is built on the caller thread, the new versions are
+    * written concurrently (`Par.results`), and once every write has
+    * succeeded one manifest save installs them all and the buffers are
+    * dropped. A failed write leaves the manifest and every buffer as they
+    * were.
+    */
+  def flush(names: String*): Unit = {
+    val pending = names.distinct.filter(n => buffers.get(n).exists(_.nonEmpty))
+      .map(n => (n, manifest.getOrElse(n, 0) + 1, table(n)))
+    if (pending.nonEmpty) {
+      Par.results(pending.map { case (n, v, df) => () => writeVersion(n, v, df) })
+      commit(pending.map { case (n, v, _) => n -> v })
+      pending.foreach { case (n, _, _) => buffers.remove(n) }
+    }
+  }
 
-  def flushAll(): Unit = Schemas.all.map(_.name).foreach(flush)
+  def flushAll(): Unit = flush(Schemas.all.map(_.name): _*)
 
-  private def writeSnapshot(name: String, df: DataFrame): Unit = {
-    val v = manifest.getOrElse(name, 0) + 1
-    val path = s"$root/$name/v$v"
+  /** Write `df` as `<root>/<name>/v<v>`. Touches no catalog state, so
+    * several run at once.
+    */
+  private def writeVersion(name: String, v: Int, df: DataFrame): Unit = {
     // most registry tables are metadata-scale: one file keeps every
     // downstream catalog join broadcast-able. But a registry CAN be huge
     // (the reference claims 1e9 runs) — past ~1 GiB estimated, keep the
@@ -318,10 +357,16 @@ final class Catalog(
     // parallelism made 500-row tables write 33 tiny files each.
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val out = if (est > (1L << 30)) df else df.coalesce(1)
-    out.write.mode("overwrite").parquet(path)
-    manifest(name) = v
-    snapshotCache.remove(s"$name/v${v - 1}")
-    saveManifest()
+    out.write.mode("overwrite").parquet(s"$root/$name/v$v")
+  }
+
+  /** Point the manifest at the written `versions` with one save. */
+  private def commit(versions: Seq[(String, Int)]): Unit = {
+    saveManifest(manifest.toMap ++ versions)
+    versions.foreach { case (name, v) =>
+      manifest(name) = v
+      snapshotCache.remove(s"$name/v${v - 1}")
+    }
   }
 
   /** Snapshot retention: every write creates `<table>/v<N>`, so a
@@ -376,10 +421,10 @@ final class Catalog(
       }
     }
 
-  private def saveManifest(): Unit = {
+  private def saveManifest(versions: Map[String, Int]): Unit = {
     Files.createDirectories(Paths.get(root))
     val tmp = Paths.get(root, s"_manifest.json.tmp")
-    val json = manifest.toSeq.sortBy(_._1)
+    val json = versions.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
     Files.writeString(tmp, json)
     Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,

@@ -99,6 +99,86 @@ class ArtifactOpsSpec extends AnyFunSuite {
     assert(cat.table("artifact").filter(col("uid") === uid).head().getAs[Long]("n_observations") === 2L)
   }
 
+  test("fromDataFrames looks up a batch's hashes in one job; the first in-batch occurrence wins") {
+    val root = TestSpark.tmpDir("ops")
+    val cat = Catalog.deterministic(spark, root)
+    val store = new ArtifactStore(cat)
+    def frame(i: Int) = Seq((i, s"v$i")).toDF("id", "v")
+    val seed = store.fromDataFrame(frame(0), "seed", root)
+    store.fromDataFrame(frame(1), "warm", root) // rebuilds the storage map after the root's insert
+    cat.flushAll()
+    // frame 2 new, frame 0 held by the catalog, frame 3 new, frame 2 again
+    val batch = Seq(frame(2) -> "a", frame(0) -> "b", frame(3) -> "c", frame(2) -> "d")
+    var rows = Seq.empty[Map[String, Any]]
+    // four staged writes, ONE hash lookup, a family collect per new artifact
+    val jobs = ListenerBusDrain.jobs(spark.sparkContext) { rows = store.fromDataFrames(batch, root) }
+    info(s"4-frame batch with a catalog and an in-batch duplicate: $jobs jobs")
+    assert(jobs === 7)
+    assert(rows.map(_("key")) === Seq("a", "seed", "c", "a"))
+    assert(rows(1)("uid") === seed("uid"))
+    assert(rows(3)("uid") === rows(0)("uid"))
+    assert(cat.table("artifact").count() === 4)
+    assert(store.openByUid(rows(3)("uid").toString).as[(Int, String)].collect().toSeq === Seq((2, "v2")))
+    // every duplicate's stage was deleted
+    val staging = new java.io.File(s"$root/.staging")
+    assert(Option(staging.list()).forall(_.isEmpty))
+  }
+
+  test("Collections.open resolves its members in one collect and infers no schema") {
+    val root = TestSpark.tmpDir("ops")
+    val cat = Catalog.deterministic(spark, root)
+    val store = new ArtifactStore(cat)
+    val colls = new graft.artifact.Collections(cat, store)
+    val ids = (1 to 3).map(i => store.fromDataFrame((1 to i).map(j => (i, j)).toDF("a", "b"), s"m$i", root))
+      .map(_("id").asInstanceOf[Long])
+    val cid = colls.create("c", ids)("id").asInstanceOf[Long]
+    cat.flushAll()
+    def jobs(body: => Any): Int = ListenerBusDrain.jobs(spark.sparkContext)(body)
+    val noRun = jobs(colls.open(cid))
+    val lin = new Lineage(cat)
+    lin.track("open.scala", "src")
+    val withRun = jobs(colls.open(cid))
+    // a parquet open's only job is the member collect: no schema inference
+    val uid = cat.table("artifact").filter(col("id") === ids.head).head().getAs[String]("uid")
+    val byUid = jobs(store.openByUid(uid))
+    val runId = cat.currentRunId.get
+    lin.finish()
+    info(s"Collections.open: $noRun jobs without a run, $withRun with one; openByUid: $byUid")
+    assert(noRun <= 2 && withRun <= 3)
+    assert(byUid === 1)
+    assert(colls.open(cid).count() === 6)
+    assert(cat.table("run_inputs").filter(col("run_id") === runId).select("artifact_id")
+      .as[Long].collect().toSet === ids.toSet)
+  }
+
+  test("a parquet open's footer schema equals spark.read.parquet's") {
+    val root = TestSpark.tmpDir("ops")
+    val cat = Catalog.deterministic(spark, root)
+    val store = new ArtifactStore(cat)
+    val colls = new graft.artifact.Collections(cat, store)
+    def same(members: Seq[Map[String, Any]]): Unit = {
+      val opened = store.open(cat.table("artifact").filter(col("id").isin(members.map(_("id")): _*)))
+      val read = spark.read.parquet(members.map(store.artifactPath(_, root)): _*)
+      assert(opened.schema === read.schema)
+      assert(opened.collect().map(_.toString).sorted === read.collect().map(_.toString).sorted)
+    }
+    // Spark-written members: non-nullable, decimal, timestamp and nested columns
+    val typed = (1 to 2).map(i => store.fromDataFrame(spark.range(i).selectExpr("id",
+      "cast(id as decimal(12, 3)) as d", "timestamp_seconds(id) as ts", "named_struct('x', id, 'y', array(id)) as s",
+      "map('k', id) as m"), s"typed$i", root))
+    same(typed)
+    val cid = colls.create("typed", typed.map(_("id").asInstanceOf[Long]))("id").asInstanceOf[Long]
+    assert(colls.open(cid).schema === spark.read.parquet(typed.map(store.artifactPath(_, root)): _*).schema)
+    // written by pyarrow: no Spark row metadata in the footer
+    val points = "fixtures/zarr/spatial.zarr/points/transcripts/points.parquet/part-0.parquet"
+    same(Seq(store.registerPath(points, "points", root)))
+    // members whose columns differ: both read with the first file's schema
+    val differ = Seq(Seq((1L, "x")).toDF("id", "v"), Seq((2L, 9.9)).toDF("id", "w"), Seq(3).toDF("z"))
+      .zipWithIndex.map { case (df, i) => store.fromDataFrame(df, s"differ$i", root) }
+    same(differ)
+    same(differ.reverse.take(2))
+  }
+
   test("cross-instance transfer upserts by uid") {
     val cat1 = Catalog.deterministic(spark, TestSpark.tmpDir("src"), seed = 1)
     val cat2 = Catalog.deterministic(spark, TestSpark.tmpDir("dst"), seed = 2)

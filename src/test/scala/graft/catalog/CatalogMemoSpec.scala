@@ -198,6 +198,18 @@ class CatalogMemoSpec extends AnyFunSuite {
     assert(labelled.count() === 2)
   }
 
+  test("an index rebuilt after an insert takes one job; its row gate none") {
+    val (_, cat) = built()
+    def jobs(body: => Any): Int = ListenerBusDrain.jobs(spark.sparkContext)(body)
+    val m2m = QuerySet(cat, "artifact").filter("ulabels__name" -> "l1")
+    assert(m2m.count() === 12)
+    cat.insert("artifact_ulabels", Map("artifact_id" -> 2L, "ulabel_id" -> 1L))
+    assert(jobs(assert(cat.fits("artifact_ulabels"))) === 0)
+    assert(jobs(cat.index("artifact_ulabels", "ulabel_id", "artifact_id")) === 1)
+    assert(jobs(cat.index("artifact_ulabels", "ulabel_id", "artifact_id")) === 0)
+    assert(m2m.count() === 13)
+  }
+
   private def semiJoins(qs: QuerySet): Int =
     qs.df.queryExecution.optimizedPlan.collect { case j: Join if j.joinType == LeftSemi => j }.size
 

@@ -281,4 +281,26 @@ class CatalogSpec extends AnyFunSuite {
     assert(cat.table("ulabel").count() === 5)
     intercept[IllegalArgumentException](cat.vacuum(0))
   }
+
+  test("flushAll is all-or-nothing: one blocked table commits no table") {
+    val root = TestSpark.tmpDir("flush")
+    val cat = Catalog.deterministic(spark, root)
+    cat.insert("storage", Map("root" -> "/data/s1"))
+    cat.insert("ulabel", Map("name" -> "l1"))
+    cat.insert("record", Map("name" -> "r1"))
+    val tables = Seq("storage", "ulabel", "record")
+    def counts(c: Catalog) = tables.map(c.table(_).count())
+    // a plain file where the ulabel snapshot directory must go
+    val block = java.nio.file.Paths.get(root, "ulabel")
+    java.nio.file.Files.writeString(block, "not a directory")
+    intercept[Exception](cat.flushAll())
+    assert(counts(Catalog.deterministic(spark, root)) === Seq(0L, 0L, 0L))
+    assert(counts(cat) === Seq(1L, 1L, 1L))
+    assert(tables.map(cat.buffered) === Seq(1, 1, 1))
+    java.nio.file.Files.delete(block)
+    cat.flushAll()
+    assert(tables.map(cat.buffered) === Seq(0, 0, 0))
+    assert(counts(Catalog.deterministic(spark, root)) === Seq(1L, 1L, 1L))
+    assert(counts(cat) === Seq(1L, 1L, 1L))
+  }
 }
