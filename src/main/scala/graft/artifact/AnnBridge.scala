@@ -44,6 +44,44 @@ object UnsValue {
   final case class Mapping(items: Map[String, UnsValue]) extends UnsValue
 }
 
+/** One `uns` leaf in the element encoding both containers write: `dtype`
+  * is 'b' (bool), 's' (string), 'f' (f8) or 'i' (i8), and `values` are
+  * boxed as Boolean, String, Double or Long to match.
+  */
+private[graft] final case class UnsLeaf(dtype: Char, values: IndexedSeq[Any], scalar: Boolean) {
+  /** The anndata `encoding-type` of the leaf's node. */
+  def encoding: String =
+    if (scalar) { if (dtype == 's') "string" else "numeric-scalar" }
+    else if (dtype == 's') "string-array" else "array"
+}
+
+private[graft] object UnsLeaf {
+  /** The one element classification: all Boolean → bool, all String →
+    * string, integral numbers with any Float or Double → f8, all integral
+    * → i8, an empty array → f8. Anything else (null, mixed kinds, other
+    * numbers) is rejected.
+    */
+  def classify(xs: Seq[Any], scalar: Boolean): UnsLeaf = {
+    def integral(x: Any) = x match {
+      case _: Long | _: Int | _: Short | _: Byte => true
+      case _ => false
+    }
+    val dtype =
+      if (xs.isEmpty) 'f'
+      else if (xs.forall(_.isInstanceOf[Boolean])) 'b'
+      else if (xs.forall(_.isInstanceOf[String])) 's'
+      else if (xs.forall(integral)) 'i'
+      else if (xs.forall(x => integral(x) || x.isInstanceOf[Float] || x.isInstanceOf[Double])) 'f'
+      else throw new UnsupportedOperationException(
+        s"uns ${if (scalar) "scalar" else "array"} of unsupported element types (${xs.take(3)})")
+    UnsLeaf(dtype, dtype match {
+      case 'i' => xs.map(_.asInstanceOf[Number].longValue: Any).toIndexedSeq
+      case 'f' => xs.map(_.asInstanceOf[Number].doubleValue: Any).toIndexedSeq
+      case _ => xs.toIndexedSeq
+    }, scalar)
+  }
+}
+
 /** The `raw` slot: the pre-filter variable axis and matrix an AnnData
   * carries alongside the working X (`adata.raw`).
   */
@@ -128,6 +166,31 @@ final case class AnnDataset(obs: DataFrame, vars: DataFrame, x: DataFrame,
 
 object AnnDataset {
 
+  /** The matrix slot groups of the anndata layout with their engine axis
+    * columns (row, column). A store matrix is COO `(obs_id, var_id,
+    * value)` on disk in both containers; `raw/X` and `raw/varm` take X's
+    * and varm's names.
+    */
+  private val Axes = Map("X" -> ("obs_id", "var_id"), "obsm" -> ("obs_id", "dim_id"),
+    "layers" -> ("obs_id", "var_id"), "varm" -> ("var_id", "dim_id"),
+    "obsp" -> ("obs_id", "obs_id_2"))
+
+  private def aux(ds: AnnDataset): Seq[(String, Map[String, DataFrame])] =
+    Seq("obsm" -> ds.obsm, "layers" -> ds.layers, "varm" -> ds.varm, "obsp" -> ds.obsp)
+
+  /** Every frame and matrix slot of `ds` as a layout path ("obs",
+    * "obsm/X_pca", "raw/varm/PCs", ...).
+    */
+  private[graft] def slots(ds: AnnDataset): Seq[String] = {
+    def names(g: String, ms: Map[String, DataFrame]) = ms.keys.toSeq.sorted.map(n => s"$g/$n")
+    Seq("obs", "var", "X") ++ aux(ds).flatMap { case (g, ms) => names(g, ms) } ++
+      ds.raw.toSeq.flatMap(r => Seq("raw/var", "raw/X") ++ names("raw/varm", r.varm))
+  }
+
+  /** The members of `s` under `prefix/`, relative to it. */
+  private def scoped(prefix: String, s: Set[String]): Set[String] =
+    s.collect { case k if k.startsWith(prefix + "/") => k.stripPrefix(prefix + "/") }
+
   /** An anndata group opened slot by slot as lazy DataSource V2 scans —
     * `spark.read.format(format).option("slot", …).load(path)` — the one
     * slot surface of [[graft.h5.AnnH5.open]] and
@@ -135,8 +198,7 @@ object AnnDataset {
     * in "/"); `children(slot)` lists a slot group's members (Nil when
     * absent); `checkMatrix(slot)` validates a matrix slot before it is
     * scanned. Matrix scans are COO `(obs_id, var_id, value)`, renamed to
-    * the engine's axis naming: obsm/varm's second axis is `dim_id`,
-    * varm's rows `var_id`, obsp's second axis `obs_id_2`.
+    * the engine's axis naming ([[Axes]]).
     */
   private[graft] def scan(spark: SparkSession, format: String, path: String, p: String,
                           children: String => Seq[String], checkMatrix: String => Unit,
@@ -144,20 +206,112 @@ object AnnDataset {
     def load(slot: String): DataFrame =
       spark.read.format(format).option("slot", p + slot).load(path)
     def matrix(slot: String): DataFrame = { checkMatrix(p + slot); load(slot) }
-    def matrices(group: String)(axes: DataFrame => DataFrame): Map[String, DataFrame] =
-      children(group).map(n => n -> axes(matrix(s"$group/$n"))).toMap
-    val varKeyed: DataFrame => DataFrame =
-      _.withColumnRenamed("var_id", "dim_id").withColumnRenamed("obs_id", "var_id")
+    def matrices(group: String): Map[String, DataFrame] = {
+      val (row, c) = Axes(group.stripPrefix("raw/"))
+      children(group).map(n => n ->
+        matrix(s"$group/$n").withColumnRenamed("var_id", c).withColumnRenamed("obs_id", row)).toMap
+    }
     AnnDataset(
       obs = load("obs"), vars = load("var"), x = matrix("X"),
-      obsm = matrices("obsm")(_.withColumnRenamed("var_id", "dim_id")),
-      layers = matrices("layers")(identity),
-      varm = matrices("varm")(varKeyed),
-      obsp = matrices("obsp")(_.withColumnRenamed("var_id", "obs_id_2")),
+      obsm = matrices("obsm"), layers = matrices("layers"),
+      varm = matrices("varm"), obsp = matrices("obsp"),
       uns = uns,
       raw = if (children("raw").isEmpty) None
-        else Some(RawSlots(load("raw/var"), matrix("raw/X"), matrices("raw/varm")(varKeyed))))
+        else Some(RawSlots(load("raw/var"), matrix("raw/X"), matrices("raw/varm"))))
   }
+
+  /** The node encoders of one container, driven by [[write]]. `N` is what
+    * a written node hands its parent group (h5ad: the object-header
+    * address; zarr: nothing). Paths are relative to the container root.
+    */
+  private[graft] trait Sink[N] {
+    /** An axis frame keyed by `rowId`, `idName` as its index; returns the
+      * node and the frame's row count.
+      */
+    def frame(rel: String, df: DataFrame, rowId: String, idName: String,
+              cats: Set[String]): (N, Long)
+
+    /** A COO matrix as a dense 2-D `array` or a `csr_matrix` group. */
+    def matrix(rel: String, coo: DataFrame, rowCol: String, colCol: String,
+               nRows: Long, nCols: Long, dense: Boolean): N
+
+    def uns(rel: String, leaf: UnsLeaf): N
+
+    /** A group with `encoding` (type, version). Each child is written when
+      * its thunk runs, so the container puts the group's own metadata
+      * before its children (zarr) or after them (h5ad, whose header holds
+      * their addresses).
+      */
+    def group(rel: String, encoding: (String, String), children: Seq[(String, () => N)]): N
+  }
+
+  private val Dict = ("dict", "0.1.0")
+
+  /** Write `ds` as one anndata group at `rel` through `sink` — the one
+    * slot walk of [[graft.h5.AnnH5Writer]] and
+    * [[graft.zarr.AnnZarrWriter]], with [[scan]]'s slot names and axes:
+    * obs, var, X, obsm, layers, varm, obsp, uns and raw (var, X, varm).
+    * Slots named in `denseSlots` write dense, frame columns named in
+    * `categoricalCols` categorical (both relative to the group, e.g.
+    * "obsm/X_pca", "obs/cell_type"). The obs and var extents are the
+    * frame writes' row counts; a `dim_id` extent is max + 1.
+    */
+  private[graft] def write[N](sink: Sink[N], rel: String, ds: AnnDataset,
+                              denseSlots: Set[String], categoricalCols: Set[String]): N = {
+    def at(slot: String) = if (rel.isEmpty) slot else s"$rel/$slot"
+    def frame(slot: String, df: DataFrame, axis: String): (N, Long) =
+      sink.frame(at(slot), df, s"${axis}_id", s"${axis}_name", scoped(slot, categoricalCols))
+    lazy val obs = frame("obs", ds.obs, "obs")
+    lazy val vars = frame("var", ds.vars, "var")
+    // `kind` keys Axes; a dim-axis matrix may carry its second axis as var_id
+    def matrix(kind: String, slot: String, m: DataFrame, nVar: => Long): N = {
+      val (row, c0) = Axes(kind)
+      val c = if (c0 == "dim_id" && !m.columns.contains(c0)) "var_id" else c0
+      def extent(axis: String): Long = if (axis == "var_id") nVar else obs._2
+      val nCols =
+        if (c0 == "dim_id") m.agg(coalesce(max(col(c)), lit(-1L))).collect().head.getLong(0) + 1
+        else extent(c)
+      sink.matrix(at(slot), m, row, c, extent(row), nCols, denseSlots(slot))
+    }
+    def group(slot: String, ms: Map[String, DataFrame], nVar: => Long): Seq[(String, () => N)] = {
+      val kind = slot.split('/').last
+      if (ms.isEmpty) Nil
+      else Seq(kind -> (() => sink.group(at(slot), Dict, ms.toSeq.sortBy(_._1).map { case (n, m) =>
+        n -> (() => matrix(kind, s"$slot/$n", m, nVar))
+      })))
+    }
+    def uns(slot: String, v: UnsValue): N = v match {
+      case UnsValue.Mapping(items) => sink.group(at(slot), Dict, items.toSeq.sortBy(_._1).map {
+        case (k, cv) => k -> (() => uns(s"$slot/$k", cv))
+      })
+      case UnsValue.Scalar(x) => sink.uns(at(slot), UnsLeaf.classify(Seq(x), scalar = true))
+      case UnsValue.Arr(xs) => sink.uns(at(slot), UnsLeaf.classify(xs, scalar = false))
+    }
+    sink.group(rel, ("anndata", "0.1.0"),
+      Seq("obs" -> (() => obs._1), "var" -> (() => vars._1),
+        "X" -> (() => matrix("X", "X", ds.x, vars._2))) ++
+        aux(ds).flatMap { case (g, ms) => group(g, ms, vars._2) } ++
+        (if (ds.uns.isEmpty) Nil else Seq("uns" -> (() => uns("uns", UnsValue.Mapping(ds.uns))))) ++
+        ds.raw.toSeq.map { r => "raw" -> (() => {
+          lazy val rawVars = frame("raw/var", r.vars, "var")
+          sink.group(at("raw"), ("raw", "0.1.0"),
+            Seq("var" -> (() => rawVars._1), "X" -> (() => matrix("X", "raw/X", r.x, rawVars._2))) ++
+              group("raw/varm", r.varm, rawVars._2))
+        })
+        })
+  }
+
+  /** Write a MuData container through `sink`: the root carries the MuData
+    * encoding and `mod/` one anndata group per modality ([[write]]), with
+    * `denseSlots`/`categoricalCols` qualified by modality
+    * ("rna/obsm/X_pca").
+    */
+  private[graft] def writeMu[N](sink: Sink[N], mods: Map[String, AnnDataset],
+                                denseSlots: Set[String], categoricalCols: Set[String]): N =
+    sink.group("", ("MuData", "0.1.0"), Seq("mod" -> (() =>
+      sink.group("mod", Dict, mods.toSeq.sortBy(_._1).map { case (m, ds) =>
+        m -> (() => write(sink, s"mod/$m", ds, scoped(m, denseSlots), scoped(m, categoricalCols)))
+      }))))
 }
 
 object AnnBridge {

@@ -138,11 +138,8 @@ final class ArtifactStore(val cat: Catalog) {
           case _ => df0
         }
         // small slots (obs/var metadata) collapse to one file; a huge X
-        // keeps its incoming partitioning (same stats gate as catalog
-        // snapshots — don't funnel a 100 TB matrix through one task)
-        val est = df0.queryExecution.optimizedPlan.stats.sizeInBytes
-        val out = if (est > (1L << 30)) df else df.coalesce(1)
-        out.write.mode("overwrite").parquet(s"$stagePath/$slot")
+        // keeps its incoming partitioning (the catalog snapshots' gate)
+        graft.core.Par.oneFileBelowGiB(df).write.mode("overwrite").parquet(s"$stagePath/$slot")
       }
     }: _*)
     val s = staged(stagePath, obsCounter.map(_._2.get.apply("n").asInstanceOf[Long]).orElse(nObservations))

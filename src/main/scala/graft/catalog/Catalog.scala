@@ -346,19 +346,9 @@ final class Catalog(
   /** Write `df` as `<root>/<name>/v<v>`. Touches no catalog state, so
     * several run at once.
     */
-  private def writeVersion(name: String, v: Int, df: DataFrame): Unit = {
-    // most registry tables are metadata-scale: one file keeps every
-    // downstream catalog join broadcast-able. But a registry CAN be huge
-    // (the reference claims 1e9 runs) — past ~1 GiB estimated, keep the
-    // incoming partitioning instead of funnelling the rewrite through a
-    // single task. The gate reads logical-plan STATS, not
-    // `df.rdd.getNumPartitions`: the latter both forces physical planning
-    // per flush and mis-fires on buffered local relations, whose default
-    // parallelism made 500-row tables write 33 tiny files each.
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val out = if (est > (1L << 30)) df else df.coalesce(1)
-    out.write.mode("overwrite").parquet(s"$root/$name/v$v")
-  }
+  private def writeVersion(name: String, v: Int, df: DataFrame): Unit =
+    // a registry CAN be huge (the reference claims 1e9 runs)
+    Par.oneFileBelowGiB(df).write.mode("overwrite").parquet(s"$root/$name/v$v")
 
   /** Point the manifest at the written `versions` with one save. */
   private def commit(versions: Seq[(String, Int)]): Unit = {

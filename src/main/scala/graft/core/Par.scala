@@ -41,6 +41,18 @@ object Par {
     */
   private val SpreadFloorBytes = BigInt(65536)
 
+  /** The write width of a catalog snapshot or an artifact slot: one file
+    * while the logical-plan stats estimate is at most 1 GiB (metadata-scale
+    * tables stay broadcast-able, small slots stay one object), the
+    * incoming partitioning above it (a huge registry or matrix is never
+    * funnelled through one task). Plan STATS, not
+    * `df.rdd.getNumPartitions`: the latter forces physical planning and
+    * mis-fires on buffered local relations, whose default parallelism
+    * made 500-row tables write 33 tiny files each.
+    */
+  def oneFileBelowGiB(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes > (1L << 30)) df else df.coalesce(1)
+
   def spreadForCpu(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     if (df.isStreaming) df
     else if (!isNarrowPlan(df)) df

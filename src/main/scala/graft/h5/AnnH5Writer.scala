@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.artifact.AnnDataset
+import graft.artifact.{AnnDataset, UnsLeaf}
 
 /** Native `.h5ad` SINK — the reference's `adata.write_h5ad`
   * (`anndata` write path used throughout `artifact.py:2374-2498`)
@@ -35,6 +35,11 @@ import graft.artifact.AnnDataset
   *
   * Like the read side, all structures follow the public HDF5 File
   * Format Specification; nothing here links a native HDF5 library.
+  *
+  * The AnnData layout itself — which slots exist, their axes and
+  * extents, dense versus csr, categorical and MuData scoping, the uns
+  * element encodings — is [[AnnDataset.write]], shared with the zarr
+  * sink; this object supplies the HDF5 node encoders it drives.
   */
 object AnnH5Writer {
 
@@ -352,10 +357,11 @@ object AnnH5Writer {
 
   /** One obs/var frame as an anndata `dataframe` group. The id column
     * (`obs_name`/`var_name`) becomes `_index`; axis-long ids are dropped
-    * (they are positional); remaining columns keep their order.
+    * (they are positional); remaining columns keep their order. Returns
+    * the group's address and the frame's row count.
     */
   private def writeFrame(out: Out, gh: GHeap, df: DataFrame, rowId: String,
-                         idCol: String, catCols: Set[String] = Set.empty): Long = {
+                         idCol: String, catCols: Set[String]): (Long, Long) = {
     // the axis id surfaces as _index; if the frame has no name column,
     // the positional row id itself becomes the index (stringified)
     val base = if (df.columns.contains(idCol)) df
@@ -408,9 +414,10 @@ object AnnH5Writer {
       name -> addr
     }
     val order = children.map(_._1).filter(_ != "_index")
-    group(out, gh, children.toSeq,
+    (group(out, gh, children.toSeq,
       encAttrs(gh, "dataframe", "0.2.0") ++
-        Seq(strAttr(gh, "_index", "_index"), strArrayAttr(gh, "column-order", order)))
+        Seq(strAttr(gh, "_index", "_index"), strArrayAttr(gh, "column-order", order))),
+      rows.length.toLong)
   }
 
   // ------------------------------------------------------------------ API
@@ -450,10 +457,6 @@ object AnnH5Writer {
       encAttrs(gh, "csr_matrix", "0.1.0") :+ i64ArrayAttr("shape", Seq(nRows, nCols)))
   }
 
-  /** One `uns` value → its anndata element encoding: scalars as rank-0
-    * datasets (`numeric-scalar`/`string`), arrays as 1-D contiguous
-    * datasets, mappings as `dict` groups (recursive).
-    */
   /** One COO frame → DENSE rank-2 deflate-chunked `array` dataset,
     * streamed by full-width row band: elements arrive sorted by
     * (row, col), each `(bandRows × nCols)` chunk buffer zero-fills,
@@ -511,72 +514,57 @@ object AnnH5Writer {
       attrs.map(a => 0x000C -> a()))
   }
 
-  private def writeUns(out: Out, gh: GHeap, v: graft.artifact.UnsValue): Long = {
-    import graft.artifact.UnsValue._
-    v match {
-      case Scalar(s: String) =>
-        val i = gh.add(s); gh.flush()
-        contiguous(out, gh, dtVlenStr, Nil, gh.ref(i), encAttrs(gh, "string", "0.2.0"))
-      case Scalar(d: Double) =>
-        contiguous(out, gh, dtFloat(8), Nil,
-          u64(java.lang.Double.doubleToLongBits(d)), encAttrs(gh, "numeric-scalar", "0.2.0"))
-      case Scalar(n: Number) =>
-        contiguous(out, gh, dtFixed(8), Nil, u64(n.longValue()),
-          encAttrs(gh, "numeric-scalar", "0.2.0"))
-      case Scalar(b: Boolean) =>
+  /** One `uns` leaf as a rank-0 (scalar) or 1-D contiguous dataset. */
+  private def writeUnsLeaf(out: Out, gh: GHeap, leaf: UnsLeaf): Long = {
+    val dims = if (leaf.scalar) Nil else Seq(leaf.values.length.toLong)
+    def attrs = encAttrs(gh, leaf.encoding, "0.2.0")
+    leaf.dtype match {
+      case 's' if leaf.scalar =>
+        val i = gh.add(leaf.values.head.asInstanceOf[String]); gh.flush()
+        contiguous(out, gh, dtVlenStr, Nil, gh.ref(i), attrs)
+      case 's' => vlenStrDataset(out, gh, leaf.values.map(_.asInstanceOf[String]), attrs)
+      case 'b' =>
         // real bool-enum dtype so the value round-trips as Boolean
         // (a plain i1 would read back as a numeric long)
-        contiguous(out, gh, dtBoolEnum, Nil, Array[Byte](if (b) 1 else 0),
-          encAttrs(gh, "numeric-scalar", "0.2.0"))
-      case Scalar(other) => throw new UnsupportedOperationException(
-        s"uns scalar of ${if (other == null) "null" else other.getClass.getName}")
-      case Arr(Nil) =>
-        // an empty Seq satisfies every forall: pick the numeric default
-        // explicitly rather than falling into the string-array branch
-        contiguous(out, gh, dtFloat(8), Seq(0L), Array.empty[Byte],
-          encAttrs(gh, "array", "0.2.0"))
-      case Arr(vals) if vals.forall(_.isInstanceOf[Boolean]) =>
-        contiguous(out, gh, dtBoolEnum, Seq(vals.length.toLong),
-          vals.toArray.map(x => (if (x.asInstanceOf[Boolean]) 1 else 0).toByte),
-          encAttrs(gh, "array", "0.2.0"))
-      case Arr(vals) if vals.forall(_.isInstanceOf[String]) =>
-        vlenStrDataset(out, gh, vals.map(_.asInstanceOf[String]),
-          encAttrs(gh, "string-array", "0.2.0"))
-      case Arr(vals) if vals.forall(_.isInstanceOf[Double]) =>
-        contiguous(out, gh, dtFloat(8), Seq(vals.length.toLong),
-          vals.toArray.flatMap(x => u64(java.lang.Double.doubleToLongBits(
-            x.asInstanceOf[Double]))), encAttrs(gh, "array", "0.2.0"))
-      case Arr(vals) if vals.forall(_.isInstanceOf[Number]) =>
-        contiguous(out, gh, dtFixed(8), Seq(vals.length.toLong),
-          vals.toArray.flatMap(x => u64(x.asInstanceOf[Number].longValue())),
-          encAttrs(gh, "array", "0.2.0"))
-      case Arr(vals) => throw new UnsupportedOperationException(
-        s"uns array of mixed/unsupported element types (${vals.take(3)})")
-      case Mapping(items) =>
-        val children = items.toSeq.sortBy(_._1).map { case (k, cv) =>
-          k -> writeUns(out, gh, cv)
-        }
-        group(out, gh, children, encAttrs(gh, "dict", "0.1.0"))
+        contiguous(out, gh, dtBoolEnum, dims,
+          leaf.values.toArray.map(b => (if (b == true) 1 else 0).toByte), attrs)
+      case 'f' => contiguous(out, gh, dtFloat(8), dims, leaf.values.toArray.flatMap(d =>
+        u64(java.lang.Double.doubleToLongBits(d.asInstanceOf[Double]))), attrs)
+      case _ => contiguous(out, gh, dtFixed(8), dims,
+        leaf.values.toArray.flatMap(l => u64(l.asInstanceOf[Long])), attrs)
     }
   }
 
-  /** Write `ds` to a local `.h5ad` path, including every `obsm` matrix
+  /** The h5ad node encoders behind [[AnnDataset.write]]: a group's
+    * children are written before its object header, which holds their
+    * addresses.
+    */
+  private final class H5Sink(out: Out, gh: GHeap, chunkElems: Int) extends AnnDataset.Sink[Long] {
+    def frame(rel: String, df: DataFrame, rowId: String, idName: String,
+              cats: Set[String]): (Long, Long) =
+      writeFrame(out, gh, df, rowId, idName, cats)
+    def matrix(rel: String, coo: DataFrame, rowCol: String, colCol: String,
+               nRows: Long, nCols: Long, dense: Boolean): Long =
+      if (dense) writeDense2d(out, gh, coo, rowCol, colCol, nRows, nCols, chunkElems)
+      else writeCsr(out, gh, coo, rowCol, colCol, nRows, nCols, chunkElems)
+    def uns(rel: String, leaf: UnsLeaf): Long = writeUnsLeaf(out, gh, leaf)
+    def group(rel: String, encoding: (String, String), children: Seq[(String, () => Long)]): Long = {
+      val links = children.map { case (name, write) => name -> write() }
+      AnnH5Writer.group(out, gh, links, encAttrs(gh, encoding._1, encoding._2))
+    }
+  }
+
+  /** Write `ds` to a local `.h5ad` path through the one anndata slot walk
+    * ([[AnnDataset.write]]): obs/var frames, X, every `obsm` matrix
     * (`dim_id` columns), `layers`, `varm` (var-keyed), `obsp`
-    * (`obs_id` × `obs_id_2`) slot as csr groups, the `uns` tree, and
-    * `raw` (own var frame + X). Single-writer by design (the
-    * reference's h5py write is too).
+    * (`obs_id` × `obs_id_2`) as csr groups or dense arrays, the `uns`
+    * tree, and `raw` (own var frame, X, varm). Single-writer by design
+    * (the reference's h5py write is too).
     */
   def write(ds: AnnDataset, path: String, chunkElems: Int = 65536,
             denseSlots: Set[String] = Set.empty,
-            categoricalCols: Set[String] = Set.empty): Unit = {
-    val raf = new RandomAccessFile(path, "rw")
-    try {
-      val out = new Out(raf)
-      val gh = new GHeap(out)
-      val root = writeAnnData(out, gh, ds, chunkElems, denseSlots, categoricalCols)
-      superblock(out, root)
-    } finally raf.close()
-  }
+            categoricalCols: Set[String] = Set.empty): Unit =
+    writeFile(path, chunkElems)(AnnDataset.write(_, "", ds, denseSlots, categoricalCols))
 
   /** Write a MuData `.h5mu` container: one AnnData group per modality
     * under `mod/`, the root carrying the MuData encoding — what
@@ -590,108 +578,22 @@ object AnnH5Writer {
               denseSlots: Set[String] = Set.empty,
               categoricalCols: Set[String] = Set.empty): Unit = {
     require(mods.nonEmpty, "writeMu needs at least one modality")
-    def scoped(m: String, s: Set[String]): Set[String] =
-      s.collect { case k if k.startsWith(m + "/") => k.stripPrefix(m + "/") }
+    writeFile(path, chunkElems)(AnnDataset.writeMu(_, mods, denseSlots, categoricalCols))
+  }
+
+  /** Truncate `path`, write the root object through `root`, then patch
+    * the v0 superblock (root address + EOF) in last.
+    */
+  private def writeFile(path: String, chunkElems: Int)(root: H5Sink => Long): Unit = {
     val raf = new RandomAccessFile(path, "rw")
     try {
       val out = new Out(raf)
-      val gh = new GHeap(out)
-      val modLinks = mods.toSeq.sortBy(_._1).map { case (m, ds) =>
-        m -> writeAnnData(out, gh, ds, chunkElems,
-          scoped(m, denseSlots), scoped(m, categoricalCols))
-      }
-      val modGrp = group(out, gh, modLinks, encAttrs(gh, "dict", "0.1.0"))
-      val root = group(out, gh, Seq("mod" -> modGrp),
-        encAttrs(gh, "MuData", "0.1.0"))
-      superblock(out, root)
+      val rootAddr = root(new H5Sink(out, new GHeap(out), chunkElems))
+      out.writeAt(0, Array[Byte](0x89.toByte, 'H', 'D', 'F', '\r', '\n', 0x1a, '\n',
+        0, 0, 0, 0, 0, 8, 8, 0) ++
+        u16(4) ++ u16(16) ++ u32(0) ++
+        u64(0) ++ u64(Undef) ++ u64(out.eof) ++ u64(Undef) ++
+        u64(0) ++ u64(rootAddr) ++ u32(0) ++ u32(0) ++ new Array[Byte](16))
     } finally raf.close()
-  }
-
-  private def superblock(out: Out, root: Long): Unit = {
-    // superblock v0, patched last (root address + EOF)
-    val sb = Array[Byte](0x89.toByte, 'H', 'D', 'F', '\r', '\n', 0x1a, '\n',
-      0, 0, 0, 0, 0, 8, 8, 0) ++
-      u16(4) ++ u16(16) ++ u32(0) ++
-      u64(0) ++ u64(Undef) ++ u64(out.eof) ++ u64(Undef) ++
-      u64(0) ++ u64(root) ++ u32(0) ++ u32(0) ++ new Array[Byte](16)
-    out.writeAt(0, sb)
-  }
-
-  /** One AnnData object tree (frames, matrix slots, uns, raw) into the
-    * open file; returns the anndata group's header address — [[write]]
-    * roots the file here, [[writeMu]] links one per modality.
-    */
-  private def writeAnnData(out: Out, gh: GHeap, ds: AnnDataset,
-                           chunkElems: Int, denseSlots: Set[String],
-                           categoricalCols: Set[String]): Long = {
-    {
-      def catsFor(rel: String): Set[String] =
-        categoricalCols.collect { case s if s.startsWith(rel + "/") =>
-          s.stripPrefix(rel + "/") }
-      def writeMatrix(rel: String, m: DataFrame, rowCol: String,
-                      colCol: String, nR: Long, nC: Long): Long =
-        if (denseSlots.contains(rel))
-          writeDense2d(out, gh, m, rowCol, colCol, nR, nC, chunkElems)
-        else writeCsr(out, gh, m, rowCol, colCol, nR, nC, chunkElems)
-      val obs = writeFrame(out, gh, ds.obs, "obs_id", "obs_name", catsFor("obs"))
-      val vars = writeFrame(out, gh, ds.vars, "var_id", "var_name", catsFor("var"))
-
-      val nObs = ds.obs.count()
-      val nVar = ds.vars.count()
-      val x = writeMatrix("X", ds.x, "obs_id", "var_id", nObs, nVar)
-
-      var links = Seq("X" -> x, "obs" -> obs, "var" -> vars)
-      if (ds.obsm.nonEmpty) {
-        val slots = ds.obsm.toSeq.sortBy(_._1).map { case (name, m) =>
-          val dimCol = if (m.columns.contains("dim_id")) "dim_id" else "var_id"
-          val dims = m.agg(coalesce(max(col(dimCol)), lit(-1L)))
-            .collect().head.getLong(0) + 1
-          name -> writeMatrix(s"obsm/$name", m, "obs_id", dimCol, nObs, dims)
-        }
-        links :+= "obsm" -> group(out, gh, slots, encAttrs(gh, "dict", "0.1.0"))
-      }
-      if (ds.layers.nonEmpty) {
-        val slots = ds.layers.toSeq.sortBy(_._1).map { case (name, l) =>
-          name -> writeMatrix(s"layers/$name", l, "obs_id", "var_id", nObs, nVar)
-        }
-        links :+= "layers" -> group(out, gh, slots, encAttrs(gh, "dict", "0.1.0"))
-      }
-      if (ds.varm.nonEmpty) {
-        val slots = ds.varm.toSeq.sortBy(_._1).map { case (name, m) =>
-          val dimCol = if (m.columns.contains("dim_id")) "dim_id" else "var_id"
-          val dims = m.agg(coalesce(max(col(dimCol)), lit(-1L)))
-            .collect().head.getLong(0) + 1
-          name -> writeMatrix(s"varm/$name", m, "var_id", dimCol, nVar, dims)
-        }
-        links :+= "varm" -> group(out, gh, slots, encAttrs(gh, "dict", "0.1.0"))
-      }
-      if (ds.obsp.nonEmpty) {
-        val slots = ds.obsp.toSeq.sortBy(_._1).map { case (name, m) =>
-          name -> writeMatrix(s"obsp/$name", m, "obs_id", "obs_id_2", nObs, nObs)
-        }
-        links :+= "obsp" -> group(out, gh, slots, encAttrs(gh, "dict", "0.1.0"))
-      }
-      if (ds.uns.nonEmpty)
-        links :+= "uns" -> writeUns(out, gh, graft.artifact.UnsValue.Mapping(ds.uns))
-      ds.raw.foreach { r =>
-        val rawVar = writeFrame(out, gh, r.vars, "var_id", "var_name",
-          catsFor("raw/var"))
-        val nRawVar = r.vars.count()
-        val rawX = writeMatrix("raw/X", r.x, "obs_id", "var_id", nObs, nRawVar)
-        var rawLinks = Seq("X" -> rawX, "var" -> rawVar)
-        if (r.varm.nonEmpty) {
-          val slots = r.varm.toSeq.sortBy(_._1).map { case (name, m) =>
-            val dimCol = if (m.columns.contains("dim_id")) "dim_id" else "var_id"
-            val dims = m.agg(coalesce(max(col(dimCol)), lit(-1L)))
-              .collect().head.getLong(0) + 1
-            name -> writeMatrix(s"raw/varm/$name", m, "var_id", dimCol, nRawVar, dims)
-          }
-          rawLinks :+= "varm" -> group(out, gh, slots, encAttrs(gh, "dict", "0.1.0"))
-        }
-        links :+= "raw" -> group(out, gh, rawLinks, encAttrs(gh, "raw", "0.1.0"))
-      }
-
-      group(out, gh, links, encAttrs(gh, "anndata", "0.1.0"))
-    }
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
-import graft.artifact.{AnnDataset, UnsValue}
+import graft.artifact.{AnnDataset, UnsLeaf}
 
 /** Native AnnData-on-zarr sink — the write half of [[AnnZarr]], emitting
   * the same store layouts the reference writes through zarr-python
@@ -36,6 +36,10 @@ import graft.artifact.{AnnDataset, UnsValue}
   * by necessity — inherent to the format, not to the engine). Axis
   * frames and indptr write EXECUTOR-SIDE too, at every size; the driver
   * holds metadata, chunk-level offsets, category dictionaries and uns.
+  *
+  * The AnnData layout itself is [[AnnDataset.write]], the slot walk
+  * shared with the h5ad sink; [[write]] and [[writeMu]] supply the zarr
+  * node encoders it drives.
   *
   * Each node kind has ONE executor-side extend that grows the node from
   * a committed prefix — [[writeFrameChunks]], [[extendCsr]] (with
@@ -864,45 +868,59 @@ object AnnZarrWriter {
       bb.array()
     }
 
-  // ------------------------------------------------------------------ uns
+  // ------------------------------------------------------------- open API
 
-  private def writeUns(root: String, rel: String, v: UnsValue, v3: Boolean): Unit = {
-    import UnsValue._
-    v match {
-      case Scalar(s: String) =>
-        scalar(root, rel, "|O", enc("string", "0.2.0"), packVlen(Array(s)), v3)
-      case Scalar(d: Double) =>
-        val bb = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN).putDouble(d)
-        scalar(root, rel, "<f8", enc("numeric-scalar", "0.2.0"), bb.array(), v3)
-      case Scalar(n: Number) =>
-        val bb = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN).putLong(n.longValue())
-        scalar(root, rel, "<i8", enc("numeric-scalar", "0.2.0"), bb.array(), v3)
-      case Scalar(b: Boolean) =>
-        scalar(root, rel, "|b1", enc("numeric-scalar", "0.2.0"),
-          Array[Byte](if (b) 1 else 0), v3)
-      case Scalar(other) => throw new UnsupportedOperationException(
-        s"uns scalar of ${if (other == null) "null" else other.getClass.getName}")
-      case Arr(vals) =>
-        val dtype =
-          if (vals.isEmpty) "<f8"
-          else if (vals.forall(_.isInstanceOf[String])) "|O"
-          else if (vals.forall(_.isInstanceOf[Boolean])) "|b1"
-          else if (vals.forall(v => v.isInstanceOf[Double] || v.isInstanceOf[Float])) "<f8"
-          else "<i8"
-        val atts = if (dtype == "|O") enc("string-array", "0.2.0") else enc("array", "0.2.0")
-        array1d(root, rel, dtype, 65536, atts, vals.toIndexedSeq, v3)
-      case Mapping(items) =>
-        zgroup(root, rel, Some(enc("dict", "0.1.0")), v3)
-        items.foreach { case (k, cv) => writeUns(root, s"$rel/$k", cv, v3) }
+  /** The zarr node encoders behind [[AnnDataset.write]]: a group's
+    * metadata is written before its children.
+    */
+  private final class ZarrSink(root: String, v3: Boolean, chunkElems: Int, shardFactor: Int,
+                               frameChunkLen: Int) extends AnnDataset.Sink[Unit] {
+    def frame(rel: String, df: DataFrame, rowId: String, idName: String,
+              cats: Set[String]): (Unit, Long) =
+      ((), writeFrame(root, rel, df, rowId, idName, v3, frameChunkLen, cats))
+    def matrix(rel: String, coo: DataFrame, rowCol: String, colCol: String,
+               nRows: Long, nCols: Long, dense: Boolean): Unit =
+      if (dense)
+        writeDense(root, rel, coo, rowCol, colCol, nRows, nCols, chunkElems, v3,
+          if (v3) shardFactor else 1)
+      else
+        writeCsr(root, rel, coo, rowCol, colCol, nRows, nCols, chunkElems, v3,
+          shardFactor, frameChunkLen)
+    def uns(rel: String, leaf: UnsLeaf): Unit = {
+      val dtype = leaf.dtype match {
+        case 's' => "|O"
+        case 'b' => "|b1"
+        case 'f' => "<f8"
+        case _ => "<i8"
+      }
+      val attrs = enc(leaf.encoding, "0.2.0")
+      if (!leaf.scalar) array1d(root, rel, dtype, 65536, attrs, leaf.values, v3)
+      else scalar(root, rel, dtype, attrs,
+        if (dtype == "|O") packVlen(Array(leaf.values.head.asInstanceOf[String]))
+        else packNumAny(dtype, leaf.values.toArray, rel), v3)
+    }
+    def group(rel: String, encoding: (String, String), children: Seq[(String, () => Unit)]): Unit = {
+      zgroup(root, rel, Some(enc(encoding._1, encoding._2)), v3)
+      children.foreach(_._2())
     }
   }
 
-  // ------------------------------------------------------------- open API
+  /** Replace whatever is at `path` with what `body` writes, then
+    * consolidate the metadata so reopening costs a single metadata GET.
+    */
+  private def writeStore(path: String)(body: => Unit): Unit = {
+    new Path(path).getFileSystem(conf).delete(new Path(path), true)
+    ZarrStore.invalidate(path) // same-JVM readers must not see stale metadata
+    body
+    ZarrStore.consolidate(path)
+  }
 
   /** Write `ds` as an AnnData-on-zarr store at `path` (a directory /
-    * object-store prefix). Matrix slots (X, layers, obsm, varm, obsp,
-    * raw.X) and axis frames are written executor-side; uns and category
-    * dictionaries are driver-written. Readable back by [[AnnZarr.open]].
+    * object-store prefix) through the one anndata slot walk
+    * ([[AnnDataset.write]]). Matrix slots (X, layers, obsm, varm, obsp,
+    * raw.X, raw.varm) and axis frames are written executor-side; uns and
+    * category dictionaries are driver-written. Readable back by
+    * [[AnnZarr.open]].
     *
     * `v3 = true` emits a zarr v3 store with `sharding_indexed` csr
     * slots: `shardFactor` inner chunks of `chunkElems` elements per
@@ -920,74 +938,18 @@ object AnnZarrWriter {
             v3: Boolean = false, shardFactor: Int = 16,
             frameChunkLen: Int = 65536,
             denseSlots: Set[String] = Set.empty,
-            categoricalCols: Set[String] = Set.empty): Unit = {
-    val fs = new Path(path).getFileSystem(conf)
-    fs.delete(new Path(path), true)
-    ZarrStore.invalidate(path) // same-JVM readers must not see stale metadata
-    def catsFor(rel: String): Set[String] =
-      categoricalCols.collect { case s if s.startsWith(rel + "/") =>
-        s.stripPrefix(rel + "/") }
-    def writeMatrix(rel: String, m: DataFrame, rowCol: String, colCol: String,
-                    nR: Long, nC: Long): Unit =
-      if (denseSlots.contains(rel))
-        writeDense(path, rel, m, rowCol, colCol, nR, nC, chunkElems, v3,
-          if (v3) shardFactor else 1)
-      else
-        writeCsr(path, rel, m, rowCol, colCol, nR, nC, chunkElems, v3,
-          shardFactor, frameChunkLen)
-    zgroup(path, "", Some(enc("anndata", "0.1.0")), v3)
-    val nObs = writeFrame(path, "obs", ds.obs, "obs_id", "obs_name", v3,
-      frameChunkLen, catsFor("obs"))
-    val nVar = writeFrame(path, "var", ds.vars, "var_id", "var_name", v3,
-      frameChunkLen, catsFor("var"))
-    writeMatrix("X", ds.x, "obs_id", "var_id", nObs, nVar)
-    def dimCount(df: DataFrame, c: String): Long =
-      df.agg(coalesce(max(col(c)), lit(-1L))).collect().head.getLong(0) + 1
-    if (ds.layers.nonEmpty) {
-      zgroup(path, "layers", Some(enc("dict", "0.1.0")), v3)
-      ds.layers.foreach { case (nm, m) =>
-        writeMatrix(s"layers/$nm", m, "obs_id", "var_id", nObs, nVar)
-      }
+            categoricalCols: Set[String] = Set.empty): Unit =
+    writeStore(path) {
+      AnnDataset.write(new ZarrSink(path, v3, chunkElems, shardFactor, frameChunkLen), "", ds,
+        denseSlots, categoricalCols)
     }
-    if (ds.obsm.nonEmpty) {
-      zgroup(path, "obsm", Some(enc("dict", "0.1.0")), v3)
-      ds.obsm.foreach { case (nm, m) =>
-        val dimCol = if (m.columns.contains("dim_id")) "dim_id" else "var_id"
-        writeMatrix(s"obsm/$nm", m, "obs_id", dimCol, nObs, dimCount(m, dimCol))
-      }
-    }
-    if (ds.varm.nonEmpty) {
-      zgroup(path, "varm", Some(enc("dict", "0.1.0")), v3)
-      ds.varm.foreach { case (nm, m) =>
-        val dimCol = if (m.columns.contains("dim_id")) "dim_id" else "var_id"
-        writeMatrix(s"varm/$nm", m, "var_id", dimCol, nVar, dimCount(m, dimCol))
-      }
-    }
-    if (ds.obsp.nonEmpty) {
-      zgroup(path, "obsp", Some(enc("dict", "0.1.0")), v3)
-      ds.obsp.foreach { case (nm, m) =>
-        writeMatrix(s"obsp/$nm", m, "obs_id", "obs_id_2", nObs, nObs)
-      }
-    }
-    if (ds.uns.nonEmpty) {
-      zgroup(path, "uns", Some(enc("dict", "0.1.0")), v3)
-      ds.uns.foreach { case (k, v) => writeUns(path, s"uns/$k", v, v3) }
-    }
-    ds.raw.foreach { r =>
-      zgroup(path, "raw", Some(enc("dict", "0.1.0")), v3)
-      val nRawVar = writeFrame(path, "raw/var", r.vars, "var_id", "var_name", v3,
-        frameChunkLen, catsFor("raw/var"))
-      writeMatrix("raw/X", r.x, "obs_id", "var_id", nObs, nRawVar)
-    }
-    // consolidated metadata so reopening costs a single metadata GET
-    ZarrStore.consolidate(path)
-  }
 
   /** Migrate an AnnData-on-zarr store to a new layout (typically v2 →
     * v3-sharded — the 16×-fewer-objects shape) ENCODING-FAITHFULLY:
     * slots that are dense `array` grids in the source stay dense,
     * `categorical` frame columns stay categorical — both detected from
-    * the source metadata, so a migration never silently degrades what
+    * the source metadata over every slot of the layout
+    * ([[AnnDataset.slots]]), so a migration never silently degrades what
     * [[write]]'s defaults would re-encode as csr/string. Reads and
     * writes are both executor-parallel; the driver only moves axis
     * metadata.
@@ -1012,29 +974,26 @@ object AnnZarrWriter {
       s"migrate: dst ($dst) must be a fresh path outside src ($src) — " +
         "in-place migration would delete the source before reading it")
     val ds = AnnZarr.open(spark, src)
-    val slots = Seq("X") ++ ds.layers.keys.map("layers/" + _) ++
-      ds.obsm.keys.map("obsm/" + _) ++ ds.varm.keys.map("varm/" + _) ++
-      ds.obsp.keys.map("obsp/" + _) ++ ds.raw.map(_ => "raw/X").toSeq
-    val dense = slots.filter(r => ZarrStore.isArray(src, r)).toSet
-    def cats(axis: String): Set[String] =
-      if (!ZarrStore.isGroup(src, axis)) Set.empty
-      else ZarrStore.children(src, axis)
-        .filter(c => !ZarrStore.isArray(src, s"$axis/$c") &&
-          ZarrStore.attrString(src, s"$axis/$c", "encoding-type")
-            .contains("categorical"))
-        .map(c => s"$axis/$c").toSet
+    val slots = AnnDataset.slots(ds)
+    def encoded(rel: String, t: String) =
+      ZarrStore.attrString(src, rel, "encoding-type").contains(t)
+    val cats = slots.filter(encoded(_, "dataframe"))
+      .flatMap(f => ZarrStore.children(src, f).map(c => s"$f/$c"))
+      .filter(c => !ZarrStore.isArray(src, c) && encoded(c, "categorical"))
     write(ds, dst, chunkElems, v3, shardFactor, frameChunkLen,
-      denseSlots = dense,
-      categoricalCols = cats("obs") ++ cats("var") ++ cats("raw/var"))
+      denseSlots = slots.filter(ZarrStore.isArray(src, _)).toSet,
+      categoricalCols = cats.toSet)
   }
 
   /** Write a MuData-on-zarr store: one AnnData group per modality under
     * `mod/`, the root carrying the MuData encoding — what mudata-python
     * produces and [[AnnZarr.openMu]] / the reference's MuData curator
-    * consume. Each modality routes through [[write]] (same
-    * executor-parallel sinks, `v3`/`denseSlots`/`categoricalCols`
-    * options are per-store); consolidation happens ONCE at the root so
-    * reopening the whole container costs 1–2 metadata GETs.
+    * consume. Modalities go through the same slot walk and
+    * executor-parallel sinks as [[write]] (`v3`/`denseSlots`/
+    * `categoricalCols` options are per-store). Each modality is
+    * consolidated as a self-contained store (the append path patches
+    * it), then the root once, so reopening the whole container costs
+    * 1–2 metadata GETs.
     */
   def writeMu(mods: Map[String, AnnDataset], path: String,
               chunkElems: Int = 65536, v3: Boolean = false,
@@ -1042,20 +1001,11 @@ object AnnZarrWriter {
               denseSlots: Set[String] = Set.empty,
               categoricalCols: Set[String] = Set.empty): Unit = {
     require(mods.nonEmpty, "writeMu needs at least one modality")
-    val fs = new Path(path).getFileSystem(conf)
-    fs.delete(new Path(path), true)
-    ZarrStore.invalidate(path)
-    zgroup(path, "", Some(enc("MuData", "0.1.0")), v3)
-    zgroup(path, "mod", Some(enc("dict", "0.1.0")), v3)
-    def scoped(m: String, s: Set[String]): Set[String] =
-      s.collect { case k if k.startsWith(m + "/") => k.stripPrefix(m + "/") }
-    mods.toSeq.sortBy(_._1).foreach { case (m, ds) =>
-      write(ds, s"$path/mod/$m", chunkElems, v3, shardFactor, frameChunkLen,
-        scoped(m, denseSlots), scoped(m, categoricalCols))
+    writeStore(path) {
+      AnnDataset.writeMu(new ZarrSink(path, v3, chunkElems, shardFactor, frameChunkLen), mods,
+        denseSlots, categoricalCols)
+      mods.keys.foreach(m => ZarrStore.consolidate(s"$path/mod/$m"))
     }
-    // per-modality write() consolidated each subtree; the root pass
-    // folds everything into ONE container-level metadata object
-    ZarrStore.consolidate(path)
   }
 
   // --------------------------------------------------------------- append

@@ -1,26 +1,17 @@
 package graft.zarr.datasource
 
-import java.util.{Map => JMap}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-// bounds extraction, row-range planning, COO projection and the frame
-// partition are shared with the h5ad source
-import graft.h5.datasource.{CooProject, FrameRangePartition, H5adScanBuilder}
+import graft.artifact.datasource.{AnnFormat, AnnScan, AnnSource, CooProject}
+import graft.h5.datasource.FrameRangePartition
 import graft.zarr.{ZArray, ZarrStore}
 
-/** DataSource V2 surface for the native zarr reader:
-  * `spark.read.format("zarr").load(path)` yields the COO view
-  * `(obs_id, var_id, value)` of the store's X (or any matrix slot via
-  * `.option("slot", "layers/log")`; `dataframe` slots yield the frame)
-  * — the zarr twin of [[graft.h5.datasource.H5adSource]], and the one
+/** DataSource V2 surface for the native zarr reader: the `zarr`
+  * container behind the shared [[AnnSource]] shell (as
+  * [[graft.h5.datasource.H5adSource]] is the h5ad one), and the one
   * reader behind [[graft.zarr.AnnZarr.open]]:
   *  - **partition planning = the chunk grid** (dense) or row ranges
   *    against indptr (csr), so task parallelism tracks the store's own
@@ -37,34 +28,15 @@ import graft.zarr.{ZArray, ZarrStore}
   * `.option("axes", "c,y,x")` — each axis column prunes its own grid
   * dimension. Works on v2 and v3 (incl. sharded) stores alike.
   */
-final class ZarrSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "zarr"
+final class ZarrSource extends AnnSource(ZarrFormat)
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = Option(options.get("path")).getOrElse(
-      throw new IllegalArgumentException("zarr source requires a path"))
-    ZarrSource.schemaFor(path, Option(options.get("slot")).getOrElse("X"),
-      Option(options.get("axes")))
-  }
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table = {
-    val path = Option(properties.get("path")).getOrElse(
-      throw new IllegalArgumentException("zarr source requires a path"))
-    new ZarrTable(path, Option(properties.get("slot")).getOrElse("X"), schema)
-  }
-}
-
-object ZarrSource {
-  val Schema: StructType = StructType(Seq(
-    StructField("obs_id", LongType, nullable = false),
-    StructField("var_id", LongType, nullable = false),
-    StructField("value", DoubleType, nullable = false)))
+private[graft] object ZarrFormat extends AnnFormat {
+  val name = "zarr"
 
   /** Axis columns: rank-2 keeps the anndata COO names; other ranks use
     * `axes` (or d0..dN-1).
     */
-  def axisNames(rank: Int, axes: Option[String]): Seq[String] = axes match {
+  private def axisNames(rank: Int, axes: Option[String]): Seq[String] = axes match {
     case Some(a) =>
       val names = a.split(',').map(_.trim).toSeq
       require(names.size == rank, s"axes '$a' for rank-$rank slot")
@@ -73,88 +45,28 @@ object ZarrSource {
     case None => (0 until rank).map(d => s"d$d")
   }
 
-  def schemaFor(path: String, slot: String, axes: Option[String]): StructType =
-    if (ZarrFrame.isFrameSlot(path, slot))
-      ZarrFrame.describe(path, slot).schema
-    else if (ZarrStore.attrString(path, slot, "encoding-type").contains("csr_matrix"))
-      Schema
+  private def isCsr(path: String, slot: String): Boolean =
+    ZarrStore.attrString(path, slot, "encoding-type").contains("csr_matrix")
+
+  def schema(path: String, slot: String, axes: Option[String]): StructType =
+    if (ZarrFrame.isFrameSlot(path, slot)) ZarrFrame.describe(path, slot).schema
+    else if (isCsr(path, slot)) AnnSource.Schema
     else {
       val za = ZarrStore.openArray(path, slot)
       StructType(axisNames(za.rank, axes).map(StructField(_, LongType, nullable = false)) :+
         StructField("value", DoubleType, nullable = false))
     }
-}
 
-final class ZarrTable(path: String, slot: String, tschema: StructType)
-    extends Table with SupportsRead {
-  override def name(): String = s"zarr:$path!$slot"
-  override def schema(): StructType = tschema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrScanBuilder(path, slot, tschema,
-      options.getLong("targetRowsPerTask", 1L << 20),
-      options.getLong("targetElemsPerTask", 4L << 20))
-}
-
-final class ZarrScanBuilder(path: String, slot: String, tschema: StructType,
-                            targetRows: Long = 1L << 20,
-                            targetElems: Long = 4L << 20)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
-
-  private var required: StructType = tschema
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** Filters stay with Spark for re-evaluation; bounds prune chunks. */
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter]): Array[org.apache.spark.sql.sources.Filter] = {
-    pushed = filters
-    filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-
-  override def build(): Scan =
-    new ZarrScan(path, slot, tschema, required, H5adScanBuilder.bounds(pushed),
-      targetRows, targetElems)
-}
-
-private final case class ZarrDenseChunkPartition(
-    za: ZArray, axes: Array[String], coords: Array[Array[Int]]) extends InputPartition
-
-private final case class ZarrCsrRangePartition(
-    path: String, slot: String, r0: Long, r1: Long,
-    e0: Long, e1: Long) extends InputPartition
-
-final class ZarrScan(path: String, slot: String, tschema: StructType,
-                     required: StructType,
-                     colBounds: Map[String, (Long, Long)],
-                     targetRows: Long = 1L << 20,
-                     targetElems: Long = 4L << 20) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"zarr $path!$slot bounds=$colBounds cols=${required.fieldNames.mkString(",")}"
-
-  private def rowRanges(nRows: Long, nElems: Long, idCol: String) =
-    H5adScanBuilder.rowRanges(nRows, nElems, targetRows, targetElems, colBounds(idCol))
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    if (ZarrFrame.isFrameSlot(path, slot)) {
-      // dataframe slot: row ranges pruned by pushed row-id bounds
-      val info = ZarrFrame.describe(path, slot)
-      rowRanges(info.n, 0L, info.rowIdName).map { case (r0, r1) =>
-        FrameRangePartition(path, slot, r0, r1, info.specs.toArray): InputPartition
-      }.toArray
-    } else if (ZarrStore.attrString(path, slot, "encoding-type").contains("csr_matrix")) {
+  def plan(scan: AnnScan): Array[InputPartition] = {
+    val (path, slot) = (scan.path, scan.slot)
+    if (ZarrFrame.isFrameSlot(path, slot)) scan.frameRanges(ZarrFrame.describe(path, slot))
+    else if (isCsr(path, slot)) {
       // csr: row ranges against indptr; pushed obs bounds prune ranges,
       // and each task's element span is fixed here so tasks touch only
       // their own data/indices chunks
       val ptrZ = ZarrStore.openArray(path, s"$slot/indptr")
       val nnz = ZarrStore.openArray(path, s"$slot/data").shape.head
-      val kept = rowRanges(ptrZ.shape.head - 1, nnz, "obs_id")
+      val kept = scan.rowRanges(ptrZ.shape.head - 1, nnz, "obs_id")
       // indptr values at the SURVIVING range boundaries only: O(par)
       // chunk-sliced reads, never a full O(store rows) driver decode
       val bvals = kept.flatMap { case (a, b) => Seq(a, b) }.distinct
@@ -165,9 +77,9 @@ final class ZarrScan(path: String, slot: String, tschema: StructType,
       }.toArray
     } else {
       val za = ZarrStore.openArray(path, slot)
-      val axes = tschema.fieldNames.dropRight(1) // value is last
-      require(za.rank == axes.length, s"$slot: rank ${za.rank} vs schema $tschema")
-      val axBounds = axes.map(colBounds)
+      val axes = scan.tschema.fieldNames.dropRight(1) // value is last
+      require(za.rank == axes.length, s"$slot: rank ${za.rank} vs schema ${scan.tschema}")
+      val axBounds = axes.map(scan.colBounds)
       val pruned = za.gridCoords.filter { c =>
         c.indices.forall { d =>
           val off = c(d).toLong * za.chunks(d)
@@ -185,18 +97,20 @@ final class ZarrScan(path: String, slot: String, tschema: StructType,
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ZarrReaderFactory(required)
-}
-
-final class ZarrReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+  def reader(partition: InputPartition, required: StructType): PartitionReader[InternalRow] =
     partition match {
       case p: ZarrDenseChunkPartition => new ZarrDenseChunkReader(p, required)
       case p: ZarrCsrRangePartition => new ZarrCsrRangeReader(p, required)
       case p: FrameRangePartition => new ZarrFrameRangeReader(p, required)
     }
 }
+
+private final case class ZarrDenseChunkPartition(
+    za: ZArray, axes: Array[String], coords: Array[Array[Int]]) extends InputPartition
+
+private final case class ZarrCsrRangePartition(
+    path: String, slot: String, r0: Long, r1: Long,
+    e0: Long, e1: Long) extends InputPartition
 
 /** Rank-agnostic dense chunk reader: odometer over each chunk's clipped
   * extents, C-order strides into the decoded (full, padded) buffer.

@@ -285,4 +285,35 @@ class H5WriterSpec extends AnyFunSuite {
       assert(got.orderBy(key).collect().toSeq == want.orderBy(key).collect().toSeq, key)
     }
   }
+
+  test("job count of an ingest-shaped h5ad write stays pinned") {
+    // the h5ad export shape of the benchmark: 200 x 200 cells at 5%
+    // density from driver-local frames. Spark jobs do not depend on host
+    // speed; the axis extents come from the frame writes' own collects,
+    // so the write runs no separate count jobs.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val n = 200
+    def hit(i: Int, j: Int) = (i * 31 + j * 17) % 20 == 0
+    val obsSchema = StructType(Seq(StructField("obs_id", LongType, false),
+      StructField("obs_name", StringType), StructField("batch", LongType)))
+    val varSchema = StructType(Seq(StructField("var_id", LongType, false),
+      StructField("var_name", StringType)))
+    val xSchema = StructType(Seq(StructField("obs_id", LongType, false),
+      StructField("var_id", LongType, false), StructField("value", DoubleType, false)))
+    val ds = AnnDataset(
+      spark.createDataFrame((0 until n).map(i =>
+        Row(i.toLong, s"c$i", (i % 8).toLong)).asJava, obsSchema),
+      spark.createDataFrame((0 until n).map(j => Row(j.toLong, s"g$j")).asJava, varSchema),
+      spark.createDataFrame((for (i <- 0 until n; j <- 0 until n if hit(i, j))
+        yield Row(i.toLong, j.toLong, (1 + (i * 7 + j * 3) % 64) / 4.0)).asJava, xSchema))
+    val p = java.nio.file.Files.createTempFile("graft_wjobs", ".h5ad").toString
+    val jobs = org.apache.spark.ListenerBusDrain.jobs(spark.sparkContext)(AnnH5Writer.write(ds, p))
+    info(s"write: $jobs jobs")
+    val back = AnnH5.open(spark, p)
+    assert(back.obs.count() == n && back.vars.count() == n)
+    assert(back.x.count() == (for (i <- 0 until n; j <- 0 until n if hit(i, j)) yield 1).size)
+    assert(jobs <= 9, s"write ran $jobs jobs")
+  }
 }
