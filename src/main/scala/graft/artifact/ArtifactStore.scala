@@ -1,16 +1,13 @@
 package graft.artifact
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
-  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import graft.catalog.Catalog
-import graft.core.Hashing
+import graft.core.{Fs, Hashing}
 import graft.query.{DoesNotExist, QuerySet}
 
 /** Artifact lifecycle: idempotent creation, versioning, open/load,
@@ -161,10 +158,7 @@ final class ArtifactStore(val cat: Catalog) {
     */
   def listSlots(uid: String): Seq[String] = {
     val path = pathOf(uid, members(cat.table("artifact").filter(col("uid") === uid)))
-    val statuses =
-      try Hashing.fileSystem(path).listStatus(new Path(path)).toSeq
-      catch { case _: java.io.FileNotFoundException => Nil }
-    statuses.filter(_.isDirectory).map(_.getPath.getName).sorted
+    Fs.list(path).filter(_.isDirectory).map(_.getPath.getName).sorted
   }
 
   private def pathOf(uid: String, ms: Seq[Member]): String =
@@ -185,7 +179,7 @@ final class ArtifactStore(val cat: Catalog) {
       "can only replace managed artifacts (ingest-by-reference content lives outside the store)")
     val s = stageFrame(df, s"$storageRoot/.staging/${cat.uid(8)}")
     commit(Seq(s), storageRoot) { (_, place) =>
-      deletePath(artifactPath(current, storageRoot))
+      Fs.delete(artifactPath(current, storageRoot))
       place(current)
       cat.update("artifact", col("uid") === uid,
         "hash" -> lit(s.hash), "hash_type" -> lit(s.hashType), "size" -> lit(s.size),
@@ -231,10 +225,10 @@ final class ArtifactStore(val cat: Catalog) {
     batch.zipWithIndex.map { case (s, i) =>
       known.get(s.hash) match {
         case Some(existing) =>
-          deletePath(s.path)
+          Fs.delete(s.path)
           existing
         case None =>
-          val row = register(i, row => movePath(s.path, artifactPath(row, storageRoot)))
+          val row = register(i, row => Fs.rename(s.path, artifactPath(row, storageRoot)))
           known(s.hash) = row
           row
       }
@@ -294,19 +288,14 @@ final class ArtifactStore(val cat: Catalog) {
 
   def fromDir(path: String, storageRoot: String, key: Option[String] = None,
               kind: String = "dataset"): FromDirResult = {
-    val fs = Hashing.fileSystem(path)
-    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = Fs.fileSystem(path)
+    val root = new Path(path)
     require(fs.getFileStatus(root).isDirectory, s"$path is not a directory")
     val storageId = ensureStorage(storageRoot)
     // key=None keeps the folder's own name, like the out-of-storage
     // default `Path(folderpath.name)` in the reference
     val folderKey = key.getOrElse(root.getName)
-    val files = {
-      val it = fs.listFiles(root, true)
-      val b = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-      while (it.hasNext) { val st = it.next(); if (st.isFile) b += st }
-      b.result().sortBy(_.getPath.toUri.getPath)
-    }
+    val files = Fs.files(path).sortBy(_.getPath.toUri.getPath)
     val rootUri = root.toUri.getPath.stripSuffix("/")
     val entries = files.map { st =>
       val p = st.getPath
@@ -482,24 +471,13 @@ final class ArtifactStore(val cat: Catalog) {
     * file the read is left to Spark.
     */
   private def readParquet(paths: Seq[String]): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
     def rank(st: FileStatus) = st.getPath.getName match {
       case "_common_metadata" => (0, st.getPath.toString)
       case "_metadata" => (1, st.getPath.toString)
       case _ => (2, st.getPath.toString)
     }
-    def hidden(name: String) =
-      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")) &&
-        !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
     // a missing path lists nothing here; Spark's read reports it
-    def leaves(fs: FileSystem, p: Path): Seq[FileStatus] =
-      (try fs.listStatus(p).toSeq catch { case _: java.io.FileNotFoundException => Nil })
-        .filterNot(st => hidden(st.getPath.getName))
-        .flatMap(st => if (st.isDirectory) leaves(fs, st.getPath) else Seq(st))
-    val first = paths.flatMap { p =>
-      val path = new Path(p)
-      leaves(path.getFileSystem(conf), path).minByOption(rank)
-    }.minByOption(rank)
+    val first = paths.flatMap(p => Fs.parquetLeaves(p).minByOption(rank)).minByOption(rank)
     first.fold(spark.read.parquet(paths: _*)) { st =>
       val sql = SQLConf.get
       val converter = new ParquetToSparkSchemaConverter(
@@ -508,8 +486,7 @@ final class ArtifactStore(val cat: Catalog) {
         inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
         nanosAsLong = sql.legacyParquetNanosAsLong,
         respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
-      val footer = new Footer(st.getPath,
-        ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+      val footer = new Footer(st.getPath, Fs.footer(st, rowGroups = false))
       spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer, converter)).parquet(paths: _*)
     }
   }
@@ -546,15 +523,15 @@ final class ArtifactStore(val cat: Catalog) {
   def cache(a: Map[String, Any], storageRoot: String, cacheDir: String): String = {
     val src = artifactPath(a, storageRoot)
     val dst = s"$cacheDir/${a("uid")}${Option(a.getOrElse("suffix", null)).getOrElse("")}"
-    val fs = Hashing.fileSystem(dst)
-    val dstPath = new org.apache.hadoop.fs.Path(dst)
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val srcFs = Hashing.fileSystem(src)
+    val fs = Fs.fileSystem(dst)
+    val dstPath = new Path(dst)
+    val srcPath = new Path(src)
+    val srcFs = Fs.fileSystem(src)
     val expected = srcFs.getContentSummary(srcPath).getLength
     val stale = !fs.exists(dstPath) || fs.getContentSummary(dstPath).getLength != expected
     if (stale) {
       fs.delete(dstPath, true)
-      org.apache.hadoop.fs.FileUtil.copy(srcFs, srcPath, fs, dstPath, false, fs.getConf)
+      FileUtil.copy(srcFs, srcPath, fs, dstPath, false, fs.getConf)
     }
     dst
   }
@@ -709,19 +686,7 @@ final class ArtifactStore(val cat: Catalog) {
         .withColumn("is_latest",
           when(col("id").isin(promote: _*), lit(true)).otherwise(col("is_latest")))
         .filter(!col("id").isin(ids: _*)))
-    paths.filter(_.contains("/.lamindb/")).foreach(deletePath)
-  }
-
-  private def deletePath(p: String): Unit = {
-    val fs = Hashing.fileSystem(p)
-    fs.delete(new org.apache.hadoop.fs.Path(p), true)
-  }
-
-  private def movePath(from: String, to: String): Unit = {
-    val fs = Hashing.fileSystem(from)
-    val toPath = new org.apache.hadoop.fs.Path(to)
-    fs.mkdirs(toPath.getParent)
-    fs.rename(new org.apache.hadoop.fs.Path(from), toPath)
+    paths.filter(_.contains("/.lamindb/")).foreach(Fs.delete(_))
   }
 
   def querySet: QuerySet = QuerySet(cat, "artifact")

@@ -2,14 +2,12 @@ package graft.catalog
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
-import graft.core.{Base62, Par, Versioning}
+import graft.core.{Base62, Fs, Par, Versioning}
 
 /** Parquet-backed metadata catalog with copy-on-write snapshots.
   *
@@ -17,9 +15,14 @@ import graft.core.{Base62, Par, Versioning}
   * (SQLite/Postgres behind Django, `lamindb/models/sqlrecord.py`), adapted
   * to an immutable data-lake substrate:
   *
+  *  - the root may be any Hadoop URI (a local path, `file:`, an object
+  *    store); every byte goes through [[graft.core.Fs]];
   *  - each registry table is a directory of versioned parquet snapshots
-  *    `<root>/<table>/v<N>`; `_manifest.json` points at the current version
-  *    (atomic rename commit). One writer per catalog root is the caller's
+  *    `<root>/<table>/v<N>`; `<root>/_manifest.json` (`{"table": N}`)
+  *    points at the current versions. A commit replaces it whole
+  *    (`Fs.replace`: on a local root `_manifest.json.tmp`, then one
+  *    rename over it, no `.crc` sidecar; on an object store one
+  *    overwriting PUT), so a reader sees the old or the new manifest. One writer per catalog root is the caller's
   *    contract; nothing enforces it yet (ROADMAP direction 1);
   *  - inserts accumulate in a driver-side buffer (the reference batches
   *    bulk saves at 10k rows, `models/save.py:31`) and are unioned into
@@ -165,20 +168,11 @@ final class Catalog(
     */
   def fits(name: String): Boolean =
     buffered(name) + manifest.get(name).fold(0L)(v => snapshotRows.getOrElseUpdate(s"$name/v$v", {
-      val files = Files.list(Paths.get(root, name, s"v$v"))
-      try {
-        val parts = files.iterator().asScala.filter { p =>
-          val n = p.getFileName.toString
-          n.endsWith(".parquet") && !n.startsWith(".")
-        }
-        var rows = 0L
-        while (rows <= IndexRowLimit && parts.hasNext) {
-          val footer = ParquetFileReader.open(HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(parts.next().toUri), spark.sparkContext.hadoopConfiguration))
-          try rows += footer.getRecordCount finally footer.close()
-        }
-        rows
-      } finally files.close()
+      val parts = Fs.parquetLeaves(s"$root/$name/v$v").iterator.filterNot(_.getPath.getName.startsWith("_"))
+      var rows = 0L
+      while (rows <= IndexRowLimit && parts.hasNext)
+        rows += Fs.footer(parts.next(), rowGroups = true).getBlocks.asScala.map(_.getRowCount).sum
+      rows
     })) <= IndexRowLimit
 
   /** Driver multimap from `keyCol`'s values (String, Long or Int; null
@@ -370,56 +364,35 @@ final class Catalog(
     require(keepLast >= 1, "must keep at least the current version")
     var removed = 0
     manifest.foreach { case (name, current) =>
-      val dir = Paths.get(root, name)
-      if (Files.isDirectory(dir)) {
-        val stream = Files.list(dir)
-        try {
-          stream.iterator().asScala.foreach { p =>
-            val fn = p.getFileName.toString
-            if (fn.startsWith("v") && fn.drop(1).forall(_.isDigit)) {
-              val v = fn.drop(1).toInt
-              if (v <= current - keepLast) {
-                deleteRecursively(p)
-                snapshotCache.remove(s"$name/v$v")
-                removed += 1
-              }
-            }
+      Fs.list(s"$root/$name").foreach { st =>
+        val fn = st.getPath.getName
+        if (fn.startsWith("v") && fn.drop(1).forall(_.isDigit)) {
+          val v = fn.drop(1).toInt
+          if (v <= current - keepLast) {
+            Fs.delete(st.getPath.toString)
+            snapshotCache.remove(s"$name/v$v")
+            removed += 1
           }
-        } finally stream.close()
+        }
       }
     }
     removed
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.iterator().asScala.foreach(deleteRecursively) finally s.close()
-    }
-    Files.deleteIfExists(p)
-  }
-
   // ------------------------------------------------------------- manifest
 
-  private def manifestPath = Paths.get(root, "_manifest.json")
+  private def manifestPath = s"$root/_manifest.json"
 
   private def loadManifest(): Unit =
-    if (Files.exists(manifestPath)) {
-      val txt = Files.readString(manifestPath)
-      """"([^"]+)"\s*:\s*(\d+)""".r.findAllMatchIn(txt).foreach { m =>
+    Fs.read(manifestPath).foreach { bytes =>
+      """"([^"]+)"\s*:\s*(\d+)""".r.findAllMatchIn(new String(bytes, UTF_8)).foreach { m =>
         manifest(m.group(1)) = m.group(2).toInt
       }
     }
 
-  private def saveManifest(versions: Map[String, Int]): Unit = {
-    Files.createDirectories(Paths.get(root))
-    val tmp = Paths.get(root, s"_manifest.json.tmp")
-    val json = versions.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
-    Files.writeString(tmp, json)
-    Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def saveManifest(versions: Map[String, Int]): Unit =
+    Fs.replace(manifestPath, versions.toSeq.sortBy(_._1)
+      .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}").getBytes(UTF_8))
 }
 
 object Catalog {

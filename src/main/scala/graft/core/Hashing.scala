@@ -2,7 +2,6 @@ package graft.core
 
 import java.io.InputStream
 import java.security.MessageDigest
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Content hashing for idempotent artifact creation.
@@ -53,17 +52,10 @@ object Hashing {
     * digests (`hash_dir`, implemented in lamindb-setup).
     * Returns (hash, nFiles, totalSize).
     */
-  def hashDir(fs: FileSystem, dir: Path): (String, Long, Long) = {
-    val it = fs.listFiles(dir, true)
-    var files = List.empty[Path]
-    var size = 0L
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile) {
-        files ::= st.getPath
-        size += st.getLen
-      }
-    }
+  def hashDir(dir: String): (String, Long, Long) = {
+    val fs = Fs.fileSystem(dir)
+    val statuses = Fs.files(dir)
+    val files = statuses.map(_.getPath)
     // member files hash CONCURRENTLY (driver-side md5 is the serial tail
     // of every multi-slot artifact registration); the combine is over the
     // SORTED member digests, so the result is byte-identical to the
@@ -71,19 +63,16 @@ object Hashing {
     val hashes =
       if (files.lengthCompare(1) <= 0) files.map(p => md5Stream(fs.open(p)))
       else Par.results(files.map(p => () => md5Stream(fs.open(p))))
-    (md5String(hashes.sorted.mkString), files.size.toLong, size)
+    (md5String(hashes.sorted.mkString), files.size.toLong, statuses.map(_.getLen).sum)
   }
-
-  def fileSystem(pathStr: String, conf: Configuration = new Configuration()): FileSystem =
-    new Path(pathStr).getFileSystem(conf)
 
   /** Stat + hash one path (file or dir). Returns (hash, hashType, nFiles, size). */
   def stat(pathStr: String): (String, String, Long, Long) = {
-    val fs = fileSystem(pathStr)
+    val fs = Fs.fileSystem(pathStr)
     val p = new Path(pathStr)
     val st = fs.getFileStatus(p)
     if (st.isDirectory) {
-      val (h, n, s) = hashDir(fs, p)
+      val (h, n, s) = hashDir(pathStr)
       (h, "md5-d", n, s)
     } else (hashFile(fs, p), "md5", 1L, st.getLen)
   }

@@ -6,8 +6,9 @@ import java.util.zip.Inflater
 
 import scala.collection.mutable
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+
+import graft.core.Fs
 
 /** Pure-JVM HDF5 reader — the subset the AnnData on-disk format uses.
   *
@@ -22,22 +23,17 @@ import org.apache.hadoop.fs.Path
   * datatypes, and global-heap-backed variable-length UTF-8 strings —
   * i.e. exactly what h5py's default `libver="earliest"` emits.
   *
-  * Random access goes through the Hadoop FileSystem API so the same
+  * Random access goes through [[graft.core.Fs]] so the same
   * reader serves local fixtures and object-store paths on a cluster;
   * metadata walks are driver-side and metadata-sized, while bulk
   * chunk payloads are exposed as [[H5ChunkSpec]]s for executor-side
   * parallel reads (see `AnnH5`).
   */
 object H5Input {
-  // one Configuration per JVM — constructing it parses XML resources,
-  // a cost that shouldn't recur per task-side open
-  private lazy val conf = new Configuration()
-
   def open(path: String): H5Input = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    new H5Input(fs.open(p), st.getLen)
+    val fs = Fs.fileSystem(path)
+    new H5Input(fs.open(p), fs.getFileStatus(p).getLen)
   }
 }
 

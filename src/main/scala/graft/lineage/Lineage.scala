@@ -68,8 +68,6 @@ final class Lineage(val cat: Catalog) {
     val runId = cat.currentRunId.getOrElse(
       throw new IllegalStateException("no active run - call track() first"))
     val spark = cat.spark
-    val dir = java.nio.file.Paths.get(cat.root, "environments", s"run_$runId")
-    java.nio.file.Files.createDirectories(dir)
     val jars = System.getProperty("java.class.path", "")
       .split(java.io.File.pathSeparatorChar)
       .map(_.trim).filter(_.endsWith(".jar"))
@@ -82,9 +80,9 @@ final class Lineage(val cat: Catalog) {
         s"java.version=${System.getProperty("java.version")}",
         s"scala.version=${scala.util.Properties.versionNumberString}",
         s"spark.version=${spark.version}") ++ confs ++ jars).mkString("\n")
-    val file = dir.resolve("run_env_jvm.txt")
-    java.nio.file.Files.writeString(file, content)
-    file.toString
+    val file = s"${cat.root}/environments/run_$runId/run_env_jvm.txt"
+    graft.core.Fs.replace(file, content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    file
   }
 
   /** Mark the current run completed (`ln.finish()`). */

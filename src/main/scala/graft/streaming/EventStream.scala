@@ -41,34 +41,27 @@ object EventStream {
       .select(col("window.start").as("hour"), col("event_type"), col("n"), col("sum_value"))
   }
 
-  /** Run the windowed aggregation as a REAL streaming query over the
-    * events directory (memory sink, complete mode), synchronously drained
-    * — the local-mode pattern for exercising the streaming engine against
-    * a static directory. Returns the collected result table.
+  /** Run `plan` as a REAL streaming query into a memory sink named
+    * `queryName`, synchronously drained — the local-mode pattern for
+    * exercising the streaming engine against a static directory — and
+    * return the collected result table. `plan` is built after the confs
+    * below are set. State-store instantiation dominates a one-shot local
+    * stream (each shuffle partition opens and commits its own store per
+    * microbatch), so the stateful operator runs on `shufflePartitions`
+    * (fixed at first start); `noData` keeps the trailing no-data
+    * watermark microbatch, which only modes that emit on watermark
+    * progress need. Both confs are restored afterwards.
     */
-  def runStreaming(spark: SparkSession, dir: String, queryName: String = "graft_events_stream"): DataFrame = {
+  private def drain(spark: SparkSession, queryName: String, outputMode: String, noData: Boolean,
+                    shufflePartitions: Int = 8)(plan: => DataFrame): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.streaming.schemaInference", "false")
-    // state-store instantiation dominates a one-shot local stream: each
-    // shuffle partition opens+commits its own store per microbatch, so
-    // run the stateful agg on fewer partitions (fixed at first start) and
-    // skip the trailing no-data watermark microbatch (complete mode never
-    // evicts state, so the extra batch only re-commits all stores)
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noData.toString)
     try {
-      // FileStreamSource needs a directory or glob, not a bare file path
-      val stream = spark.readStream
-        .schema(eventsRawSchema)
-        .parquet(s"$dir/events*.parquet")
-      val agg = windowedCounts(toTimestamp(stream), withWatermark = true)
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .start()
+      val q = plan.writeStream.outputMode(outputMode).format("memory").queryName(queryName).start()
       try q.processAllAvailable()
       finally q.stop()
       spark.table(queryName)
@@ -80,6 +73,21 @@ object EventStream {
       }
     }
   }
+
+  /** The events directory as a streaming source (FileStreamSource needs
+    * a directory or glob, not a bare file path).
+    */
+  private def eventStream(spark: SparkSession, dir: String): DataFrame =
+    toTimestamp(spark.readStream.schema(eventsRawSchema).parquet(s"$dir/events*.parquet"))
+
+  /** Run the windowed aggregation as a REAL streaming query over the
+    * events directory (memory sink, complete mode: it never evicts state,
+    * so no trailing no-data batch).
+    */
+  def runStreaming(spark: SparkSession, dir: String, queryName: String = "graft_events_stream"): DataFrame =
+    drain(spark, queryName, "complete", noData = false) {
+      windowedCounts(eventStream(spark, dir), withWatermark = true)
+    }
 
   /** Same plan, batch source — bit-identical results to the stream. */
   def runBatch(spark: SparkSession, dir: String): DataFrame = {
@@ -117,14 +125,8 @@ object EventStream {
       concat(lit("seg"), (col("id") % 7).cast("string")).as("segment"))
 
   /** Run the stream-static enrichment as a REAL streaming query. */
-  def runEnrichedStreaming(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.streaming.schemaInference", "false")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
+  def runEnrichedStreaming(spark: SparkSession, dir: String, queryName: String): DataFrame =
+    drain(spark, queryName, "complete", noData = false) {
       // Peek with the SAME glob the stream reads — a second matching file
       // with higher user_ids would otherwise reintroduce the silent
       // NULL-segment saturation this sizing exists to prevent. max() is
@@ -133,22 +135,8 @@ object EventStream {
         .parquet(s"$dir/events*.parquet")
         .agg(max(col("user_id"))).head().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(-1L)
-      val stream = spark.readStream.schema(eventsRawSchema).parquet(s"$dir/events*.parquet")
-      val agg = enrichedCounts(toTimestamp(stream),
-        userSegments(spark, maxUser + 1), withWatermark = true)
-      val q = agg.writeStream.outputMode("complete").format("memory")
-        .queryName(queryName).start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.table(queryName)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevNoData match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None    => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
+      enrichedCounts(eventStream(spark, dir), userSegments(spark, maxUser + 1), withWatermark = true)
     }
-  }
 
   /** Session-window aggregation per user: events within `gap` of the
     * previous one merge into the session; the session spans
@@ -174,34 +162,10 @@ object EventStream {
     * twin (`runBatchSessions`) applies the same finalization predicate.
     */
   def runSessionStreaming(spark: SparkSession, dir: String, gap: String,
-                          queryName: String, shufflePartitions: Int = 8): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.streaming.schemaInference", "false")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    try {
-      val stream = spark.readStream
-        .schema(eventsRawSchema)
-        .parquet(s"$dir/events*.parquet")
-      val agg = sessionCounts(toTimestamp(stream), gap, withWatermark = true)
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.table(queryName)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevNoData match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None    => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
+                          queryName: String, shufflePartitions: Int = 8): DataFrame =
+    drain(spark, queryName, "append", noData = true, shufflePartitions) {
+      sessionCounts(eventStream(spark, dir), gap, withWatermark = true)
     }
-  }
 
   /** Streaming first-occurrence dedup over the events directory: the
     * engine's dropDuplicates state store keyed on (user_id, event_type),
@@ -211,35 +175,13 @@ object EventStream {
     * exactly the distinct keys — the deterministic, oracle-checkable
     * contract.
     */
-  def runDedupStreaming(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.streaming.schemaInference", "false")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val stream = spark.readStream.schema(eventsRawSchema).parquet(s"$dir/events*.parquet")
-      val deduped = toTimestamp(stream)
+  def runDedupStreaming(spark: SparkSession, dir: String, queryName: String): DataFrame =
+    drain(spark, queryName, "append", noData = false) {
+      eventStream(spark, dir)
         .withWatermark("ts", "1 hour")
         .dropDuplicates(Seq("user_id", "event_type"))
         .select(col("user_id"), col("event_type"))
-      val q = deduped.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.table(queryName)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevNoData match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None    => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
     }
-  }
 
   /** Stream-stream interval join (click-attribution shape): purchases
     * matched to the same user's clicks in the `lookback` window leading
@@ -271,34 +213,11 @@ object EventStream {
     * on match, so no trailing no-data batch is needed.
     */
   def runAttributionStreaming(spark: SparkSession, dir: String,
-                              queryName: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.streaming.schemaInference", "false")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      def side(eventType: String) = toTimestamp(
-        spark.readStream.schema(eventsRawSchema).parquet(s"$dir/events*.parquet"))
-        .filter(col("event_type") === eventType)
-      val joined = attributionJoin(side("click"), side("purchase"), withWatermark = true)
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.table(queryName)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevNoData match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None    => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
+                              queryName: String): DataFrame =
+    drain(spark, queryName, "append", noData = false) {
+      def side(eventType: String) = eventStream(spark, dir).filter(col("event_type") === eventType)
+      attributionJoin(side("click"), side("purchase"), withWatermark = true)
     }
-  }
 
   /** Batch twin of the session stream: same sessions, filtered to those
     * the stream has finalized (`finalizedOnly`) — i.e. session end at or

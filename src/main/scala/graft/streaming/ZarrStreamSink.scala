@@ -1,11 +1,13 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.Fs
 import graft.zarr.{AnnZarrWriter, ZarrStore}
 
 /** Streaming ingestion into an AnnData-on-zarr store: every microbatch
@@ -37,7 +39,11 @@ import graft.zarr.{AnnZarrWriter, ZarrStore}
   *    and — because appends only extend shapes and boundary-chunk
   *    rewrites preserve the committed prefix — rolls the store back
   *    with [[graft.zarr.AnnZarrWriter.truncateTo]] before reapplying.
-  *    This assumes atomic whole-object PUTs (true of object stores).
+  *
+  * Both objects are written through [[graft.core.Fs.replace]] (on a
+  * local disk a temp file renamed over the old one, on an object store
+  * one whole-object PUT), so a crash mid-write leaves the previous
+  * ledger or marker, never a truncated one.
   *
   * Batch contract: one row per matrix element, with `obs_name` (new
   * rows grouped by it — an obs_name must NOT span two microbatches, or
@@ -75,7 +81,7 @@ object ZarrStreamSink {
     */
   private def readNamesBloom(path: String):
       Option[(Long, Long, org.apache.spark.util.sketch.BloomFilter)] =
-    ZarrStore.readBytes(path, NamesBloomName).flatMap { b =>
+    Fs.read(s"$path/$NamesBloomName").flatMap { b =>
       // a crash mid-PUT can leave a torn object; the sketch is fully
       // reconstructible from the store, so an unparsable file routes to
       // the bootstrap rebuild instead of failing every later trigger
@@ -91,8 +97,7 @@ object ZarrStreamSink {
     val bos = new java.io.ByteArrayOutputStream()
     val out = new java.io.DataOutputStream(bos)
     out.writeLong(cap); out.writeLong(cnt); bf.writeTo(out); out.flush()
-    val o = ZarrStore.fs(path).create(new Path(path, NamesBloomName), true)
-    try o.write(bos.toByteArray) finally o.close()
+    Fs.write(s"$path/$NamesBloomName", bos.toByteArray)
   }
 
   /** Applied-batch ledger, CONSTANT-SIZE per trigger: `contig` is the
@@ -101,7 +106,7 @@ object ZarrStreamSink {
     * tail is empty or one element in practice). The round-11 format —
     * every applied id, re-read and rewritten whole each batch — made a
     * long-running stream's ledger cost O(applied batches) per trigger
-    * and its size unbounded; this one is one small atomic PUT.
+    * and its size unbounded; this one is one small object, replaced whole.
     */
   private[streaming] final case class Ledger(contig: Long, tail: Set[Long]) {
     def contains(id: Long): Boolean = id <= contig || tail(id)
@@ -116,9 +121,9 @@ object ZarrStreamSink {
   }
 
   private[streaming] def readLedger(path: String): Ledger =
-    ZarrStore.readBytes(path, LedgerName) match {
+    Fs.read(s"$path/$LedgerName") match {
       case Some(b) =>
-        val lines = new String(b, java.nio.charset.StandardCharsets.UTF_8)
+        val lines = new String(b, UTF_8)
           .split('\n').filter(_.nonEmpty)
         if (lines.headOption.exists(_.startsWith("v2 ")))
           lines.tail.map(_.toLong)
@@ -128,25 +133,19 @@ object ZarrStreamSink {
       case None => Ledger(-1L, Set.empty)
     }
 
-  private def writeObject(path: String, rel: String, content: String): Unit = {
-    val out = ZarrStore.fs(path).create(new Path(path, rel), true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
   private def recordBatch(path: String, ledger: Ledger, batchId: Long): Unit =
-    writeObject(path, LedgerName, ledger.add(batchId).serialize)
+    Fs.replace(s"$path/$LedgerName", ledger.add(batchId).serialize.getBytes(UTF_8))
 
   /** Undo a half-applied append from a previous incarnation, if any. */
   private def recoverPending(path: String, applied: Ledger): Unit =
-    ZarrStore.readBytes(path, PendingName).foreach { b =>
-      val parts = new String(b, java.nio.charset.StandardCharsets.UTF_8)
+    Fs.read(s"$path/$PendingName").foreach { b =>
+      val parts = new String(b, UTF_8)
         .trim.split(',')
       // marker for an already-ledgered batch = crash AFTER commit; the
       // data is good, only the marker cleanup was lost
       if (!applied.contains(parts(0).toLong))
         AnnZarrWriter.truncateTo(path, parts(1).toLong, parts(2).toLong)
-      ZarrStore.fs(path).delete(new Path(path, PendingName), false)
+      Fs.delete(s"$path/$PendingName")
     }
 
   /** Start the stream: each microbatch's distinct `obs_name`s become
@@ -248,10 +247,10 @@ object ZarrStreamSink {
             val nnz0 =
               if (ZarrStore.isArray(path, "X")) n0
               else ZarrStore.openArray(path, "X/data").shape.head
-            writeObject(path, PendingName, s"$batchId,$n0,$nnz0")
+            Fs.replace(s"$path/$PendingName", s"$batchId,$n0,$nnz0".getBytes(UTF_8))
             AnnZarrWriter.appendRows(obs, x, path)
             recordBatch(path, applied, batchId)
-            ZarrStore.fs(path).delete(new Path(path, PendingName), false)
+            Fs.delete(s"$path/$PendingName")
             ()
           }
         }

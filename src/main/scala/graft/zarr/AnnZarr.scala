@@ -26,13 +26,15 @@ object AnnZarr {
 
   /** Decode one `uns` node driver-side (same contract as the HDF5 path:
     * uns is metadata-sized): 0-d arrays → Scalar, 1-D → Arr,
-    * groups → Mapping (categorical groups decode to their values).
+    * groups → Mapping (categorical groups decode to their values). A
+    * bool array's values are Booleans, as h5ad gives them.
     */
   private def readUns(root: String, rel: String): UnsValue = {
     import UnsValue._
     if (ZarrStore.isArray(root, rel)) {
       val za = ZarrStore.openArray(root, rel)
-      val vals = za.readFlat()
+      val flat = za.readFlat()
+      val vals = if (za.kind == 'b') flat.map(_ != 0L) else flat
       if (za.rank == 0) Scalar(vals.head) else Arr(vals)
     } else if (ZarrStore.attrString(root, rel, "encoding-type").contains("categorical")) {
       val codes = ZarrStore.openArray(root, s"$rel/codes").readFlat()

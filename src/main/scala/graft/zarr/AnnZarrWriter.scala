@@ -1,10 +1,9 @@
 package graft.zarr
 
 import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.Deflater
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -12,6 +11,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.artifact.{AnnDataset, UnsLeaf}
+import graft.core.Fs
 
 /** Native AnnData-on-zarr sink — the write half of [[AnnZarr]], emitting
   * the same store layouts the reference writes through zarr-python
@@ -50,18 +50,6 @@ import graft.artifact.{AnnDataset, UnsLeaf}
 object AnnZarrWriter {
 
   // ------------------------------------------------------------- plumbing
-
-  private lazy val conf = new Configuration() // per-JVM, like ZarrStore's
-
-  private[zarr] def writeBytes(root: String, rel: String, bytes: Array[Byte]): Unit = {
-    val p = new Path(root, rel)
-    val fs = p.getFileSystem(conf)
-    val out = fs.create(p, true)
-    try out.write(bytes) finally out.close()
-  }
-
-  private[zarr] def writeJson(root: String, rel: String, json: String): Unit =
-    writeBytes(root, rel, json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   private def jstr(s: String): String =
     "\"" + s.flatMap {
@@ -151,11 +139,11 @@ object AnnZarrWriter {
                         chunks: Seq[Int], dtype: String, vlen: Boolean,
                         attrs: String, v3: Boolean,
                         inner: Option[Seq[Int]] = None): Unit =
-    if (v3) writeJson(root, s"$rel/zarr.json",
-      v3Array(shape, chunks, dtype, Some(attrs), inner))
+    if (v3) Fs.write(s"$root/$rel/zarr.json",
+      v3Array(shape, chunks, dtype, Some(attrs), inner).getBytes(UTF_8))
     else {
-      writeJson(root, s"$rel/.zarray", zarray(shape, chunks, dtype, vlen))
-      writeJson(root, s"$rel/.zattrs", attrs)
+      Fs.write(s"$root/$rel/.zarray", zarray(shape, chunks, dtype, vlen).getBytes(UTF_8))
+      Fs.write(s"$root/$rel/.zattrs", attrs.getBytes(UTF_8))
     }
 
   /** Write a group node; returns the consolidated-metadata key of its
@@ -163,18 +151,15 @@ object AnnZarrWriter {
     */
   private def zgroup(root: String, rel: String, attrs: Option[String],
                      v3: Boolean = false): String = {
-    // rel = "" is the store root: "/.zgroup" would resolve as an
-    // ABSOLUTE child in Hadoop's Path(parent, child) and land at the
-    // filesystem root, so join without a leading slash
     val pfx = if (rel.isEmpty) "" else s"$rel/"
     if (v3) {
-      writeJson(root, s"${pfx}zarr.json",
-        s"""{"zarr_format":3,"node_type":"group"""" +
-          attrs.map(a => s""","attributes":$a""").getOrElse("") + "}")
+      Fs.write(s"$root/${pfx}zarr.json",
+        (s"""{"zarr_format":3,"node_type":"group"""" +
+          attrs.map(a => s""","attributes":$a""").getOrElse("") + "}").getBytes(UTF_8))
       rel
     } else {
-      writeJson(root, s"$pfx.zgroup", """{"zarr_format":2}""")
-      attrs.foreach(a => writeJson(root, s"$pfx.zattrs", a))
+      Fs.write(s"$root/$pfx.zgroup", """{"zarr_format":2}""".getBytes(UTF_8))
+      attrs.foreach(a => Fs.write(s"$root/$pfx.zattrs", a.getBytes(UTF_8)))
       s"$pfx.zattrs"
     }
   }
@@ -254,7 +239,7 @@ object AnnZarrWriter {
       val raw =
         if (dtype == "|O") packVlen(chunk.map(v => if (v == null) null else String.valueOf(v)))
         else packNumAny(dtype, chunk, rel) // no Double detour: int64 keeps 64-bit precision
-      writeBytes(root, s"$rel/${chunkKey1d(c, v3)}", encodeChunk(raw, v3))
+      Fs.write(s"$root/$rel/${chunkKey1d(c, v3)}", encodeChunk(raw, v3))
       c += 1
     }
   }
@@ -299,7 +284,7 @@ object AnnZarrWriter {
   private def scalar(root: String, rel: String, dtype: String,
                      attrs: String, raw: Array[Byte], v3: Boolean): Unit = {
     arrayMeta(root, rel, Nil, Nil, dtype, dtype == "|O", attrs, v3)
-    writeBytes(root, s"$rel/${if (v3) "c" else "0"}", encodeChunk(raw, v3))
+    Fs.write(s"$root/$rel/${if (v3) "c" else "0"}", encodeChunk(raw, v3))
   }
 
   /** One row-banded dense SHARD object: gzip'd inner-band bodies (null
@@ -600,10 +585,10 @@ object AnnZarrWriter {
           bands(band)(((r - baseRow - band.toLong * cr) * cc + (c - gc.toLong * cc)).toInt) = v
         }
         if (sf == 1)
-          writeBytes(path, s"$rel/${if (v3) s"c/$gr/$gc" else s"$gr.$gc"}",
+          Fs.write(s"$path/$rel/${if (v3) s"c/$gr/$gc" else s"$gr.$gc"}",
             encodeChunk(packBands(bands).head, v3))
         else // one SHARD: gzip'd row bands + the crc32c'd index
-          writeBytes(path, s"$rel/c/$gr/$gc", denseShardObject(packBands(bands)))
+          Fs.write(s"$path/$rel/c/$gr/$gc", denseShardObject(packBands(bands)))
       }
   }
 
@@ -787,12 +772,12 @@ object AnnZarrWriter {
           dataV.foreach(db.putDouble)
           val ib = ByteBuffer.allocate(chunkElems * 8).order(ByteOrder.LITTLE_ENDIAN)
           indV.foreach(ib.putLong)
-          writeBytes(root, s"$rel/data/$obj", zlibEncode(db.array()))
-          writeBytes(root, s"$rel/indices/$obj", zlibEncode(ib.array()))
+          Fs.write(s"$root/$rel/data/$obj", zlibEncode(db.array()))
+          Fs.write(s"$root/$rel/indices/$obj", zlibEncode(ib.array()))
         } else {
-          writeBytes(root, s"$rel/data/c/$obj",
+          Fs.write(s"$root/$rel/data/c/$obj",
             shardBytes(objElems, chunkElems, m, packDoubles(dataV, chunkElems)))
-          writeBytes(root, s"$rel/indices/c/$obj",
+          Fs.write(s"$root/$rel/indices/c/$obj",
             shardBytes(objElems, chunkElems, m, packLongs(indV, chunkElems)))
         }
       }
@@ -909,7 +894,7 @@ object AnnZarrWriter {
     * consolidate the metadata so reopening costs a single metadata GET.
     */
   private def writeStore(path: String)(body: => Unit): Unit = {
-    new Path(path).getFileSystem(conf).delete(new Path(path), true)
+    Fs.delete(path)
     ZarrStore.invalidate(path) // same-JVM readers must not see stale metadata
     body
     ZarrStore.consolidate(path)
@@ -963,10 +948,10 @@ object AnnZarrWriter {
     // QUALIFIED paths so relative/scheme-spelled aliases of the same
     // location ("data/a.zarr" vs "/data/a.zarr" vs "file:/data/a.zarr")
     // cannot slip past the guard.
-    val srcP = ZarrStore.fs(src).makeQualified(new Path(src))
-    val dstP = ZarrStore.fs(dst).makeQualified(new Path(dst))
-    def contains(a: Path, b: Path): Boolean = {
-      var p: Path = b
+    val srcP = Fs.qualify(src)
+    val dstP = Fs.qualify(dst)
+    def contains(a: org.apache.hadoop.fs.Path, b: org.apache.hadoop.fs.Path): Boolean = {
+      var p = b
       while (p != null) { if (p == a) return true; p = p.getParent }
       false
     }
@@ -1204,7 +1189,6 @@ object AnnZarrWriter {
     val objRows = cr.toLong * sf
     val nCols = za.shape(1)
     val gridCols = ((nCols + cc - 1) / cc).toInt
-    val fs = ZarrStore.fs(path)
     val firstObj = (n0 / objRows).toInt
     val lastObj = ((n1 - 1) / objRows).toInt
     (firstObj to lastObj).foreach { gr =>
@@ -1214,13 +1198,13 @@ object AnnZarrWriter {
         // dimension separator / v3 key prefix (for sharded arrays the
         // store object is the shard, addressed at shard-grid coords)
         val key = s"$rel/${za.chunkKey(Seq(gr, gc))}"
-        if (base >= n0) { fs.delete(new Path(path, key), false); () }
+        if (base >= n0) { Fs.delete(s"$path/$key"); () }
         else if (sf == 1) {
           za.readChunk(Seq(gr, gc)).foreach { old =>
             val buf = java.util.Arrays.copyOf(old, cr * cc * 8)
             val keep = (n0 - base).toInt
             java.util.Arrays.fill(buf, keep * cc * 8, buf.length, 0.toByte)
-            writeBytes(path, key, encodeChunk(buf, v3))
+            Fs.write(s"$path/$key", encodeChunk(buf, v3))
           }
         } else {
           // straddling SHARD: committed inner bands survive (partial
@@ -1237,8 +1221,8 @@ object AnnZarrWriter {
                 bands(b) = buf; any = true
               }
           }
-          if (!any) { fs.delete(new Path(path, key), false); () }
-          else writeBytes(path, key, denseShardObject(bands))
+          if (!any) { Fs.delete(s"$path/$key"); () }
+          else Fs.write(s"$path/$key", denseShardObject(bands))
         }
       }
     }

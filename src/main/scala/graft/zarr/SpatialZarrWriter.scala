@@ -1,13 +1,14 @@
 package graft.zarr
 
 import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType, StringType}
 
 import graft.artifact.AnnDataset
+import graft.core.Fs
 
 /** SpatialData-on-zarr SINK — the write half of [[SpatialZarr]],
   * emitting the public spatialdata store layout (zarr v2 + NGFF): root
@@ -47,8 +48,8 @@ object SpatialZarrWriter {
 
   private def zgroup(path: String, rel: String, attrs: Option[String]): Unit = {
     val pfx = if (rel.isEmpty) "" else s"$rel/"
-    AnnZarrWriter.writeJson(path, s"$pfx.zgroup", """{"zarr_format":2}""")
-    attrs.foreach(a => AnnZarrWriter.writeJson(path, s"$pfx.zattrs", a))
+    Fs.write(s"$path/$pfx.zgroup", """{"zarr_format":2}""".getBytes(UTF_8))
+    attrs.foreach(a => Fs.write(s"$path/$pfx.zattrs", a.getBytes(UTF_8)))
   }
 
   private def esize(dtype: String): Int = dtype match {
@@ -67,11 +68,11 @@ object SpatialZarrWriter {
                            chunks: Seq[Int], dtype: String): Unit = {
     require(axes.size == shape.size && shape.size == chunks.size,
       s"$rel: axes/shape/chunks rank mismatch")
-    AnnZarrWriter.writeJson(path, s"$rel/.zarray",
-      s"""{"zarr_format":2,"shape":[${shape.mkString(",")}],""" +
+    Fs.write(s"$path/$rel/.zarray",
+      (s"""{"zarr_format":2,"shape":[${shape.mkString(",")}],""" +
         s""""chunks":[${chunks.mkString(",")}],"dtype":${jstr(dtype)},""" +
         """"order":"C","fill_value":0,"filters":null,""" +
-        """"dimension_separator":".","compressor":{"id":"zlib","level":5}}""")
+        """"dimension_separator":".","compressor":{"id":"zlib","level":5}}""").getBytes(UTF_8))
     if (shape.contains(0L)) return
     val grid = shape.zip(chunks).map { case (s, c) => ((s + c - 1) / c).toInt }
     require(grid.map(_.toLong).product <= Int.MaxValue,
@@ -122,7 +123,7 @@ object SpatialZarrWriter {
           case "<i4" => buf.foreach(v => bb.putInt(v.toInt))
           case _ => buf.foreach(bb.putDouble)
         }
-        AnnZarrWriter.writeBytes(pathC, s"$relC/${gc.mkString(".")}",
+        Fs.write(s"$pathC/$relC/${gc.mkString(".")}",
           AnnZarrWriter.zlibEncode(bb.array()))
       }
   }
@@ -181,8 +182,7 @@ object SpatialZarrWriter {
             images: Map[String, ImageSpec] = Map.empty,
             labels: Map[String, ImageSpec] = Map.empty,
             chunkElems: Int = 65536): Unit = {
-    val fs = new Path(path).getFileSystem(ZarrStore.fs(path).getConf)
-    fs.delete(new Path(path), true)
+    Fs.delete(path)
     ZarrStore.invalidate(path)
     zgroup(path, "", Some(
       """{"spatialdata_attrs":{"spatialdata_software_version":"0.2.0"}}"""))

@@ -8,8 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.core.Fs
 
 /** Native zarr directory-store reader — both public store flavors:
   *
@@ -28,20 +27,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Per-root metadata is cached per JVM; [[ZarrStore.metaObjectReads]]
   * counts real metadata-object accesses so tests can pin the contract.
   *
-  * All byte access goes through the Hadoop FileSystem API so the same
-  * code serves local fixtures and an object store; executor tasks open
+  * All byte access goes through [[graft.core.Fs]] so the same code
+  * serves local fixtures and an object store; executor tasks open
   * their own chunk objects (nothing matrix-sized crosses the driver).
   */
 object ZarrStore {
   private val mapper = new ObjectMapper()
-
-  /** One Configuration per JVM: constructing it parses XML resources
-    * (~ms), which would otherwise be paid PER CHUNK OBJECT — Hadoop's
-    * own FileSystem cache then dedups instances per scheme.
-    */
-  private lazy val conf = new Configuration()
-
-  def fs(root: String): FileSystem = new Path(root).getFileSystem(conf)
 
   /** Per-root count of metadata OBJECTS actually fetched from the store
     * (cache misses) — consolidated-metadata specs assert this stays at
@@ -67,36 +58,6 @@ object ZarrStore {
 
   private[zarr] def countDataRead(root: String): Unit =
     dataObjectReads.computeIfAbsent(root, _ => new AtomicLong()).incrementAndGet()
-
-  /** Read a store object fully; None when absent (fill-value chunks). */
-  def readBytes(root: String, rel: String): Option[Array[Byte]] = {
-    val p = new Path(root, rel)
-    val f = fs(root)
-    if (!f.exists(p)) None
-    else {
-      val st = f.getFileStatus(p)
-      val out = new Array[Byte](st.getLen.toInt)
-      val in = f.open(p)
-      try in.readFully(0, out) finally in.close()
-      Some(out)
-    }
-  }
-
-  /** Positioned read of `[pos, pos+len)` — shard-index and inner-chunk
-    * access never downloads the surrounding shard object.
-    */
-  def readRange(root: String, rel: String, pos: Long, len: Int): Array[Byte] = {
-    val out = new Array[Byte](len)
-    val in = fs(root).open(new Path(root, rel))
-    try in.readFully(pos, out) finally in.close()
-    out
-  }
-
-  def objectLen(root: String, rel: String): Option[Long] = {
-    val p = new Path(root, rel)
-    val f = fs(root)
-    if (f.exists(p)) Some(f.getFileStatus(p).getLen) else None
-  }
 
   // ------------------------------------------------------- root metadata
 
@@ -131,7 +92,7 @@ object ZarrStore {
   /** Fetch + parse one metadata object (counted; None when absent). */
   private def metaFile(root: String, rel: String): Option[JsonNode] = {
     metaObjectReads.computeIfAbsent(root, _ => new AtomicLong()).incrementAndGet()
-    readBytes(root, rel).map(mapper.readTree)
+    Fs.read(s"$root/$rel").map(mapper.readTree)
   }
 
   private def rootMeta(root: String): RootMeta = {
@@ -232,17 +193,11 @@ object ZarrStore {
             k.substring(prefix.length)
         }.toSeq.distinct.sorted
       case None =>
-        val f = fs(root)
-        val base = if (rel.isEmpty) new Path(root) else new Path(root, rel)
-        if (!f.exists(base)) Nil
-        else {
-          val dirs = f.listStatus(base).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-          dirs.filter { n =>
-            val child = if (rel.isEmpty) n else s"$rel/$n"
-            if (rm.fmt == 3) v3Node(root, child).isDefined
-            else isArray(root, child) || isGroup(root, child)
-          }.sorted
-        }
+        subdirs(root, rel).filter { n =>
+          val child = if (rel.isEmpty) n else s"$rel/$n"
+          if (rm.fmt == 3) v3Node(root, child).isDefined
+          else isArray(root, child) || isGroup(root, child)
+        }.sorted
     }
   }
 
@@ -426,10 +381,10 @@ object ZarrStore {
     shardIdxCache.synchronized {
       if (shardIdxCache.containsKey(cacheKey)) return shardIdxCache.get(cacheKey)
     }
-    val parsed = objectLen(root, key).map { len =>
+    val parsed = Fs.length(s"$root/$key").map { len =>
       val ilen = sh.indexByteLen(nInner)
       val pos = if (sh.indexAtEnd) len - ilen else 0L
-      val bytes = readRange(root, key, pos, ilen)
+      val bytes = Fs.readRange(s"$root/$key", pos, ilen)
       if (sh.indexCrc) {
         val stored = ByteBuffer.wrap(bytes, ilen - 4, 4)
           .order(ByteOrder.LITTLE_ENDIAN).getInt
@@ -456,21 +411,22 @@ object ZarrStore {
   def consolidate(root: String): Unit =
     if (format(root) == 3) consolidateV3(root) else consolidateV2(root)
 
+  /** Names of the directories directly under `rel` (none when absent). */
+  private def subdirs(root: String, rel: String): Seq[String] =
+    Fs.list(if (rel.isEmpty) root else s"$root/$rel").filter(_.isDirectory).map(_.getPath.getName)
+
   private def consolidateV2(root: String): Unit = {
-    val f = fs(root)
     val out = mapper.createObjectNode()
     out.put("zarr_consolidated_format", 1)
     val md = out.putObject("metadata")
     def visit(rel: String): Unit = {
       Seq(".zgroup", ".zarray", ".zattrs").foreach { name =>
         val key = if (rel.isEmpty) name else s"$rel/$name"
-        readBytes(root, key).foreach(b => md.set[ObjectNode](key, mapper.readTree(b)))
+        Fs.read(s"$root/$key").foreach(b => md.set[ObjectNode](key, mapper.readTree(b)))
       }
-      val base = if (rel.isEmpty) new Path(root) else new Path(root, rel)
-      f.listStatus(base).filter(_.isDirectory).map(_.getPath.getName).foreach { n =>
+      subdirs(root, rel).foreach { n =>
         val child = if (rel.isEmpty) n else s"$rel/$n"
-        if (f.exists(new Path(root, s"$child/.zgroup")) ||
-          f.exists(new Path(root, s"$child/.zarray"))) visit(child)
+        if (Fs.exists(s"$root/$child/.zgroup") || Fs.exists(s"$root/$child/.zarray")) visit(child)
       }
     }
     visit("")
@@ -478,15 +434,13 @@ object ZarrStore {
   }
 
   private def consolidateV3(root: String): Unit = {
-    val f = fs(root)
-    val rootNode = readBytes(root, "zarr.json").map(mapper.readTree).getOrElse(
+    val rootNode = Fs.read(s"$root/zarr.json").map(mapper.readTree).getOrElse(
       sys.error(s"$root: no root zarr.json to consolidate")).asInstanceOf[ObjectNode]
     val md = mapper.createObjectNode()
     def visit(rel: String): Unit = {
-      val base = if (rel.isEmpty) new Path(root) else new Path(root, rel)
-      f.listStatus(base).filter(_.isDirectory).map(_.getPath.getName).foreach { n =>
+      subdirs(root, rel).foreach { n =>
         val child = s"$rel/$n".stripPrefix("/")
-        readBytes(root, s"$child/zarr.json").foreach { b =>
+        Fs.read(s"$root/$child/zarr.json").foreach { b =>
           md.set[ObjectNode](child, mapper.readTree(b))
           visit(child)
         }
@@ -512,8 +466,7 @@ object ZarrStore {
 
   /** Overwrite one metadata object and drop the root's cached snapshot. */
   private def writeMeta(root: String, rel: String, node: JsonNode): Unit = {
-    val o = fs(root).create(new Path(root, rel), true)
-    try o.write(mapper.writeValueAsBytes(node)) finally o.close()
+    Fs.write(s"$root/$rel", mapper.writeValueAsBytes(node))
     invalidate(root)
   }
 
@@ -529,11 +482,11 @@ object ZarrStore {
   def patchConsolidated(root: String, keys: Seq[String]): Unit = {
     val v3 = format(root) == 3
     val file = consolidatedFile(v3)
-    readBytes(root, file).map(mapper.readTree) match {
+    Fs.read(s"$root/$file").map(mapper.readTree) match {
       case Some(node) if consolidatedMap(node, v3).isObject =>
         val md = consolidatedMap(node, v3).asInstanceOf[ObjectNode]
         keys.filter(_.nonEmpty).distinct.foreach { k =>
-          readBytes(root, if (v3) s"$k/zarr.json" else k) match {
+          Fs.read(if (v3) s"$root/$k/zarr.json" else s"$root/$k") match {
             case Some(b) => md.set[ObjectNode](k, mapper.readTree(b))
             case None => md.remove(k)
           }
@@ -559,8 +512,8 @@ object ZarrStore {
     require(pfx.nonEmpty, "patchConsolidatedSubtree needs a non-root subtree")
     val v3 = format(root) == 3
     val file = consolidatedFile(v3)
-    (readBytes(root, file).map(mapper.readTree),
-      readBytes(root, s"$pfx/$file").map(mapper.readTree)) match {
+    (Fs.read(s"$root/$file").map(mapper.readTree),
+      Fs.read(s"$root/$pfx/$file").map(mapper.readTree)) match {
       case (Some(rn), Some(sn))
         if consolidatedMap(rn, v3).isObject && consolidatedMap(sn, v3).isObject =>
         val md = consolidatedMap(rn, v3).asInstanceOf[ObjectNode]
@@ -599,12 +552,11 @@ object ZarrStore {
   def patchShape(root: String, rel: String, shape: Seq[Long]): String = {
     val v3 = format(root) == 3
     val key = if (v3) s"$rel/zarr.json" else s"$rel/.zarray"
-    val node = readBytes(root, key).map(mapper.readTree).getOrElse(
+    val node = Fs.read(s"$root/$key").map(mapper.readTree).getOrElse(
       sys.error(s"$root/$key: no array metadata to patch")).asInstanceOf[ObjectNode]
     val arr = node.putArray("shape")
     shape.foreach(arr.add)
-    val o = fs(root).create(new Path(root, key), true)
-    try o.write(mapper.writeValueAsBytes(node)) finally o.close()
+    Fs.write(s"$root/$key", mapper.writeValueAsBytes(node))
     if (v3) rel else key
   }
 }
@@ -662,7 +614,7 @@ final case class ZArray(root: String, rel: String, shape: Seq[Long],
   def readChunk(coord: Seq[Int]): Option[Array[Byte]] = shard match {
     case None =>
       ZarrStore.countDataRead(root)
-      ZarrStore.readBytes(root, s"$rel/${chunkKey(coord)}").map(enc =>
+      Fs.read(s"$root/$rel/${chunkKey(coord)}").map(enc =>
         ZCodec.decode(codecs, enc, chunkElems * math.max(esize, 1)))
     case Some(sh) =>
       ZarrStore.countDataRead(root)
@@ -681,7 +633,7 @@ final case class ZArray(root: String, rel: String, shape: Seq[Long],
       val len = ix(2 * flat + 1)
       if (off == -1L && len == -1L) None // 2^64-1: inner chunk absent
       else Some(ZCodec.decode(sh.innerCodecs,
-        ZarrStore.readRange(root, key, off, len.toInt),
+        Fs.readRange(s"$root/$key", off, len.toInt),
         chunkElems * math.max(esize, 1)))
     }
   }

@@ -29,7 +29,8 @@ class AnnLayoutSpec extends AnyFunSuite {
       .withColumn("value", (col(axes._1) * 7 + col(axes._2) * 11 + seed) % 13 + 0.5)
 
   /** Every slot kind: a categorical obs column, dense obsm, csr X and
-    * layer, varm, obsp, nested uns, and raw with its own varm.
+    * layer, varm, obsp, nested uns (Boolean values included), and raw
+    * with its own varm.
     */
   private lazy val every: AnnDataset = {
     import UnsValue._
@@ -51,7 +52,7 @@ class AnnLayoutSpec extends AnyFunSuite {
       obsp = Map("distances" -> coo(nObs, nObs, ("obs_id", "obs_id_2"), 3)),
       uns = Map("tag" -> Scalar("trial"), "seed" -> Scalar(11L), "lr" -> Scalar(0.25),
         "weights" -> Arr(Seq(0.5, 1.5)), "ids" -> Arr(Seq(3L, 4L)),
-        "names" -> Arr(Seq("a", "b")),
+        "names" -> Arr(Seq("a", "b")), "flag" -> Scalar(true), "mask" -> Arr(Seq(true, false)),
         "nested" -> Mapping(Map("inner" -> Mapping(Map("k" -> Scalar(2L))),
           "v" -> Arr(Seq(1.0))))),
       raw = Some(RawSlots(rawVars, coo(nObs, nRawVar, ("obs_id", "var_id"), 4),

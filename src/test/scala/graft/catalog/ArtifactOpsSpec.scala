@@ -32,7 +32,7 @@ class ArtifactOpsSpec extends AnyFunSuite {
     val p1 = store.cache(a, root, cacheDir)
     assert(spark.read.parquet(p1).count() === 1)
     // corrupt the cache; re-cache restores it
-    val fs = graft.core.Hashing.fileSystem(p1)
+    val fs = graft.core.Fs.fileSystem(p1)
     fs.delete(new org.apache.hadoop.fs.Path(p1), true)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(p1), "corrupt")
     val p2 = store.cache(a, root, cacheDir)

@@ -303,4 +303,28 @@ class CatalogSpec extends AnyFunSuite {
     assert(counts(Catalog.deterministic(spark, root)) === Seq(1L, 1L, 1L))
     assert(counts(cat) === Seq(1L, 1L, 1L))
   }
+
+  test("a catalog rooted at a file: URI commits, indexes, vacuums and reopens there") {
+    val dir = TestSpark.tmpDir("caturi")
+    val root = "file:" + dir
+    val cat = Catalog.deterministic(spark, root)
+    val lin = new Lineage(cat)
+    lin.track("a.py", "1"); cat.flush("transform", "run")
+    lin.track("b.py", "2"); cat.flush("transform", "run")
+    val env = new java.io.File(lin.trackEnvironment().stripPrefix("file:"))
+    assert(env.isFile && env.getPath.startsWith(dir))
+    // the FK filter resolves through the index, whose gate reads footers
+    assert(cat.index("transform", "key", "id").isDefined)
+    assert(QuerySet(cat, "run").filter("transform__key" -> "b.py").count() === 1)
+    assert(cat.vacuum(keepLast = 1) === 2)
+    Seq("transform", "run").foreach { t =>
+      assert(!new java.io.File(s"$dir/$t/v1").exists && new java.io.File(s"$dir/$t/v2").isDirectory, t)
+    }
+    val reopened = Catalog.deterministic(spark, root)
+    assert(reopened.table("run").count() === 2)
+    assert(QuerySet(reopened, "run").filter("transform__key" -> "a.py").count() === 1)
+    assert(TestSpark.manifestVersion(dir, "run") === 2)
+    assert(!new java.io.File(dir, "._manifest.json.crc").exists)
+    assert(!new java.io.File("file:").exists)
+  }
 }

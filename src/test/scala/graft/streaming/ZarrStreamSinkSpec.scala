@@ -97,7 +97,7 @@ class ZarrStreamSinkSpec extends AnyFunSuite {
       concat(lit("junk"), col("id")).as("obs_name"), lit(9L).as("grp"))
     val junkX = spark.range(7).select(col("id").as("obs_id"),
       (col("id") % 8).as("var_id"), lit(99.0).as("value"))
-    val fs = graft.zarr.ZarrStore.fs(store)
+    val fs = graft.core.Fs.fileSystem(store)
     val out = fs.create(new org.apache.hadoop.fs.Path(store, ".graft_pending"), true)
     out.write("999,0,0".getBytes("UTF-8")); out.close()
     graft.zarr.AnnZarrWriter.appendRows(junkObs, junkX, store)
@@ -163,7 +163,7 @@ class ZarrStreamSinkSpec extends AnyFunSuite {
     assert(storeStats(store)._3 == 60)
     assert(ZarrStreamSink.nameScanProbe.get() == before,
       "unique-name guarded stream must take zero exact store scans")
-    val fs = graft.zarr.ZarrStore.fs(store)
+    val fs = graft.core.Fs.fileSystem(store)
     def bloomLen() = fs.getFileStatus(
       new org.apache.hadoop.fs.Path(store, ".graft_names")).getLen
     val sz1 = bloomLen()
@@ -215,17 +215,17 @@ class ZarrStreamSinkSpec extends AnyFunSuite {
     locally {
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val node = mapper.readTree(
-        graft.zarr.ZarrStore.readBytes(mu, ".zmetadata").get)
+        graft.core.Fs.read(s"$mu/.zmetadata").get)
       node.get("metadata").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
         .put("__sentinel__", 42)
-      val out = graft.zarr.ZarrStore.fs(mu)
+      val out = graft.core.Fs.fileSystem(mu)
         .create(new org.apache.hadoop.fs.Path(mu, ".zmetadata"), true)
       try out.write(mapper.writeValueAsBytes(node)) finally out.close()
       graft.zarr.ZarrStore.invalidate(mu)
     }
     graft.zarr.ZarrStore.patchConsolidatedSubtree(mu, "mod/rna")
     val patched = new String(
-      graft.zarr.ZarrStore.readBytes(mu, ".zmetadata").get, "UTF-8")
+      graft.core.Fs.read(s"$mu/.zmetadata").get, "UTF-8")
     assert(patched.contains("__sentinel__"),
       "subtree refresh re-walked the container instead of patching")
     val mods = AnnZarr.openMu(spark, mu)
@@ -307,7 +307,7 @@ class ZarrStreamSinkSpec extends AnyFunSuite {
     val dir = TestSpark.tmpDir("graft_zssLG")
     val store = s"$dir/legacy.zarr"
     emptyStore(store)
-    val fs = graft.zarr.ZarrStore.fs(store)
+    val fs = graft.core.Fs.fileSystem(store)
     val out = fs.create(new org.apache.hadoop.fs.Path(store, ".graft_batches"), true)
     out.write("0\n1\n2\n4\n".getBytes("UTF-8")); out.close()
     val parsed = ZarrStreamSink.readLedger(store)
@@ -326,4 +326,19 @@ class ZarrStreamSinkSpec extends AnyFunSuite {
     runStream(dir, store, s"$dir/ckptB")
     assert(storeStats(store) == first)
   }
+
+  test("a store that refuses rename-over (HDFS, S3A) takes every microbatch") {
+    // the ledger exists from the second microbatch on, so each later
+    // batch replaces it on a store whose rename will not overwrite
+    graft.core.NoRenameOverFs.register(spark.sparkContext.hadoopConfiguration)
+    val dir = TestSpark.tmpDir("graft_zssR")
+    stageSource(dir)
+    val store = s"${graft.core.NoRenameOverFs.Scheme}:$dir/grow.zarr"
+    emptyStore(store)
+    runStream(dir, store, s"$dir/ckpt")
+    assert(graft.core.Fs.read(s"$store/.graft_batches").map(new String(_, "UTF-8").trim).contains("v2 2"))
+    val (nnz, _, nObs) = storeStats(store)
+    assert(nObs == 60 && nnz == 180)
+  }
 }
+

@@ -103,7 +103,7 @@ class ZarrV3Spec extends AnyFunSuite {
     assert(got.sameElements(expected))
     assert(ds.uns("n_bins") == Scalar(42L))
     assert(ds.uns("method") == Scalar("zheng17"))
-    assert(ds.uns("mask") == Arr(Seq(1L, 0L, 1L, 1L, 0L, 1L)))
+    assert(ds.uns("mask") == Arr(Seq(true, false, true, true, false, true)))
   }
 
   test("sharded dense 2-D layer sums to the closed form") {

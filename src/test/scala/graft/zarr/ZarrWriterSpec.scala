@@ -794,7 +794,7 @@ class ZarrWriterSpec extends AnyFunSuite {
         lit(2.0).as("value")))
     AnnZarrWriter.writeMu(Map("rna" -> mk("r", 5)), mu, v3 = false)
     // clobber the root consolidation with a metadata-less JSON object
-    val out = ZarrStore.fs(mu).create(new org.apache.hadoop.fs.Path(mu, ".zmetadata"), true)
+    val out = graft.core.Fs.fileSystem(mu).create(new org.apache.hadoop.fs.Path(mu, ".zmetadata"), true)
     try out.write("""{"zarr_consolidated_format":1}""".getBytes("UTF-8"))
     finally out.close()
     ZarrStore.invalidate(mu)
@@ -817,7 +817,7 @@ class ZarrWriterSpec extends AnyFunSuite {
     AnnZarrWriter.writeMu(Map("rna" -> mk("r", 5)), mu, v3 = true)
     // clobber the root node: consolidated_metadata present but metadata
     // is a non-object (the foreign/malformed shape the guard is for)
-    val out = ZarrStore.fs(mu).create(new org.apache.hadoop.fs.Path(mu, "zarr.json"), true)
+    val out = graft.core.Fs.fileSystem(mu).create(new org.apache.hadoop.fs.Path(mu, "zarr.json"), true)
     try out.write(("""{"zarr_format":3,"node_type":"group","attributes":{},""" +
       """"consolidated_metadata":{"kind":"inline","must_understand":false,""" +
       """"metadata":null}}""").getBytes("UTF-8"))
